@@ -4,28 +4,35 @@
     python3 graftbench/run.py --workload olap_read --seed 1 --seconds 10 --trace 0
 
 Run from the root of a source checkout. The first run builds the library
-and the benchmark's runner with sbt and writes the sf0.1-shaped tables;
-later runs reuse both while the sources are unchanged. Everything the
-benchmark writes goes under `.graftbench/` in the checkout; each run
-empties its own private root there first (staging tmpdir, Spark local
-dir, warehouse, corpus, results to check).
+and the benchmark's runner with sbt; later runs reuse the build while the
+sources are unchanged. The parquet mixes read the project's fixed sf0.1
+test tables (seed 42), committed unchanged under graftbench/data/sf0.1 and
+checked against its SHA256SUMS on every run. Everything the benchmark
+writes goes under `.graftbench/` in the checkout; each JVM gets a private
+root there, emptied first (staging tmpdir, Spark local dir, warehouse,
+corpus, results to check).
 
-A run starts one JVM (graftbench.Runner) at local[nproc]: session start,
-staging of the families the mix reads, one cold pass over the mix in the
-seed's order that writes every result as parquet, then at least two whole
-warm passes (noop sink), more until --seconds have been measured. A closed loop with one client:
-each key starts when the previous one has finished. After the JVM exits,
-every result of the cold pass is checked against the key's DuckDB twin
-(parquet mixes) or against the generator's expected values (etl_write). A
-throw or a wrong result is a failed operation and its times are left out.
+An untraced run first takes SETUP_SAMPLES - 1 set-up samples, each a
+fresh JVM that starts a session, stages the families the mix reads and
+exits. Then one JVM (graftbench.Runner) at local[nproc] does the same
+set-up (the last sample; setup_s is the median), one cold pass over the
+mix in the seed's order that writes every result as parquet, then whole
+warm passes (noop sink) until --seconds have been measured, at least two.
+A closed loop with one client: each key starts when the previous one has
+finished. After the JVM exits, every result of the cold pass is checked
+against the key's DuckDB twin (parquet mixes) or against the corpus
+generator's expected values (etl_write). A throw or a wrong result is a
+failed operation and its times are left out.
 
 The last line of stdout is one JSON object: correct, attempted, failed and
 metrics. With --trace 0 the metrics are the end-to-end metrics; with
 --trace 1 they are the per-layer metrics, from a run that attaches Spark
-listeners and does one untraced and one traced warm pass (their ratio is
-the tracing overhead). Each run also writes a result record with its
-provenance, and a traced run its spans, under `.graftbench/results/`.
-Workload mixes and metric definitions live in workloads.json.
+listeners and does an untraced, a traced and an untraced warm pass (the
+traced pass over the mean of the other two is the tracing overhead). Each
+run also writes a result record with its provenance, and a traced run its
+spans, under `.graftbench/results/`. Metric names and units come from
+BENCHMARK.json; the mixes and what each layer metric moves, from
+workloads.json.
 """
 import argparse
 import hashlib
@@ -42,12 +49,15 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
-import gendata  # noqa: E402
+import corpus  # noqa: E402
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+SF_DIR = os.path.join(HERE, "data", "sf0.1")
 XMX = "4g"
-RUNNER_TIMEOUT_S = 160
+# set-up samples per untraced run, each from a fresh JVM; setup_s is their
+# median. Each more adds ~15 s to an etl_write run.
+SETUP_SAMPLES = 2
+# all runner JVMs of one run, after the build, end within this many seconds
+RUN_BUDGET_S = 165
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
              "java.base/java.lang.reflect", "java.base/java.io",
              "java.base/java.net", "java.base/java.nio",
@@ -171,31 +181,40 @@ def build(root, work):
 
 # ---------------------------------------------------------------- inputs
 
-def tables(work):
-    """The sf0.1-shaped tables, written once per generator version."""
-    gen = tree_hash(HERE, ["gendata.py"])[:16]
-    d = os.path.join(work, "data", f"sf0.1-{gen}")
-    if not os.path.exists(os.path.join(d, "_DONE")):
-        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-        log("writing the sf0.1-shaped tables")
-        gendata.make_tables(d)
-        open(os.path.join(d, "_DONE"), "w").close()
-    return d
+def tables():
+    """Checks the committed sf0.1 tables against SHA256SUMS. Returns the
+    table names and the hash of SHA256SUMS, which names their contents."""
+    sums = os.path.join(SF_DIR, "SHA256SUMS")
+    if not os.path.exists(sums):
+        raise BenchError(f"missing {sums}")
+    names = []
+    with open(sums) as f:
+        for line in f:
+            want, fname = line.split()
+            path = os.path.join(SF_DIR, fname)
+            if not os.path.exists(path):
+                raise BenchError(f"missing table {path}")
+            with open(path, "rb") as t:
+                if hashlib.sha256(t.read()).hexdigest() != want:
+                    raise BenchError(f"{path} does not match SHA256SUMS")
+            names.append(fname[:-len(".parquet")])
+    with open(sums, "rb") as f:
+        return names, hashlib.sha256(f.read()).hexdigest()
 
 
-def oracle_rows(work, sf_dir, sql):
+def oracle_rows(work, tables_hash, names, sql):
     """DuckDB result of a key's twin as a DataFrame, cached by
     (tables, sql)."""
     import duckdb
     import pandas as pd
     cdir = os.path.join(work, "oracle")
     os.makedirs(cdir, exist_ok=True)
-    path = os.path.join(cdir, sha(sf_dir, sql)[:24] + ".pkl")
+    path = os.path.join(cdir, sha(tables_hash, sql)[:24] + ".pkl")
     if os.path.exists(path):
         return pd.read_pickle(path)
     con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    for t in names:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     df = con.sql(sql).df()
     con.close()
     df.to_pickle(path)
@@ -308,6 +327,29 @@ def quantile(xs, q):
     return s[lo] + (s[hi] - s[lo]) * (pos - lo)
 
 
+def run_runner(classpath, root, rdir, cfg, deadline):
+    """One runner JVM in the private root rdir, emptied first, killed at
+    the deadline. Returns its result record."""
+    shutil.rmtree(rdir, ignore_errors=True)
+    for sub in ["tmp", "local", "warehouse"]:
+        os.makedirs(os.path.join(rdir, sub))
+    cfg = dict(cfg, root=rdir, out=os.path.join(rdir, "result.json"))
+    with open(os.path.join(rdir, "config.json"), "w") as f:
+        json.dump(cfg, f)
+    java = ["java"] + [a for p in ADD_OPENS
+                       for a in ("--add-opens", f"{p}=ALL-UNNAMED")] + [
+        f"-Xmx{XMX}", f"-Djava.io.tmpdir={rdir}/tmp",
+        "-Dspark.ui.enabled=false", "-cp", classpath, "graftbench.Runner",
+        os.path.join(rdir, "config.json")]
+    jlog = os.path.join(rdir, "runner.log")
+    code = run_proc(java, root, dict(os.environ),
+                    max(1.0, deadline - time.time()), jlog)
+    if code != 0 or not os.path.exists(cfg["out"]):
+        raise BenchError(f"runner exited {code}:\n{tail(jlog)}")
+    with open(cfg["out"]) as f:
+        return json.load(f)
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
@@ -319,10 +361,13 @@ def main(argv=None):
     args = ap.parse_args(argv)
 
     root = os.getcwd()
-    for need in ["build.sbt", "src/main/scala/graft/SparkEntry.scala"]:
+    for need in ["build.sbt", "src/main/scala/graft/SparkEntry.scala",
+                 "BENCHMARK.json"]:
         if not os.path.exists(os.path.join(root, need)):
             raise BenchError(f"not a graft source checkout: {need} missing "
                              f"under {root}")
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        bench = json.load(f)
     with open(os.path.join(HERE, "workloads.json")) as f:
         spec = json.load(f)
     if args.workload not in spec["workloads"]:
@@ -331,47 +376,42 @@ def main(argv=None):
     work = os.path.join(root, ".graftbench")
 
     classpath, src_hash = build(root, work)
-    sf_dir = tables(work)
+    names, tables_hash = tables()
+    deadline = time.time() + RUN_BUDGET_S
     log("inputs ready")
 
-    # private, emptied root for this run: tmpdir (staging), local dir,
-    # warehouse, corpus, check dumps
     rdir = os.path.join(work, "run", args.workload)
-    shutil.rmtree(rdir, ignore_errors=True)
-    for sub in ["tmp", "local", "warehouse"]:
-        os.makedirs(os.path.join(rdir, sub))
-
     keys = list(wl.get("keys", [])) + (
         ["etl_cities_count", "etl_revenue_by_filing"] if "corpus" in wl
         else [])
     random.Random(args.seed).shuffle(keys)
     manifest = cities = revenue = None
     if "corpus" in wl:
-        cdir = os.path.join(rdir, "corpus")
-        cities, revenue = gendata.make_corpus(cdir, args.seed,
-                                              wl["corpus"]["filings"])
+        # outside rdir, which each runner JVM empties
+        cdir = os.path.join(work, "corpus", args.workload)
+        shutil.rmtree(cdir, ignore_errors=True)
+        cities, revenue = corpus.make_corpus(cdir, args.seed,
+                                             wl["corpus"]["filings"])
         manifest = os.path.join(cdir, "manifest.txt")
     cores = os.cpu_count() or 1
     inject = dict(kv.split("=", 1) for kv in args.inject.split(",") if kv)
     cfg = {"workload": args.workload, "keys": keys,
-           "stagers": wl.get("stagers", []), "sf_dir": sf_dir, "root": rdir,
+           "stagers": wl.get("stagers", []), "sf_dir": SF_DIR,
            "seconds": args.seconds, "trace": bool(args.trace),
-           "cores": cores, "out": os.path.join(rdir, "result.json"),
-           "inject": inject, "manifest": manifest}
-    with open(os.path.join(rdir, "config.json"), "w") as f:
-        json.dump(cfg, f)
+           "cores": cores, "inject": inject, "manifest": manifest}
 
-    java = ["java"] + [a for p in ADD_OPENS
-                       for a in ("--add-opens", f"{p}=ALL-UNNAMED")] + [
-        f"-Xmx{XMX}", f"-Djava.io.tmpdir={rdir}/tmp",
-        "-Dspark.ui.enabled=false", "-cp", classpath, "graftbench.Runner",
-        os.path.join(rdir, "config.json")]
-    jlog = os.path.join(rdir, "runner.log")
-    code = run_proc(java, root, dict(os.environ), RUNNER_TIMEOUT_S, jlog)
-    if code != 0 or not os.path.exists(cfg["out"]):
-        raise BenchError(f"runner exited {code}:\n{tail(jlog)}")
-    with open(cfg["out"]) as f:
-        res = json.load(f)
+    # set-up samples, each from a fresh JVM and an empty staging root; the
+    # main run's own set-up is the last one
+    setups = []
+    if not args.trace:
+        for i in range(SETUP_SAMPLES - 1):
+            s = run_runner(classpath, root, f"{rdir}-setup", dict(
+                cfg, setup_only=True), deadline)
+            setups.append(s["setup_s"])
+        shutil.rmtree(f"{rdir}-setup", ignore_errors=True)
+        log(f"set-up samples: {setups}")
+    res = run_runner(classpath, root, rdir, cfg, deadline)
+    setups.append(res["setup_s"])
     log("runner done")
 
     # ---- correctness, outside every timed window ----
@@ -382,7 +422,7 @@ def main(argv=None):
             wrong[k] = "no DuckDB twin"
             continue
         try:
-            diff = compare(oracle_rows(work, sf_dir, sql),
+            diff = compare(oracle_rows(work, tables_hash, names, sql),
                            os.path.join(rdir, "check", k))
         except Exception as e:  # a broken twin is a failed check
             diff = f"oracle error: {e}"
@@ -416,33 +456,41 @@ def main(argv=None):
         by_key.setdefault(o["name"], []).append(o["total_s"])
     samples = [o["total_s"] for o in warm]
     e2e = {
-        "setup_s": (res["setup_s"], "s"),
-        "first_pass_s": (sum(o["total_s"] for o in good if o["pass"] == 0),
-                         "s"),
-        # a warm pass: every key once, at its median warm time
-        "total_s": (sum(median(v) for v in by_key.values()), "s"),
-        "query_p50_s": (median(samples), "s"),
-        "live_heap_mb": (res["live_heap_mb"], "MB"),
+        # session start plus staging of the mix's families, from an empty
+        # staging root: the median of the run's set-up samples
+        "setup_s": median(setups),
+        # the cold pass over the mix, writing each result as parquet
+        "first_pass_s": sum(o["total_s"] for o in good if o["pass"] == 0),
+        # one warm pass: every key once, at its median warm time
+        "total_s": sum(median(v) for v in by_key.values()),
+        # per-key latency, call into the key function to the completed noop
+        # write, pooled over the warm passes
+        "query_p50_s": median(samples),
+        # largest heap in use after the between-key GC
+        "live_heap_mb": res["live_heap_mb"],
     }
     layers = {}
     if args.trace:
-        units = {m["name"]: m["unit"] for m in spec["per_layer"]}
-        lm = dict(res["layers"])
-        tr = sum(o["total_s"] for o in good if o["pass"] == 2)
-        un = sum(o["total_s"] for o in good if o["pass"] == 1)
-        lm["trace.overhead_ratio"] = tr / un - 1 if un > 0 else float("nan")
-        lm["ops.fail_ratio"] = len(failed) / max(1, len(ops))
+        layers = dict(res["layers"])
+
+        def pass_s(p):
+            return sum(o["total_s"] for o in good if o["pass"] == p)
+        untraced = (pass_s(1) + pass_s(3)) / 2
+        layers["trace.overhead_ratio"] = (
+            pass_s(2) / untraced - 1 if untraced > 0 else float("nan"))
+        layers["ops.fail_ratio"] = len(failed) / max(1, len(ops))
         etl_s = [o["total_s"] for o in good if o["pass"] == 2 and
                  o["name"].startswith("etl_")]
         n_f = wl.get("corpus", {}).get("filings", 0)
-        lm["ingest.filings_per_s"] = (
+        layers["ingest.filings_per_s"] = (
             n_f / median(etl_s) if etl_s and n_f else 0.0)
-        layers = {k: (lm[k], units[k]) for k in units}
 
     record = {
         "provenance": {
             "source_hash": src_hash, "git_commit": git_commit(root),
-            "nproc": cores, "master": res["master"], "sf_dir": sf_dir,
+            "nproc": cores, "master": res["master"],
+            "sf_dir": os.path.relpath(SF_DIR, root),
+            "tables_sha256": tables_hash,
             "seed": args.seed, "mix_hash": sha(*wl.get("keys", []),
                                                 json.dumps(wl.get("corpus")))
             [:16], "xmx": XMX, "spark_version": res["spark_version"],
@@ -450,13 +498,14 @@ def main(argv=None):
             "seconds": args.seconds},
         "key_order": keys,
         # too few samples per run for a gated p75: it has only a quarter
-        # of 10-16 samples beyond it
+        # of the samples beyond it
         "query_samples": len(samples),
         "query_p75_s": quantile(samples, 0.75) if samples else None,
+        "setup_samples_s": setups,
         "staging_s": res["staging"], "session_start_s": res["session_start_s"],
         "failed": {o["name"]: o["error"] for o in failed},
-        "end_to_end": {k: v[0] for k, v in e2e.items()},
-        "per_layer": {k: v[0] for k, v in layers.items()},
+        "end_to_end": e2e,
+        "per_layer": layers,
         "ops": ops,
     }
     rout = os.path.join(work, "results")
@@ -468,16 +517,20 @@ def main(argv=None):
         shutil.copy(os.path.join(rdir, "spans.json"),
                     os.path.join(rout, stem + "-spans.json"))
 
-    metrics = layers if args.trace else {
-        m["name"]: e2e[m["name"]] for m in spec["end_to_end"]}
+    values = layers if args.trace else e2e
+    declared = bench["per_layer" if args.trace else "end_to_end"]
     print(f"provenance: {json.dumps(record['provenance'])}")
     print(f"query samples: {len(samples)} warm runs of {len(by_key)} keys, "
           f"p75 {record['query_p75_s']}")
     out = {"correct": not failed, "attempted": len(ops),
            "failed": len(failed),
-           "metrics": {k: {"value": None if math.isnan(v) else v, "unit": u}
-                       for k, (v, u) in metrics.items()}}
+           "metrics": {m["name"]: {"value": nan_none(values[m["name"]]),
+                                   "unit": m["unit"]} for m in declared}}
     print(json.dumps(out), flush=True)
+
+
+def nan_none(v):
+    return None if math.isnan(v) else v
 
 
 def git_commit(root):

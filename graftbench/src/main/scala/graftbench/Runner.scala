@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
-import org.json4s.jackson.JsonMethods
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 /** One benchmark run inside one JVM: session start, staging, a cold pass
   * over the workload's mix, then warm passes until the run's time is used.
@@ -17,7 +17,9 @@ import org.json4s.jackson.JsonMethods
   * Spark listeners in [[Tracer]] are attached; without it none is.
   *
   * Usage: `Runner <config.json>` (written by run.py). The result record
-  * goes to the config's `out` path as JSON.
+  * goes to the config's `out` path as JSON. With `setup_only` in the
+  * config the runner stops after set-up, so run.py can take several
+  * set-up samples, each in a fresh JVM.
   */
 object Runner {
   implicit val formats: Formats = DefaultFormats
@@ -41,6 +43,10 @@ object Runner {
       .getOrElse(Map.empty)
     // the IRS-990 corpus manifest of the workload's reference jobs
     val manifest = (cfg \ "manifest").extractOpt[String]
+    val setupOnly = (cfg \ "setup_only").extractOpt[Boolean].getOrElse(false)
+    val outPath = (cfg \ "out").extract[String]
+    def writeOut(res: Map[String, Any]): Unit =
+      Files.write(Paths.get(outPath), Serialization.write(res).getBytes("UTF-8"))
 
     val t0 = System.nanoTime()
     val spark = SparkSession.builder()
@@ -51,10 +57,6 @@ object Runner {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "10")
       .config("spark.local.dir", s"$root/local")
       .config("spark.sql.warehouse.dir", s"$root/warehouse")
       .getOrCreate()
@@ -73,6 +75,13 @@ object Runner {
     }
     val setupS = sessionStartS + stagingS.map(_._2).sum
     System.err.println(f"[graftbench] set-up done at ${secs(t0)}%.1f s")
+    val setupRes = Map("session_start_s" -> sessionStartS, "setup_s" -> setupS,
+      "staging" -> stagingS.toMap)
+    if (setupOnly) {
+      writeOut(setupRes)
+      spark.stop()
+      return
+    }
 
     // the reference jobs run as operations named etl_<job name>, in the
     // mix order run.py chose
@@ -138,11 +147,12 @@ object Runner {
     opNames.foreach(k => ops += runKey(k, 0))
     tracer.foreach(_.endPass())
 
-    // ---- warm phase. An untraced run does at least two whole passes and
-    // more until --seconds have been measured, so every key's median spans
-    // the JIT still settling in the first one and a settled one. A traced
-    // run does one untraced and one traced pass, so the tracing overhead
-    // is measured on equally warm code. ----
+    // ---- warm phase. An untraced run does whole passes until --seconds
+    // have been measured, at least two, so every key's median has two
+    // samples. A traced run does an untraced, a traced and an untraced
+    // pass; run.py compares the traced pass with the mean of the two around
+    // it, so JIT settling across the three does not bias the tracing
+    // overhead. ----
     System.err.println(f"[graftbench] cold pass done at ${secs(t0)}%.1f s")
     val w0 = System.nanoTime()
     tracer match {
@@ -152,6 +162,7 @@ object Runner {
         t.attach(); t.startPass(2)
         opNames.foreach(k => ops += runKey(k, 2))
         t.endPass(); t.detach()
+        opNames.foreach(k => ops += runKey(k, 3))
       case None =>
         var pass = 1
         while (pass <= 2 || secs(w0) < seconds) {
@@ -161,29 +172,19 @@ object Runner {
     }
     System.err.println(f"[graftbench] warm phase done at ${secs(t0)}%.1f s")
 
-    val out = new StringBuilder
-    out ++= "{"
-    out ++= s""""workload":${Json.str(workload)},"session_start_s":$sessionStartS,"""
-    out ++= s""""setup_s":$setupS,"staging":${Json.obj(stagingS.map {
-      case (k, v) => k -> v.toString })},"""
-    out ++= s""""live_heap_mb":$liveHeapMb,"spark_version":${Json.str(spark.version)},"""
-    out ++= s""""master":${Json.str(spark.sparkContext.master)},"""
-    out ++= s""""ops":[${ops.map { o =>
-      s"""{"name":${Json.str(o.name)},"pass":${o.pass},"traced":${o.traced},""" +
-        s""""build_s":${o.buildS},"total_s":${o.totalS},""" +
-        s""""error":${o.error.map(Json.str).getOrElse("null")}}"""
-    }.mkString(",")}]"""
     val oracle = graft.SparkEntry.oracleSql
-    out ++= s""","oracle":${Json.obj(keys.flatMap(k =>
-      oracle.get(k).map(q => k -> Json.str(q))))}"""
-    tracer.foreach { t =>
-      out ++= s""","layers":${t.layerMetrics(stagingS.map(_._2).sum,
-        sessionStartS)}"""
-      t.writeSpans(s"$root/spans.json")
-    }
-    out ++= "}"
-    Files.write(Paths.get((cfg \ "out").extract[String]),
-      out.toString.getBytes("UTF-8"))
+    val res = setupRes ++ Map(
+      "workload" -> workload, "live_heap_mb" -> liveHeapMb,
+      "spark_version" -> spark.version, "master" -> spark.sparkContext.master,
+      "ops" -> ops.map(o => Map("name" -> o.name, "pass" -> o.pass,
+        "traced" -> o.traced, "build_s" -> o.buildS, "total_s" -> o.totalS,
+        "error" -> o.error.orNull)).toList,
+      "oracle" -> keys.flatMap(k => oracle.get(k).map(k -> _)).toMap) ++
+      tracer.map { t =>
+        t.writeSpans(s"$root/spans.json")
+        "layers" -> t.layerMetrics(stagingS.map(_._2).sum, sessionStartS)
+      }
+    writeOut(res)
     spark.stop()
     System.err.println(f"[graftbench] stopped at ${secs(t0)}%.1f s")
   }
@@ -233,20 +234,4 @@ object Stagers {
       graft.streaming.StreamingOps.ensureStaged(s, d)))
 
   def apply(name: String): (SparkSession, String) => Unit = all(name)
-}
-
-object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** Object from already-rendered values. */
-  def obj(kv: Iterable[(String, String)]): String =
-    kv.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
-
-  def num(x: Double): String =
-    if (x.isNaN || x.isInfinite) "null" else x.toString
 }

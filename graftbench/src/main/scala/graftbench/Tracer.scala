@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** In-memory spans and counters for a traced run.
   *
@@ -28,6 +30,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Spans are written out when the run ends.
   */
 class Tracer(spark: SparkSession, cores: Int) {
+  private implicit val formats: Formats = DefaultFormats
   case class Span(id: Int, parent: Int, name: String, layer: String,
       key: String, pass: Int, startMs: Double, var endMs: Double)
 
@@ -282,7 +285,7 @@ class Tracer(spark: SparkSession, cores: Int) {
   /** Per-layer metrics: means over the traced warm passes; codegen over
     * the cold pass (pass 0); staging and session over set-up.
     */
-  def layerMetrics(stagingS: Double, sessionS: Double): String = {
+  def layerMetrics(stagingS: Double, sessionS: Double): Map[String, Double] = {
     val warm = passes.filter(_ > 0).toSeq
     val n = math.max(1, warm.size).toDouble
     def mean(k: String) = warm.map(p => counters.getOrElse((p, k), 0.0)).sum / n
@@ -359,17 +362,15 @@ class Tracer(spark: SparkSession, cores: Int) {
       "self.graftjob_s" -> selfOf("graftjob"),
       "spans.min_self_ms" -> (if (self.isEmpty) 0.0 else self.values.min),
       "spans.count" -> spans.size.toDouble)
-    Json.obj(m.map { case (k, v) => k -> Json.num(v) })
+    m.toMap
   }
 
   def writeSpans(path: String): Unit = {
     val self = selfMs
-    val body = spans.map { s =>
-      s"""{"id":${s.id},"parent":${s.parent},"name":${Json.str(s.name)},""" +
-        s""""layer":"${s.layer}","key":${Json.str(s.key)},"pass":${s.pass},""" +
-        s""""start_ms":${Json.num(s.startMs)},"end_ms":${Json.num(s.endMs)},""" +
-        s""""self_ms":${Json.num(self(s.id))}}"""
-    }.mkString("[\n", ",\n", "\n]")
-    Files.write(Paths.get(path), body.getBytes("UTF-8"))
+    val rows = spans.map(s => Map("id" -> s.id, "parent" -> s.parent,
+      "name" -> s.name, "layer" -> s.layer, "key" -> s.key, "pass" -> s.pass,
+      "start_ms" -> s.startMs, "end_ms" -> s.endMs, "self_ms" -> self(s.id)))
+    Files.write(Paths.get(path), Serialization.writePretty(rows.toList)
+      .getBytes("UTF-8"))
   }
 }
