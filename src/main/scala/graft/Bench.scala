@@ -1,10 +1,18 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** Per-round benchmark main (driver contract): runs every SparkEntry query
   * against $SPARK_GRAFT_SF_DIR and prints one JSON line
-  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec},"sf":dir}.
+  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec},...,
+  * "failed":{name:cause}}. A key that throws is listed under "failed" with
+  * its cause and left out of "queries" and the total: time-to-crash is not
+  * a measurement.
   *
   * Each query is forced through the noop sink rather than count() — count()
   * lets Catalyst prune every computed column (a scan-only measurement),
@@ -12,32 +20,15 @@ import org.apache.spark.sql.SparkSession
   * is what a real consumer pays.
   */
 object Bench {
+  private implicit val formats: Formats = DefaultFormats
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // the AppStatus/SQL stores still populate with the UI disabled (they
-      // back the status APIs) and default retention keeps 1000 stages +
-      // 100k tasks + 1000 SQL executions live across the whole sweep —
-      // steady listener-thread eviction churn and old-gen residency that
-      // the per-key cleanup cannot touch; a 400-key sweep needs none of it
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // one-off layout/source staging outside the timed loop — bench should
     // measure the operators, not idempotent one-time writes
     try SparkEntry.prepare(spark, sfDir)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] prepare failed: ${e.getMessage}")
     }
     // dev loop: `runMain graft.Bench q1 q2` times only the named queries;
@@ -55,7 +46,9 @@ object Bench {
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] cleanup: cache clear failed: $e")
+      }
       // streaming queries additionally pin driver/executor memory the
       // cache clear misses: memory-sink tables (all emitted rows, held by
       // the temp view) and loaded state-store providers (one per shuffle
@@ -69,7 +62,9 @@ object Bench {
           .foreach(t => spark.catalog.dropTempView(t.name))
         org.apache.spark.sql.execution.streaming.state.StateStoreJanitor
           .unloadAll()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] cleanup: stream teardown failed: $e")
+      }
       // Spark's ContextCleaner frees dead broadcasts / shuffle files /
       // accumulators only when the DRIVER garbage-collects their handles —
       // in a 124-query sweep the driver heap never fills, so nothing is
@@ -98,6 +93,9 @@ object Bench {
     val reps = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").trim.toInt).getOrElse(1))
 
+    // key -> cause of the first failure; a failed key reports no time
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+
     // The timing window is this whole function and nothing else — it returns
     // the elapsed seconds, so cleanup() structurally CANNOT land inside it
     // (the r2/r3 bug class was cleanup creeping into the timed expression).
@@ -106,8 +104,9 @@ object Bench {
         : Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        if (!failed.contains(name)) failed(name) = Verify.cause(e)
       }
       val dt = (System.nanoTime() - t0) / 1e9
       // TRACE=1: stamp each rep as it finishes so an external sampler
@@ -140,7 +139,9 @@ object Bench {
       logReps("sweep", name, times)
       name -> times
     }
-    val results = raw.map { case (name, ts) => name -> median(ts) }
+    val results = raw.collect {
+      case (name, ts) if !failed.contains(name) => name -> median(ts)
+    }
 
     // Second pass over the known-variance keys (plus any key whose own
     // reps spread >= 3x this run): re-measure AFTER the sweep so every
@@ -188,15 +189,12 @@ object Bench {
         }
         logReps(f"solo(warm=$warm%.2f)", name, times)
         name -> median(times)
-      }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val soloJson = soloPairs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+      }.filterNot { case (name, _) => failed.contains(name) }
     val total = results.map(_._2).sum
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""solo":$soloJson,"reps":$reps,"sf":"$sfDir"}"""
+    val full = Serialization.write(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> ListMap(results: _*), "solo" -> ListMap(soloPairs: _*),
+      "reps" -> reps, "sf" -> sfDir, "failed" -> ListMap(failed.toSeq: _*)))
     // full line (per-query breakdown), then a durable file copy, then a
     // SHORT final line — the r1 driver tail-capture truncated the 4 KB full
     // line and lost the total; the short line cannot be truncated away.
@@ -204,10 +202,14 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")), full)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] file write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} FAILED: " +
+        failed.keys.mkString(", "))
+    println(Serialization.write(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "sf" -> sfDir)))
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
 
 /** Optimization-round evidence dump: writes each named query's
   * `.explain("formatted")` output to `<outDir>/<query>_<suffix>.txt` so
@@ -15,17 +16,7 @@ object PlanDump {
     require(names.toSet.subsetOf(SparkEntry.queries.keySet),
       s"unknown query names: ${(names.toSet -- SparkEntry.queries.keySet).mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {
@@ -34,7 +25,7 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         System.err.println(s"[plandump] wrote $name ($suffix)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
     }

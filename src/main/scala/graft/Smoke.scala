@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Reproduces the driver's t1 smoke gate locally: SparkEntry.entry must
   * return >0 rows. Prints the flagship result and the row count.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("local[4]", "graft-smoke")
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)
     println(s"[smoke] entry rows = ${df.count()}")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +45,7 @@ object SparkEntry {
     // most drift-prone input (events), so it runs last among the stagers.
     stages.foreach { case (family, run) =>
       try run(spark, sfDir)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(
           s"[prepare] $family staging FAILED " +
             s"(${e.getClass.getSimpleName}: ${e.getMessage}); " +
@@ -115,7 +117,7 @@ object SparkEntry {
       .foreach { k =>
         try queries(k)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(
             s"[prepare] warm-up FAILED for $k " +
               s"(${e.getClass.getSimpleName}: ${e.getMessage})")

@@ -1,9 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private implicit val formats: Formats = DefaultFormats
+
+  /** A failure's cause as recorded in failures.json and Bench's "failed". */
+  private[graft] def cause(e: Throwable): String =
+    s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
+
   def main(args: Array[String]): Unit = {
     // dev loop: trailing args select a query subset (the driver passes
     // exactly two args → full sweep); oracle_sql.json is always complete
@@ -13,16 +23,7 @@ object Verify {
     // would silently run ZERO queries and exit 0
     require(only.subsetOf(SparkEntry.queries.keySet),
       s"unknown query names: ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries
@@ -35,32 +36,19 @@ object Verify {
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failures(name) =
-          s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
+        failures(name) = cause(e)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // json4s escapes quotes, backslashes and every control char: a tab or
+    // CR in an oracle's SQL must not break check_oracle.py's json.load
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(SparkEntry.oracleSql))
     // Always written (possibly `{}`): an absent file is indistinguishable
     // from an old Verify build, an empty object is a positive all-clear.
     Files.writeString(Paths.get(s"$outDir/failures.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}"))
+      Serialization.write(failures))
     if (failures.nonEmpty) {
       System.err.println(
         s"[verify] ${failures.size} quer${if (failures.size == 1) "y" else "ies"} FAILED: " +

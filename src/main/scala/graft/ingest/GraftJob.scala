@@ -207,11 +207,8 @@ object GraftJob {
   def runMain(job: GraftJob, argv: Array[String]): Unit = {
     val args = GraftArgs.parse(argv, job.addArguments)
     job.validateArguments(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(job.name)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Session(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      job.name)
     args.logLevel.foreach(spark.sparkContext.setLogLevel)
     try job.run(spark, args).show(50, truncate = false)
     finally spark.stop()

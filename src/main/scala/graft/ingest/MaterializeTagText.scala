@@ -2,8 +2,6 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: materialize the XML corpus's flattened ingest to the single
   * committed golden file `tagtext.parquet` (FIXTURES.md §B — backs the
   * DuckDB oracles for the A-family queries). Usage:
@@ -13,11 +11,7 @@ object MaterializeTagText {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .getOrElse("/root/repo/src/test/resources/irs990")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("local[4]", "graft-materialize-tagtext")
     val tmp = s"${sys.props("java.io.tmpdir")}/graft_tagtext_out"
     XmlIngest.fetchParse(spark, s"$dir/manifest.txt", dir, 4)
       .orderBy("doc", "pos").coalesce(1)

@@ -1,20 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Engine extension point (SURVEY §4.2): registers graft's native Catalyst
-  * expressions. Two entry paths:
+/** Engine extension point (SURVEY §4.2): injects graft's native Catalyst
+  * expressions and [[BinnedRangeJoinRule]] into a session. The one entry
+  * path is `spark.sql.extensions=graft.plans.GraftExtensions` at session
+  * build time, which [[graft.Session]] always sets; a host application
+  * building its own session sets the same key. The rule then runs inside
+  * Catalyst's operator-optimization batch, and `newSession()` children
+  * inherit both the functions and the rule.
   *
-  *  - declaratively: `spark.sql.extensions=graft.plans.GraftExtensions` at
-  *    session build time (the standard SparkSessionExtensions hook);
-  *  - imperatively: [[GraftExtensions.register]] on a live session, for
-  *    host applications whose session is built elsewhere (idempotent).
-  *
-  * After registration the functions are callable from SQL and from the
-  * DataFrame API via `call_function("graft_dot", a, b)`.
+  * The functions are callable from SQL and from the DataFrame API via
+  * `call_function("graft_dot", a, b)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -84,24 +83,4 @@ object GraftExtensions {
         }
         UnicodeNormalize(children.head, form)
       }))
-
-  /** Idempotent imperative registration into a live session. */
-  def register(spark: SparkSession): Unit = {
-    injections.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, info, builder)
-    }
-    // optimizer rules can't be injected post-build via SparkSessionExtensions;
-    // experimental.extraOptimizations is the live-session equivalent.
-    // Skip when the session was already built WITH this extension class
-    // (spark.sql.extensions) — appending again would run the rule twice
-    // per optimization pass (harmless via the hasEqui fixpoint guard,
-    // but pure wasted optimizer work on every plan).
-    val viaExtensions = spark.conf.getOption("spark.sql.extensions")
-      .exists(_.contains(classOf[GraftExtensions].getName))
-    if (!viaExtensions && !spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[BinnedRangeJoinRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BinnedRangeJoinRule(spark)
-  }
 }

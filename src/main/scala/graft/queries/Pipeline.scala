@@ -118,7 +118,6 @@ object Pipeline {
 
   private def censusVerified(s: SparkSession, cand: DataFrame,
       nodes: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     cand
       .join(nodes.select(col("h").as("ha"), col("g").as("gA")), "ha")
       .join(nodes.select(col("h").as("hb"), col("g").as("gB")), "hb")
@@ -1290,7 +1289,6 @@ object Pipeline {
     // propagation, so the gate checks transitive clustering, not just
     // per-stage counts.
     "pipeline_curation_census" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val raw = Tables(s, d, "documents")
       val surv = raw.groupBy("text").agg(min("doc_id").as("doc_id"))
         .localCheckpoint(true) // read by CC, gate, count
@@ -2027,7 +2025,6 @@ object Pipeline {
     // and each probe row stays inside whole-stage codegen (no UDF
     // boundary on the scan).
     "sketch_bloom_filter" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val shipped = Tables(s, d, "lineitem")
         .filter(col("l_quantity") > 45).select(col("l_partkey"))
       val bf = shipped.stat.bloomFilter("l_partkey", 100000L, 0.01)

@@ -286,7 +286,6 @@ object Relational {
     // (opt-in via the bin-width conf, exact residual keeps semantics).
     // The plan spec asserts no NestedLoop node survives.
     "join_range_auto" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       // deliberately left set for the session: restoring it in a finally
       // would disable the rule before the caller's action re-plans the
       // (lazy) DataFrame. Safe to leave on — the rule is exactness-

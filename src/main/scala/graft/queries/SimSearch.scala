@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.plans.GraftExtensions
 
 /** Similarity search over the `embeddings` table — SURVEY.md §2.B B45 plus
   * the approximate scale path (random-hyperplane LSH bucketing) and
@@ -33,11 +32,9 @@ object SimSearch {
     * left-to-right double accumulation as the DuckDB oracle, but emitted
     * straight into whole-stage codegen over unsafe ArrayData.
     */
-  private def ndot(s: SparkSession)(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    GraftExtensions.register(s)
+  private def ndot(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     call_function("graft_dot", a, b)
-  }
 
   /** Unit-normalize an `array<float>` column. The IVF queries rank by
     * COSINE, so the coarse cells must be carved by angle, not magnitude:
@@ -79,7 +76,7 @@ object SimSearch {
     val stride = math.max(1L, n / k)
     emb.filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
       .orderBy("vec_id")
-      .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       .select(unitBy(col("embedding"), col("nrm")))
       .as[Array[Float]].collect().map(_.toSeq).toSeq
   }
@@ -110,10 +107,9 @@ object SimSearch {
     */
   private[graft] def trainKmeans(s: SparkSession, emb: DataFrame,
       iters: Int = 4): Seq[Seq[Float]] = {
-    GraftExtensions.register(s)
     var cents = strideSeed(s, emb)
     val vecs = emb
-      .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       .select(unitBy(col("embedding"), col("nrm")).as("embedding"))
       .repartition(s.sparkContext.defaultParallelism)
       .cache()
@@ -193,7 +189,6 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivf_km", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      GraftExtensions.register(s)
       val emb = t(s, d, "embeddings")
       val cents = trainedCodebook(s, d)
       val codebook = typedlit(cents)
@@ -202,7 +197,7 @@ object SimSearch {
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       emb.repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .withColumn("cell", explode(
           call_function("graft_nearest_cells",
             unitBy(col("embedding"), col("nrm")),
@@ -230,7 +225,6 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivf_incr", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      GraftExtensions.register(s)
       import s.implicits._
       val base = t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0)
       val cents = codebookCache.computeIfAbsent(s"$d@$stamp#incrbase",
@@ -240,7 +234,7 @@ object SimSearch {
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       base.repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .withColumn("cell", explode(
           call_function("graft_nearest_cells",
             unitBy(col("embedding"), col("nrm")),
@@ -306,7 +300,7 @@ object SimSearch {
   private[graft] def filteredExact(s: SparkSession, d: String,
       labels: Seq[Int]): DataFrame = {
     val emb = t(s, d, "embeddings")
-      .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
     val q = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         col("nrm").as("qn"))
@@ -318,7 +312,7 @@ object SimSearch {
       .orderBy(col("cos").desc, col("vec_id").asc)
     broadcast(q).join(c, col("q_id") =!= col("vec_id"))
       .withColumn("cos",
-        ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+        ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5)
       .select(col("q_id"), col("vec_id"),
@@ -344,7 +338,6 @@ object SimSearch {
   private[graft] def ivfFiltered(s: SparkSession, d: String,
       labels: Seq[Int], adaptive: Boolean): DataFrame = {
     import s.implicits._
-    GraftExtensions.register(s)
     val p = ivfStaged(s, d)
     val cents: Seq[Seq[Float]] = s.read.parquet(s"$p/centroids")
       .orderBy("cell").select("centroid")
@@ -378,7 +371,7 @@ object SimSearch {
     broadcast(q).join(c, Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cos",
-        ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+        ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
       .select(col("q_id"), col("vec_id"), col("cos"))
       .dropDuplicates("q_id", "vec_id")
       .withColumn("rn", row_number().over(w))
@@ -568,7 +561,6 @@ object SimSearch {
     */
   private[graft] def trainPqCodebooks(s: SparkSession, emb: DataFrame,
       iters: Int = 3): Seq[Seq[Seq[Float]]] = {
-    GraftExtensions.register(s)
     // seed: the same deterministic stride picks as the IVF coarse
     // quantizer, sliced into subspaces driver-side (16 × 64 floats)
     var cb: Seq[Seq[Seq[Float]]] = {
@@ -576,7 +568,7 @@ object SimSearch {
       (0 until PqM).map(m => picks.map(_.slice(m * PqDim, (m + 1) * PqDim)))
     }
     val sub = emb
-      .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       .select(posexplode(transform(sequence(lit(0), lit(PqM - 1)),
         m => slice(unitBy(col("embedding"), col("nrm")),
           m * PqDim + 1, lit(PqDim))))
@@ -639,7 +631,6 @@ object SimSearch {
     val path = graft.Staging.dir("graft_pq", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      GraftExtensions.register(s)
       import s.implicits._
       val cb = pqCodebook(s, d)
       val cbLit = typedlit(cb)
@@ -649,7 +640,7 @@ object SimSearch {
         .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
       t(s, d, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .select(col("vec_id"),
           transform(sequence(lit(0), lit(PqM - 1)), m =>
             element_at(call_function("graft_nearest_cells",
@@ -728,7 +719,6 @@ object SimSearch {
   private[graft] def ivfpqCandidates(s: SparkSession, d: String)
       : DataFrame = {
     import s.implicits._
-    GraftExtensions.register(s)
     val p = ivfpqStaged(s, d)
     val qRows = pqQueryRows(s, d, pqCodebook(s, d), trainedCodebook(s, d))
     val qDf = qRows
@@ -783,7 +773,6 @@ object SimSearch {
     */
   private[graft] def trainResidualPqOn(s: SparkSession, emb: DataFrame,
       coarse: Seq[Seq[Float]], iters: Int = 3): Seq[Seq[Seq[Float]]] = {
-    GraftExtensions.register(s)
     val coarseLit = typedlit(coarse)
     // seed: the stride picks' residuals vs their primary cell — K-sized
     // driver arithmetic over the coarse codebook
@@ -800,7 +789,7 @@ object SimSearch {
         resid.map(_.slice(m * PqDim, (m + 1) * PqDim)))
     }
     val sub = emb
-      .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       .withColumn("u", unitBy(col("embedding"), col("nrm")))
       .withColumn("cell", element_at(call_function("graft_nearest_cells",
         col("u"), coarseLit, lit(1)), 1))
@@ -872,7 +861,6 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivfpq_res", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      GraftExtensions.register(s)
       import s.implicits._
       val cb = residualPqCodebook(s, d)
       val cbLit = typedlit(cb)
@@ -908,7 +896,6 @@ object SimSearch {
     */
   private[graft] def ivfpqResidualCandidates(s: SparkSession, d: String)
       : DataFrame = {
-    GraftExtensions.register(s)
     val p = ivfpqResidualStaged(s, d)
     // per-query residual LUT (lut[m][k] = ⟨u_q slice m, cb(m)(k)⟩) plus
     // the per-(query, cell) ⟨u_q, centroid⟩ offsets; the isin over the
@@ -985,15 +972,15 @@ object SimSearch {
       .withColumn("srn", row_number().over(shortlist))
       .filter(col("srn") <= PqShortlist)
       .select(col("q_id"), col("vec_id"), col("qe"),
-        sqrt(ndot(s)(col("qe"), col("qe"))).as("qn"))
+        sqrt(ndot(col("qe"), col("qe"))).as("qn"))
     val c = t(s, d, "embeddings").select(col("vec_id"),
       col("embedding").as("ce"),
-      sqrt(ndot(s)(col("embedding"), col("embedding"))).as("cn"))
+      sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
     val w = Window.partitionBy("q_id")
       .orderBy(col("cos").desc, col("vec_id").asc)
     broadcast(cands).join(c, Seq("vec_id"))
       .withColumn("cos",
-        ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+        ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5)
       .select(col("q_id"), col("vec_id"),
@@ -1014,7 +1001,6 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivfpq_incr", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      GraftExtensions.register(s)
       import s.implicits._
       val ivfP = incrIvfStaged(s, d)
       val coarse: Seq[Seq[Float]] = s.read.parquet(s"$ivfP/centroids")
@@ -1066,10 +1052,9 @@ object SimSearch {
     */
   private[graft] def ivfpqIncrDelta(s: SparkSession, d: String,
       coarse: Seq[Seq[Float]], cb: Seq[Seq[Seq[Float]]]): DataFrame = {
-    GraftExtensions.register(s)
     val coarseLit = typedlit(coarse)
     t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-      .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       .withColumn("cell", explode(
         call_function("graft_nearest_cells",
           unitBy(col("embedding"), col("nrm")), coarseLit,
@@ -1154,7 +1139,7 @@ object SimSearch {
         col("nrm").as("na")), Seq("va"))
       .join(ebc.select(col("vec_id").as("vb"), col("embedding").as("eb"),
         col("nrm").as("nb")), Seq("vb"))
-      .filter(ndot(s)(col("ea"), col("eb")) /
+      .filter(ndot(col("ea"), col("eb")) /
         (col("na") * col("nb")) > 0.4)
       .select(col("va").as("src"), col("vb").as("dst"))
   }
@@ -1164,10 +1149,9 @@ object SimSearch {
     val path = graft.Staging.dir("graft_semantic_cc", d)
     val stamp = graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
     if (!graft.Staging.isCurrent(path, stamp)) {
-      GraftExtensions.register(s)
       val emb = t(s, d, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .localCheckpoint(true)
       // candidate rows carry ONLY (id, band, bucket, packed-long band
       // vector) — never the embedding: the band join's fan-out is the
@@ -1214,11 +1198,10 @@ object SimSearch {
     val path = graft.Staging.dir("graft_incr_base", d)
     val stamp = graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
     if (!graft.Staging.isCurrent(s"$path/buckets", stamp)) {
-      GraftExtensions.register(s)
       val emb = t(s, d, "embeddings")
         .filter(col("vec_id") % 10 =!= 0)
         .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .localCheckpoint(true)
       val withBuckets = emb.select(col("vec_id"),
         ccPackedBuckets(col("embedding")).as("pk"))
@@ -1254,7 +1237,6 @@ object SimSearch {
     // build. No oracle (approximate recall — ScalaTest-bounded).
     "simsearch_ivf_persisted" -> ((s, d) => {
       import s.implicits._
-      GraftExtensions.register(s)
       val p = ivfStaged(s, d)
       val cents: Seq[Seq[Float]] = s.read.parquet(s"$p/centroids")
         .orderBy("cell").select("centroid")
@@ -1280,7 +1262,7 @@ object SimSearch {
       broadcast(q).join(c, Seq("cell"))
         .filter(col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .select(col("q_id"), col("vec_id"), col("cos"))
         .dropDuplicates("q_id", "vec_id")
         .withColumn("rn", row_number().over(w))
@@ -1307,14 +1289,13 @@ object SimSearch {
     // same staging path run fresh. No oracle (ANN family); spec-pinned.
     "simsearch_ivf_incremental" -> ((s, d) => {
       import s.implicits._
-      GraftExtensions.register(s)
       val p = incrIvfStaged(s, d)
       val cents: Seq[Seq[Float]] = s.read.parquet(s"$p/centroids")
         .orderBy("cell").select("centroid")
         .as[Array[Float]].collect().map(_.toSeq).toSeq
       val codebook = typedlit(cents)
       val delta = t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .withColumn("cell", explode(
           call_function("graft_nearest_cells",
             unitBy(col("embedding"), col("nrm")),
@@ -1338,7 +1319,7 @@ object SimSearch {
       broadcast(q).join(c, Seq("cell"))
         .filter(col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .select(col("q_id"), col("vec_id"), col("cos"))
         .dropDuplicates("q_id", "vec_id")
         .withColumn("rn", row_number().over(w))
@@ -1361,7 +1342,6 @@ object SimSearch {
     // oracle (approximate recall — ScalaTest-bounded vs the brute twin).
     "simsearch_pq_topk" -> ((s, d) => {
       import s.implicits._
-      GraftExtensions.register(s)
       val p = pqStaged(s, d)
       val cb = pqCodebook(s, d)
       val emb = t(s, d, "embeddings")
@@ -1388,15 +1368,15 @@ object SimSearch {
         .withColumn("srn", row_number().over(shortlist))
         .filter(col("srn") <= PqShortlist)
         .select(col("q_id"), col("vec_id"), col("qe"),
-          sqrt(ndot(s)(col("qe"), col("qe"))).as("qn"))
+          sqrt(ndot(col("qe"), col("qe"))).as("qn"))
       // exact re-rank: ≤ 8 × 64 candidates fetch their full vectors
       val c = emb.select(col("vec_id"), col("embedding").as("ce"),
-        sqrt(ndot(s)(col("embedding"), col("embedding"))).as("cn"))
+        sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
       broadcast(cands).join(c, Seq("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
@@ -1424,14 +1404,14 @@ object SimSearch {
         .withColumn("srn", row_number().over(shortlist))
         .filter(col("srn") <= PqShortlist)
         .select(col("q_id"), col("vec_id"), col("qe"),
-          sqrt(ndot(s)(col("qe"), col("qe"))).as("qn"))
+          sqrt(ndot(col("qe"), col("qe"))).as("qn"))
       val c = emb.select(col("vec_id"), col("embedding").as("ce"),
-        sqrt(ndot(s)(col("embedding"), col("embedding"))).as("cn"))
+        sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
       broadcast(cands).join(c, Seq("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"),
@@ -1463,7 +1443,6 @@ object SimSearch {
     // the retrain-and-rebuild policy is this staging path run fresh.
     // No oracle (ANN family); spec-pinned.
     "simsearch_ivfpq_incremental" -> ((s, d) => {
-      GraftExtensions.register(s)
       val p = ivfpqIncrStaged(s, d)
       val (coarse, cb) = ivfpqIncrCodebooks(s, d)
       val (qDf, probed) = residualQueryFrame(s, d, cb, coarse)
@@ -1554,9 +1533,9 @@ object SimSearch {
       val wC = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
       shortlist
-        .withColumn("cos", ndot(s)(col("embedding"), col("qe")) /
-          (sqrt(ndot(s)(col("embedding"), col("embedding"))) *
-            sqrt(ndot(s)(col("qe"), col("qe")))))
+        .withColumn("cos", ndot(col("embedding"), col("qe")) /
+          (sqrt(ndot(col("embedding"), col("embedding"))) *
+            sqrt(ndot(col("qe"), col("qe")))))
         .withColumn("rn", row_number().over(wC))
         .filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"),
@@ -1566,7 +1545,7 @@ object SimSearch {
 
     "simsearch_cosine_topk" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"))
@@ -1578,7 +1557,7 @@ object SimSearch {
         .orderBy(col("cos").desc, col("vec_id").asc)
       broadcast(q).join(c, col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
@@ -1648,7 +1627,7 @@ object SimSearch {
     // on the identical doubles), ties break on doc_id.
     "search_mmr_rerank" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"))
@@ -1659,7 +1638,7 @@ object SimSearch {
         .orderBy(col("rel").desc, col("doc_id").asc)
       val cand = broadcast(q).join(c, col("q_id") =!= col("vec_id"))
         .withColumn("rel",
-          round(ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
+          round(ndot(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
         .select(col("q_id"), col("vec_id").as("doc_id"), col("rel"))
         .withColumn("rn", row_number().over(wr))
         .filter(col("rn") <= 20)
@@ -1674,7 +1653,7 @@ object SimSearch {
             col("x.doc_id") =!= col("y.doc_id"))
         .select(col("x.q_id").as("q_id"), col("x.doc_id").as("a"),
           col("y.doc_id").as("b"),
-          round(ndot(s)(col("x.embedding"), col("y.embedding")) /
+          round(ndot(col("x.embedding"), col("y.embedding")) /
             (col("x.nrm") * col("y.nrm")), 4).as("s"))
       // r19: the 5-round greedy argmax FOLDS PER QUERY in one cogroup
       // pass instead of 5 unrolled dataframe steps — the per-query state
@@ -1757,7 +1736,7 @@ object SimSearch {
     "search_hybrid_rrf" -> ((s, d) => {
       val lex = bm25TopK(s, d, 20).select("q_id", "doc_id", "rl")
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       val qv = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").cast("long").as("q_id"),
           col("embedding").as("qe"), col("nrm").as("qn"))
@@ -1768,7 +1747,7 @@ object SimSearch {
         .orderBy(col("cos").desc, col("doc_id").asc)
       val vec = broadcast(qv).join(cv, col("q_id") =!= col("doc_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rv", row_number().over(wv))
         .filter(col("rv") <= 20)
         .select("q_id", "doc_id", "rv")
@@ -1801,7 +1780,7 @@ object SimSearch {
     // bound can still reach τ.
     "simsearch_range_query" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"))
@@ -1810,7 +1789,7 @@ object SimSearch {
           col("nrm").as("cn"))
       broadcast(q).join(c, col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .filter(col("cos") >= 0.4)
         .select(col("q_id"), col("vec_id"),
           round(col("cos"), 4).as("cos_sim"))
@@ -1830,7 +1809,7 @@ object SimSearch {
     // queries×10 rows: eval cost is decoupled from corpus size.
     "eval_ranking_metrics" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("label").as("qlabel"))
@@ -1843,7 +1822,7 @@ object SimSearch {
         .groupBy("label").agg(count(lit(1)).as("nlab"))
       broadcast(q).join(c, col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10)
         .withColumn("rel",
@@ -1885,7 +1864,7 @@ object SimSearch {
       val k = 8
       val base = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
-        .withColumn("self", ndot(s)(col("embedding"), col("embedding")))
+        .withColumn("self", ndot(col("embedding"), col("embedding")))
         // LAZY: the seed collect below is the first action and
         // materializes it (r19 — one job, not checkpoint-job + collect)
         .localCheckpoint(false)
@@ -1899,7 +1878,7 @@ object SimSearch {
         cur = cur.withColumn("dmin",
           least(col("dmin"),
             col("self") + lit(centerSelf) -
-              lit(2.0) * ndot(s)(col("embedding"), typedLit(centerVec))))
+              lit(2.0) * ndot(col("embedding"), typedLit(centerVec))))
           // LAZY: the argmax collect materializes this round's frame —
           // halves the per-round job count (r19); lineage still truncates
           .localCheckpoint(false)
@@ -1953,7 +1932,7 @@ object SimSearch {
         t(s, d, "embeddings").select("vec_id"), 50000,
         "dedup_embedding_cosine", "simsearch_lsh_bucketed")
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       // single-file source = one partition; spread the n² pair loop
       val a = emb.repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id").as("va"), col("embedding").as("ea"),
@@ -1962,7 +1941,7 @@ object SimSearch {
         col("nrm").as("nb"))
       a.join(broadcast(b), col("va") < col("vb"))
         .withColumn("cos",
-          ndot(s)(col("ea"), col("eb")) / (col("na") * col("nb")))
+          ndot(col("ea"), col("eb")) / (col("na") * col("nb")))
         .filter(col("cos") > 0.4)
         .select(col("va"), col("vb"), round(col("cos"), 4).as("cos_sim"))
         .orderBy("va", "vb")
@@ -2010,10 +1989,9 @@ object SimSearch {
     // exact equality with dedup_semantic_cluster's assignment. No
     // oracle (inherits the LSH banding); spec-pinned instead.
     "dedup_incremental_index" -> ((s, d) => {
-      GraftExtensions.register(s)
       val base = incrBaseStaged(s, d)
       val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
       val newB = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id"), ccPackedBuckets(col("embedding")).as("pk"))
         .localCheckpoint(true) // 24 hyperplane dots once, two consumers
@@ -2093,7 +2071,6 @@ object SimSearch {
     // and recall against the brute-force twin.
     "simsearch_lsh_bucketed" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      GraftExtensions.register(s)
       // Sign-of-projection per plane via the codegen'd graft_dot (double
       // plane literal side) — same bits as the former interpreted
       // aggregate(zip_with) lambda, but no per-element struct allocation.
@@ -2106,17 +2083,17 @@ object SimSearch {
         bucket(col("embedding")).as("bucket"))
       val q = withB.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("bucket"), sqrt(ndot(s)(col("embedding"), col("embedding")))
+          col("bucket"), sqrt(ndot(col("embedding"), col("embedding")))
             .as("qn"))
       val c = withB.select(col("vec_id"), col("embedding").as("ce"),
-        col("bucket"), sqrt(ndot(s)(col("embedding"), col("embedding")))
+        col("bucket"), sqrt(ndot(col("embedding"), col("embedding")))
           .as("cn"))
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
       broadcast(q).join(c, Seq("bucket"))
         .filter(col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
@@ -2137,7 +2114,6 @@ object SimSearch {
     // simsearch_lsh_bucketed.
     "simsearch_lsh_multiprobe" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      GraftExtensions.register(s)
       def bucket(e: org.apache.spark.sql.Column) =
         planes.zipWithIndex.map { case (p, i) =>
           when(call_function("graft_dot", e, typedlit(p.toSeq)) > 0,
@@ -2148,20 +2124,20 @@ object SimSearch {
       val q = withB.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("bucket").as("qb"),
-          sqrt(ndot(s)(col("embedding"), col("embedding"))).as("qn"))
+          sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))
       val probeCols = col("qb") +: planes.indices.map(i =>
         col("qb").bitwiseXOR(lit(1 << i)))
       val probes = q.withColumn("bucket",
         explode(array(probeCols: _*)))
       val c = withB.select(col("vec_id"), col("embedding").as("ce"),
-        col("bucket"), sqrt(ndot(s)(col("embedding"), col("embedding")))
+        col("bucket"), sqrt(ndot(col("embedding"), col("embedding")))
           .as("cn"))
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
       broadcast(probes).join(c, Seq("bucket"))
         .filter(col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"),
@@ -2182,17 +2158,16 @@ object SimSearch {
     // (asserted in PhysicalSpec). No oracle (approximate recall — measured
     // against the brute-force twin in ScalaTest).
     "simsearch_ivf_topk" -> ((s, d) => {
-      GraftExtensions.register(s)
       val emb = t(s, d, "embeddings")
       val codebook = typedlit(trainedCodebook(s, d))
       val index = emb.repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .withColumn("cell", explode(
           call_function("graft_nearest_cells",
             unitBy(col("embedding"), col("nrm")),
             codebook, lit(SoftAssign))))
       val q = emb.filter(col("vec_id") < 8)
-        .withColumn("nrm", sqrt(ndot(s)(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"),
           explode(call_function("graft_nearest_cells",
@@ -2205,7 +2180,7 @@ object SimSearch {
       broadcast(q).join(c, Seq("cell"))
         .filter(col("q_id") =!= col("vec_id"))
         .withColumn("cos",
-          ndot(s)(col("qe"), col("ce")) / (col("qn") * col("cn")))
+          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
         // a candidate can surface via several probed cells — dedupe before
         // ranking (all duplicates carry the identical cos)
         .select(col("q_id"), col("vec_id"), col("cos"))
@@ -2248,7 +2223,7 @@ object SimSearch {
     "embedding_norm_audit" -> ((s, d) => {
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"),
-          sqrt(ndot(s)(col("embedding"), col("embedding"))).as("l2"))
+          sqrt(ndot(col("embedding"), col("embedding"))).as("l2"))
         .localCheckpoint(true) // one dot pass: med, mad and fence scans
       val med = e.groupBy("label")
         .agg(expr("percentile(l2, 0.5)").as("med"),
@@ -2277,7 +2252,6 @@ object SimSearch {
     // the LSH/IVF/PQ ANN family this audit ORACLES; the scan computes
     // both dots via the codegen'd graft_dot, pairs shuffle as scalars.
     "simsearch_matryoshka_recall" -> ((s, d) => {
-      GraftExtensions.register(s)
       val emb = t(s, d, "embeddings")
       val dotc = (a: org.apache.spark.sql.Column,
           b: org.apache.spark.sql.Column) =>

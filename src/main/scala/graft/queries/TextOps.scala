@@ -56,7 +56,6 @@ object TextOps {
     * verify (both the full build and the incremental refresh consume it).
     */
   private[graft] def mhShingled(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     t(s, d, "documents")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), toks(col("text")).as("t"))
@@ -387,12 +386,8 @@ object TextOps {
     * projection (column-pruned, page-cache-warm) instead of re-deriving
     * it per query. Columns: (doc_id, g sorted-by-value, gr rarest-first).
     */
-  private[graft] def mhShingledRead(s: SparkSession, d: String): DataFrame = {
-    // same registration side-effect as mhShingled: every consumer goes on
-    // to call a graft_* codegen function (minhash / jaccard / inter)
-    graft.plans.GraftExtensions.register(s)
+  private[graft] def mhShingledRead(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${mhShingledStaged(s, d)}/docs")
-  }
 
   /** The (prefix, full) join sides straight off the staged artifact: the
     * prefix is a SLICE of the precomputed rarest-first array and the
@@ -742,7 +737,6 @@ object TextOps {
     // plus a spec equality pin — but every step is a keyed shuffle, so
     // it runs at any corpus size instead of refusing above 50k docs.
     "dedup_ngram_jaccard_prefix" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       // staged projection: candidates + both verify sides scan it —
       // re-deriving tokenize+shingle per consumer was the 6.4→7.6 s creep
       val docsG = mhShingledRead(s, d)
@@ -781,7 +775,6 @@ object TextOps {
     // (10·inter >= 9·min) as the guarded key: identical output, same
     // oracle, linear scale.
     "dedup_containment_prefix" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val docsG = mhShingledRead(s, d) // staged: see jaccard_prefix
       // r20: positional filter only — containment has no size-ratio cap,
       // so the full side stays whole (a tiny doc can be contained by a
@@ -991,7 +984,6 @@ object TextOps {
     // the re-crawl slice, the exact-confirm ground truth, and the fpp
     // bound on fresh docs.
     "dedup_bloom_incremental" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val base = bloomBaseStaged(s, d)
       val bytes = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$base/filter.bin"))
@@ -1475,7 +1467,6 @@ object TextOps {
         .localCheckpoint(true)
       val bf = benchG.select(xxhash64(col("g")).as("h"))
         .stat.bloomFilter("h", 200000L, 0.01)
-      graft.plans.GraftExtensions.register(s)
       val bfBytes = new java.io.ByteArrayOutputStream()
       bf.writeTo(bfBytes)
       val bfLit = lit(bfBytes.toByteArray)
@@ -1754,7 +1745,6 @@ object TextOps {
     // expression (isNormalized scan, no rebuild) keeps the dominant
     // ASCII slice at one pass per string.
     "text_unicode_normalize" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           call_function("graft_unicode_normalize",

@@ -686,7 +686,6 @@ object StreamingOps {
     //     (dropDuplicatesWithinWatermark) evict, trading exactness
     //     across the whole run for bounded state.
     "stream_dedup_bloom" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val base = graft.queries.TextOps.bloomBaseStaged(s, d)
       val bytes = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$base/filter.bin"))
@@ -730,7 +729,6 @@ object StreamingOps {
     // sized; the corpus is touched only through the static shingle/band
     // stores the base build already materialized.
     "stream_dedup_incremental" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val base = graft.queries.TextOps.minhashBaseStaged(s, d)
       // static shingle store for the exact-verify lookups (old endpoints
       // are not in the stream; the base build owns this table) — read the

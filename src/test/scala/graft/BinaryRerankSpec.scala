@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
 
 /** Binary-quantized two-stage retrieval: packing correctness (popcount of
   * the packed code equals the positive-dim count), recall@5 against the
@@ -45,7 +44,6 @@ class BinaryRerankSpec extends SparkSpec {
 
   test("stage 1 streams codes through a broadcast of the query codes " +
     "with no UDF boundary") {
-    GraftExtensions.register(spark)
     val plan = q("simsearch_binary_rerank")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") ||

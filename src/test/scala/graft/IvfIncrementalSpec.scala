@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
 import graft.queries.SimSearch
 
 /** Pins for `simsearch_ivf_incremental` (no oracle — ANN family): the
@@ -18,7 +17,6 @@ class IvfIncrementalSpec extends SparkSpec {
 
   private def ndot(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column) = {
-    GraftExtensions.register(spark)
     call_function("graft_dot", a, b)
   }
   private def unit(e: org.apache.spark.sql.Column,

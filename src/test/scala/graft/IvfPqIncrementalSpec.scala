@@ -28,7 +28,6 @@ class IvfPqIncrementalSpec extends SparkSpec {
     // from-scratch: the SAME pure per-row pipeline over the full corpus
     // (assignment and encoding are functions of the frozen artifacts,
     // so any difference means the refresh path diverged)
-    graft.plans.GraftExtensions.register(spark)
     val coarseLit = typedlit(coarse)
     val full = codeSet(Tables.embeddings(spark, sf)
       .withColumn("nrm", sqrt(call_function("graft_dot",

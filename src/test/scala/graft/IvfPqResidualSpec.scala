@@ -54,7 +54,6 @@ class IvfPqResidualSpec extends SparkSpec {
   }
 
   private def rawScored(d: String) = {
-    graft.plans.GraftExtensions.register(spark)
     graft.queries.SimSearch.ivfpqCandidates(spark, d)
       .withColumn("adc",
         call_function("graft_adc", col("codes"), col("lut")))

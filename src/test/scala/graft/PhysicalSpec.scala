@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
 
 /** Plan-shape assertions for the physical-layout operators and the native
   * Catalyst expression.
@@ -49,7 +48,6 @@ class PhysicalSpec extends SparkSpec {
   test("BinnedRangeJoinRule: with the conf set, a plain inequality join " +
     "plans as a binned equi-join (no NestedLoop) with unchanged results") {
     import graft.plans.BinnedRangeJoinRule.ConfKey
-    graft.plans.GraftExtensions.register(spark)
     val pts = graft.Tables(spark, sf, "lineitem")
       .select(col("l_orderkey"), col("l_shipdate"))
     val ivs = graft.Tables(spark, sf, "orders")
@@ -79,7 +77,6 @@ class PhysicalSpec extends SparkSpec {
   test("BinnedRangeJoinRule leaves equi-keyed, streaming, and " +
     "unsupported-type joins alone") {
     import graft.plans.BinnedRangeJoinRule.ConfKey
-    graft.plans.GraftExtensions.register(spark)
     try {
       spark.conf.set(ConfKey, "604800")
       // equi conjunct present → hash-joinable as-is, rule must not touch it
@@ -254,7 +251,6 @@ class PhysicalSpec extends SparkSpec {
 
   test("graft_dot native expression: bit-equal to the higher-order-function " +
     "dot and present in SQL after registration") {
-    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf).limit(100)
     val both = emb.select(
       call_function("graft_dot", col("embedding"), col("embedding")).as("n"),
@@ -277,7 +273,6 @@ class PhysicalSpec extends SparkSpec {
     assert(plan.contains("graft_dot"), plan.take(1500))
     // bit-equality of the float-embedding × double-plane-literal path
     // against the interpreted spelling it replaced
-    GraftExtensions.register(spark)
     val plane = {
       val rnd = new scala.util.Random(42)
       Array.fill(64)(rnd.nextGaussian()).toSeq
@@ -347,7 +342,6 @@ class PhysicalSpec extends SparkSpec {
 
   test("graft_minhash native expression: bit-equal to the boxed-UDF " +
     "formulation, codegen'd, empty arrays give Long.MaxValue slots") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val K = 12
     val rnd = new scala.util.Random(7)
@@ -390,7 +384,6 @@ class PhysicalSpec extends SparkSpec {
 
   test("graft_jaccard_sorted native expression: equals the set-definition " +
     "jaccard on real shingle data and runs inside codegen") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"),
@@ -537,7 +530,6 @@ class PhysicalSpec extends SparkSpec {
   test("graft_nearest_cells native expression: matches a reference argmin " +
     "over L2, the IVF plan carries no UDF node, and the assignment pass " +
     "stays inside whole-stage codegen") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val cents: Seq[Seq[Float]] = emb.orderBy("vec_id").limit(16)
@@ -571,7 +563,6 @@ class PhysicalSpec extends SparkSpec {
   test("graft_adc native expression: matches a reference LUT gather, " +
     "flags bad codes as NaN, the PQ plan carries no UDF node, and the " +
     "ADC scan stays inside whole-stage codegen") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // M=4 subspaces, K=3 centroids: score = Σ_m lut[m*3 + codes[m]]
     val lut = (0 until 12).map(_.toDouble * 1.5)
@@ -671,7 +662,6 @@ class PhysicalSpec extends SparkSpec {
   test("graft_bloom_contains native expression: agrees with the sketch's " +
     "own mightContain on every key, probe stays inside whole-stage " +
     "codegen, and the consuming queries carry no UDF boundary") {
-    GraftExtensions.register(spark)
     val bf = Tables(spark, sf, "lineitem")
       .filter(col("l_quantity") > 45).select(col("l_partkey"))
       .stat.bloomFilter("l_partkey", 10000L, 0.01)
@@ -740,7 +730,6 @@ class PhysicalSpec extends SparkSpec {
   }
 
   test("graft_dot participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     val df = Tables.embeddings(spark, sf)
       .select(call_function("graft_dot", col("embedding"), col("embedding"))
         .as("d"))

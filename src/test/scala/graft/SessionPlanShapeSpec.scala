@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
 /** Plan-shape pins for this session's scale-sensitive additions: the
   * properties that make them 100-TB-safe must survive refactors, not
   * just happen to hold today.
   */
-class SessionPlanShapeSpec extends SparkSpec {
+class SessionPlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def phys(name: String): String =
     q(name).queryExecution.executedPlan.toString
@@ -45,12 +49,18 @@ class SessionPlanShapeSpec extends SparkSpec {
     assert(p.contains("l_partkey"), "matched-basket join key present")
   }
 
-  test("quality_referential_integrity plans an anti join per edge — " +
-    "never a nested loop over the parent") {
-    val p = phys("quality_referential_integrity")
-    assert(p.toLowerCase.contains("leftanti") || p.contains("LeftAnti"),
-      "orphan detection must be an anti join")
-    assert(!p.contains("CartesianProduct"))
+  test("quality_referential_integrity plans one keyed left join per FK " +
+    "edge — never a nested loop over the parent") {
+    val plan = q("quality_referential_integrity").queryExecution.executedPlan
+    val p = plan.toString
+    // each of the 6 edges is one equi left join of child keys against the
+    // deduped parent keys; nested-loop joins are BaseJoinExecs without keys
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.size == 6, p)
+    assert(joins.forall(j => j.joinType == LeftOuter && j.leftKeys.nonEmpty &&
+      j.rightKeys.nonEmpty), p)
+    assert(!p.contains("CartesianProduct"), "no all-pairs plan")
+    assert(!p.contains("BroadcastNestedLoopJoin"), "no theta-join plan")
   }
 
   // r12 verdict follow-up: the fact x dim joins of the attribution/NDR/

@@ -4,20 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session keeps the suite
-  * fast; tests run against the sf0.001 tables).
+  * fast; tests run against the sf0.001 tables). Built by the same factory as
+  * the mains, so specs check the plans Bench and Verify run.
   */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session("local[4]", "graft-test")
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -469,7 +469,6 @@ class StreamingSpec extends SparkSpec {
     "arriving after restart still wins, cross-run dups stay dropped") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.GraftExtensions.register(spark)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_ckpt_bloom").toString
     val out = java.nio.file.Files

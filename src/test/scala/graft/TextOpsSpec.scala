@@ -356,7 +356,6 @@ class TextOpsSpec extends SparkSpec {
     // bloom leg: the re-sized filter has no false negatives over the
     // batch either (probe through the same codegen'd expression the
     // refresh queries use)
-    graft.plans.GraftExtensions.register(spark)
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$base/filter_next.bin"))
     val missed = batchHashes.withColumn("hit",

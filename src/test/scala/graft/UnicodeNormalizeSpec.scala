@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
 
 /** `graft_unicode_normalize` native expression + the
   * `text_unicode_normalize` query: JDK-reference bit-equality (interpreted
@@ -26,7 +25,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
 
   test("graft_unicode_normalize matches java.text.Normalizer bit-for-bit " +
     "on every form, via the SQL (codegen) path") {
-    GraftExtensions.register(spark)
     Seq("NFC", "NFD", "NFKC", "NFKD").foreach { form =>
       val got = fixtures.toDF("s")
         .select(call_function("graft_unicode_normalize", col("s"),
@@ -46,7 +44,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
 
   test("NFC unifies composed and decomposed encodings of the same text; " +
     "NFKC additionally folds compatibility forms") {
-    GraftExtensions.register(spark)
     val df = Seq(("café", "café")).toDF("a", "b")
     val Array(r) = df.select(
       (call_function("graft_unicode_normalize", col("a"), lit("NFC")) ===
@@ -63,7 +60,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
 
   test("the expression stays inside whole-stage codegen and the query " +
     "is pure map-side (no exchange before the presentation sort)") {
-    GraftExtensions.register(spark)
     // exchange-free projection probe: the full query's ORDER BY makes the
     // plan adaptive, which defers WSCG insertion until execution — so the
     // codegen-participation claim is pinned on the map-side stage alone
