@@ -10,9 +10,9 @@ import org.json4s.jackson.Serialization
 /** Per-round benchmark main (driver contract): runs every SparkEntry query
   * against $SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec},...,
-  * "failed":{name:cause}}. A key that throws is listed under "failed" with
-  * its cause and left out of "queries" and the total: time-to-crash is not
-  * a measurement.
+  * "n_failed":k,"failed":{name:cause}}. A key that throws is listed under
+  * "failed" with its cause (and counted in "n_failed") and left out of
+  * "queries" and the total: time-to-crash is not a measurement.
   *
   * Each query is forced through the noop sink rather than count() — count()
   * lets Catalyst prune every computed column (a scan-only measurement),
@@ -194,7 +194,8 @@ object Bench {
     val full = Serialization.write(ListMap(
       "metric" -> "total", "value" -> total, "unit" -> "sec",
       "queries" -> ListMap(results: _*), "solo" -> ListMap(soloPairs: _*),
-      "reps" -> reps, "sf" -> sfDir, "failed" -> ListMap(failed.toSeq: _*)))
+      "reps" -> reps, "sf" -> sfDir, "n_failed" -> failed.size,
+      "failed" -> ListMap(failed.toSeq: _*)))
     // full line (per-query breakdown), then a durable file copy, then a
     // SHORT final line — the r1 driver tail-capture truncated the 4 KB full
     // line and lost the total; the short line cannot be truncated away.

@@ -99,13 +99,13 @@ object SparkEntry {
       // dedup_minhash_tradeoff +1.5 s, multimodal_phash_neardup +1.3 s,
       // er_fs_classify_phonetic +1.3 s, multimodal_audio_features +1.0 s,
       // bpe_train_merges +1.0 s, er_fs_em_classify +0.9 s,
-      // er_tf_classify +0.7 s, dedup_simhash +0.5 s — all wide
-      // Janino/C2 first-touch plans (codec loops, three-pass ER unions,
-      // iterative trainers) the reps=1 gate otherwise pays in-window
+      // er_tf_classify +0.7 s — all wide Janino/C2 first-touch plans
+      // (codec loops, three-pass ER unions, iterative trainers) the
+      // reps=1 gate otherwise pays in-window
       "pipeline_curation_census", "dedup_minhash_tradeoff",
       "multimodal_phash_neardup", "er_fs_classify_phonetic",
       "multimodal_audio_features", "bpe_train_merges",
-      "er_fs_em_classify", "er_tf_classify", "dedup_simhash",
+      "er_fs_em_classify", "er_tf_classify",
       // r20 additions: largest rep1 − median(rep2..5) gaps in this
       // round's REPS=5 probes — mine_basket_lift +0.9 s,
       // mine_basket_triples +1.0 s (both now shared-exchange shapes

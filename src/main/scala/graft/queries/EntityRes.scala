@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -60,34 +60,22 @@ object EntityRes {
     base.withColumn("link", lit(null).cast("long")).unionByName(clones)
   }
 
-  /** The dirty corpus with BLOCK-KEY noise: identical clone rules to
-    * [[dirty]] PLUS every 25-divisible clone's nationkey shifted by one
-    * ((nat+1) mod 25) — the production failure mode the multipass keys
-    * exist for: a typo in the BLOCK key (not a compared field) makes
-    * the true pair invisible to any single-key blocking scheme, however
-    * good the scorer is. nat stays out of the comparison vector (it is
-    * a blocking key, not an agreement field), so the scoring algebra is
-    * unchanged; only candidate GENERATION sees the noise. Separate
-    * builder so every pre-existing er_* key keeps its exact fixture.
+  /** The dirty corpus with BLOCK-KEY noise: [[dirty]] rewritten so
+    * every clone whose source id is 25-divisible (`link % 25 = 0`) has
+    * its nationkey shifted by one ((nat+1) mod 25); originals carry a
+    * NULL link and pass through unchanged. The production failure mode
+    * the multipass keys exist for: a typo in the BLOCK key (not a
+    * compared field) makes the true pair invisible to any single-key
+    * blocking scheme, however good the scorer is. nat stays out of the
+    * comparison vector (it is a blocking key, not an agreement field),
+    * so the scoring algebra is unchanged; only candidate GENERATION sees
+    * the noise. Separate builder so every pre-existing er_* key keeps
+    * its exact fixture.
     */
-  private[graft] def dirtyB(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "customer").select(
-      col("c_custkey").as("id"), col("c_name").as("name"),
-      col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
-      floor(col("c_acctbal") / 1000).cast("long").as("band"))
-    val clones = base.filter(col("id") % 5 === 0).select(
-      (col("id") + CloneOffset).as("id"),
-      when(col("id") % 10 === 0, lower(col("name")))
-        .otherwise(col("name")).as("name"),
-      when(col("id") % 25 === 0, pmod(col("nat") + 1, lit(25)))
-        .otherwise(col("nat")).as("nat"),
-      when(col("id") % 15 === 0, lit("PERTURBED"))
-        .otherwise(col("seg")).as("seg"),
-      when(col("id") % 20 === 0, col("band") + 1)
-        .otherwise(col("band")).as("band"),
-      col("id").as("link"))
-    base.withColumn("link", lit(null).cast("long")).unionByName(clones)
-  }
+  private[graft] def dirtyB(s: SparkSession, d: String): DataFrame =
+    dirty(s, d).withColumn("nat",
+      when(col("link") % 25 === 0, pmod(col("nat") + 1, lit(25)))
+        .otherwise(col("nat")))
 
   /** Surname lexicon for the PHONETIC-blocking fixture — 40 distinct
     * names, every one carrying a vowel at position ≥ 3 so the planted
@@ -117,12 +105,14 @@ object EntityRes {
       .otherwise(regexp_replace(name, "^(..[^AEIOU]*)[AEIOU]", "$1A"))
   }
 
-  /** The PHONETIC-blocking fixture: the [[dirtyB]] skeleton with the
-    * unique TPC-H name replaced by a 40-surname lexicon draw (soundex
-    * of `Customer#000…` is one degenerate block — a phonetic key needs
-    * phonetic structure) and ONE new perturbation: every 10-divisible
-    * clone's surname takes the soundex-preserving vowel typo. The
-    * planted hard classes this creates:
+  /** The PHONETIC-blocking fixture: [[dirtyB]] rewritten so `name` is
+    * a 40-surname lexicon draw on the source id (`coalesce(link, id)`,
+    * so a clone draws its original's surname — soundex of
+    * `Customer#000…` is one degenerate block, a phonetic key needs
+    * phonetic structure), plus ONE new perturbation: every clone with
+    * `link % 10 = 0` takes the soundex-preserving vowel typo. Originals
+    * (NULL link) keep the plain draw. The planted hard classes this
+    * creates:
     *  - id ≡ 0 (mod 25), seg or band also perturbed, name intact —
     *    invisible to the nat pass (typo'd block key) AND the
     *    (seg, band) pass, recovered by the soundex pass WITH a strong
@@ -132,25 +122,10 @@ object EntityRes {
     *    misspelling), the pair-completeness demonstration.
     */
   private[graft] def dirtyP(s: SparkSession, d: String): DataFrame = {
-    val lex = typedlit(PhoneticLexicon)
-    val base = t(s, d, "customer").select(
-      col("c_custkey").as("id"),
-      element_at(lex,
-        pmod(col("c_custkey"), lit(40)).cast("int") + 1).as("name"),
-      col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
-      floor(col("c_acctbal") / 1000).cast("long").as("band"))
-    val clones = base.filter(col("id") % 5 === 0).select(
-      (col("id") + CloneOffset).as("id"),
-      when(col("id") % 10 === 0, vowelTypo(col("name")))
-        .otherwise(col("name")).as("name"),
-      when(col("id") % 25 === 0, pmod(col("nat") + 1, lit(25)))
-        .otherwise(col("nat")).as("nat"),
-      when(col("id") % 15 === 0, lit("PERTURBED"))
-        .otherwise(col("seg")).as("seg"),
-      when(col("id") % 20 === 0, col("band") + 1)
-        .otherwise(col("band")).as("band"),
-      col("id").as("link"))
-    base.withColumn("link", lit(null).cast("long")).unionByName(clones)
+    val drawn = element_at(typedlit(PhoneticLexicon),
+      pmod(coalesce(col("link"), col("id")), lit(40)).cast("int") + 1)
+    dirtyB(s, d).withColumn("name",
+      when(col("link") % 10 === 0, vowelTypo(drawn)).otherwise(drawn))
   }
 
   /** The TF family's labeled pair counts (np, nm, am, au over the
@@ -218,13 +193,20 @@ object EntityRes {
     * fixture — nat-blocked (primary pass) only, per the
     * estimation-vs-prediction split [[histBStaged]] documents. ≤ 8 rows.
     */
-  private[graft] def histPStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_fs_hist_p_nat", d)
+  private[graft] def histPStaged(s: SparkSession, d: String): String =
+    stageHist(s, d, "graft_fs_hist_p_nat")(
+      passP(dirtyP(s, d), col("a.nat") === col("b.nat")))
+
+  /** Stage the unlabeled (ag_name, ag_seg, ag_band) → n pattern
+    * histogram of `pairs` under `prefix`: ≤ 8 rows at any scale, stamped
+    * with the customer fingerprint like every linkage artifact.
+    */
+  private def stageHist(s: SparkSession, d: String, prefix: String)(
+      pairs: => DataFrame): String = {
+    val path = graft.Staging.dir(prefix, d)
     val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
     if (!graft.Staging.isCurrent(path, stamp)) {
-      val dd = dirtyP(s, d)
-      passP(dd, col("a.nat") === col("b.nat"))
-        .groupBy("ag_name", "ag_seg", "ag_band")
+      pairs.groupBy("ag_name", "ag_seg", "ag_band")
         .agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(path)
       graft.Staging.commitStamp(path, stamp)
@@ -232,9 +214,12 @@ object EntityRes {
     path
   }
 
-  private def histRowsP(s: SparkSession, d: String)
+  /** A staged pattern histogram on the driver as (n, γ_name, γ_seg,
+    * γ_band) rows — the EM's input.
+    */
+  private def histRows(s: SparkSession, path: String)
       : Seq[(Long, Long, Long, Long)] =
-    s.read.parquet(histPStaged(s, d)).collect().toSeq
+    s.read.parquet(path).collect().toSeq
       .map(r => (r.getAs[Long]("n"), r.getAs[Long]("ag_name"),
         r.getAs[Long]("ag_seg"), r.getAs[Long]("ag_band")))
 
@@ -332,24 +317,8 @@ object EntityRes {
     * the population's, scoring runs on whatever candidate generation
     * recall requires. ≤ 8 rows at any scale.
     */
-  private[graft] def histBStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_fs_hist_b_nat", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      pairsB(s, d, multipass = false)
-        .groupBy("ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
-
-  private def histRowsB(s: SparkSession, d: String)
-      : Seq[(Long, Long, Long, Long)] =
-    s.read.parquet(histBStaged(s, d)).collect().toSeq
-      .map(r => (r.getAs[Long]("n"), r.getAs[Long]("ag_name"),
-        r.getAs[Long]("ag_seg"), r.getAs[Long]("ag_band")))
+  private[graft] def histBStaged(s: SparkSession, d: String): String =
+    stageHist(s, d, "graft_fs_hist_b_nat")(pairsB(s, d, multipass = false))
 
   /** GRADED agreement pairs (Winkler's 3-level comparator): name is
     * scored exact (γ=2) / close (γ=1: levenshtein ≤ 1 but not equal) /
@@ -515,23 +484,43 @@ object EntityRes {
     * everything (incremental == full only holds if the scorer is shared
     * to the bit).
     */
-  private def mergeWeightFrame(s: SparkSession, d: String): DataFrame = {
+  /** The label-derived weight frame off the staged counts, plus any
+    * `extra` columns over the same counts row.
+    */
+  private def mergeWeightFrame(s: SparkSession, d: String, extra: Column*)
+      : DataFrame = {
     val c = counts(s, d) // staged 1-row artifact
     val (_, _, waN, wdN) = mu(col("name_m"), col("name_u"))
     val (_, _, waS, wdS) = mu(col("seg_m"), col("seg_u"))
     val (_, _, waB, wdB) = mu(col("band_m"), col("band_u"))
-    c.select(round(waN, 6).as("wa_name"), round(wdN, 6).as("wd_name"),
+    c.select(Seq(round(waN, 6).as("wa_name"), round(wdN, 6).as("wd_name"),
       round(waS, 6).as("wa_seg"), round(wdS, 6).as("wd_seg"),
-      round(waB, 6).as("wa_band"), round(wdB, 6).as("wd_band"))
+      round(waB, 6).as("wa_band"), round(wdB, 6).as("wd_band")) ++ extra: _*)
   }
+
+  /** The same six weight columns from EM estimates: m and u per field in
+    * (name, seg, band) order, log2 and rounded to 6dp like the labeled
+    * frame.
+    */
+  private def fsWeights(m: Array[Double], u: Array[Double]): Seq[Column] =
+    Seq("name", "seg", "band").zipWithIndex.flatMap { case (f, i) =>
+      Seq(round(log(2.0, lit(m(i)) / lit(u(i))), 6).as(s"wa_$f"),
+        round(log(2.0, (lit(1.0) - lit(m(i))) / (lit(1.0) - lit(u(i)))), 6)
+          .as(s"wd_$f"))
+    }
+
+  /** A binary-pattern pair's total match weight: per field, the agree
+    * weight where the field agrees, else the disagree weight.
+    */
+  private def fsScore: Column =
+    when(col("ag_name") === 1, col("wa_name")).otherwise(col("wd_name")) +
+      when(col("ag_seg") === 1, col("wa_seg")).otherwise(col("wd_seg")) +
+      when(col("ag_band") === 1, col("wa_band")).otherwise(col("wd_band"))
 
   private[graft] def mergeEdges(s: SparkSession, d: String,
       pid: DataFrame): DataFrame =
     pid.crossJoin(broadcast(mergeWeightFrame(s, d)))
-      .withColumn("wt",
-        when(col("ag_name") === 1, col("wa_name")).otherwise(col("wd_name")) +
-          when(col("ag_seg") === 1, col("wa_seg")).otherwise(col("wd_seg")) +
-          when(col("ag_band") === 1, col("wa_band")).otherwise(col("wd_band")))
+      .withColumn("wt", fsScore)
       .filter(col("wt") > 6.0)
       .select("src", "dst")
 
@@ -616,17 +605,8 @@ object EntityRes {
     * the blocked pair join that produces it is the family's dominant
     * cost. At any scale the artifact is ≤ 8 rows.
     */
-  private[graft] def histStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_fs_hist", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      pairs(s, d).groupBy("ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+  private[graft] def histStaged(s: SparkSession, d: String): String =
+    stageHist(s, d, "graft_fs_hist")(pairs(s, d))
 
   def ensureStaged(s: SparkSession, d: String): Unit = {
     countsStaged(s, d)
@@ -725,12 +705,76 @@ object EntityRes {
     trace.toSeq
   }
 
-  /** The 8-row unlabeled pattern histogram collected to the driver. */
-  private def histRows(s: SparkSession, d: String)
-      : Seq[(Long, Long, Long, Long)] =
-    s.read.parquet(histStaged(s, d)).collect().toSeq
-      .map(r => (r.getAs[Long]("n"), r.getAs[Long]("ag_name"),
-        r.getAs[Long]("ag_seg"), r.getAs[Long]("ag_band")))
+  /** The LABELED pattern histogram of the nat-blocked pair stream:
+    * (is_match, ag_name, ag_seg, ag_band) → n, ≤ 16 rows. Every quantity
+    * a sweep or calibration reads is a function of these four flags, so
+    * the map side partial-aggregates the pair rows to pattern counts
+    * before any weight or threshold touches them.
+    */
+  private def patternHist(s: SparkSession, d: String): DataFrame =
+    pairs(s, d)
+      .groupBy("is_match", "ag_name", "ag_seg", "ag_band")
+      .agg(count(lit(1)).as("n"))
+
+  /** Sweep thresholds 0, step and 2·step. */
+  private def thresholds(s: SparkSession, step: Int): DataFrame =
+    s.range(3).select((col("id") * step).cast("double").as("threshold"))
+
+  /** One confusion cell of a threshold sweep: the count `n` of rows with
+    * is_match = `matchIs` whose weight column `w` is above (or at or
+    * below) the threshold, among the rows `in` selects.
+    */
+  private def sweepCell(matchIs: Int, above: Boolean,
+      in: Option[Column] = None, w: String = "w"): Column = {
+    val base = (col("is_match") === matchIs) &&
+      (if (above) col(w) > col("threshold") else col(w) <= col("threshold"))
+    sum(when(in.fold(base)(base && _), col("n")).otherwise(0L))
+  }
+
+  /** Precision = tp / (tp + fp), 4dp, NULL where no row is above the
+    * threshold: Spark's ANSI divide throws DIVIDE_BY_ZERO on such an
+    * empty cell (the phonetic sweep has one at sf0.1); nullif turns it
+    * into NULL and leaves every computable row bit-identical.
+    */
+  private def precision(tp: Column, fp: Column): Column =
+    round(tp.cast("double") / nullif((tp + fp).cast("double"), lit(0.0)), 4)
+
+  /** The Fellegi–Sunter confusion sweep over a scored (is_match, n, w)
+    * pattern histogram: per threshold, n_pairs and the four cells
+    * (above = linked), then precision and recall.
+    */
+  private[graft] def confusionSweep(scored: DataFrame,
+      thresholds: DataFrame): DataFrame =
+    scored.crossJoin(broadcast(thresholds))
+      .groupBy("threshold")
+      .agg(
+        sum(col("n")).as("n_pairs"),
+        sweepCell(1, above = true).as("tp"),
+        sweepCell(0, above = true).as("fp"),
+        sweepCell(1, above = false).as("fn"),
+        sweepCell(0, above = false).as("tn"))
+      .select(col("threshold"), col("n_pairs"), col("tp"), col("fp"),
+        col("fn"), col("tn"), precision(col("tp"), col("fp")).as("precision"),
+        round(col("tp").cast("double") / (col("tp") + col("fn")), 4)
+          .as("recall"))
+      .orderBy("threshold")
+
+  /** One blocking scheme's rows of a multi-scheme sweep: the `suf` cells
+    * of `cells` with end-to-end recall (fn = every missed true pair,
+    * n_truth − tp, blocked or not).
+    */
+  private def schemeSweep(cells: DataFrame, nTruth: DataFrame,
+      scheme: String, suf: String): DataFrame =
+    cells.crossJoin(broadcast(nTruth))
+      .select(lit(scheme).as("scheme"), col("threshold"),
+        col(s"np_$suf").as("n_pairs"),
+        col(s"tp_$suf").as("tp"), col(s"fp_$suf").as("fp"),
+        (col("n_truth") - col(s"tp_$suf")).as("fn"),
+        col(s"tn_$suf").as("tn"),
+        precision(col(s"tp_$suf"), col(s"fp_$suf")).as("precision"),
+        round(col(s"tp_$suf").cast("double") / col("n_truth"), 4)
+          .as("recall"))
+
 
   /** m, u, and the two log2 weights from (agree-count, total) columns —
     * Laplace-smoothed (+0.5 / +1) so a field that never agrees across
@@ -861,13 +905,7 @@ object EntityRes {
     // assumed away. Same broadcast-scalars-over-pair-stream shape as the
     // classify key; the bucket fold is a handful of counter rows.
     "er_fs_calibration" -> ((s, d) => {
-      val c = counts(s, d) // staged 1-row artifact
-      val (_, _, waN, wdN) = mu(col("name_m"), col("name_u"))
-      val (_, _, waS, wdS) = mu(col("seg_m"), col("seg_u"))
-      val (_, _, waB, wdB) = mu(col("band_m"), col("band_u"))
-      val w = c.select(round(waN, 6).as("wa_name"), round(wdN, 6).as("wd_name"),
-        round(waS, 6).as("wa_seg"), round(wdS, 6).as("wd_seg"),
-        round(waB, 6).as("wa_band"), round(wdB, 6).as("wd_band"),
+      val w = mergeWeightFrame(s, d,
         (col("nm").cast("double") / (col("np") - col("nm")))
           .as("prior_odds"))
       // r19: histogram-first (see er_fs_em_classify) — wt/p/bin are
@@ -876,14 +914,9 @@ object EntityRes {
       // count-weighted means of per-pattern constants (identical values:
       // avg over n copies of p is (n·p)/n, and frac_true is an exact
       // integer ratio either way).
-      pairs(s, d)
-        .groupBy("is_match", "ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
+      patternHist(s, d)
         .crossJoin(broadcast(w))
-        .withColumn("wt",
-          when(col("ag_name") === 1, col("wa_name")).otherwise(col("wd_name")) +
-            when(col("ag_seg") === 1, col("wa_seg")).otherwise(col("wd_seg")) +
-            when(col("ag_band") === 1, col("wa_band")).otherwise(col("wd_band")))
+        .withColumn("wt", fsScore)
         .withColumn("odds", col("prior_odds") * pow(lit(2.0), col("wt")))
         .withColumn("p", col("odds") / (lit(1.0) + col("odds")))
         .withColumn("bin", floor(col("wt")).cast("long"))
@@ -908,7 +941,7 @@ object EntityRes {
     // pins EM's estimates against the label-derived truth on the
     // fixture (they must agree without ever seeing a label).
     "er_fs_em" -> ((s, d) => {
-      val (lam, m, u) = emFit(histRows(s, d))
+      val (lam, m, u) = emFit(histRows(s, histStaged(s, d)))
       import s.implicits._
       Seq(("band", m(2), u(2)), ("name", m(0), u(0)), ("seg", m(1), u(1)))
         .toDF("field", "m_raw", "u_raw")
@@ -930,7 +963,7 @@ object EntityRes {
     // driver-side arithmetic, 31 output rows at any corpus scale.
     "er_fs_em_trace" -> ((s, d) => {
       import s.implicits._
-      emTrace(histRows(s, d)).map { case (k, lam, m, u) =>
+      emTrace(histRows(s, histStaged(s, d))).map { case (k, lam, m, u) =>
         (k.toLong, lam, m(0), m(1), m(2), u(0), u(1), u(2))
       }.toDF("iter", "lam_r", "mn", "ms", "mb", "un", "us", "ub")
         .select(col("iter"), round(col("lam_r"), 6).as("lam"),
@@ -953,51 +986,14 @@ object EntityRes {
     // off on. Same broadcast-scalars-over-pair-stream shape; weights
     // rounded to 6dp before scoring on both engines, as always.
     "er_fs_em_classify" -> ((s, d) => {
-      val (_, m, u) = emFit(histRows(s, d))
-      import s.implicits._
-      def wcols(pre: String, mi: Double, ui: Double) = Seq(
-        round(log(2.0, lit(mi) / lit(ui)), 6).as(s"wa_$pre"),
-        round(log(2.0, (lit(1.0) - lit(mi)) / (lit(1.0) - lit(ui))), 6)
-          .as(s"wd_$pre"))
-      val w = s.range(1).select(
-        (wcols("name", m(0), u(0)) ++ wcols("seg", m(1), u(1)) ++
-          wcols("band", m(2), u(2))): _*)
-      val thresholds = s.range(3)
-        .select((col("id") * 2).cast("double").as("threshold"))
+      val (_, m, u) = emFit(histRows(s, histStaged(s, d)))
+      val w = s.range(1).select(fsWeights(m, u): _*)
       // r19: collapse the pair stream to its (is_match, pattern)
-      // HISTOGRAM before any scoring (guide §2.3 — every downstream
-      // quantity is a function of the four flags, so ≤ 16 weighted rows
-      // carry the whole sweep): the map side partial-aggregates the
-      // millions of pair rows down to pattern counts, and the threshold
-      // crossJoin + 4 conditional sums run over 16 rows instead of
+      // HISTOGRAM before any scoring (guide §2.3): the threshold
+      // crossJoin + 4 conditional sums run over ≤ 16 rows instead of
       // 3 × the pair stream. Same integer cells, same output.
-      val hist = pairs(s, d)
-        .groupBy("is_match", "ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
-      val scored = hist.crossJoin(broadcast(w))
-        .withColumn("w",
-          when(col("ag_name") === 1, col("wa_name")).otherwise(col("wd_name")) +
-            when(col("ag_seg") === 1, col("wa_seg")).otherwise(col("wd_seg")) +
-            when(col("ag_band") === 1, col("wa_band")).otherwise(col("wd_band")))
-      scored.crossJoin(broadcast(thresholds))
-        .groupBy("threshold")
-        .agg(
-          sum(col("n")).as("n_pairs"),
-          sum(when(col("is_match") === 1 && col("w") > col("threshold"),
-            col("n")).otherwise(0L)).as("tp"),
-          sum(when(col("is_match") === 0 && col("w") > col("threshold"),
-            col("n")).otherwise(0L)).as("fp"),
-          sum(when(col("is_match") === 1 && col("w") <= col("threshold"),
-            col("n")).otherwise(0L)).as("fn"),
-          sum(when(col("is_match") === 0 && col("w") <= col("threshold"),
-            col("n")).otherwise(0L)).as("tn"))
-        .select(col("threshold"), col("n_pairs"), col("tp"), col("fp"),
-          col("fn"), col("tn"),
-          round(col("tp").cast("double") / (col("tp") + col("fp")), 4)
-            .as("precision"),
-          round(col("tp").cast("double") / (col("tp") + col("fn")), 4)
-            .as("recall"))
-        .orderBy("threshold")
+      confusionSweep(patternHist(s, d).crossJoin(broadcast(w))
+        .withColumn("w", fsScore), thresholds(s, 2))
     }),
 
     // CLERICAL REVIEW QUEUE — the third Fellegi–Sunter verdict:
@@ -1013,28 +1009,16 @@ object EntityRes {
     // per-pattern weight is exact (every pair with one pattern scores
     // identically — min() not avg(), so no cross-engine summation).
     "er_review_queue" -> ((s, d) => {
-      val (lam, m, u) = emFit(histRows(s, d))
-      import s.implicits._
-      def wcols(pre: String, mi: Double, ui: Double) = Seq(
-        round(log(2.0, lit(mi) / lit(ui)), 6).as(s"wa_$pre"),
-        round(log(2.0, (lit(1.0) - lit(mi)) / (lit(1.0) - lit(ui))), 6)
-          .as(s"wd_$pre"))
-      val w = s.range(1).select(
-        (wcols("name", m(0), u(0)) ++ wcols("seg", m(1), u(1)) ++
-          wcols("band", m(2), u(2)) :+ lit(lam).as("lam")): _*)
+      val (lam, m, u) = emFit(histRows(s, histStaged(s, d)))
+      val w = s.range(1).select(fsWeights(m, u) :+ lit(lam).as("lam"): _*)
       // r19: histogram-first (see er_fs_em_classify) — w/odds/conf are
       // constant per pattern, so fold the pair stream to ≤ 16 rows
       // first; avg(is_match) is reproduced exactly as the integer-count
       // ratio (Average over a long column is sumDouble/countDouble —
       // the same division).
-      pairs(s, d)
-        .groupBy("is_match", "ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
+      patternHist(s, d)
         .crossJoin(broadcast(w))
-        .withColumn("w",
-          when(col("ag_name") === 1, col("wa_name")).otherwise(col("wd_name")) +
-            when(col("ag_seg") === 1, col("wa_seg")).otherwise(col("wd_seg")) +
-            when(col("ag_band") === 1, col("wa_band")).otherwise(col("wd_band")))
+        .withColumn("w", fsScore)
         .filter(col("w") > 0.0 && col("w") <= 6.0)
         .withColumn("odds",
           col("lam") / (lit(1.0) - col("lam")) * pow(lit(2.0), col("w")))
@@ -1107,47 +1091,11 @@ object EntityRes {
     // clear it on seg+band, triple-perturbed clones fall below (fn),
     // same-band strangers rise above (fp) — the tension is real, not
     // staged.
-    "er_fs_classify" -> ((s, d) => {
-      val c = counts(s, d) // staged 1-row artifact
-      val (_, _, waN, wdN) = mu(col("name_m"), col("name_u"))
-      val (_, _, waS, wdS) = mu(col("seg_m"), col("seg_u"))
-      val (_, _, waB, wdB) = mu(col("band_m"), col("band_u"))
-      val w = c.select(round(waN, 6).as("wa_name"), round(wdN, 6).as("wd_name"),
-        round(waS, 6).as("wa_seg"), round(wdS, 6).as("wd_seg"),
-        round(waB, 6).as("wa_band"), round(wdB, 6).as("wd_band"))
-      val thresholds = s.range(3)
-        .select((col("id") * 2).cast("double").as("threshold"))
-      // r19: histogram-first (see er_fs_em_classify) — the sweep is a
-      // pure function of the (is_match, pattern) counts, so fold the
-      // pair stream to ≤ 16 rows before weights and thresholds touch it.
-      val hist = pairs(s, d)
-        .groupBy("is_match", "ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
-      val scored = hist.crossJoin(broadcast(w))
-        .withColumn("w",
-          when(col("ag_name") === 1, col("wa_name")).otherwise(col("wd_name")) +
-            when(col("ag_seg") === 1, col("wa_seg")).otherwise(col("wd_seg")) +
-            when(col("ag_band") === 1, col("wa_band")).otherwise(col("wd_band")))
-      scored.crossJoin(broadcast(thresholds))
-        .groupBy("threshold")
-        .agg(
-          sum(col("n")).as("n_pairs"),
-          sum(when(col("is_match") === 1 && col("w") > col("threshold"),
-            col("n")).otherwise(0L)).as("tp"),
-          sum(when(col("is_match") === 0 && col("w") > col("threshold"),
-            col("n")).otherwise(0L)).as("fp"),
-          sum(when(col("is_match") === 1 && col("w") <= col("threshold"),
-            col("n")).otherwise(0L)).as("fn"),
-          sum(when(col("is_match") === 0 && col("w") <= col("threshold"),
-            col("n")).otherwise(0L)).as("tn"))
-        .select(col("threshold"), col("n_pairs"), col("tp"), col("fp"),
-          col("fn"), col("tn"),
-          round(col("tp").cast("double") / (col("tp") + col("fp")), 4)
-            .as("precision"),
-          round(col("tp").cast("double") / (col("tp") + col("fn")), 4)
-            .as("recall"))
-        .orderBy("threshold")
-    }),
+    "er_fs_classify" -> ((s, d) =>
+      // r19: histogram-first (see er_fs_em_classify)
+      confusionSweep(patternHist(s, d)
+        .crossJoin(broadcast(mergeWeightFrame(s, d)))
+        .withColumn("w", fsScore), thresholds(s, 2))),
 
     // MULTIPASS BLOCKING AS THE LIVE CANDIDATE GENERATOR — the priced
     // scheme (er_blocking_multipass) finally CONSUMED: over the corpus
@@ -1167,17 +1115,10 @@ object EntityRes {
     // the multipass union recovers those whose (seg, band) survived —
     // recall strictly higher at every λ, priced in n_pairs.
     "er_fs_classify_multipass" -> ((s, d) => {
-      import s.implicits._
-      def wcols(pre: String, mi: Double, ui: Double) = Seq(
-        round(log(2.0, lit(mi) / lit(ui)), 6).as(s"wa_$pre"),
-        round(log(2.0, (lit(1.0) - lit(mi)) / (lit(1.0) - lit(ui))), 6)
-          .as(s"wd_$pre"))
       val nTruth = dirtyB(s, d)
         .agg(sum(col("link").isNotNull.cast("long")).as("n_truth"))
-      val (_, m, u) = emFit(histRowsB(s, d))
-      val w = s.range(1).select(
-        (wcols("name", m(0), u(0)) ++ wcols("seg", m(1), u(1)) ++
-          wcols("band", m(2), u(2))): _*)
+      val (_, m, u) = emFit(histRows(s, histBStaged(s, d)))
+      val w = s.range(1).select(fsWeights(m, u): _*)
       // ONE scan serves BOTH schemes: the nat stream is a subset of the
       // union (the in_nat flag marks it), so every nat cell is a
       // flag-conditioned sum over the SAME scored rows — no second nat
@@ -1195,15 +1136,9 @@ object EntityRes {
       // the two-field (seg+band) stranger ceiling the redundant pass
       // floods the stream with, and below the true-pair floor (≥11) —
       // the row where multipass precision recovers WITH the recall
-      val thresholds = s.range(3)
-        .select((col("id") * 4).cast("double").as("threshold"))
-      def cell(nat: Boolean, matchIs: Int, above: Boolean) = {
-        val base = (col("is_match") === matchIs) &&
-          (if (above) col("w") > col("threshold")
-           else col("w") <= col("threshold"))
-        sum(when(if (nat) base && col("in_nat") === 1 else base, col("n"))
-          .otherwise(0L))
-      }
+      def cell(nat: Boolean, matchIs: Int, above: Boolean) =
+        sweepCell(matchIs, above,
+          if (nat) Some(col("in_nat") === 1) else None)
       // r19: histogram-first (see er_fs_em_classify) — ≤ 32 weighted
       // pattern rows carry both schemes' cells; the flagged single-scan
       // shape is unchanged, it just folds to counts before the sweep.
@@ -1211,14 +1146,8 @@ object EntityRes {
         .groupBy("in_nat", "is_match", "ag_name", "ag_seg", "ag_band")
         .agg(count(lit(1)).as("n"))
       val cells = hist.crossJoin(broadcast(w))
-        .withColumn("w",
-          when(col("ag_name") === 1, col("wa_name"))
-            .otherwise(col("wd_name")) +
-            when(col("ag_seg") === 1, col("wa_seg"))
-              .otherwise(col("wd_seg")) +
-            when(col("ag_band") === 1, col("wa_band"))
-              .otherwise(col("wd_band")))
-        .crossJoin(broadcast(thresholds))
+        .withColumn("w", fsScore)
+        .crossJoin(broadcast(thresholds(s, 4)))
         .groupBy("threshold")
         .agg(sum(col("n")).as("np_mp"),
           sum(when(col("in_nat") === 1, col("n")).otherwise(0L))
@@ -1230,23 +1159,8 @@ object EntityRes {
           cell(nat = true, 0, above = true).as("fp_nat"),
           cell(nat = true, 0, above = false).as("tn_nat"))
         .localCheckpoint(true) // 3 rows, consumed by two scheme selects
-      // r19: nullif-guarded precision denominator — same ANSI
-      // DIVIDE_BY_ZERO hazard as er_fs_classify_phonetic (an empty cell
-      // at a high threshold on some scale); identical output wherever
-      // the cell is non-empty.
-      def shape(scheme: String, suf: String) = cells
-        .crossJoin(broadcast(nTruth))
-        .select(lit(scheme).as("scheme"), col("threshold"),
-          col(s"np_$suf").as("n_pairs"),
-          col(s"tp_$suf").as("tp"), col(s"fp_$suf").as("fp"),
-          (col("n_truth") - col(s"tp_$suf")).as("fn"),
-          col(s"tn_$suf").as("tn"),
-          round(col(s"tp_$suf").cast("double") /
-            nullif((col(s"tp_$suf") + col(s"fp_$suf")).cast("double"),
-              lit(0.0)), 4).as("precision"),
-          round(col(s"tp_$suf").cast("double") / col("n_truth"), 4)
-            .as("recall"))
-      shape("multipass", "mp").unionByName(shape("nat", "nat"))
+      schemeSweep(cells, nTruth, "multipass", "mp")
+        .unionByName(schemeSweep(cells, nTruth, "nat", "nat"))
         .orderBy("scheme", "threshold")
     }),
 
@@ -1314,22 +1228,13 @@ object EntityRes {
     // (seg, band) or exact-name equality). Spec-gated: DuckDB has no
     // soundex, so no SQL twin exists by design.
     "er_fs_classify_phonetic" -> ((s, d) => {
-      import s.implicits._
-      def wcols(pre: String, mi: Double, ui: Double) = Seq(
-        round(log(2.0, lit(mi) / lit(ui)), 6).as(s"wa_$pre"),
-        round(log(2.0, (lit(1.0) - lit(mi)) / (lit(1.0) - lit(ui))), 6)
-          .as(s"wd_$pre"))
       val nTruth = dirtyP(s, d)
         .agg(sum(col("link").isNotNull.cast("long")).as("n_truth"))
       // estimation on the primary stream only (histBStaged's split)
-      val (_, m, u) = emFit(histRowsP(s, d))
-      val w = s.range(1).select(
-        (wcols("name", m(0), u(0)) ++ wcols("seg", m(1), u(1)) ++
-          wcols("band", m(2), u(2))): _*)
+      val (_, m, u) = emFit(histRows(s, histPStaged(s, d)))
+      val w = s.range(1).select(fsWeights(m, u): _*)
       val (p1, p2, p3) = passesP(s, d)
       val mp = p1.unionByName(p2).unionByName(p3)
-      val thresholds = s.range(3)
-        .select((col("id") * 4).cast("double").as("threshold"))
       // scheme membership from the riding flags: nat = in_nat; the
       // 2-pass scheme = in_nat ∪ in_p2 (suppression makes these exactly
       // the pass-1∪2 pair set); the 3-pass scheme = every row
@@ -1338,12 +1243,8 @@ object EntityRes {
         case "mp2" => col("in_nat") === 1 || col("in_p2") === 1
         case _ => lit(true)
       }
-      def cell(scheme: String, matchIs: Int, above: Boolean) = {
-        val base = (col("is_match") === matchIs) &&
-          (if (above) col("w") > col("threshold")
-           else col("w") <= col("threshold"))
-        sum(when(base && member(scheme), col("n")).otherwise(0L))
-      }
+      def cell(scheme: String, matchIs: Int, above: Boolean) =
+        sweepCell(matchIs, above, Some(member(scheme)))
       // r19: histogram-first (see er_fs_em_classify) — the three-pass
       // union folds to ≤ 64 (membership × is_match × pattern) rows
       // before the weight/threshold sweep; the three blocked joins
@@ -1353,14 +1254,8 @@ object EntityRes {
           "ag_name", "ag_seg", "ag_band")
         .agg(count(lit(1)).as("n"))
       val cells = hist.crossJoin(broadcast(w))
-        .withColumn("w",
-          when(col("ag_name") === 1, col("wa_name"))
-            .otherwise(col("wd_name")) +
-            when(col("ag_seg") === 1, col("wa_seg"))
-              .otherwise(col("wd_seg")) +
-            when(col("ag_band") === 1, col("wa_band"))
-              .otherwise(col("wd_band")))
-        .crossJoin(broadcast(thresholds))
+        .withColumn("w", fsScore)
+        .crossJoin(broadcast(thresholds(s, 4)))
         .groupBy("threshold")
         .agg(sum(when(member("nat"), col("n")).otherwise(0L)).as("np_nat"),
           sum(when(member("mp2"), col("n")).otherwise(0L)).as("np_mp2"),
@@ -1375,27 +1270,11 @@ object EntityRes {
           cell("mp3", 0, above = true).as("fp_mp3"),
           cell("mp3", 0, above = false).as("tn_mp3"))
         .localCheckpoint(true) // 3 rows, consumed by three scheme selects
-      // r19 latent-bug fix: precision's denominator CAN be zero — at
-      // sf0.1 the nat scheme's EM weights cap below the λ=8 threshold,
-      // so tp+fp = 0 there and Spark 4's ANSI divide threw
-      // DIVIDE_BY_ZERO; the bench's per-query catch had been swallowing
-      // that since the key landed (sf0.1 is benched, only sf0.01 is
-      // oracle-gated). nullif makes an empty cell's precision NULL and
-      // leaves every previously-computable row bit-identical.
-      def shape(scheme: String, suf: String) = cells
-        .crossJoin(broadcast(nTruth))
-        .select(lit(scheme).as("scheme"), col("threshold"),
-          col(s"np_$suf").as("n_pairs"),
-          col(s"tp_$suf").as("tp"), col(s"fp_$suf").as("fp"),
-          (col("n_truth") - col(s"tp_$suf")).as("fn"),
-          col(s"tn_$suf").as("tn"),
-          round(col(s"tp_$suf").cast("double") /
-            nullif((col(s"tp_$suf") + col(s"fp_$suf")).cast("double"),
-              lit(0.0)), 4).as("precision"),
-          round(col(s"tp_$suf").cast("double") / col("n_truth"), 4)
-            .as("recall"))
-      shape("nat", "nat").unionByName(shape("multipass2", "mp2"))
-        .unionByName(shape("multipass3", "mp3"))
+      // at sf0.1 the nat scheme's EM weights cap below the λ=8 threshold,
+      // so its tp+fp is 0 there: the guarded precision reads NULL
+      schemeSweep(cells, nTruth, "nat", "nat")
+        .unionByName(schemeSweep(cells, nTruth, "multipass2", "mp2"))
+        .unionByName(schemeSweep(cells, nTruth, "multipass3", "mp3"))
         .orderBy("scheme", "threshold")
     }),
 
@@ -1469,12 +1348,8 @@ object EntityRes {
             .as("w_t"),
           when(col("ag") === 1, col("w_base")).otherwise(col("wd"))
             .as("w_b"))
-      def cell(wc: String, matchIs: Int, above: Boolean) = {
-        val base = (col("is_match") === matchIs) &&
-          (if (above) col(wc) > col("threshold")
-           else col(wc) <= col("threshold"))
-        sum(when(base, col("n")).otherwise(0L))
-      }
+      def cell(wc: String, matchIs: Int, above: Boolean) =
+        sweepCell(matchIs, above, w = wc)
       val cells = scored.crossJoin(broadcast(thresholds))
         .groupBy("threshold")
         .agg(sum(col("n")).as("n_pairs"),
@@ -1540,7 +1415,6 @@ object EntityRes {
     // in-codegen over blocked candidates only.
     "er_fs_classify_graded" -> ((s, d) => {
       val (_, mN, uN, mS, uS, mB, uB) = emFitGraded(histRowsGraded(s, d))
-      import s.implicits._
       def wlit(m: Double, u: Double) = round(log(2.0, lit(m) / lit(u)), 6)
       val w = s.range(1).select(
         wlit(mN(2), uN(2)).as("wn_exact"),
@@ -1550,8 +1424,6 @@ object EntityRes {
         wlit(1 - mS, 1 - uS).as("wd_seg"),
         wlit(mB, uB).as("wa_band"),
         wlit(1 - mB, 1 - uB).as("wd_band"))
-      val thresholds = s.range(3)
-        .select((col("id") * 2).cast("double").as("threshold"))
       // the sweep runs over the STAGED ≤24-row labeled histogram, not
       // the pair stream: w is a pure function of the pattern, so every
       // confusion cell is a count-weighted pattern sum — identical
@@ -1567,25 +1439,7 @@ object EntityRes {
               .otherwise(col("wd_seg")) +
             when(col("ag_band") === 1, col("wa_band"))
               .otherwise(col("wd_band")))
-      scored.crossJoin(broadcast(thresholds))
-        .groupBy("threshold")
-        .agg(
-          sum(col("n")).as("n_pairs"),
-          sum(when(col("is_match") === 1 && col("w") > col("threshold"),
-            col("n")).otherwise(0L)).as("tp"),
-          sum(when(col("is_match") === 0 && col("w") > col("threshold"),
-            col("n")).otherwise(0L)).as("fp"),
-          sum(when(col("is_match") === 1 && col("w") <= col("threshold"),
-            col("n")).otherwise(0L)).as("fn"),
-          sum(when(col("is_match") === 0 && col("w") <= col("threshold"),
-            col("n")).otherwise(0L)).as("tn"))
-        .select(col("threshold"), col("n_pairs"), col("tp"), col("fp"),
-          col("fn"), col("tn"),
-          round(col("tp").cast("double") / (col("tp") + col("fp")), 4)
-            .as("precision"),
-          round(col("tp").cast("double") / (col("tp") + col("fn")), 4)
-            .as("recall"))
-        .orderBy("threshold")
+      confusionSweep(scored, thresholds(s, 2))
     }),
 
     // INCREMENTAL LINKAGE — the daily run a 100 TB deployment actually

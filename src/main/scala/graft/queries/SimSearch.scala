@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,6 +62,87 @@ object SimSearch {
     if (n == 0.0) v else v.map(x => (x / n).toFloat)
   }
 
+  /** `df` plus the L2 norm `nrm` of its `embedding`, computed once per
+    * row so [[unitBy]] and [[cosine]] read a plain column.
+    */
+  private def withNorm(df: DataFrame): DataFrame =
+    df.withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+
+  /** The `n` nearest coarse cells of each row's unit vector (needs `nrm`). */
+  private def nearestCells(codebook: Column, n: Int): Column =
+    call_function("graft_nearest_cells",
+      unitBy(col("embedding"), col("nrm")), codebook, lit(n))
+
+  /** Query side of every exact scan: vec_id < 8 as (q_id, qe, qn), plus
+    * whatever `extra` columns the caller carries. Needs `nrm`.
+    */
+  private def queryVecs(emb: DataFrame, extra: Column*): DataFrame =
+    emb.filter(col("vec_id") < 8)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("qe"),
+        col("nrm").as("qn")) ++ extra: _*)
+
+  /** Corpus side of every exact scan: (vec_id, ce, cn) plus `extra`,
+    * spread over `defaultParallelism` (the single-file source is one
+    * partition). Needs `nrm`.
+    */
+  private def corpusVecs(s: SparkSession, emb: DataFrame, extra: Column*)
+      : DataFrame =
+    emb.repartition(s.sparkContext.defaultParallelism)
+      .select(Seq(col("vec_id"), col("embedding").as("ce"),
+        col("nrm").as("cn")) ++ extra: _*)
+
+  /** Cosine of query `qe` against candidate `ce` from their norms. */
+  private def cosine: Column =
+    ndot(col("qe"), col("ce")) / (col("qn") * col("cn"))
+
+  /** The exact top-k tail over a (q_id, vec_id, cos) frame: per query,
+    * rank by cos desc with vec_id tie-breaks, keep rn ≤ k, emit
+    * (q_id, vec_id, cos_sim = 4dp cos, rn) ordered by (q_id, rn).
+    */
+  private def rankTop(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id")
+      .orderBy(col("cos").desc, col("vec_id").asc)
+    scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("q_id"), col("vec_id"),
+        round(col("cos"), 4).as("cos_sim"), col("rn"))
+      .orderBy("q_id", "rn")
+  }
+
+  /** A staged coarse codebook (`<p>/centroids`), in cell order. */
+  private def stagedCentroids(s: SparkSession, p: String)
+      : Seq[Seq[Float]] = {
+    import s.implicits._
+    s.read.parquet(s"$p/centroids").orderBy("cell").select("centroid")
+      .as[Array[Float]].collect().map(_.toSeq).toSeq
+  }
+
+  /** The IVF probe over a staged cell-partitioned index of (vec_id,
+    * embedding, nrm, cell): each query (vec_id < 8, deduped — soft
+    * assignment stores a vector in SoftAssign cells) fans out to its
+    * `nprobe` nearest cells; the probed cells are collected on the driver
+    * (≤ K ints) and cut the index with a literal `cell IN (…)`, which the
+    * scan turns into a PartitionFilter that reads only the probed
+    * directories (asserted in PhysicalSpec). `keep` narrows the index
+    * rows further. Returns (q_id, vec_id, cos), one row per probed copy
+    * of a candidate — callers dedupe soft-assigned copies.
+    */
+  private def ivfProbe(s: SparkSession, index: DataFrame, codebook: Column,
+      nprobe: Int, keep: Option[Column] = None): DataFrame = {
+    import s.implicits._
+    val q = index.filter(col("vec_id") < 8).dropDuplicates("vec_id")
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
+        col("nrm").as("qn"), explode(nearestCells(codebook, nprobe)).as("cell"))
+    val probed = q.select("cell").distinct().as[Int].collect().toSeq
+    val inProbed = col("cell").isin(probed: _*)
+    val c = index.filter(keep.fold(inProbed)(inProbed && _))
+      .select(col("vec_id"), col("embedding").as("ce"),
+        col("nrm").as("cn"), col("cell"))
+    broadcast(q).join(c, Seq("cell"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id"), cosine.as("cos"))
+  }
+
   /** Deterministic K=16 seed: unit-normalized vectors taken by stride
     * from the corpus. Only the k-means INIT — a stride pick lands several
     * seeds inside the same dense cluster and none in sparse regions, so
@@ -74,9 +155,8 @@ object SimSearch {
     val n = emb.count()
     val k = 16
     val stride = math.max(1L, n / k)
-    emb.filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
-      .orderBy("vec_id")
-      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+    withNorm(emb.filter(col("vec_id") % stride === 0 &&
+      col("vec_id") < stride * k).orderBy("vec_id"))
       .select(unitBy(col("embedding"), col("nrm")))
       .as[Array[Float]].collect().map(_.toSeq).toSeq
   }
@@ -108,8 +188,7 @@ object SimSearch {
   private[graft] def trainKmeans(s: SparkSession, emb: DataFrame,
       iters: Int = 4): Seq[Seq[Float]] = {
     var cents = strideSeed(s, emb)
-    val vecs = emb
-      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+    val vecs = withNorm(emb)
       .select(unitBy(col("embedding"), col("nrm")).as("embedding"))
       .repartition(s.sparkContext.defaultParallelism)
       .cache()
@@ -156,11 +235,9 @@ object SimSearch {
 
   private def trainedCodebook(s: SparkSession, d: String): Seq[Seq[Float]] =
     codebookCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ => {
-      import s.implicits._
       val p = graft.Staging.dir("graft_ivf_km", d)
       if (graft.Staging.isCurrent(s"$p/index", embStamp(s, d)))
-        s.read.parquet(s"$p/centroids").orderBy("cell")
-          .select("centroid").as[Array[Float]].collect().map(_.toSeq).toSeq
+        stagedCentroids(s, p)
       else trainKmeans(s, t(s, d, "embeddings"))
     })
 
@@ -188,31 +265,31 @@ object SimSearch {
   def ivfStaged(s: SparkSession, d: String): String = {
     val path = graft.Staging.dir("graft_ivf_km", d)
     val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      val emb = t(s, d, "embeddings")
-      val cents = trainedCodebook(s, d)
-      val codebook = typedlit(cents)
-      import s.implicits._
-      cents.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      emb.repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .withColumn("cell", explode(
-          call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")),
-            codebook, lit(SoftAssign))))
-        // ONE file per cell directory: without the cell shuffle every
-        // compute task writes a sliver into every cell (32 tasks × 16
-        // cells ≈ 500 tiny files), and the probe's two index scans pay
-        // ~1000 file-opens of task overhead — measured 0.5-0.7 s of
-        // simsearch_ivf_persisted's 2.2 s at sf0.1. At 100 TB the same
-        // knob becomes files-per-cell sizing, not files-per-task.
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/index")
-      graft.Staging.commitStamp(s"$path/index", stamp)
-    }
+    if (!graft.Staging.isCurrent(s"$path/index", stamp))
+      writeIvf(s, path, stamp, t(s, d, "embeddings"), trainedCodebook(s, d))
     path
+  }
+
+  /** Persist `cents` as `<path>/centroids` and `emb` soft-assigned under
+    * it as the cell-partitioned `<path>/index`, then commit `stamp`.
+    */
+  private def writeIvf(s: SparkSession, path: String, stamp: String,
+      emb: DataFrame, cents: Seq[Seq[Float]]): Unit = {
+    import s.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    withNorm(emb.repartition(s.sparkContext.defaultParallelism))
+      .withColumn("cell", explode(nearestCells(typedlit(cents), SoftAssign)))
+      // ONE file per cell directory: without the cell shuffle every
+      // compute task writes a sliver into every cell (32 tasks × 16
+      // cells ≈ 500 tiny files), and the probe's two index scans pay
+      // ~1000 file-opens of task overhead — measured 0.5-0.7 s of
+      // simsearch_ivf_persisted's 2.2 s at sf0.1. At 100 TB the same
+      // knob becomes files-per-cell sizing, not files-per-task.
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/index")
+    graft.Staging.commitStamp(s"$path/index", stamp)
   }
 
   /** Base-only IVF for the INCREMENTAL ingest demo: codebook trained on
@@ -225,23 +302,9 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivf_incr", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      import s.implicits._
       val base = t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0)
-      val cents = codebookCache.computeIfAbsent(s"$d@$stamp#incrbase",
-        _ => trainKmeans(s, base))
-      val codebook = typedlit(cents)
-      cents.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      base.repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .withColumn("cell", explode(
-          call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")),
-            codebook, lit(SoftAssign))))
-        .repartition(col("cell")) // one file per cell dir (see ivfStaged)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/index")
-      graft.Staging.commitStamp(s"$path/index", stamp)
+      writeIvf(s, path, stamp, base, codebookCache.computeIfAbsent(
+        s"$d@$stamp#incrbase", _ => trainKmeans(s, base)))
     }
     path
   }
@@ -299,25 +362,10 @@ object SimSearch {
     */
   private[graft] def filteredExact(s: SparkSession, d: String,
       labels: Seq[Int]): DataFrame = {
-    val emb = t(s, d, "embeddings")
-      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val c = emb.filter(col("label").isin(labels: _*))
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id"), col("embedding").as("ce"),
-        col("nrm").as("cn"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    broadcast(q).join(c, col("q_id") =!= col("vec_id"))
-      .withColumn("cos",
-        ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("vec_id"),
-        round(col("cos"), 4).as("cos_sim"), col("rn"))
-      .orderBy("q_id", "rn")
+    val emb = withNorm(t(s, d, "embeddings"))
+    val c = corpusVecs(s, emb.filter(col("label").isin(labels: _*)))
+    rankTop(broadcast(queryVecs(emb)).join(c, col("q_id") =!= col("vec_id"))
+      .withColumn("cos", cosine), 5)
   }
 
   /** IVF probe under a metadata filter. `adaptive = true` derives the
@@ -337,12 +385,8 @@ object SimSearch {
     */
   private[graft] def ivfFiltered(s: SparkSession, d: String,
       labels: Seq[Int], adaptive: Boolean): DataFrame = {
-    import s.implicits._
     val p = ivfStaged(s, d)
-    val cents: Seq[Seq[Float]] = s.read.parquet(s"$p/centroids")
-      .orderBy("cell").select("centroid")
-      .as[Array[Float]].collect().map(_.toSeq).toSeq
-    val codebook = typedlit(cents)
+    val cents = stagedCentroids(s, p)
     val index = s.read.parquet(s"$p/index")
     val nprobe =
       if (!adaptive) NProbe + 2
@@ -354,31 +398,9 @@ object SimSearch {
           1.0 / cents.size) // a zero-match filter still probes all cells
         math.min(cents.size, math.ceil(NProbe / sigma).toInt)
       }
-    val q = index.filter(col("vec_id") < 8).dropDuplicates("vec_id")
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"),
-        explode(call_function("graft_nearest_cells",
-          unitBy(col("embedding"), col("nrm")), codebook,
-          lit(nprobe))).as("cell"))
-    val probed = q.select("cell").distinct().as[Int].collect().toSeq
-    val c = index
-      .filter(col("cell").isin(probed: _*) &&
-        col("label").isin(labels: _*))
-      .select(col("vec_id"), col("embedding").as("ce"),
-        col("nrm").as("cn"), col("cell"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    broadcast(q).join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos",
-        ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .select(col("q_id"), col("vec_id"), col("cos"))
-      .dropDuplicates("q_id", "vec_id")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("vec_id"),
-        round(col("cos"), 4).as("cos_sim"), col("rn"))
-      .orderBy("q_id", "rn")
+    rankTop(ivfProbe(s, index, typedlit(cents), nprobe,
+      Some(col("label").isin(labels: _*)))
+      .dropDuplicates("q_id", "vec_id"), 5)
   }
 
   /** The MMR twin: cand/sims MATERIALIZED (each is referenced by every
@@ -563,18 +585,25 @@ object SimSearch {
       iters: Int = 3): Seq[Seq[Seq[Float]]] = {
     // seed: the same deterministic stride picks as the IVF coarse
     // quantizer, sliced into subspaces driver-side (16 × 64 floats)
-    var cb: Seq[Seq[Seq[Float]]] = {
-      val picks = strideSeed(s, emb)
-      (0 until PqM).map(m => picks.map(_.slice(m * PqDim, (m + 1) * PqDim)))
-    }
-    val sub = emb
-      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+    val picks = strideSeed(s, emb)
+    pqLloyd(s, withNorm(emb)
       .select(posexplode(transform(sequence(lit(0), lit(PqM - 1)),
         m => slice(unitBy(col("embedding"), col("nrm")),
           m * PqDim + 1, lit(PqDim))))
-        .as(Seq("m", "sub")))
-      .repartition(s.sparkContext.defaultParallelism)
-      .cache()
+        .as(Seq("m", "sub"))),
+      (0 until PqM).map(m => picks.map(_.slice(m * PqDim, (m + 1) * PqDim))),
+      iters)
+  }
+
+  /** The Lloyd loop shared by the raw and residual PQ trainers over
+    * (m, sub) subvector rows (cached for the loop): per iteration one
+    * distributed nearest-centroid assignment per subspace and one
+    * (m, cell, pos)-keyed DECIMAL(38,20) mean.
+    */
+  private def pqLloyd(s: SparkSession, subRows: DataFrame,
+      seed: Seq[Seq[Seq[Float]]], iters: Int): Seq[Seq[Seq[Float]]] = {
+    var cb = seed
+    val sub = subRows.repartition(s.sparkContext.defaultParallelism).cache()
     try {
       for (_ <- 1 to iters) {
         val cbLit = typedlit(cb)
@@ -610,16 +639,31 @@ object SimSearch {
 
   private def pqCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Float]]] =
     pqCodebookCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ => {
-      import s.implicits._
       val p = graft.Staging.dir("graft_pq", d)
       if (graft.Staging.isCurrent(s"$p/index", embStamp(s, d)))
-        s.read.parquet(s"$p/codebooks")
-          .select("m", "k", "centroid").as[(Int, Int, Array[Float])]
-          .collect() // M × K = 128 rows — bounded by codebook size
-          .groupBy(_._1).toSeq.sortBy(_._1)
-          .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
+        stagedPqCodebooks(s, p)
       else trainPqCodebooks(s, t(s, d, "embeddings"))
     })
+
+  /** Per-subspace codebooks staged as `<p>/codebooks` (m, k, centroid). */
+  private def writePqCodebooks(s: SparkSession, p: String,
+      cb: Seq[Seq[Seq[Float]]]): Unit = {
+    import s.implicits._
+    cb.zipWithIndex.flatMap { case (ks, m) =>
+      ks.zipWithIndex.map { case (c, k) => (m, k, c) }
+    }.toDF("m", "k", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$p/codebooks")
+  }
+
+  private def stagedPqCodebooks(s: SparkSession, p: String)
+      : Seq[Seq[Seq[Float]]] = {
+    import s.implicits._
+    s.read.parquet(s"$p/codebooks")
+      .select("m", "k", "centroid").as[(Int, Int, Array[Float])]
+      .collect() // M × K = 128 rows — bounded by codebook size
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
+  }
 
   /** The PQ index persisted: one `array<int>` code word (M entries) per
     * vector plus the codebooks alongside. Encoding is one codegen'd
@@ -631,16 +675,11 @@ object SimSearch {
     val path = graft.Staging.dir("graft_pq", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      import s.implicits._
       val cb = pqCodebook(s, d)
       val cbLit = typedlit(cb)
-      cb.zipWithIndex.flatMap { case (ks, m) =>
-        ks.zipWithIndex.map { case (c, k) => (m, k, c) }
-      }.toDF("m", "k", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-      t(s, d, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+      writePqCodebooks(s, path, cb)
+      withNorm(t(s, d, "embeddings")
+        .repartition(s.sparkContext.defaultParallelism))
         .select(col("vec_id"),
           transform(sequence(lit(0), lit(PqM - 1)), m =>
             element_at(call_function("graft_nearest_cells",
@@ -701,12 +740,7 @@ object SimSearch {
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     qVecs.toSeq.map { case (id, e) =>
       val u = unitSeq(e.toSeq)
-      // per-query ADC lookup table — the pq_topk construction
-      val lut = (0 until PqM).flatMap { m =>
-        val qs = u.slice(m * PqDim, (m + 1) * PqDim)
-        cb(m).map(c =>
-          qs.zip(c).foldLeft(0.0)((a, p) => a + p._1.toDouble * p._2))
-      }
+      val lut = pqLut(u, cb)
       // coarse probes: NProbe nearest cells by unit-dot, driver-side
       // over the K-row codebook (K-sized work, id tie-break)
       val cells = coarse.zipWithIndex.map { case (c, i) =>
@@ -715,6 +749,16 @@ object SimSearch {
       (id, lut, cells, e.toSeq)
     }
   }
+
+  /** The per-query ADC lookup table of unit vector `u` against `cb`,
+    * laid out by flatMap over m: lut[m·K + k] = ⟨u slice m, cb(m)(k)⟩.
+    */
+  private def pqLut(u: Seq[Float], cb: Seq[Seq[Seq[Float]]]): Seq[Double] =
+    (0 until PqM).flatMap { m =>
+      val qs = u.slice(m * PqDim, (m + 1) * PqDim)
+      cb(m).map(c =>
+        qs.zip(c).foldLeft(0.0)((a, p) => a + p._1.toDouble * p._2))
+    }
 
   private[graft] def ivfpqCandidates(s: SparkSession, d: String)
       : DataFrame = {
@@ -776,7 +820,7 @@ object SimSearch {
     val coarseLit = typedlit(coarse)
     // seed: the stride picks' residuals vs their primary cell — K-sized
     // driver arithmetic over the coarse codebook
-    var cb: Seq[Seq[Seq[Float]]] = {
+    val seed: Seq[Seq[Seq[Float]]] = {
       val picks = strideSeed(s, emb)
       val resid = picks.map { u =>
         val cell = coarse.zipWithIndex.maxBy { case (c, i) =>
@@ -788,8 +832,7 @@ object SimSearch {
       (0 until PqM).map(m =>
         resid.map(_.slice(m * PqDim, (m + 1) * PqDim)))
     }
-    val sub = emb
-      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+    val sub = withNorm(emb)
       .withColumn("u", unitBy(col("embedding"), col("nrm")))
       .withColumn("cell", element_at(call_function("graft_nearest_cells",
         col("u"), coarseLit, lit(1)), 1))
@@ -799,31 +842,7 @@ object SimSearch {
       .select(posexplode(transform(sequence(lit(0), lit(PqM - 1)),
         m => slice(col("r"), m * PqDim + 1, lit(PqDim))))
         .as(Seq("m", "sub")))
-      .repartition(s.sparkContext.defaultParallelism)
-      .cache()
-    try {
-      for (_ <- 1 to iters) {
-        val cbLit = typedlit(cb)
-        val means = sub
-          .select(col("m"),
-            element_at(call_function("graft_nearest_cells", col("sub"),
-              element_at(cbLit, col("m") + 1), lit(1)), 1).as("cell"),
-            posexplode(col("sub")).as(Seq("pos", "v")))
-          .groupBy("m", "cell", "pos")
-          .agg(avg(col("v").cast("double").cast("decimal(38,20)")).as("mn"))
-          .collect() // M × K × subdim = 1,024 rows — bounded by codebook
-        val byMC = means.groupBy(r => (r.getInt(0), r.getInt(1)))
-        cb = cb.indices.map { m =>
-          cb(m).indices.map { k =>
-            byMC.get((m, k))
-              .map(rs => rs.sortBy(_.getInt(2))
-                .map(_.getDecimal(3).doubleValue().toFloat).toSeq)
-              .getOrElse(cb(m)(k)) // empty cell keeps its centroid
-          }
-        }
-      }
-    } finally sub.unpersist()
-    cb
+    pqLloyd(s, sub, seed, iters)
   }
 
   /** Residual codebooks per dataset dir — read back from a persisted
@@ -837,14 +856,9 @@ object SimSearch {
   private def residualPqCodebook(s: SparkSession, d: String)
       : Seq[Seq[Seq[Float]]] =
     residualPqCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ => {
-      import s.implicits._
       val p = graft.Staging.dir("graft_ivfpq_res", d)
       if (graft.Staging.isCurrent(s"$p/index", embStamp(s, d)))
-        s.read.parquet(s"$p/codebooks")
-          .select("m", "k", "centroid").as[(Int, Int, Array[Float])]
-          .collect() // M × K = 128 rows — bounded by codebook size
-          .groupBy(_._1).toSeq.sortBy(_._1)
-          .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
+        stagedPqCodebooks(s, p)
       else trainResidualPq(s, d)
     })
 
@@ -861,24 +875,11 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivfpq_res", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      import s.implicits._
       val cb = residualPqCodebook(s, d)
-      val cbLit = typedlit(cb)
-      val coarseLit = typedlit(trainedCodebook(s, d))
-      cb.zipWithIndex.flatMap { case (ks, m) =>
-        ks.zipWithIndex.map { case (c, k) => (m, k, c) }
-      }.toDF("m", "k", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+      writePqCodebooks(s, path, cb)
       s.read.parquet(s"${ivfStaged(s, d)}/index")
-        .withColumn("u", unitBy(col("embedding"), col("nrm")))
-        .withColumn("r", zip_with(col("u"),
-          element_at(coarseLit, col("cell") + 1),
-          (a, b) => (a - b).cast("float")))
-        .select(col("vec_id"), col("cell"),
-          transform(sequence(lit(0), lit(PqM - 1)), m =>
-            element_at(call_function("graft_nearest_cells",
-              slice(col("r"), m * PqDim + 1, lit(PqDim)),
-              element_at(cbLit, m + 1), lit(1)), 1)).as("codes"))
+        .select(col("vec_id"), col("cell"), residualCodesCol(
+          typedlit(trainedCodebook(s, d)), typedlit(cb)).as("codes"))
         .repartition(col("cell")) // one file per cell dir (see ivfStaged)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/index")
@@ -963,8 +964,11 @@ object SimSearch {
       .select(col("q_id"), col("vec_id"), col("adc"), col("qe"))
   }
 
-  /** Shortlist + exact re-rank shared by every residual-ADC key. */
-  private def residualTopK(s: SparkSession, d: String, scored: DataFrame)
+  /** Shortlist + exact re-rank shared by every ADC key: per query the
+    * top-PqShortlist candidates of `scored` (q_id, vec_id, adc, qe) by
+    * adc fetch their full vectors for the exact cosine top-5.
+    */
+  private def adcTopK(s: SparkSession, d: String, scored: DataFrame)
       : DataFrame = {
     val shortlist = Window.partitionBy("q_id")
       .orderBy(col("adc").desc, col("vec_id").asc)
@@ -976,16 +980,8 @@ object SimSearch {
     val c = t(s, d, "embeddings").select(col("vec_id"),
       col("embedding").as("ce"),
       sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    broadcast(cands).join(c, Seq("vec_id"))
-      .withColumn("cos",
-        ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("vec_id"),
-        round(col("cos"), 4).as("cos_sim"), col("rn"))
-      .orderBy("q_id", "rn")
+    rankTop(broadcast(cands).join(c, Seq("vec_id"))
+      .withColumn("cos", cosine), 5)
   }
 
   /** The incremental IVFPQ base: coarse codebook AND residual PQ
@@ -1001,22 +997,14 @@ object SimSearch {
     val path = graft.Staging.dir("graft_ivfpq_incr", d)
     val stamp = embStamp(s, d)
     if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
-      import s.implicits._
       val ivfP = incrIvfStaged(s, d)
-      val coarse: Seq[Seq[Float]] = s.read.parquet(s"$ivfP/centroids")
-        .orderBy("cell").select("centroid")
-        .as[Array[Float]].collect().map(_.toSeq).toSeq
+      val coarse = stagedCentroids(s, ivfP)
       val base = t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0)
       val cb = trainResidualPqOn(s, base, coarse)
-      val cbLit = typedlit(cb)
-      val coarseLit = typedlit(coarse)
-      cb.zipWithIndex.flatMap { case (ks, m) =>
-        ks.zipWithIndex.map { case (c, k) => (m, k, c) }
-      }.toDF("m", "k", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+      writePqCodebooks(s, path, cb)
       s.read.parquet(s"$ivfP/index")
         .select(col("vec_id"), col("cell"),
-          residualCodesCol(coarseLit, cbLit).as("codes"))
+          residualCodesCol(typedlit(coarse), typedlit(cb)).as("codes"))
         .repartition(col("cell")) // one file per cell dir (see ivfStaged)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/index")
@@ -1031,18 +1019,8 @@ object SimSearch {
     */
   private[graft] def ivfpqIncrCodebooks(s: SparkSession, d: String)
       : (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
-    import s.implicits._
-    val ivfP = incrIvfStaged(s, d)
-    val p = ivfpqIncrStaged(s, d)
-    val coarse = s.read.parquet(s"$ivfP/centroids")
-      .orderBy("cell").select("centroid")
-      .as[Array[Float]].collect().map(_.toSeq).toSeq
-    val cb = s.read.parquet(s"$p/codebooks")
-      .select("m", "k", "centroid").as[(Int, Int, Array[Float])]
-      .collect() // M × K = 128 rows — bounded by codebook size
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
-    (coarse, cb)
+    val coarse = stagedCentroids(s, incrIvfStaged(s, d))
+    (coarse, stagedPqCodebooks(s, ivfpqIncrStaged(s, d)))
   }
 
   /** The frozen-codebook refresh: the delta slice coarse-assigned and
@@ -1053,12 +1031,8 @@ object SimSearch {
   private[graft] def ivfpqIncrDelta(s: SparkSession, d: String,
       coarse: Seq[Seq[Float]], cb: Seq[Seq[Seq[Float]]]): DataFrame = {
     val coarseLit = typedlit(coarse)
-    t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-      .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-      .withColumn("cell", explode(
-        call_function("graft_nearest_cells",
-          unitBy(col("embedding"), col("nrm")), coarseLit,
-          lit(SoftAssign))))
+    withNorm(t(s, d, "embeddings").filter(col("vec_id") % 10 === 0))
+      .withColumn("cell", explode(nearestCells(coarseLit, SoftAssign)))
       .select(col("vec_id"), col("cell"),
         residualCodesCol(coarseLit, typedlit(cb)).as("codes"))
   }
@@ -1149,40 +1123,45 @@ object SimSearch {
     val path = graft.Staging.dir("graft_semantic_cc", d)
     val stamp = graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
     if (!graft.Staging.isCurrent(path, stamp)) {
-      val emb = t(s, d, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .localCheckpoint(true)
-      // candidate rows carry ONLY (id, band, bucket, packed-long band
-      // vector) — never the embedding: the band join's fan-out is the
-      // hot spot, so its rows stay ~32 bytes, and a pair colliding in
-      // several bands is emitted exactly once, in its FIRST matching
-      // band (the lowest zero 3-bit group of the pk XOR — see
-      // ccFirstMatchBand; HOFs run interpreted per element: measured
-      // 2× on the 12.5M-pair filter). DropDuplicates over wide rows
-      // measured 11.8 s; this shape ~3 s.
-      val withBuckets = emb.select(col("vec_id"),
-        ccPackedBuckets(col("embedding")).as("pk"))
-        .localCheckpoint(true) // the 24 hyperplane dots compute once
-      val keyed = ccExplodeBands(withBuckets)
-      val a = keyed.select(col("vec_id").as("va"), col("pk").as("pka"),
-        col("band"), col("bucket"))
-      val b = keyed.select(col("vec_id").as("vb"), col("pk").as("pkb"),
-        col("band"), col("bucket"))
-      val cand = a.join(b, Seq("band", "bucket"))
-        .filter(col("va") < col("vb") &&
-          col("band") === ccFirstMatchBand(col("pka"), col("pkb")))
-        .select("va", "vb")
-      val pairs = ccVerify(s, cand, emb)
-      val cc = graft.operators.ConnectedComponents(pairs)
-        .select(col("v").as("vec_id"), col("comp").as("rep"))
-      val assigned = emb.select("vec_id").join(cc, Seq("vec_id"), "left")
-        .withColumn("cluster_rep", coalesce(col("rep"), col("vec_id")))
-        .select("vec_id", "cluster_rep")
-      assigned.write.mode("overwrite").parquet(path)
+      ccCluster(s, t(s, d, "embeddings"))._2
+        .write.mode("overwrite").parquet(path)
       graft.Staging.commitStamp(path, stamp)
     }
     s.read.parquet(path)
+  }
+
+  /** The banded-LSH semantic clustering of `src`: its (vec_id, pk)
+    * band-bucket table and its (vec_id, cluster_rep) assignment.
+    */
+  private def ccCluster(s: SparkSession, src: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val emb = withNorm(src.repartition(s.sparkContext.defaultParallelism))
+      .localCheckpoint(true)
+    // candidate rows carry ONLY (id, band, bucket, packed-long band
+    // vector) — never the embedding: the band join's fan-out is the
+    // hot spot, so its rows stay ~32 bytes, and a pair colliding in
+    // several bands is emitted exactly once, in its FIRST matching
+    // band (the lowest zero 3-bit group of the pk XOR — see
+    // ccFirstMatchBand; HOFs run interpreted per element: measured
+    // 2× on the 12.5M-pair filter). DropDuplicates over wide rows
+    // measured 11.8 s; this shape ~3 s.
+    val withBuckets = emb.select(col("vec_id"),
+      ccPackedBuckets(col("embedding")).as("pk"))
+      .localCheckpoint(true) // the 24 hyperplane dots compute once
+    val keyed = ccExplodeBands(withBuckets)
+    val a = keyed.select(col("vec_id").as("va"), col("pk").as("pka"),
+      col("band"), col("bucket"))
+    val b = keyed.select(col("vec_id").as("vb"), col("pk").as("pkb"),
+      col("band"), col("bucket"))
+    val cand = a.join(b, Seq("band", "bucket"))
+      .filter(col("va") < col("vb") &&
+        col("band") === ccFirstMatchBand(col("pka"), col("pkb")))
+      .select("va", "vb")
+    val cc = graft.operators.ConnectedComponents(ccVerify(s, cand, emb))
+      .select(col("v").as("vec_id"), col("comp").as("rep"))
+    (withBuckets, emb.select("vec_id").join(cc, Seq("vec_id"), "left")
+      .withColumn("cluster_rep", coalesce(col("rep"), col("vec_id")))
+      .select("vec_id", "cluster_rep"))
   }
 
   /** Staged INCREMENTAL-dedup base state: the "old" corpus slice
@@ -1198,34 +1177,32 @@ object SimSearch {
     val path = graft.Staging.dir("graft_incr_base", d)
     val stamp = graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
     if (!graft.Staging.isCurrent(s"$path/buckets", stamp)) {
-      val emb = t(s, d, "embeddings")
-        .filter(col("vec_id") % 10 =!= 0)
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .localCheckpoint(true)
-      val withBuckets = emb.select(col("vec_id"),
-        ccPackedBuckets(col("embedding")).as("pk"))
-        .localCheckpoint(true)
-      val keyed = ccExplodeBands(withBuckets)
-      val a = keyed.select(col("vec_id").as("va"), col("pk").as("pka"),
-        col("band"), col("bucket"))
-      val b = keyed.select(col("vec_id").as("vb"), col("pk").as("pkb"),
-        col("band"), col("bucket"))
-      val cand = a.join(b, Seq("band", "bucket"))
-        .filter(col("va") < col("vb") &&
-          col("band") === ccFirstMatchBand(col("pka"), col("pkb")))
-        .select("va", "vb")
-      val cc = graft.operators.ConnectedComponents(ccVerify(s, cand, emb))
-        .select(col("v").as("vec_id"), col("comp").as("rep"))
-      emb.select("vec_id").join(cc, Seq("vec_id"), "left")
-        .withColumn("cluster_rep", coalesce(col("rep"), col("vec_id")))
-        .select("vec_id", "cluster_rep")
-        .write.mode("overwrite").parquet(s"$path/assign")
+      val (withBuckets, assigned) =
+        ccCluster(s, t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0))
+      assigned.write.mode("overwrite").parquet(s"$path/assign")
       withBuckets.write.mode("overwrite").parquet(s"$path/buckets")
       graft.Staging.commitStamp(s"$path/buckets", stamp)
     }
     path
   }
+
+  /** The embeddings with their `nrm` and random-hyperplane LSH
+    * `bucket`: the sign of each plane's projection via the codegen'd
+    * graft_dot against a double plane literal (no per-element lambda).
+    */
+  private def lshBuckets(s: SparkSession, d: String): DataFrame = {
+    val bucket = planes.zipWithIndex.map { case (p, i) =>
+      when(ndot(col("embedding"), typedlit(p.toSeq)) > 0, lit(1 << i))
+        .otherwise(lit(0))
+    }.reduce(_ + _)
+    withNorm(t(s, d, "embeddings")
+      .select(col("vec_id"), col("embedding"), bucket.as("bucket")))
+  }
+
+  /** The LSH corpus side: (vec_id, ce, cn, bucket), not repartitioned. */
+  private def lshCorpus(withB: DataFrame): DataFrame =
+    withB.select(col("vec_id"), col("embedding").as("ce"),
+      col("nrm").as("cn"), col("bucket"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // IVF probe against the PERSISTED index: the codebook is 16 rows read
@@ -1236,40 +1213,10 @@ object SimSearch {
     // of the corpus happens at query time; that cost was paid once at
     // build. No oracle (approximate recall — ScalaTest-bounded).
     "simsearch_ivf_persisted" -> ((s, d) => {
-      import s.implicits._
       val p = ivfStaged(s, d)
-      val cents: Seq[Seq[Float]] = s.read.parquet(s"$p/centroids")
-        .orderBy("cell").select("centroid")
-        .as[Array[Float]].collect().map(_.toSeq).toSeq
-      val codebook = typedlit(cents)
-      val index = s.read.parquet(s"$p/index")
-      // soft assignment stores a vector in SoftAssign cells — dedupe the
-      // query side down to one row per query before fanning out the probe
-      val q = index.filter(col("vec_id") < 8).dropDuplicates("vec_id")
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"),
-          explode(call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")), codebook, lit(NProbe)))
-            .as("cell"))
-      // nprobe cells across 8 queries: <= K driver-known ints — the IVF
-      // probe set, pushed as a static partition filter on the index scan
-      val probed = q.select("cell").distinct().as[Int].collect().toSeq
-      val c = index.filter(col("cell").isin(probed: _*))
-        .select(col("vec_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("cell"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(c, Seq("cell"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .select(col("q_id"), col("vec_id"), col("cos"))
-        .dropDuplicates("q_id", "vec_id")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
-          col("rn"))
-        .orderBy("q_id", "rn")
+      rankTop(ivfProbe(s, s.read.parquet(s"$p/index"),
+        typedlit(stagedCentroids(s, p)), NProbe)
+        .dropDuplicates("q_id", "vec_id"), 5)
     }),
 
     // INCREMENTAL IVF ingest — the ANN twin of dedup_incremental_index's
@@ -1288,45 +1235,17 @@ object SimSearch {
     // REBUILDS when assignment-quality metrics degrade, which is this
     // same staging path run fresh. No oracle (ANN family); spec-pinned.
     "simsearch_ivf_incremental" -> ((s, d) => {
-      import s.implicits._
       val p = incrIvfStaged(s, d)
-      val cents: Seq[Seq[Float]] = s.read.parquet(s"$p/centroids")
-        .orderBy("cell").select("centroid")
-        .as[Array[Float]].collect().map(_.toSeq).toSeq
-      val codebook = typedlit(cents)
-      val delta = t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .withColumn("cell", explode(
-          call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")),
-            codebook, lit(SoftAssign))))
-        .select("vec_id", "embedding", "nrm", "cell")
+      val codebook = typedlit(stagedCentroids(s, p))
+      val delta =
+        withNorm(t(s, d, "embeddings").filter(col("vec_id") % 10 === 0))
+          .withColumn("cell", explode(nearestCells(codebook, SoftAssign)))
+          .select("vec_id", "embedding", "nrm", "cell")
       val index = s.read.parquet(s"$p/index")
         .select("vec_id", "embedding", "nrm", "cell")
         .unionByName(delta)
-      val q = index.filter(col("vec_id") < 8).dropDuplicates("vec_id")
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"),
-          explode(call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")), codebook, lit(NProbe)))
-            .as("cell"))
-      val probed = q.select("cell").distinct().as[Int].collect().toSeq
-      val c = index.filter(col("cell").isin(probed: _*))
-        .select(col("vec_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("cell"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(c, Seq("cell"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .select(col("q_id"), col("vec_id"), col("cos"))
-        .dropDuplicates("q_id", "vec_id")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"),
-          round(col("cos"), 4).as("cos_sim"), col("rn"))
-        .orderBy("q_id", "rn")
+      rankTop(ivfProbe(s, index, codebook, NProbe)
+        .dropDuplicates("q_id", "vec_id"), 5)
     }),
 
     // ext: product-quantization ANN probe against the persisted code
@@ -1351,37 +1270,14 @@ object SimSearch {
         .select(col("vec_id"), col("embedding"))
         .as[(Long, Array[Float])].collect().sortBy(_._1)
       val qDf = qVecs.map { case (id, e) =>
-        val u = unitSeq(e.toSeq)
-        val lut = (0 until PqM).flatMap { m =>
-          val qs = u.slice(m * PqDim, (m + 1) * PqDim)
-          cb(m).map(c =>
-            qs.zip(c).foldLeft(0.0)((a, p) => a + p._1.toDouble * p._2))
-        }
-        (id, lut, e.toSeq)
+        (id, pqLut(unitSeq(e.toSeq), cb), e.toSeq)
       }.toSeq.toDF("q_id", "lut", "qe")
-      val shortlist = Window.partitionBy("q_id")
-        .orderBy(col("adc").desc, col("vec_id").asc)
-      val cands = s.read.parquet(s"$p/index")
+      // exact re-rank: ≤ 8 × 64 candidates fetch their full vectors
+      adcTopK(s, d, s.read.parquet(s"$p/index")
         .crossJoin(broadcast(qDf))
         .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("adc", call_function("graft_adc", col("codes"), col("lut")))
-        .withColumn("srn", row_number().over(shortlist))
-        .filter(col("srn") <= PqShortlist)
-        .select(col("q_id"), col("vec_id"), col("qe"),
-          sqrt(ndot(col("qe"), col("qe"))).as("qn"))
-      // exact re-rank: ≤ 8 × 64 candidates fetch their full vectors
-      val c = emb.select(col("vec_id"), col("embedding").as("ce"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(cands).join(c, Seq("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
-          col("rn"))
-        .orderBy("q_id", "rn")
+        .withColumn("adc",
+          call_function("graft_adc", col("codes"), col("lut"))))
     }),
 
     // IVF+PQ COMPOSITION — the production ANN default (FAISS IVFPQ):
@@ -1394,30 +1290,9 @@ object SimSearch {
     // scan partition-prunes to the probed directories — at 100 TB the
     // ADC pass touches nprobe/#cells × 16 B × N, and full-precision
     // vectors are fetched for 8×64 rows total.
-    "simsearch_ivfpq_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val shortlist = Window.partitionBy("q_id")
-        .orderBy(col("adc").desc, col("vec_id").asc)
-      val cands = ivfpqCandidates(s, d)
-        .withColumn("adc",
-          call_function("graft_adc", col("codes"), col("lut")))
-        .withColumn("srn", row_number().over(shortlist))
-        .filter(col("srn") <= PqShortlist)
-        .select(col("q_id"), col("vec_id"), col("qe"),
-          sqrt(ndot(col("qe"), col("qe"))).as("qn"))
-      val c = emb.select(col("vec_id"), col("embedding").as("ce"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(cands).join(c, Seq("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"),
-          round(col("cos"), 4).as("cos_sim"), col("rn"))
-        .orderBy("q_id", "rn")
-    }),
+    "simsearch_ivfpq_topk" -> ((s, d) =>
+      adcTopK(s, d, ivfpqCandidates(s, d).withColumn("adc",
+        call_function("graft_adc", col("codes"), col("lut"))))),
 
     // RESIDUAL-encoded IVFPQ — identical probe/shortlist/re-rank shape
     // to simsearch_ivfpq_topk at identical M/K/nprobe, but the codes
@@ -1427,7 +1302,7 @@ object SimSearch {
     // ⟨u_q,c⟩ + residual-ADC keeps driver state at one M×K LUT per
     // query. IvfPqResidualSpec measures recall vs the raw composition.
     "simsearch_ivfpq_residual_topk" -> ((s, d) =>
-      residualTopK(s, d, ivfpqResidualCandidates(s, d))),
+      adcTopK(s, d, ivfpqResidualCandidates(s, d))),
 
     // INCREMENTAL IVFPQ ingest — the composed index's refresh path:
     // a new batch coarse-assigns with the FROZEN base centroids and
@@ -1453,7 +1328,7 @@ object SimSearch {
         .filter(col("cell").isin(probed: _*))
         .unionByName(ivfpqIncrDelta(s, d, coarse, cb)
           .filter(col("cell").isin(probed: _*)))
-      residualTopK(s, d, residualAdcScore(index, qDf))
+      adcTopK(s, d, residualAdcScore(index, qDf))
     }),
 
     // B45: brute-force cosine top-5 for each query vector (vec_id < 8).
@@ -1544,25 +1419,10 @@ object SimSearch {
     }),
 
     "simsearch_cosine_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-      val q = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"))
-      // single-file source = one partition; spread the scan side
-      val c = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(c, col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
-          col("rn"))
-        .orderBy("q_id", "rn")
+      val emb = withNorm(t(s, d, "embeddings"))
+      rankTop(broadcast(queryVecs(emb))
+        .join(corpusVecs(s, emb), col("q_id") =!= col("vec_id"))
+        .withColumn("cos", cosine), 5)
     }),
 
     // FILTERED vector search, brute-force referee — "top-k nearest
@@ -1626,19 +1486,12 @@ object SimSearch {
     // MMR score to 6dp before every argmax (both engines then compute
     // on the identical doubles), ties break on doc_id.
     "search_mmr_rerank" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-      val q = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"))
-      val c = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"))
+      val emb = withNorm(t(s, d, "embeddings"))
       val wr = Window.partitionBy("q_id")
         .orderBy(col("rel").desc, col("doc_id").asc)
-      val cand = broadcast(q).join(c, col("q_id") =!= col("vec_id"))
-        .withColumn("rel",
-          round(ndot(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
+      val cand = broadcast(queryVecs(emb))
+        .join(corpusVecs(s, emb), col("q_id") =!= col("vec_id"))
+        .withColumn("rel", round(cosine, 4))
         .select(col("q_id"), col("vec_id").as("doc_id"), col("rel"))
         .withColumn("rn", row_number().over(wr))
         .filter(col("rn") <= 20)
@@ -1735,19 +1588,15 @@ object SimSearch {
 
     "search_hybrid_rrf" -> ((s, d) => {
       val lex = bm25TopK(s, d, 20).select("q_id", "doc_id", "rl")
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-      val qv = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("long").as("q_id"),
-          col("embedding").as("qe"), col("nrm").as("qn"))
-      val cv = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id").cast("long").as("doc_id"),
-          col("embedding").as("ce"), col("nrm").as("cn"))
+      val emb = withNorm(t(s, d, "embeddings"))
       val wv = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("doc_id").asc)
-      val vec = broadcast(qv).join(cv, col("q_id") =!= col("doc_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      val cv = emb.repartition(s.sparkContext.defaultParallelism)
+        .select(col("vec_id").as("doc_id"), col("embedding").as("ce"),
+          col("nrm").as("cn"))
+      val vec = broadcast(queryVecs(emb))
+        .join(cv, col("q_id") =!= col("doc_id"))
+        .withColumn("cos", cosine)
         .withColumn("rv", row_number().over(wv))
         .filter(col("rv") <= 20)
         .select("q_id", "doc_id", "rv")
@@ -1779,17 +1628,10 @@ object SimSearch {
     // same query at scale by probing cells/buckets whose centroid
     // bound can still reach τ.
     "simsearch_range_query" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-      val q = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"))
-      val c = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"))
-      broadcast(q).join(c, col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      val emb = withNorm(t(s, d, "embeddings"))
+      broadcast(queryVecs(emb))
+        .join(corpusVecs(s, emb), col("q_id") =!= col("vec_id"))
+        .withColumn("cos", cosine)
         .filter(col("cos") >= 0.4)
         .select(col("q_id"), col("vec_id"),
           round(col("cos"), 4).as("cos_sim"))
@@ -1808,21 +1650,15 @@ object SimSearch {
     // broadcast dim join. At 100 TB the judged set is still
     // queries×10 rows: eval cost is decoupled from corpus size.
     "eval_ranking_metrics" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-      val q = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("label").as("qlabel"))
-      val c = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("label").as("clabel"))
+      val emb = withNorm(t(s, d, "embeddings"))
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
       val labelCnt = t(s, d, "embeddings")
         .groupBy("label").agg(count(lit(1)).as("nlab"))
-      broadcast(q).join(c, col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      broadcast(queryVecs(emb, col("label").as("qlabel")))
+        .join(corpusVecs(s, emb, col("label").as("clabel")),
+          col("q_id") =!= col("vec_id"))
+        .withColumn("cos", cosine)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10)
         .withColumn("rel",
@@ -1931,8 +1767,7 @@ object SimSearch {
       graft.operators.ScaleGuard.requireAtMost(
         t(s, d, "embeddings").select("vec_id"), 50000,
         "dedup_embedding_cosine", "simsearch_lsh_bucketed")
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+      val emb = withNorm(t(s, d, "embeddings"))
       // single-file source = one partition; spread the n² pair loop
       val a = emb.repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id").as("va"), col("embedding").as("ea"),
@@ -1990,8 +1825,7 @@ object SimSearch {
     // oracle (inherits the LSH banding); spec-pinned instead.
     "dedup_incremental_index" -> ((s, d) => {
       val base = incrBaseStaged(s, d)
-      val emb = t(s, d, "embeddings")
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
+      val emb = withNorm(t(s, d, "embeddings"))
       val newB = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id"), ccPackedBuckets(col("embedding")).as("pk"))
         .localCheckpoint(true) // 24 hyperplane dots once, two consumers
@@ -2070,35 +1904,11 @@ object SimSearch {
     // No oracle (approximate recall); ScalaTest checks bucket determinism
     // and recall against the brute-force twin.
     "simsearch_lsh_bucketed" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      // Sign-of-projection per plane via the codegen'd graft_dot (double
-      // plane literal side) — same bits as the former interpreted
-      // aggregate(zip_with) lambda, but no per-element struct allocation.
-      def bucket(e: org.apache.spark.sql.Column) =
-        planes.zipWithIndex.map { case (p, i) =>
-          when(call_function("graft_dot", e, typedlit(p.toSeq)) > 0,
-            lit(1 << i)).otherwise(lit(0))
-        }.reduce(_ + _)
-      val withB = emb.select(col("vec_id"), col("embedding"),
-        bucket(col("embedding")).as("bucket"))
-      val q = withB.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("bucket"), sqrt(ndot(col("embedding"), col("embedding")))
-            .as("qn"))
-      val c = withB.select(col("vec_id"), col("embedding").as("ce"),
-        col("bucket"), sqrt(ndot(col("embedding"), col("embedding")))
-          .as("cn"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(c, Seq("bucket"))
+      val withB = lshBuckets(s, d)
+      rankTop(broadcast(queryVecs(withB, col("bucket")))
+        .join(lshCorpus(withB), Seq("bucket"))
         .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
-          col("rn"))
-        .orderBy("q_id", "rn")
+        .withColumn("cos", cosine), 5)
     }),
     // Multiprobe LSH: the recall repair for bucketed LSH WITHOUT
     // touching the corpus side — each query probes its own bucket PLUS
@@ -2113,36 +1923,14 @@ object SimSearch {
     // fixed queries. No oracle by design (approximate recall), same as
     // simsearch_lsh_bucketed.
     "simsearch_lsh_multiprobe" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      def bucket(e: org.apache.spark.sql.Column) =
-        planes.zipWithIndex.map { case (p, i) =>
-          when(call_function("graft_dot", e, typedlit(p.toSeq)) > 0,
-            lit(1 << i)).otherwise(lit(0))
-        }.reduce(_ + _)
-      val withB = emb.select(col("vec_id"), col("embedding"),
-        bucket(col("embedding")).as("bucket"))
-      val q = withB.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("bucket").as("qb"),
-          sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))
+      val withB = lshBuckets(s, d)
       val probeCols = col("qb") +: planes.indices.map(i =>
         col("qb").bitwiseXOR(lit(1 << i)))
-      val probes = q.withColumn("bucket",
-        explode(array(probeCols: _*)))
-      val c = withB.select(col("vec_id"), col("embedding").as("ce"),
-        col("bucket"), sqrt(ndot(col("embedding"), col("embedding")))
-          .as("cn"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(probes).join(c, Seq("bucket"))
+      val probes = queryVecs(withB, col("bucket").as("qb"))
+        .withColumn("bucket", explode(array(probeCols: _*)))
+      rankTop(broadcast(probes).join(lshCorpus(withB), Seq("bucket"))
         .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"),
-          round(col("cos"), 4).as("cos_sim"), col("rn"))
-        .orderBy("q_id", "rn")
+        .withColumn("cos", cosine), 5)
     }),
 
     // IVF-style ANN: a coarse quantizer (K=16 centroids trained by
@@ -2160,36 +1948,17 @@ object SimSearch {
     "simsearch_ivf_topk" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val codebook = typedlit(trainedCodebook(s, d))
-      val index = emb.repartition(s.sparkContext.defaultParallelism)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .withColumn("cell", explode(
-          call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")),
-            codebook, lit(SoftAssign))))
-      val q = emb.filter(col("vec_id") < 8)
-        .withColumn("nrm", sqrt(ndot(col("embedding"), col("embedding"))))
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"),
-          explode(call_function("graft_nearest_cells",
-            unitBy(col("embedding"), col("nrm")), codebook, lit(NProbe)))
-            .as("cell"))
-      val c = index.select(col("vec_id"), col("embedding").as("ce"),
-        col("nrm").as("cn"), col("cell"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(c, Seq("cell"))
+      val c = withNorm(emb.repartition(s.sparkContext.defaultParallelism))
+        .select(col("vec_id"), col("embedding").as("ce"), col("nrm").as("cn"),
+          explode(nearestCells(codebook, SoftAssign)).as("cell"))
+      val q = queryVecs(withNorm(emb),
+        explode(nearestCells(codebook, NProbe)).as("cell"))
+      // a candidate can surface via several probed cells — dedupe before
+      // ranking (all duplicates carry the identical cos)
+      rankTop(broadcast(q).join(c, Seq("cell"))
         .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos",
-          ndot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        // a candidate can surface via several probed cells — dedupe before
-        // ranking (all duplicates carry the identical cos)
-        .select(col("q_id"), col("vec_id"), col("cos"))
-        .dropDuplicates("q_id", "vec_id")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos_sim"),
-          col("rn"))
-        .orderBy("q_id", "rn")
+        .select(col("q_id"), col("vec_id"), cosine.as("cos"))
+        .dropDuplicates("q_id", "vec_id"), 5)
     }),
     // Distributed vector centroids (the "train a coarse quantizer /
     // cluster prototype" step): per-group mean vector via posexplode →

@@ -14,7 +14,8 @@ import scala.io.Source
   */
 class AnnGoldenPinSpec extends SparkSpec {
 
-  private case class Golden(schema: String, rows: Seq[(Long, Long, Int, Double)])
+  private case class Golden(schema: String,
+      rows: Seq[(Long, Long, Int, Double)])
 
   private lazy val goldens: Map[String, Golden] = {
     val src = Source.fromResource("golden/ann_topk_sf0.001.txt")
