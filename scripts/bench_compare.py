@@ -4,9 +4,11 @@
 Usage: bench_compare.py OLD NEW [--top N]
 
 Accepts either the raw one-line Bench JSON ({"metric":"total",...,
-"queries":{...},"failed":{...}}) or a driver BENCH_r{N}.json wrapper
-(reads the "queries" and "failed" dicts out of the tail's full line when
-present).
+"queries":{...},"failed":{...}}) or a BENCH_r{N}.json wrapper. A
+wrapper's "parsed" field holds the full line intact and is read first.
+When it has no "queries", the captured tail is read instead; a tail cut
+short keeps only the queries it still holds whole, and such a side is
+reported as partial, with totals over the keys both sides have.
 
 A key that crashed is listed under "failed" with its cause, not under
 "queries". Such keys are printed as failed-old / failed-new (never as
@@ -18,16 +20,35 @@ import re
 import sys
 
 
+def tail_queries(tail):
+    """Queries dict recovered from a wrapper's captured tail, and whether
+    it is whole. The full line orders "queries" before "solo"; a tail that
+    starts inside the queries dict keeps its whole "key":sec pairs."""
+    m = re.search(r'"queries":(\{[^}]*\})', tail)
+    if m:
+        return json.loads(m.group(1)), True
+    end = tail.find('},"solo":{')
+    if end < 0:
+        return None, False
+    pairs = re.findall(r'(?<=[{,])"([^"]+)":(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)',
+                       tail[:end])
+    return ({k: float(v) for k, v in pairs} or None), False
+
+
 def load(path):
-    """(queries, failed) of one Bench output; failed maps key -> cause."""
+    """(queries, failed, whole) of one Bench output; failed maps key ->
+    cause; whole is False when queries came from a truncated tail."""
     with open(path) as f:
         d = json.load(f)
     if "queries" in d:
-        return d["queries"], d.get("failed", {})
-    # driver wrapper: the full line lives in the captured tail
+        return d["queries"], d.get("failed", {}), True
+    # BENCH_r{N}.json wrapper: "parsed" holds the full line intact
+    parsed = d.get("parsed") or {}
+    if "queries" in parsed:
+        return parsed["queries"], parsed.get("failed", {}), True
     tail = d.get("tail", "")
-    m = re.search(r'"queries":(\{[^}]*\})', tail)
-    if not m:
+    queries, whole = tail_queries(tail)
+    if queries is None:
         sys.exit(f"{path}: no queries dict found")
     failed = {}
     for line in tail.splitlines():
@@ -37,7 +58,7 @@ def load(path):
                 failed = json.loads(line).get("failed", {})
             except ValueError:  # a truncated full line keeps only queries
                 pass
-    return json.loads(m.group(1)), failed
+    return queries, failed, whole
 
 
 def main():
@@ -62,24 +83,36 @@ def main():
         i += 1
     if len(args) != 2:
         sys.exit(__doc__.strip().splitlines()[2])
-    (old, old_failed), (new, new_failed) = load(args[0]), load(args[1])
+    (old, old_failed, old_whole), (new, new_failed, new_whole) = \
+        load(args[0]), load(args[1])
+    for path, q, whole in ((args[0], old, old_whole),
+                           (args[1], new, new_whole)):
+        if not whole:
+            print(f"partial: {path}: {len(q)} queries recovered from a "
+                  f"truncated tail")
     both = sorted(set(old) & set(new),
                   key=lambda k: abs(new[k] - old[k]), reverse=True)
     print(f"{'query':40s} {'old':>8s} {'new':>8s} {'delta':>8s}")
     for k in both[:top]:
         print(f"{k:40s} {old[k]:8.2f} {new[k]:8.2f} {new[k]-old[k]:+8.2f}")
     failed = set(old_failed) | set(new_failed)
+    # a partial side lacks keys because its tail was cut, not its run
     for name, s in (("only-old", set(old) - set(new) - failed),
                     ("only-new", set(new) - set(old) - failed)):
-        if s:
+        if s and old_whole and new_whole:
             print(f"{name}: {', '.join(sorted(s))}")
     for name, fails in (("failed-old", old_failed),
                         ("failed-new", new_failed)):
         for k in sorted(fails):
             print(f"{name}: {k}: {fails[k]}")
-    print(f"total: {sum(old.values()):.1f} -> {sum(new.values()):.1f} "
-          f"({sum(new.values()) - sum(old.values()):+.1f}; "
-          f"{len(old)} -> {len(new)} queries)")
+    if old_whole and new_whole:
+        print(f"total: {sum(old.values()):.1f} -> {sum(new.values()):.1f} "
+              f"({sum(new.values()) - sum(old.values()):+.1f}; "
+              f"{len(old)} -> {len(new)} queries)")
+    else:
+        t_old, t_new = (sum(q[k] for k in both) for q in (old, new))
+        print(f"total over {len(both)} common queries: {t_old:.1f} -> "
+              f"{t_new:.1f} ({t_new - t_old:+.1f})")
     regressed = sorted(set(new_failed) - set(old_failed))
     if regressed:
         print(f"NEW fails where OLD did not: {', '.join(regressed)}")

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import java.io.InputStream
+import java.util.regex.Pattern
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -8,8 +9,11 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.util.LongAccumulator
+
+import graft.SerializableHadoopConf
 
 /** One flattened XML element: document URI, namespace-stripped local tag,
   * trimmed text, document-order position of the start tag.
@@ -82,11 +86,14 @@ object XmlIngest {
       baseDir: String,
       metrics: Option[IngestMetrics] = None): Dataset[TagText] = {
     import spark.implicits._
+    val bc = taskConf(spark)
     uriDs.mapPartitions { uris =>
-      // per-partition init (FileSystem handles are cached by scheme) —
-      // mirrors the reference's once-per-partition client setup
-      // (IRSSpark.py:196-199)
-      val conf = anonymousS3Fallback(new Configuration())
+      // per-partition init mirrors the reference's once-per-partition
+      // client setup (IRSSpark.py:196-199): the task reads the scan's
+      // broadcast conf (read-only, shared by every task on the executor)
+      // and builds one StAX factory for all of its documents
+      val conf = bc.value.value
+      val xml = xmlInputFactory()
       uris.flatMap { uri =>
         metrics.foreach(_.processed.add(1))
         try {
@@ -94,7 +101,7 @@ object XmlIngest {
           val fs = p.getFileSystem(conf)
           val in = fs.open(p)
           try {
-            val out = parse(uri, in)
+            val out = parse(uri, in, factory = xml)
             metrics.foreach { m => m.ok.add(1); m.records.add(out.size) }
             out
           } finally in.close()
@@ -107,6 +114,25 @@ object XmlIngest {
       }
     }
   }
+
+  /** The Hadoop conf every ingest task of one scan reads, broadcast once.
+    *
+    * Taken on the driver at the call: `sessionState.newHadoopConf()` is a
+    * copy of the session's `hadoopConfiguration` (plus its SQL conf, as
+    * Spark's own file sources see it), so filesystem settings made on the
+    * session (s3a credentials and endpoints, provider chains, custom
+    * schemes) reach the executors. [[anonymousS3Fallback]] is applied to
+    * that copy only; the session conf and the shared
+    * [[graft.HadoopConf.broadcast]] value are never touched. Tasks resolve
+    * `FileSystem`s against `value.value` and must not mutate it: it is one
+    * object shared by every task on an executor. A fresh broadcast per
+    * scan (about 100 KB) means a setting changed between scans is seen by
+    * the next one, and no task re-parses `core-default.xml`.
+    */
+  private[graft] def taskConf(spark: SparkSession)
+      : Broadcast[SerializableHadoopConf] =
+    spark.sparkContext.broadcast(new SerializableHadoopConf(
+      anonymousS3Fallback(spark.sessionState.newHadoopConf())))
 
   /** The reference reads the public IRS registry with an UNSIGNED boto3
     * client (IRSSpark.py:196-199) — no credentials needed for the public
@@ -130,10 +156,23 @@ object XmlIngest {
     conf
   }
 
+  private val SchemePrefix = Pattern.compile("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")
+
   private[graft] def resolve(uri: String, baseDir: String): Path = {
-    val hasScheme = uri.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")
+    val hasScheme = SchemePrefix.matcher(uri).matches()
     if (hasScheme || uri.startsWith("/")) new Path(uri)
     else new Path(baseDir, uri)
+  }
+
+  /** A StAX factory with DTDs and external entities off, so a filing can
+    * neither fetch nor expand anything. `newInstance()` is a service
+    * lookup: a task makes one factory and reuses it for every document.
+    */
+  private[graft] def xmlInputFactory(): XMLInputFactory = {
+    val factory = XMLInputFactory.newInstance()
+    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    factory
   }
 
   /** Flatten every element in document order, ElementTree-equivalently:
@@ -145,12 +184,12 @@ object XmlIngest {
     * are never buffered or emitted — only the document-order position
     * counter advances — so a one-tag extraction materializes one row per
     * matching element instead of one per element.
+    *
+    * `factory` is the caller's [[xmlInputFactory]], made once per task.
     */
   private[graft] def parse(doc: String, in: InputStream,
-      keep: String => Boolean = _ => true): Seq[TagText] = {
-    val factory = XMLInputFactory.newInstance()
-    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+      keep: String => Boolean = _ => true,
+      factory: XMLInputFactory = xmlInputFactory()): Seq[TagText] = {
     val r = factory.createXMLStreamReader(in)
     val out = ArrayBuffer.empty[(Int, String, java.lang.StringBuilder)]
     // per-open-element text buffer (null for skipped tags) + child marker

@@ -6,6 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -16,6 +18,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.SerializableHadoopConf
 import graft.ingest.XmlIngest
 
 /** DataSource V2 connector for the XML-manifest corpus — the reference's
@@ -37,7 +40,10 @@ import graft.ingest.XmlIngest
   * flattens every element of every file no matter what the job needs
   * (SURVEY §4.1). URIs are split across `partitions` input partitions, so
   * the fetch/parse fan-out scales with the cluster exactly like the RDD
-  * path.
+  * path. The manifest is read through the session's Hadoop conf, and every
+  * reader resolves its files against one broadcast of it
+  * ([[XmlIngest.taskConf]]), so session filesystem settings hold on the
+  * executors too.
   */
 class XmlManifestSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -100,12 +106,13 @@ private[sources] class XmlScanBuilder(manifest: String, baseDir: String,
         case In("tag", vs) => vs.toSeq.map(_.asInstanceOf[String]).toSet
         case _ => Set.empty[String]
       }.reduce(_ intersect _))
-    new XmlScan(manifest, baseDir, nParts, tags)
+    new XmlScan(SparkSession.active, manifest, baseDir, nParts, tags)
   }
 }
 
-private[sources] class XmlScan(manifest: String, baseDir: String, nParts: Int,
-    tagFilter: Option[Set[String]]) extends Scan with Batch {
+private[sources] class XmlScan(spark: SparkSession, manifest: String,
+    baseDir: String, nParts: Int, tagFilter: Option[Set[String]])
+  extends Scan with Batch {
   override def readSchema(): StructType = XmlManifestSource.schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -114,7 +121,7 @@ private[sources] class XmlScan(manifest: String, baseDir: String, nParts: Int,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(manifest)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(p)
     val uris =
       try scala.io.Source.fromInputStream(in, "UTF-8")
@@ -125,26 +132,33 @@ private[sources] class XmlScan(manifest: String, baseDir: String, nParts: Int,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XmlReaderFactory(baseDir, tagFilter)
+    new XmlReaderFactory(XmlIngest.taskConf(spark), baseDir, tagFilter)
 }
 
 private[sources] case class XmlInputPartition(uris: Array[String])
   extends InputPartition
 
-private[sources] class XmlReaderFactory(baseDir: String,
+private[sources] class XmlReaderFactory(
+    conf: Broadcast[SerializableHadoopConf], baseDir: String,
     tagFilter: Option[Set[String]]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new XmlPartitionReader(p.asInstanceOf[XmlInputPartition].uris, baseDir,
-      tagFilter)
+    new XmlPartitionReader(conf.value.value,
+      p.asInstanceOf[XmlInputPartition].uris, baseDir, tagFilter)
 }
 
 /** Executor-side reader: Hadoop-FS fetch → StAX flatten → (optionally
   * tag-pruned) InternalRows. Unreadable/malformed files are skipped whole,
-  * matching GraftJob's ingest semantics.
+  * matching GraftJob's ingest semantics. `conf` is the scan's broadcast
+  * conf, shared read-only with every reader on the executor.
   */
-private[sources] class XmlPartitionReader(uris: Array[String], baseDir: String,
-    tagFilter: Option[Set[String]]) extends PartitionReader[InternalRow] {
-  private val conf = new Configuration()
+private[sources] class XmlPartitionReader(conf: Configuration,
+    uris: Array[String], baseDir: String, tagFilter: Option[Set[String]])
+  extends PartitionReader[InternalRow] {
+  private val xml = XmlIngest.xmlInputFactory()
+  private val keep: String => Boolean = tagFilter match {
+    case Some(tags) => tags.contains _
+    case None => _ => true
+  }
   private var uriIdx = 0
   private var current: Iterator[InternalRow] = Iterator.empty
 
@@ -156,12 +170,8 @@ private[sources] class XmlPartitionReader(uris: Array[String], baseDir: String,
         val p = XmlIngest.resolve(uri, baseDir)
         val fs = p.getFileSystem(conf)
         val in = fs.open(p)
-        val keep: String => Boolean = tagFilter match {
-          case Some(tags) => tags.contains _
-          case None => _ => true
-        }
         val kept =
-          try XmlIngest.parse(uri, in, keep)
+          try XmlIngest.parse(uri, in, keep, xml)
           finally in.close()
         current = kept.iterator.map { t =>
           new GenericInternalRow(Array[Any](
