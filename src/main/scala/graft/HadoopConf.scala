@@ -1,73 +1,28 @@
 package graft
 
-/** Serializable carrier for the SESSION's Hadoop Configuration, for
-  * executor-side FileSystem access inside mapPartitions/flatMapGroups
-  * stagers. `new Configuration()` in a task silently drops every user
-  * filesystem setting (s3a credentials, custom providers) — fine on
-  * local disk, broken the first time a staging dir is remote. Hadoop's
-  * Configuration is not java-serializable, so this writes it through its
-  * own write/readFields Writable protocol (the same pattern Spark uses
-  * internally for its private SerializableConfiguration).
-  */
-class SerializableHadoopConf(
-    @transient var value: org.apache.hadoop.conf.Configuration)
-  extends Serializable {
-
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 object HadoopConf {
-  // one broadcast per SparkContext, created on first use — callers sit on
-  // hot query paths (every packed-scan invocation), and re-broadcasting
-  // ~100 KB of conf XML per call is pure per-query overhead plus
-  // ContextCleaner churn across a 400-key sweep. Weak keys: a stopped
-  // context's entry (and its broadcast handle) becomes collectable.
-  // Snapshot semantics: the conf is captured at first broadcast; staging
-  // callers only need filesystem client settings, which are fixed at
-  // session build.
-  private val cache = new java.util.WeakHashMap[
-    org.apache.spark.SparkContext,
-    org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]]()
-
-  /** The session's hadoopConfiguration as a broadcast — ship ONE copy per
-    * executor, not one per task closure (the conf is ~100 KB of XML).
+  /** The session's Hadoop conf as it is at the call, broadcast for
+    * executor-side FileSystem access: one copy per executor, not one per
+    * task closure (the conf is ~100 KB of XML). `new Configuration()` in a
+    * task would silently drop every session filesystem setting (s3a
+    * credentials, custom providers) — fine on local disk, broken the first
+    * time a path is remote.
+    *
+    * `sessionState.newHadoopConf()` is a fresh copy of the context's
+    * `hadoopConfiguration` plus the session's SQL conf, as Spark's own file
+    * sources see it, so a setting changed on the session is seen by the
+    * next call. `prepare` may adjust that copy before it ships; the
+    * session's own conf is never touched. Tasks read `value.value` and must
+    * not mutate it: it is one object shared by every task on an executor.
     */
-  def broadcast(s: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.broadcast.Broadcast[SerializableHadoopConf] =
-    cache.synchronized {
-      val sc = s.sparkContext
-      val cached = cache.get(sc)
-      if (cached != null) cached
-      else {
-        val b = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-        cache.put(sc, b)
-        b
-      }
-    }
-
-  /** Drop the cached broadcast for this context so the NEXT call
-    * re-snapshots `hadoopConfiguration`. The snapshot-at-first-use cache
-    * silently keeps shipping stale filesystem settings to executors if a
-    * caller mutates the session conf (credentials, custom providers)
-    * after any packed scan ran — that is invisible-wrong-config, so the
-    * mutation path must have an explicit invalidation hook rather than a
-    * comment stating the assumption.
-    */
-  def invalidate(s: org.apache.spark.sql.SparkSession): Unit =
-    cache.synchronized {
-      val old = cache.remove(s.sparkContext)
-      if (old != null) {
-        try old.destroy()
-        catch { case _: Throwable => () } // already destroyed / stopping
-      }
-    }
+  def broadcast(s: SparkSession,
+      prepare: Configuration => Configuration = identity)
+      : Broadcast[SerializableConfiguration] =
+    s.sparkContext.broadcast(new SerializableConfiguration(
+      prepare(s.sessionState.newHadoopConf())))
 }

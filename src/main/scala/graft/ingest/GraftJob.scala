@@ -6,11 +6,14 @@ import org.apache.spark.sql.functions._
 /** Job CLI arguments — twin of the reference's argparse surface
   * (IRSSpark.py:20-44,45-110): input manifest, output table, partition
   * counts, output format/compression, free-form writer options.
+  * `numInputPartitions` is explicit (n > 0: exactly n, or one per URI if
+  * fewer) or derived (0, the default) from the manifest's URI count and the
+  * cluster's parallelism (graft.sources.XmlManifestSource.fanOut).
   */
 case class GraftArgs(
     input: String,
     output: String,
-    numInputPartitions: Int = 400,
+    numInputPartitions: Int = 0,
     numOutputPartitions: Int = 10,
     outputFormat: String = "parquet",
     outputCompression: String = "gzip",
@@ -135,14 +138,13 @@ trait GraftJob {
   def run(spark: SparkSession, args: GraftArgs): DataFrame = {
     val metrics = IngestMetrics(spark)
     val baseDir = new org.apache.hadoop.fs.Path(args.input).getParent.toString
+    // the V2 scan counts files and elements into the accumulators; an
+    // `observe` here would sit between the scan and the job's tag filter
+    // and stop it from being pushed into the parser
     val ingested = XmlIngest
       .fetchParse(spark, args.input, baseDir, args.numInputPartitions,
         Some(metrics))
       .toDF()
-      // DataFrame-native metrics alongside the accumulators (SURVEY §2 A10
-      // mapping): observed rows surface through QueryExecutionListener /
-      // the observedMetrics API without a second pass over the data.
-      .observe(s"${name}_ingest", count(lit(1)).as("rows_ingested"))
     val result = transform(ingested, args).coalesce(args.numOutputPartitions)
     val writer = result.write.mode(SaveMode.Overwrite)
       .format(args.outputFormat)

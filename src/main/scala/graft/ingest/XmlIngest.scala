@@ -10,10 +10,8 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.util.LongAccumulator
-
-import graft.SerializableHadoopConf
+import org.apache.spark.sql.{Dataset, SparkSession, V2TableFrame}
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 /** One flattened XML element: document URI, namespace-stripped local tag,
   * trimmed text, document-order position of the start tag.
@@ -47,8 +45,10 @@ object IngestMetrics {
     spark.sparkContext.longAccumulator("records_emitted"))
 }
 
-/** Executor-side XML ingest: manifest of URIs → fetch → streaming StAX
-  * parse → flattened [[TagText]] rows.
+/** XML ingest: manifest of URIs → fetch → streaming StAX parse →
+  * flattened [[TagText]] rows. The driver plans the fan-out from the
+  * manifest (graft.sources.XmlManifestSource); each executor-side reader
+  * runs every URI through one per-file step, [[XmlIngest.fetchParseAll]].
   *
   * Replaces the reference's three hand-rolled IO branches (boto3 S3 /
   * pydoop HDFS / local `open`, IRSSpark.py:192-244) with the one Hadoop
@@ -59,80 +59,84 @@ object IngestMetrics {
   */
 object XmlIngest {
 
-  /** A1: manifest scan. One URI per line; `n` partitions spread the
-    * fetch/parse fan-out (the reference's `minPartitions`,
-    * IRSSpark.py:177-178).
+  /** Manifest text scan: one URI per line, `n` partitions by shuffle
+    * (`n` <= 0 keeps the file's splits). The manifest-scan keys and the
+    * incremental key read it this way; the reference jobs plan their
+    * fan-out from the URI list instead (graft.sources.XmlManifestSource).
     */
   def manifest(spark: SparkSession, path: String, n: Int): Dataset[String] = {
     val raw = spark.read.textFile(path).filter(_.nonEmpty)
     if (n > 0) raw.repartition(n) else raw
   }
 
-  /** A2+A3: fetch each URI and flatten its XML. Relative URIs resolve
-    * against `baseDir` (the manifest's directory — the reference resolved
-    * against the script directory, IRSSpark.py:194,236).
+  /** A1-A3: scan the manifest, fetch each URI and flatten its XML, through
+    * the V2 source (graft.sources.XmlManifestSource), so a tag filter above
+    * it is pushed into the StAX loop. Relative URIs resolve against
+    * `baseDir` (the manifest's directory; the reference resolved against
+    * the script directory, IRSSpark.py:194,236). `nPartitions` > 0 is the
+    * exact input fan-out (fewer only for a manifest of fewer URIs); 0
+    * derives it from the URI count
+    * ([[graft.sources.XmlManifestSource.fanOut]]).
     */
   def fetchParse(spark: SparkSession, manifestPath: String, baseDir: String,
       nPartitions: Int = 0,
-      metrics: Option[IngestMetrics] = None): Dataset[TagText] =
-    fetchParseUris(spark, manifest(spark, manifestPath, nPartitions),
-      baseDir, metrics)
+      metrics: Option[IngestMetrics] = None): Dataset[TagText] = {
+    import spark.implicits._
+    V2TableFrame(spark, new graft.sources.XmlManifestTable(manifestPath,
+      baseDir, nPartitions, metrics)).as[TagText]
+  }
 
-  /** Same fetch+flatten over an ALREADY-SELECTED uri set — the entry point
-    * incremental ingestion needs (parse only the manifest ∖ processed-log
-    * slice, not the whole manifest).
+  /** The same fetch+flatten over an ALREADY-SELECTED URI set, one task
+    * per partition of `uriDs`. It stays only because
+    * `ingest_incremental_manifest` feeds it a computed set (the manifest
+    * anti-joined with the processed log), not a manifest file.
     */
   def fetchParseUris(spark: SparkSession, uriDs: Dataset[String],
       baseDir: String,
       metrics: Option[IngestMetrics] = None): Dataset[TagText] = {
     import spark.implicits._
     val bc = taskConf(spark)
-    uriDs.mapPartitions { uris =>
-      // per-partition init mirrors the reference's once-per-partition
-      // client setup (IRSSpark.py:196-199): the task reads the scan's
-      // broadcast conf (read-only, shared by every task on the executor)
-      // and builds one StAX factory for all of its documents
-      val conf = bc.value.value
-      val xml = xmlInputFactory()
-      uris.flatMap { uri =>
-        metrics.foreach(_.processed.add(1))
-        try {
-          val p = resolve(uri, baseDir)
-          val fs = p.getFileSystem(conf)
-          val in = fs.open(p)
-          try {
-            val out = parse(uri, in, factory = xml)
-            metrics.foreach { m => m.ok.add(1); m.records.add(out.size) }
-            out
-          } finally in.close()
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            // malformed/unreadable → count + skip the file, never the job
-            metrics.foreach(_.failed.add(1))
-            Nil
-        }
+    uriDs.mapPartitions(
+      fetchParseAll(_, baseDir, bc.value.value, _ => true, metrics))
+  }
+
+  /** One task's URIs → the flattened elements `keep` accepts; the per-file
+    * step of every ingest path. Each URI counts in `metrics` as exactly one
+    * of ok/failed, and `records` counts every element of a parsed file,
+    * kept or not, so it means the same with or without a pushed tag filter.
+    * An unreadable or malformed file is skipped whole, never the task.
+    * Like the reference's once-per-partition client setup
+    * (IRSSpark.py:196-199), the task's conf and StAX factory serve all of
+    * its files.
+    */
+  private[graft] def fetchParseAll(uris: Iterator[String], baseDir: String,
+      conf: Configuration, keep: String => Boolean,
+      metrics: Option[IngestMetrics]): Iterator[TagText] = {
+    val xml = xmlInputFactory()
+    uris.flatMap { uri =>
+      metrics.foreach(_.processed.add(1))
+      try {
+        val p = resolve(uri, baseDir)
+        val in = p.getFileSystem(conf).open(p)
+        val (kept, elements) = try flatten(uri, in, keep, xml)
+          finally in.close()
+        metrics.foreach { m => m.ok.add(1); m.records.add(elements) }
+        kept
+      } catch {
+        case scala.util.control.NonFatal(_) =>
+          metrics.foreach(_.failed.add(1))
+          Nil
       }
     }
   }
 
-  /** The Hadoop conf every ingest task of one scan reads, broadcast once.
-    *
-    * Taken on the driver at the call: `sessionState.newHadoopConf()` is a
-    * copy of the session's `hadoopConfiguration` (plus its SQL conf, as
-    * Spark's own file sources see it), so filesystem settings made on the
-    * session (s3a credentials and endpoints, provider chains, custom
-    * schemes) reach the executors. [[anonymousS3Fallback]] is applied to
-    * that copy only; the session conf and the shared
-    * [[graft.HadoopConf.broadcast]] value are never touched. Tasks resolve
-    * `FileSystem`s against `value.value` and must not mutate it: it is one
-    * object shared by every task on an executor. A fresh broadcast per
-    * scan (about 100 KB) means a setting changed between scans is seen by
-    * the next one, and no task re-parses `core-default.xml`.
+  /** The Hadoop conf every ingest task of one scan reads, broadcast once:
+    * the session's conf at the call ([[graft.HadoopConf.broadcast]]) with
+    * [[anonymousS3Fallback]] applied to that copy only.
     */
   private[graft] def taskConf(spark: SparkSession)
-      : Broadcast[SerializableHadoopConf] =
-    spark.sparkContext.broadcast(new SerializableHadoopConf(
-      anonymousS3Fallback(spark.sessionState.newHadoopConf())))
+      : Broadcast[SerializableConfiguration] =
+    graft.HadoopConf.broadcast(spark, anonymousS3Fallback)
 
   /** The reference reads the public IRS registry with an UNSIGNED boto3
     * client (IRSSpark.py:196-199) — no credentials needed for the public
@@ -168,7 +172,7 @@ object XmlIngest {
     * neither fetch nor expand anything. `newInstance()` is a service
     * lookup: a task makes one factory and reuses it for every document.
     */
-  private[graft] def xmlInputFactory(): XMLInputFactory = {
+  private def xmlInputFactory(): XMLInputFactory = {
     val factory = XMLInputFactory.newInstance()
     factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
@@ -178,18 +182,19 @@ object XmlIngest {
   /** Flatten every element in document order, ElementTree-equivalently:
     * an element's text is the character run between its start tag and its
     * first child (or end tag), trimmed, null-safe.
-    *
-    * `keep` is the tag-filter pushdown hook (used by the V2 source,
-    * graft.sources.XmlManifestSource): elements whose tag doesn't match
-    * are never buffered or emitted — only the document-order position
-    * counter advances — so a one-tag extraction materializes one row per
-    * matching element instead of one per element.
-    *
-    * `factory` is the caller's [[xmlInputFactory]], made once per task.
     */
-  private[graft] def parse(doc: String, in: InputStream,
-      keep: String => Boolean = _ => true,
-      factory: XMLInputFactory = xmlInputFactory()): Seq[TagText] = {
+  private[graft] def parse(doc: String, in: InputStream): Seq[TagText] =
+    flatten(doc, in, _ => true, xmlInputFactory())._1
+
+  /** [[parse]] restricted to the elements `keep` accepts, plus the number
+    * of elements in the document, kept or not. `keep` is the tag-filter
+    * pushdown hook of the V2 source: an element it rejects is never
+    * buffered or emitted — only the document-order position counter
+    * advances — so a one-tag extraction materializes one row per matching
+    * element instead of one per element.
+    */
+  private def flatten(doc: String, in: InputStream, keep: String => Boolean,
+      factory: XMLInputFactory): (Seq[TagText], Int) = {
     val r = factory.createXMLStreamReader(in)
     val out = ArrayBuffer.empty[(Int, String, java.lang.StringBuilder)]
     // per-open-element text buffer (null for skipped tags) + child marker
@@ -220,7 +225,7 @@ object XmlIngest {
         }
       }
     } finally r.close()
-    out.map { case (p, tag, sb) => TagText(doc, p, tag, sb.toString.trim) }
-      .toSeq
+    (out.map { case (p, tag, sb) => TagText(doc, p, tag, sb.toString.trim) }
+      .toSeq, pos)
   }
 }

@@ -103,11 +103,11 @@ object Ingest {
         }
         .collect() // bounded: ≤ BulkFiles shard names
         .sorted
-      // manifest goes through the SAME Hadoop FS as the shards — a
-      // java.nio local write would strand the manifest on the driver's
+      // manifest goes through the SAME Hadoop FS and conf as the shards —
+      // a java.nio local write would strand the manifest on the driver's
       // disk whenever the staging dir is a remote filesystem
       val mfs = new org.apache.hadoop.fs.Path(dirB)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getFileSystem(hconf.value.value)
       val mout = mfs.create(
         new org.apache.hadoop.fs.Path(dirB, "manifest.txt"), true)
       try mout.write(written.mkString("\n").getBytes("UTF-8"))
@@ -255,8 +255,7 @@ object Ingest {
     // ingest stack is checked against an independent derivation.
     "ingest_parse_bulk" -> ((s, d) => {
       val dirB = ensureBulkStaged(s, d)
-      XmlIngest.fetchParse(s, s"$dirB/manifest.txt", dirB,
-          nPartitions = s.sparkContext.defaultParallelism).toDF()
+      XmlIngest.fetchParse(s, s"$dirB/manifest.txt", dirB).toDF()
         .groupBy("tag")
         .agg(count(lit(1)).as("cnt"),
           sum(length(col("text"))).as("n_chars"))
@@ -273,7 +272,6 @@ object Ingest {
       val dirB = ensureBulkStaged(s, d)
       s.read.format("graft.sources.XmlManifestSource")
         .option("manifest", s"$dirB/manifest.txt")
-        .option("partitions", s.sparkContext.defaultParallelism.toString)
         .load()
         .filter(col("tag") === "LangCd")
         .groupBy(col("text").as("lang"))

@@ -2,9 +2,6 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
@@ -18,8 +15,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.SerializableHadoopConf
-import graft.ingest.XmlIngest
+import org.apache.spark.util.SerializableConfiguration
+import graft.ingest.{IngestMetrics, TagText, XmlIngest}
 
 /** DataSource V2 connector for the XML-manifest corpus — the reference's
   * ingest model (a text manifest of XML document URIs) exposed as a real
@@ -28,22 +25,21 @@ import graft.ingest.XmlIngest
   * {{{
   * spark.read.format("graft.sources.XmlManifestSource")
   *   .option("manifest", "/path/manifest.txt")
-  *   .option("partitions", "32")
+  *   .option("partitions", "32")   // optional; derived when absent
   *   .load()                       // schema: doc, pos, tag, text
   * }}}
   *
-  * The point of the V2 route (vs the `XmlIngest.fetchParse` helper, which
-  * stays for programmatic use): Catalyst can now SEE the ingest. Tag
-  * predicates (`tag = 'CityNm'`, `tag IN (...)`) push down through
+  * The one manifest ingest path: `GraftJob.run` and `XmlIngest.fetchParse`
+  * read through it too, with the job's accumulators. Tag predicates
+  * (`tag = 'CityNm'`, `tag IN (...)`) push down through
   * `SupportsPushDownFilters` into the StAX loop, which then skips
   * non-matching elements *before* materializing rows — the reference
-  * flattens every element of every file no matter what the job needs
-  * (SURVEY §4.1). URIs are split across `partitions` input partitions, so
-  * the fetch/parse fan-out scales with the cluster exactly like the RDD
-  * path. The manifest is read through the session's Hadoop conf, and every
-  * reader resolves its files against one broadcast of it
-  * ([[XmlIngest.taskConf]]), so session filesystem settings hold on the
-  * executors too.
+  * flattens every element of every file (SURVEY §4.1). The driver splits
+  * the manifest's URIs into input partitions with no shuffle
+  * ([[XmlManifestSource.fanOut]]). It holds the URI list while planning,
+  * as Spark's `InMemoryFileIndex` holds file statuses: a few hundred MB for
+  * the registry's 300k–3M-line manifests. Readers resolve files against
+  * one broadcast of the session's Hadoop conf ([[XmlIngest.taskConf]]).
   */
 class XmlManifestSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -55,8 +51,8 @@ class XmlManifestSource extends TableProvider {
     require(manifest != null, "option 'manifest' is required")
     val base = Option(properties.get("basedir"))
       .getOrElse(new Path(manifest).getParent.toString)
-    val parts = Option(properties.get("partitions")).map(_.toInt).getOrElse(4)
-    new XmlManifestTable(manifest, base, parts)
+    val parts = Option(properties.get("partitions")).map(_.toInt).getOrElse(0)
+    new XmlManifestTable(manifest, base, parts, None)
   }
 }
 
@@ -66,20 +62,48 @@ object XmlManifestSource {
     StructField("pos", IntegerType, nullable = false),
     StructField("tag", StringType, nullable = false),
     StructField("text", StringType, nullable = false)))
+
+  /** Most URIs one derived input partition holds, so a task retry
+    * re-fetches a bounded number of files (the role `maxPartitionBytes`
+    * plays for Spark's file sources). PERF.md records why 256.
+    */
+  val MaxUrisPerTask = 256
+
+  /** Input partitions for `nUris` URIs: `explicit` when > 0, else
+    * `max(parallelism, ceil(nUris / MaxUrisPerTask))`; [[slices]] then caps
+    * it at `nUris`, so no task is empty. The reference's
+    * `minPartitions=400` was only a split hint; a fixed 400 turns a small
+    * manifest into tasks that cost more to schedule than to parse.
+    */
+  def fanOut(nUris: Int, explicit: Int, parallelism: Int): Int =
+    if (explicit > 0) explicit
+    else math.max(parallelism, (nUris + MaxUrisPerTask - 1) / MaxUrisPerTask)
+
+  /** `uris` cut into exactly `min(n, uris.length)` contiguous slices, in
+    * order, whose sizes differ by at most one.
+    */
+  def slices(uris: Array[String], n: Int): Array[Array[String]] = {
+    val k = math.min(n, uris.length)
+    def cut(i: Int) = (i.toLong * uris.length / k).toInt
+    Array.tabulate(k)(i => uris.slice(cut(i), cut(i + 1)))
+  }
 }
 
-private[sources] class XmlManifestTable(manifest: String, baseDir: String,
-    nParts: Int) extends Table with SupportsRead {
+/** `metrics`, when set, receives the scan's file and element counts. */
+private[graft] class XmlManifestTable(manifest: String, baseDir: String,
+    nParts: Int, metrics: Option[IngestMetrics])
+  extends Table with SupportsRead {
   override def name(): String = s"graft_xml($manifest)"
   override def schema(): StructType = XmlManifestSource.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.Collections.singleton(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XmlScanBuilder(manifest, baseDir, nParts)
+    new XmlScanBuilder(manifest, baseDir, nParts, metrics)
 }
 
 private[sources] class XmlScanBuilder(manifest: String, baseDir: String,
-    nParts: Int) extends ScanBuilder with SupportsPushDownFilters {
+    nParts: Int, metrics: Option[IngestMetrics])
+  extends ScanBuilder with SupportsPushDownFilters {
   private var pushed: Array[Filter] = Array.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -106,12 +130,13 @@ private[sources] class XmlScanBuilder(manifest: String, baseDir: String,
         case In("tag", vs) => vs.toSeq.map(_.asInstanceOf[String]).toSet
         case _ => Set.empty[String]
       }.reduce(_ intersect _))
-    new XmlScan(SparkSession.active, manifest, baseDir, nParts, tags)
+    new XmlScan(SparkSession.active, manifest, baseDir, nParts, tags, metrics)
   }
 }
 
 private[sources] class XmlScan(spark: SparkSession, manifest: String,
-    baseDir: String, nParts: Int, tagFilter: Option[Set[String]])
+    baseDir: String, nParts: Int, tagFilter: Option[Set[String]],
+    metrics: Option[IngestMetrics])
   extends Scan with Batch {
   override def readSchema(): StructType = XmlManifestSource.schema
   override def toBatch: Batch = this
@@ -127,65 +152,42 @@ private[sources] class XmlScan(spark: SparkSession, manifest: String,
       try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().filter(_.nonEmpty).toArray
       finally in.close()
-    val per = math.max(1, math.ceil(uris.length.toDouble / nParts).toInt)
-    uris.grouped(per).map(g => XmlInputPartition(g): InputPartition).toArray
+    val n = XmlManifestSource.fanOut(uris.length, nParts,
+      spark.sparkContext.defaultParallelism)
+    XmlManifestSource.slices(uris, n).map(XmlInputPartition(_): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XmlReaderFactory(XmlIngest.taskConf(spark), baseDir, tagFilter)
+    new XmlReaderFactory(XmlIngest.taskConf(spark), baseDir, tagFilter, metrics)
 }
 
 private[sources] case class XmlInputPartition(uris: Array[String])
   extends InputPartition
 
 private[sources] class XmlReaderFactory(
-    conf: Broadcast[SerializableHadoopConf], baseDir: String,
-    tagFilter: Option[Set[String]]) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration], baseDir: String,
+    tagFilter: Option[Set[String]], metrics: Option[IngestMetrics])
+  extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new XmlPartitionReader(conf.value.value,
-      p.asInstanceOf[XmlInputPartition].uris, baseDir, tagFilter)
+    new XmlPartitionReader(XmlIngest.fetchParseAll(
+      p.asInstanceOf[XmlInputPartition].uris.iterator, baseDir,
+      conf.value.value, tagFilter.fold[String => Boolean](_ => true)(_.contains),
+      metrics))
 }
 
-/** Executor-side reader: Hadoop-FS fetch → StAX flatten → (optionally
-  * tag-pruned) InternalRows. Unreadable/malformed files are skipped whole,
-  * matching GraftJob's ingest semantics. `conf` is the scan's broadcast
-  * conf, shared read-only with every reader on the executor.
+/** Executor-side reader over one partition's flattened elements
+  * (`XmlIngest.fetchParseAll`, which fetches one file at a time).
   */
-private[sources] class XmlPartitionReader(conf: Configuration,
-    uris: Array[String], baseDir: String, tagFilter: Option[Set[String]])
+private[sources] class XmlPartitionReader(rows: Iterator[TagText])
   extends PartitionReader[InternalRow] {
-  private val xml = XmlIngest.xmlInputFactory()
-  private val keep: String => Boolean = tagFilter match {
-    case Some(tags) => tags.contains _
-    case None => _ => true
-  }
-  private var uriIdx = 0
-  private var current: Iterator[InternalRow] = Iterator.empty
+  private var row: InternalRow = _
 
-  private def nextFile(): Boolean = {
-    while (!current.hasNext && uriIdx < uris.length) {
-      val uri = uris(uriIdx)
-      uriIdx += 1
-      try {
-        val p = XmlIngest.resolve(uri, baseDir)
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        val kept =
-          try XmlIngest.parse(uri, in, keep, xml)
-          finally in.close()
-        current = kept.iterator.map { t =>
-          new GenericInternalRow(Array[Any](
-            UTF8String.fromString(t.doc), t.pos,
-            UTF8String.fromString(t.tag), UTF8String.fromString(t.text)))
-        }
-      } catch {
-        case scala.util.control.NonFatal(_) => () // skip file, keep going
-      }
-    }
-    current.hasNext
+  override def next(): Boolean = rows.hasNext && {
+    val t = rows.next()
+    row = new GenericInternalRow(Array[Any](UTF8String.fromString(t.doc),
+      t.pos, UTF8String.fromString(t.tag), UTF8String.fromString(t.text)))
+    true
   }
-
-  override def next(): Boolean = current.hasNext || nextFile()
-  override def get(): InternalRow = current.next()
+  override def get(): InternalRow = row
   override def close(): Unit = ()
 }
