@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * (IRSSpark.py:20-44,45-110): input manifest, output table, partition
   * counts, output format/compression, free-form writer options.
   * `numInputPartitions` is explicit (n > 0: exactly n, or one per URI if
-  * fewer) or derived (0, the default) from the manifest's URI count and the
-  * cluster's parallelism (graft.sources.XmlManifestSource.fanOut).
+  * fewer) or derived (0, the default): one per core, or one per URI if
+  * fewer (graft.sources.XmlManifestSource.slices).
   */
 case class GraftArgs(
     input: String,

@@ -60,9 +60,11 @@ object IngestMetrics {
 object XmlIngest {
 
   /** Manifest text scan: one URI per line, `n` partitions by shuffle
-    * (`n` <= 0 keeps the file's splits). The manifest-scan keys and the
-    * incremental key read it this way; the reference jobs plan their
-    * fan-out from the URI list instead (graft.sources.XmlManifestSource).
+    * (`n` <= 0 keeps the file's splits). A path may be a glob, a directory
+    * or a compressed file, as for any Spark text source. The V2 source
+    * collects it on the driver to plan its fan-out
+    * (graft.sources.XmlManifestSource); the manifest-scan keys and the
+    * incremental key read it as a Dataset.
     */
   def manifest(spark: SparkSession, path: String, n: Int): Dataset[String] = {
     val raw = spark.read.textFile(path).filter(_.nonEmpty)
@@ -74,9 +76,8 @@ object XmlIngest {
     * it is pushed into the StAX loop. Relative URIs resolve against
     * `baseDir` (the manifest's directory; the reference resolved against
     * the script directory, IRSSpark.py:194,236). `nPartitions` > 0 is the
-    * exact input fan-out (fewer only for a manifest of fewer URIs); 0
-    * derives it from the URI count
-    * ([[graft.sources.XmlManifestSource.fanOut]]).
+    * exact input fan-out, 0 one partition per core; either is capped at
+    * one partition per URI ([[graft.sources.XmlManifestSource.slices]]).
     */
   def fetchParse(spark: SparkSession, manifestPath: String, baseDir: String,
       nPartitions: Int = 0,

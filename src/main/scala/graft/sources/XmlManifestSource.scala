@@ -34,9 +34,12 @@ import graft.ingest.{IngestMetrics, TagText, XmlIngest}
   * (`tag = 'CityNm'`, `tag IN (...)`) push down through
   * `SupportsPushDownFilters` into the StAX loop, which then skips
   * non-matching elements *before* materializing rows — the reference
-  * flattens every element of every file (SURVEY §4.1). The driver splits
-  * the manifest's URIs into input partitions with no shuffle
-  * ([[XmlManifestSource.fanOut]]). It holds the URI list while planning,
+  * flattens every element of every file (SURVEY §4.1). The driver reads
+  * the manifest with Spark's text reader (a glob, a directory of manifests
+  * and a compressed manifest all work) and splits its URIs into input
+  * partitions with no shuffle: exactly `partitions` when given, else one
+  * per core (`defaultParallelism`), never more than one per URI
+  * ([[XmlManifestSource.slices]]). It holds the URI list while planning,
   * as Spark's `InMemoryFileIndex` holds file statuses: a few hundred MB for
   * the registry's 300k–3M-line manifests. Readers resolve files against
   * one broadcast of the session's Hadoop conf ([[XmlIngest.taskConf]]).
@@ -62,22 +65,6 @@ object XmlManifestSource {
     StructField("pos", IntegerType, nullable = false),
     StructField("tag", StringType, nullable = false),
     StructField("text", StringType, nullable = false)))
-
-  /** Most URIs one derived input partition holds, so a task retry
-    * re-fetches a bounded number of files (the role `maxPartitionBytes`
-    * plays for Spark's file sources). PERF.md records why 256.
-    */
-  val MaxUrisPerTask = 256
-
-  /** Input partitions for `nUris` URIs: `explicit` when > 0, else
-    * `max(parallelism, ceil(nUris / MaxUrisPerTask))`; [[slices]] then caps
-    * it at `nUris`, so no task is empty. The reference's
-    * `minPartitions=400` was only a split hint; a fixed 400 turns a small
-    * manifest into tasks that cost more to schedule than to parse.
-    */
-  def fanOut(nUris: Int, explicit: Int, parallelism: Int): Int =
-    if (explicit > 0) explicit
-    else math.max(parallelism, (nUris + MaxUrisPerTask - 1) / MaxUrisPerTask)
 
   /** `uris` cut into exactly `min(n, uris.length)` contiguous slices, in
     * order, whose sizes differ by at most one.
@@ -144,18 +131,15 @@ private[sources] class XmlScan(spark: SparkSession, manifest: String,
     s"graft_xml manifest=$manifest " +
       s"PushedTagFilter=${tagFilter.map(_.mkString("[", ",", "]")).getOrElse("[]")}"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(manifest)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val uris =
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toArray
-      finally in.close()
-    val n = XmlManifestSource.fanOut(uris.length, nParts,
-      spark.sparkContext.defaultParallelism)
+  // one manifest read per scan: Spark copies the scan's exec node while
+  // planning, and every copy asks for the partitions again
+  private lazy val partitions: Array[InputPartition] = {
+    val uris = XmlIngest.manifest(spark, manifest, 0).collect()
+    val n = if (nParts > 0) nParts else spark.sparkContext.defaultParallelism
     XmlManifestSource.slices(uris, n).map(XmlInputPartition(_): InputPartition)
   }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XmlReaderFactory(XmlIngest.taskConf(spark), baseDir, tagFilter, metrics)

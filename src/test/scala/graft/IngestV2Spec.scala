@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.zip.GZIPOutputStream
 
 import scala.collection.mutable
 
@@ -18,8 +19,8 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.ingest.{CitiesCountJob, GraftArgs, GraftJob, IngestMetrics, RevenueByFilingJob, XmlIngest}
 import graft.sources.XmlManifestSource
 
-/** The reference jobs read through the V2 XML source: the fan-out rule,
-  * the plan `GraftJob.run` executes (tag filter pushed into the parser),
+/** The reference jobs read through the V2 XML source: the split of the
+  * URIs into input partitions, the manifest inputs it accepts, the plan `GraftJob.run` executes (tag filter pushed into the parser),
   * the four ingest accumulators, and the per-call Hadoop conf broadcast.
   */
 class IngestV2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -46,20 +47,6 @@ class IngestV2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     check(0, 4, 0)
     check(21, 4, 4)
     check(1, 1, 1)
-  }
-
-  test("fanOut: explicit n is exact; the default is " +
-    "max(parallelism, ceil(nUris / MaxUrisPerTask))") {
-    val k = XmlManifestSource.MaxUrisPerTask
-    assert(XmlManifestSource.fanOut(600, 400, 4) === 400)
-    assert(XmlManifestSource.fanOut(600, 0, 4) === 4)
-    assert(XmlManifestSource.fanOut(64, 0, 4) === 4)
-    assert(XmlManifestSource.fanOut(100 * k + 1, 0, 4) === 101)
-    assert(XmlManifestSource.fanOut(3000000, 0, 400) ===
-      math.ceil(3000000.0 / k).toInt)
-    // the slice cap: never more partitions than URIs
-    assert(XmlManifestSource.slices(uris(3),
-      XmlManifestSource.fanOut(3, 0, 32)).length === 3)
   }
 
   /** Runs `body`, returning every plan Spark executed meanwhile and the
@@ -159,8 +146,42 @@ class IngestV2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
       scans(qes).map(_.inputPartitions.size).distinct
     }
     assert(partitions("--num_input_partitions", "400") === Seq(400))
-    assert(partitions() === Seq(XmlManifestSource.fanOut(420, 0,
-      spark.sparkContext.defaultParallelism)))
+    assert(partitions("--num_input_partitions", "500") === Seq(420))
+    assert(partitions() ===
+      Seq(math.min(420, spark.sparkContext.defaultParallelism)))
+  }
+
+  test("GraftJob.run reads a gzipped manifest, a directory of manifests " +
+    "and a glob as URI lines") {
+    val lines = {
+      val src = scala.io.Source.fromFile(fixture.manifest, "UTF-8")
+      try src.getLines().filter(_.nonEmpty).map(u => s"${fixture.dir}/$u")
+        .toVector
+      finally src.close()
+    }
+    val root = Files.createTempDirectory("graft_ingest_v2_inputs")
+    val gz = root.resolve("manifest.txt.gz")
+    val out = new GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(lines.mkString("\n").getBytes(UTF_8)) finally out.close()
+    val parts = Files.createDirectory(root.resolve("parts"))
+    val (head, tail) = lines.splitAt(lines.size / 2)
+    Files.write(parts.resolve("part-0.txt"), head.mkString("\n").getBytes(UTF_8))
+    Files.write(parts.resolve("part-1.txt"), tail.mkString("\n").getBytes(UTF_8))
+    def rows(manifest: String) = {
+      val (_, accs) = observed(runJob(CitiesCountJob, manifest))
+      (spark.table(s"${CitiesCountJob.name}_v2_spec").collect()
+        .map(_.toString).sorted.toSeq, accs)
+    }
+    val (expected, _) = rows(fixture.manifest)
+    assert(expected.nonEmpty)
+    for (m <- Seq(gz.toString, parts.toString, s"$parts/part-*.txt")) {
+      val (got, accs) = rows(m)
+      assert(accs === Map("xml_input_processed" -> 21L, "xml_input_ok" -> 20L,
+        "xml_input_failed" -> 1L,
+        "records_emitted" -> spark.read.parquet(fixture.tagTextParquet)
+          .count()), m)
+      assert(got === expected, m)
+    }
   }
 
   test("HadoopConf.broadcast: a session setting changed after a first " +
