@@ -9,8 +9,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object MaterializeTagText {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption
-      .getOrElse("/root/repo/src/test/resources/irs990")
+    val dir = args.headOption.getOrElse(graft.queries.IrsFixtures.dir)
     val spark = graft.Session("local[4]", "graft-materialize-tagtext")
     val tmp = s"${sys.props("java.io.tmpdir")}/graft_tagtext_out"
     XmlIngest.fetchParse(spark, s"$dir/manifest.txt", dir, 4)

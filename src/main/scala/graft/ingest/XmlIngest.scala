@@ -54,8 +54,11 @@ object IngestMetrics {
   * pydoop HDFS / local `open`, IRSSpark.py:192-244) with the one Hadoop
   * `FileSystem` API, which resolves s3a://, hdfs://, file: and bare paths
   * uniformly — same code path on a laptop and on a 1000-executor cluster.
-  * Parsing is streaming (StAX) rather than DOM, so a single huge filing
-  * never materializes as a tree; memory per task is O(element depth).
+  * Parsing is streaming (StAX) rather than DOM, so a filing never
+  * materializes as a tree. A file's kept elements are buffered until it
+  * parses whole, which keeps a failed file's rows out of the output, so
+  * memory per task is bounded by the kept elements of its largest file; a
+  * pushed tag filter narrows that to the matching elements.
   */
 object XmlIngest {
 

@@ -20,8 +20,11 @@ import graft.ingest.{CitiesCountJob, GraftArgs, IngestMetrics, RevenueByFilingJo
   * fixture-pinned.
   */
 object IrsFixtures {
-  val dir: String =
-    sys.env.getOrElse("GRAFT_IRS990_DIR", "/root/repo/src/test/resources/irs990")
+  /** `GRAFT_IRS990_DIR`, else the corpus of the checkout the JVM runs in:
+    * every main, spec and the benchmark runner starts at the repo root.
+    */
+  val dir: String = sys.env.getOrElse("GRAFT_IRS990_DIR",
+    new java.io.File("src/test/resources/irs990").getAbsolutePath)
   def manifest: String = s"$dir/manifest.txt"
   def tagTextParquet: String = s"$dir/tagtext.parquet"
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, TimeMode, Trigger}
 
 import graft.Tables
 
@@ -289,22 +290,52 @@ object StreamingOps {
       .withWatermark("ts", "10 minutes")
   }
 
-  private def runToTable(s: SparkSession, df: DataFrame, name: String,
-      mode: String): DataFrame = {
-    // Stateful-operator partition count is a deliberate per-query sizing
-    // decision, not something to inherit: it is frozen into the checkpoint
-    // at first start, and every partition costs a state-store instance
-    // whose load/commit/maintenance runs per micro-batch even when nearly
-    // empty. These queries key state by user/event-type/window (hundreds
-    // of groups), so 8 stores carry it comfortably; a 100 TB deployment
-    // sizes this to its key cardinality BEFORE the first start instead.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  /** The Hadoop key naming `FileContext`'s `file:` filesystem, through
+    * which Spark's default checkpoint manager and the state stores write
+    * and rename every checkpoint file.
+    */
+  private[graft] val LocalAfsKey = "fs.AbstractFileSystem.file.impl"
+
+  /** The one place a graft streaming query starts (StreamStartTripwireSpec
+    * keeps it so): starts `w`, waits for it to end and rethrows its
+    * failure. While it runs, `file:` checkpoint I/O goes through
+    * [[graft.fs.NioLocalFs]], which makes no `chmod`/`readlink` fork per
+    * checkpoint file on a host without the native Hadoop library, and
+    * `confs` are set on the session; the caller's values come back in a
+    * finally. The setting reaches the query's checkpoint manager and its
+    * executors' state stores through `sessionState.newHadoopConf()`; other
+    * schemes keep Spark's default. It is set per query, not per session:
+    * keys also run in sessions graft did not build, and a `FileContext` is
+    * not cached, so nothing outlives the query.
+    */
+  private[graft] def runStream(s: SparkSession, w: DataStreamWriter[_],
+      confs: (String, String)*): Unit = {
+    val set = (LocalAfsKey -> classOf[graft.fs.NioLocalFs].getName) +: confs
+    val prev = set.map { case (k, _) => k -> s.conf.getOption(k) }
+    set.foreach { case (k, v) => s.conf.set(k, v) }
+    try w.start().awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Replays `df` once (AvailableNow) into the memory table `name`, with
+    * `confs` set for the run ([[runStream]]). The checkpoint is a temp dir
+    * dropped after the run, so the stateful operators' partition count is
+    * frozen into nothing that outlives it. One store: every store costs a
+    * load, commit and checkpoint write per micro-batch even when nearly
+    * empty, and these replays key a few hundred groups over sources far
+    * below one advisory partition (64 MB). Sizing it from the input waits
+    * for a replay whose source is larger than that. A deployment with a
+    * persistent checkpoint sizes it to key cardinality before the first
+    * start instead.
+    */
+  private[graft] def runToTable(s: SparkSession, df: DataFrame,
+      name: String, mode: String, confs: (String, String)*): DataFrame = {
+    runStream(s, df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()),
+      (SQLConf.SHUFFLE_PARTITIONS.key -> "1") +: confs: _*)
     s.table(name)
   }
 
@@ -629,32 +660,23 @@ object StreamingOps {
     "stream_transform_with_state" -> ((s, d) => {
       import s.implicits._
       val src = stage(s, d, "one")
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val updates = s.readStream
-          .schema(Tables.events(s, d).schema).parquet(src)
-          .select(col("ts").cast("timestamp").as("ts"), col("user_id"))
-          .as[(java.sql.Timestamp, Long)]
-          .groupByKey(_._2)
-          .transformWithState(new RunningCount, TimeMode.None(),
-            OutputMode.Update())
-          .toDF("user_id", "cnt")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy(col("cnt").desc)
-        runToTable(s, updates, "graft_stream_tws", "update")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("user_id"), col("cnt").as("n_events"))
-          .orderBy("user_id")
-      } finally prev match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      val updates = s.readStream
+        .schema(Tables.events(s, d).schema).parquet(src)
+        .select(col("ts").cast("timestamp").as("ts"), col("user_id"))
+        .as[(java.sql.Timestamp, Long)]
+        .groupByKey(_._2)
+        .transformWithState(new RunningCount, TimeMode.None(),
+          OutputMode.Update())
+        .toDF("user_id", "cnt")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("cnt").desc)
+      runToTable(s, updates, "graft_stream_tws", "update",
+        SQLConf.STATE_STORE_PROVIDER_CLASS.key -> ("org.apache.spark.sql." +
+          "execution.streaming.state.RocksDBStateStoreProvider"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("cnt").as("n_events"))
+        .orderBy("user_id")
     }),
 
     // ext: STREAMING twin of the cross-run Bloom exact-dedup
@@ -759,7 +781,7 @@ object StreamingOps {
         s"$work/assign_v0")
       s.read.parquet(s"$base/assign")
         .write.mode("overwrite").parquet(asgPath.get)
-      val q = s.readStream
+      runStream(s, s.readStream
         .option("maxFilesPerTrigger", "1")
         .schema(s.read.parquet(src).schema).parquet(src)
         .writeStream
@@ -839,9 +861,7 @@ object StreamingOps {
             .write.mode("overwrite").parquet(nextPath)
           asgPath.set(nextPath)
           batchBands.write.mode("append").parquet(admittedPath)
-        }
-        .start()
-      q.awaitTermination()
+        })
       s.read.parquet(asgPath.get)
         .withColumn("is_new", col("doc_id") % 10 === 0)
         .orderBy("doc_id")
@@ -858,7 +878,7 @@ object StreamingOps {
       val out = graft.Staging.dir("graft_stream_feb_out", d)
       val outDir = new java.io.File(out)
       if (outDir.exists()) scala.reflect.io.Directory(outDir).deleteRecursively()
-      val q = s.readStream
+      runStream(s, s.readStream
         .schema(Tables.events(s, d).schema).parquet(src)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"))
@@ -867,9 +887,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
+        })
       s.read.parquet(out)
         .groupBy("event_type").agg(max(col("cnt")).as("cnt"))
         .orderBy("event_type")
@@ -897,14 +915,12 @@ object StreamingOps {
       // the v3 bump). Same lifetime rule a production pipeline needs
       // when a source directory is re-materialized.
       val (sink, chk) = fileSinkDirs(s, d)
-      val q = s.readStream
+      runStream(s, s.readStream
         .schema(Tables.events(s, d).schema).parquet(src)
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()))
       s.read.parquet(sink)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
@@ -931,7 +947,7 @@ object StreamingOps {
     "stream_manifest_txn" -> ((s, d) => {
       val src = stage(s, d, "one")
       val (sink, chk) = manifestTxnDirs(s, d)
-      val q = s.readStream
+      runStream(s, s.readStream
         .schema(Tables.events(s, d).schema)
         .option("maxFilesPerTrigger", "2")
         .parquet(src)
@@ -940,9 +956,7 @@ object StreamingOps {
         .option("checkpointLocation", chk)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           commitBatchTxn(s, sink, batch, batchId)
-        }
-        .start()
-      q.awaitTermination()
+        })
       graft.queries.Physical.manifestRead(s, sink, None)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
@@ -983,7 +997,7 @@ object StreamingOps {
     "stream_changefeed_ivm_join" -> ((s, d) => {
       val fix = graft.queries.Physical.joinIvmStaged(s, d)
       val (state, chk) = joinIvmStreamDirs(s, d)
-      val q = s.readStream
+      runStream(s, s.readStream
         .format("text")
         .option("maxFilesPerTrigger", "1")
         .load(s"$fix/feed")
@@ -1001,9 +1015,7 @@ object StreamingOps {
             .foreach { case (log, v) =>
               applyJoinIvmEvent(s, fix, state, log, v)
             }
-        }
-        .start()
-      q.awaitTermination()
+        })
       graft.queries.Physical.manifestRead(s, state, None)
         .filter(col("n") > 0)
         .select(col("seg"), col("n").as("n_orders"),
@@ -1014,7 +1026,7 @@ object StreamingOps {
     "stream_changefeed_ivm" -> ((s, d) => {
       val fact = graft.queries.Physical.mergeSinkStaged(s, d)
       val (state, chk) = ivmStreamDirs(s, d)
-      val q = s.readStream
+      runStream(s, s.readStream
         .format("text")
         .option("maxFilesPerTrigger", "1")
         .load(s"$fact/_commits")
@@ -1030,9 +1042,7 @@ object StreamingOps {
             .map(_.stripPrefix("v").stripSuffix(".manifest").toInt)
             .sorted
             .foreach(v => applyIvmVersion(s, fact, state, v))
-        }
-        .start()
-      q.awaitTermination()
+        })
       graft.queries.Physical.manifestRead(s, state, None)
         .filter(col("n") > 0)
         .select(col("o_orderstatus"), col("n").as("n_orders"),
