@@ -143,24 +143,16 @@ object Bench {
       case (name, ts) if !failed.contains(name) => name -> median(ts)
     }
 
-    // Second pass over the known-variance keys (plus any key whose own
-    // reps spread >= 3x this run): re-measure AFTER the sweep so every
-    // artifact carries {queries: in-sweep, solo: post-sweep} pairs and
-    // judges can separate sweep-transient interference (solo snaps back
-    // to the fresh-JVM time) from accumulated-JVM-state interference
-    // (solo stays inflated) without ad-hoc postmortems. Same JVM by
-    // design — a fresh-JVM number answers a different question.
-    val defaultSolo = Seq("dedup_minhash_lsh", "dedup_minhash_incremental",
-      "dedup_minhash_native", "dedup_minhash_tradeoff",
-      "dedup_incremental_index", "dedup_ngram_jaccard_prefix",
-      "multimodal_phash_neardup", "scan_binary_packed",
-      "stream_dedup_incremental",
-      // r15 watchlist: 1.20→2.01 s on untouched code, no pair on record;
-      // one round of in-sweep/solo pairing arbitrates host noise vs real
-      "agg_decimal_exact")
-    val envSolo = sys.env.get("SPARK_GRAFT_BENCH_SOLO")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(defaultSolo)
+    // Second pass over every key whose own reps spread >= 3x this run
+    // (plus any named in SPARK_GRAFT_BENCH_SOLO): re-measure AFTER the
+    // sweep so every artifact carries {queries: in-sweep, solo:
+    // post-sweep} pairs and judges can separate sweep-transient
+    // interference (solo snaps back to the fresh-JVM time) from
+    // accumulated-JVM-state interference (solo stays inflated) without
+    // ad-hoc postmortems. Same JVM by design — a fresh-JVM number
+    // answers a different question.
+    val envSolo = sys.env.get("SPARK_GRAFT_BENCH_SOLO").toSeq
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     val spreadFlagged = raw.collect {
       case (name, ts) if ts.size >= 2 && ts.max > 1.0 &&
         ts.max >= 3 * math.max(ts.min, 1e-3) => name

@@ -136,10 +136,15 @@ object EntityRes {
     * paying the scan (measured: the live twin cost er_tf_classify a
     * second 2.5 s pair pass at sf0.1).
     */
-  private[graft] def tfCountsStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_tf_counts", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  /** A layout derived from the customer table alone — every linkage
+    * artifact.
+    */
+  private def custLayout(s: SparkSession, prefix: String, d: String)(
+      build: String => Unit): String =
+    graft.Staging.layout(s, prefix, d, s"$d/customer.parquet")(build)
+
+  private[graft] def tfCountsStaged(s: SparkSession, d: String): String =
+    custLayout(s, "graft_tf_counts", d) { path =>
       val dd = dirtyTf(s, d)
       dd.as("a").join(dd.as("b"),
           col("a.nat") === col("b.nat") && col("a.id") < col("b.id"))
@@ -150,10 +155,7 @@ object EntityRes {
           sum(when(col("is_match") === 1, col("ag"))).as("am"),
           sum(when(col("is_match") === 0, col("ag"))).as("au"))
         .coalesce(1).write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
     }
-    path
-  }
 
   /** One blocking pass over the phonetic fixture, with BOTH scheme
     * flags riding (each a pure function of the pair, so the disjoint
@@ -202,17 +204,9 @@ object EntityRes {
     * with the customer fingerprint like every linkage artifact.
     */
   private def stageHist(s: SparkSession, d: String, prefix: String)(
-      pairs: => DataFrame): String = {
-    val path = graft.Staging.dir(prefix, d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      pairs.groupBy("ag_name", "ag_seg", "ag_band")
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+      pairs: => DataFrame): String =
+    custLayout(s, prefix, d)(pairs.groupBy("ag_name", "ag_seg", "ag_band")
+      .agg(count(lit(1)).as("n")).write.mode("overwrite").parquet(_))
 
   /** A staged pattern histogram on the driver as (n, γ_name, γ_seg,
     * γ_band) rows — the EM's input.
@@ -370,18 +364,10 @@ object EntityRes {
     * holds; the bounded-DP threshold variant had already halved the
     * 13.3 s unbounded spelling).
     */
-  private[graft] def histGradedStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_fs_hist_graded3", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      pairsGraded(s, d)
-        .groupBy("ag_name", "ag_seg", "ag_band", "is_match")
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+  private[graft] def histGradedStaged(s: SparkSession, d: String): String =
+    custLayout(s, "graft_fs_hist_graded3", d)(pairsGraded(s, d)
+      .groupBy("ag_name", "ag_seg", "ag_band", "is_match")
+      .agg(count(lit(1)).as("n")).write.mode("overwrite").parquet(_))
 
   /** The unlabeled (pattern, count) projection for the EM — the ≤24-row
     * labeled histogram folded over is_match in a deterministic order.
@@ -549,10 +535,8 @@ object EntityRes {
     * component-min ids, identical to what a full relink assigns to the
     * same components.
     */
-  private[graft] def baseAssignStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_er_incr_base", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def baseAssignStaged(s: SparkSession, d: String): String =
+    custLayout(s, "graft_er_incr_base", d) { path =>
       val base = dirty(s, d).filter(!isBatchRec)
       val cc = graft.operators.ConnectedComponents(
         mergeEdges(s, d, flaggedPairs(base, base)))
@@ -560,10 +544,7 @@ object EntityRes {
         .join(cc, base("id") === cc("v"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("entity"))
         .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
     }
-    path
-  }
 
   /** One-row aggregate carrying every count the weight table needs. */
   private def countsNow(s: SparkSession, d: String): DataFrame =
@@ -584,15 +565,9 @@ object EntityRes {
     * The weights key then never touches the pair stream at all; classify
     * and calibration build it exactly once, for scoring.
     */
-  private[graft] def countsStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_fs_counts", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      countsNow(s, d).write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+  private[graft] def countsStaged(s: SparkSession, d: String): String =
+    custLayout(s, "graft_fs_counts", d)(
+      countsNow(s, d).write.mode("overwrite").parquet(_))
 
   private def counts(s: SparkSession, d: String): DataFrame =
     s.read.parquet(countsStaged(s, d))

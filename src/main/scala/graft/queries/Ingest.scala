@@ -47,8 +47,7 @@ object Ingest {
     * corpus size (~6 MB at sf0.01, ~62 MB at sf0.1). Files are written
     * executor-side one-per-shard (temp + rename, task-retry safe, same
     * discipline as the packed image shards); the manifest lists only the
-    * shards that exist (a modulus class can be empty), and the stamp
-    * commits last.
+    * shards that exist (a modulus class can be empty).
     */
   private[graft] val BulkFiles = 64
   private[graft] val BulkBlks = 24
@@ -56,9 +55,8 @@ object Ingest {
 
   def ensureBulkStaged(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dirB = graft.Staging.dir("graft_xmlbulk", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(dirB, stamp)) {
+    graft.Staging.layout(s, "graft_xmlbulk", d,
+        s"$d/documents.parquet") { dirB =>
       val (files, blks, blkLen) = (BulkFiles, BulkBlks, BulkBlkLen)
       // the SESSION's hadoop conf, broadcast — a fresh empty Configuration
       // in the task would drop user filesystem settings (s3a credentials/
@@ -115,9 +113,7 @@ object Ingest {
         new org.apache.hadoop.fs.Path(dirB, "manifest.txt"), true)
       try mout.write(written.mkString("\n").getBytes("UTF-8"))
       finally mout.close()
-      graft.Staging.commitStamped(dirB, stamp)
     }
-    dirB
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -89,9 +89,8 @@ object Multimodal {
     */
   def ensureStaged(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dir = graft.Staging.dir("graft_binfiles", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(dir, stamp)) {
+    graft.Staging.layout(s, "graft_binfiles", d,
+        s"$d/documents.parquet") { dir =>
       // session hadoop conf, broadcast: a fresh empty Configuration would
       // drop user filesystem settings on a non-local staging dir
       val hconf = graft.HadoopConf.broadcast(s)
@@ -113,13 +112,7 @@ object Multimodal {
             finally out.close()
           }
         }
-      // commitStamped, not commitStamp: this dir has no Spark committer,
-      // so without the manual _SUCCESS marker isCurrent never holds and
-      // every caller silently re-wrote all the PNGs (billed to whichever
-      // scan ran first — scan_binaryfile carried it for rounds)
-      graft.Staging.commitStamped(dir, stamp)
     }
-    dir
   }
 
   /** Packed-shard layout for the SAME PNGs `ensureStaged` writes one file
@@ -139,9 +132,8 @@ object Multimodal {
 
   def ensurePackedStaged(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dir = graft.Staging.dir("graft_binpacked", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(s"$dir/index", stamp)) {
+    graft.Staging.layout(s, "graft_binpacked", d,
+        s"$d/documents.parquet") { dir =>
       val shards = PackShards
       val hconf = graft.HadoopConf.broadcast(s)
       val idx = t(s, d, "documents").select(col("doc_id")).as[Long]
@@ -182,8 +174,8 @@ object Multimodal {
               e
             }
             finally out.close()
-          // stale blob from a previous stamp may exist; every interleaving
-          // of delete/rename across attempts ends with one COMPLETE blob
+          // another attempt's blob may exist; every interleaving of
+          // delete/rename across attempts ends with one COMPLETE blob
           // (identical bytes), never a truncated mix
           fs.delete(fin, false)
           if (!fs.rename(tmp, fin)) fs.delete(tmp, false)
@@ -191,9 +183,7 @@ object Multimodal {
         }
         .toDF("fname", "shard", "offset", "len")
       idx.write.mode("overwrite").parquet(s"$dir/index")
-      graft.Staging.commitStamp(s"$dir/index", stamp)
     }
-    dir
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

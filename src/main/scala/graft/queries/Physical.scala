@@ -16,13 +16,10 @@ object Physical {
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
   /** orders partitioned by order year — written once per (run, sfDir). */
   private def partitionedOrders(s: SparkSession, d: String): DataFrame = {
-    val path = graft.Staging.dir("graft_phys_orders_by_year", d)
-    if (!graft.Staging.isStaged(path)) {
+    s.read.parquet(ordersLayout(s, "graft_phys_orders_by_year", d)(path =>
       t(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
-        .write.mode("overwrite").partitionBy("o_year").parquet(path)
-    }
-    s.read.parquet(path)
+        .write.mode("overwrite").partitionBy("o_year").parquet(path)))
   }
 
   /** lineitem + orders bucketed+sorted by the join key — written once per
@@ -108,10 +105,8 @@ object Physical {
 
   /** orders re-materialized as ORC — written once per (run, sfDir). */
   private def orcOrders(s: SparkSession, d: String): DataFrame = {
-    val path = graft.Staging.dir("graft_phys_orders_orc", d)
-    if (!graft.Staging.isStaged(path))
-      t(s, d, "orders").write.mode("overwrite").orc(path)
-    s.read.orc(path)
+    s.read.orc(ordersLayout(s, "graft_phys_orders_orc", d)(
+      t(s, d, "orders").write.mode("overwrite").orc(_)))
   }
 
   /** Orders staged with a parquet BLOOM FILTER on o_custkey — the
@@ -126,8 +121,7 @@ object Physical {
     * the footer actually carries the bloom offsets.
     */
   private[graft] def bloomOrders(s: SparkSession, d: String): DataFrame = {
-    val path = graft.Staging.dir("graft_phys_orders_bloom", d)
-    if (!graft.Staging.isStaged(path)) {
+    s.read.parquet(ordersLayout(s, "graft_phys_orders_bloom", d) { path =>
       // The bloom knobs ride the WRITE's own options (which land on that
       // job's conf only) — mutating the shared sparkContext hadoop conf
       // and unset()ing in finally clobbered any pre-existing user values
@@ -147,8 +141,7 @@ object Physical {
         .option("parquet.bloom.filter.expected.ndv#o_custkey", "20000")
         .option("parquet.enable.dictionary#o_custkey", "false")
         .parquet(path)
-    }
-    s.read.parquet(path)
+    })
   }
 
   /** events re-clustered on the Z-curve of (user_id, floor(value)) —
@@ -156,28 +149,24 @@ object Physical {
     * rectangle of the (user, value) space instead of a stripe.
     */
   private def zorderEvents(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_phys_events_zorder", d)
-    if (!graft.Staging.isStaged(path)) {
+    graft.Staging.layout(s, "graft_phys_events_zorder", d,
+      s"$d/events.parquet")(path =>
       Tables.events(s, d)
         .withColumn("__z", graft.operators.ZOrder.interleave(
           col("user_id"), floor(col("value"))))
         .repartitionByRange(8, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode("overwrite").parquet(path)
-    }
-    path
+        .write.mode("overwrite").parquet(path))
   }
 
   /** documents shattered into 64 tiny files — the "small files problem"
     * fixture the compaction query consumes. Staged once per (run, sfDir).
     */
   private def fragmentedDocs(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_phys_docs_fragmented", d)
-    if (!graft.Staging.isStaged(path))
-      t(s, d, "documents").repartition(64)
-        .write.mode("overwrite").parquet(path)
-    path
+    graft.Staging.layout(s, "graft_phys_docs_fragmented", d,
+      s"$d/documents.parquet")(
+      t(s, d, "documents").repartition(64).write.mode("overwrite").parquet(_))
   }
 
   /** One-off layout staging for every Physical query — idempotent. Bench
@@ -230,6 +219,17 @@ object Physical {
   private def hfs(s: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** The `part-` files directly under `dir`, as sorted path strings. */
+  private def partFiles(s: SparkSession, dir: String): Seq[String] =
+    hfs(s, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter(_.getName.startsWith("part-"))
+      .map(_.toString).sorted.toSeq
+
+  /** A staged layout derived from orders alone — most fixtures here. */
+  private def ordersLayout(s: SparkSession, prefix: String, d: String)(
+      build: String => Unit): String =
+    graft.Staging.layout(s, prefix, d, s"$d/orders.parquet")(build)
 
   /** `meta` lines (each starting with `#`, e.g. `# batch=3`) ride at the
     * top of the manifest so a commit can carry transaction markers —
@@ -415,22 +415,15 @@ object Physical {
     finally in.close()
   }
 
-  private[graft] def manifestSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_manifest_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def manifestSinkStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_manifest_sink", d) { path =>
       def writeSlice(name: String,
           p: org.apache.spark.sql.Column): Seq[String] = {
         val dir = s"$path/data/$name"
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").parquet(dir)
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, dir)
       }
       val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0)
       commitManifest(s, path, 0, v0)
@@ -439,10 +432,7 @@ object Physical {
       // the crashed writer: bytes on disk, no manifest — must stay
       // invisible to every manifest reader
       writeSlice("orphan", col("o_orderkey") % 3 === 2)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Transactional PARTITION OVERWRITE through the manifest log — the
     * Delta-style `replaceWhere` primitive `sink_partition_overwrite`'s
@@ -461,22 +451,15 @@ object Physical {
     * v1 = retention rewrite of partition F (keep o_totalprice >
     * 150000); v2 = a crashed overwrite of partition O (no commit).
     */
-  private[graft] def txnOverwriteStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_txn_overwrite", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def txnOverwriteStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_txn_overwrite", d) { path =>
       def writeSlice(sub: String,
           p: org.apache.spark.sql.Column): Seq[String] = {
         val dir = s"$path/data/$sub"
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").parquet(dir)
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, dir)
       }
       // the partition axis is the BOUNDED status domain (3 values)
       val statuses = t(s, d, "orders").select("o_orderstatus")
@@ -492,10 +475,7 @@ object Physical {
       // must stay invisible to every snapshot
       writeSlice("v2/status=O",
         col("o_orderstatus") === "O" && col("o_totalprice") > 200000)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** MERGE (upsert) as a copy-on-write manifest transaction — the
     * missing half of the catalog surface next to `sink_overwrite_txn`'s
@@ -514,17 +494,9 @@ object Physical {
     * Fixture: target = orders with o_orderkey % 3 ≠ 2; updates set
     * status 'U' inside the key band; inserts = the % 3 = 2 slice.
     */
-  private[graft] def mergeSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_merge_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def parts(sub: String): Seq[String] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+  private[graft] def mergeSinkStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_merge_sink", d) { path =>
+      def parts(sub: String) = partFiles(s, s"$path/data/$sub")
       // v0: the merge target, range-laid-out on the key so files carry
       // disjoint key ranges — the layout matched-file pruning needs
       t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 2)
@@ -568,10 +540,7 @@ object Physical {
       s.read.parquet(v0: _*)
         .withColumn("o_orderstatus", lit("X"))
         .write.mode("overwrite").parquet(s"$path/data/v2_crash")
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Compaction as a manifest transaction — the maintenance operation a
     * real log-structured table runs nightly: the live snapshot is
@@ -586,22 +555,15 @@ object Physical {
     * Fixture: v0 = orders %3=0 fanned into 12 files, v1 appends %3=1
     * as 12 more (24 live), v2 = the compaction commit (≤3 files).
     */
-  private[graft] def compactTxnStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_compact_txn", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def compactTxnStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_compact_txn", d) { path =>
       def writeSlice(sub: String, p: org.apache.spark.sql.Column,
           nFiles: Int): Seq[String] = {
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .repartition(nFiles)
           .write.mode("overwrite").parquet(s"$path/data/$sub")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, s"$path/data/$sub")
       }
       val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0, 12)
       commitManifest(s, path, 0, v0)
@@ -612,16 +574,8 @@ object Physical {
       manifestRead(s, path, Some(1))
         .coalesce(3)
         .write.mode("overwrite").parquet(s"$path/data/compacted")
-      val compacted =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/compacted"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      commitManifest(s, path, 2, compacted)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 2, partFiles(s, s"$path/data/compacted"))
     }
-    path
-  }
 
   /** Concurrent-append fixture for the CAS committer: v0 seeds the table,
     * then the %3=1 and %3=2 slices land through [[commitManifestCas]] —
@@ -633,21 +587,14 @@ object Physical {
     * log.
     */
   private[graft] def concurrentAppendStaged(s: SparkSession, d: String)
-      : String = {
-    val path = graft.Staging.dir("graft_concurrent_append", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    ordersLayout(s, "graft_concurrent_append", d) { path =>
       def writeSlice(sub: String,
           p: org.apache.spark.sql.Column): Seq[String] = {
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").parquet(s"$path/data/$sub")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, s"$path/data/$sub")
       }
       commitManifestCas(s, path,
         writeSlice("w0", col("o_orderkey") % 3 === 0),
@@ -658,10 +605,7 @@ object Physical {
       commitManifestCas(s, path,
         writeSlice("w2", col("o_orderkey") % 3 === 2),
         Seq("# writer=ingest-b"))
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Schema evolution through the manifest log — the ALTER TABLE ADD
     * COLUMN a log-structured table gets without rewriting a byte: v0's
@@ -674,17 +618,9 @@ object Physical {
     * only affordable evolution path: the alternative rewrite moves the
     * whole table to add a nullable column.
     */
-  private[graft] def schemaEvoStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_schema_evo", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def parts(sub: String): Seq[String] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+  private[graft] def schemaEvoStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_schema_evo", d) { path =>
+      def parts(sub: String) = partFiles(s, s"$path/data/$sub")
       t(s, d, "orders").filter(col("o_orderkey") % 3 === 0)
         .select("o_orderkey", "o_orderstatus")
         .write.mode("overwrite").parquet(s"$path/data/v0")
@@ -693,10 +629,7 @@ object Physical {
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").parquet(s"$path/data/v1")
       commitManifest(s, path, 1, parts("v0") ++ parts("v1"))
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Range-laid-out orders plus a FILE-STATS manifest (file, min/max of
     * the layout key, rows) — the Iceberg/Delta data-skipping shape: the
@@ -708,10 +641,8 @@ object Physical {
     * data directory. Stats derive from one read-back pass over
     * `_metadata.file_path` — a distributed scan, no driver file walk.
     */
-  private[graft] def statsManifestStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_stats_manifest", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(s"$path/stats", stamp)) {
+  private[graft] def statsManifestStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_stats_manifest", d) { path =>
       t(s, d, "orders")
         .repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
@@ -724,10 +655,7 @@ object Physical {
           count(lit(1)).as("n_rows"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/stats")
-      graft.Staging.commitStamp(s"$path/stats", stamp)
     }
-    path
-  }
 
   /** Read the manifest-committed table at `asOf` (a committed version) or
     * at the latest commit. Only the listed files are scanned — the data
@@ -884,22 +812,15 @@ object Physical {
     vacuumSinkStaged(s, d, "graft_vacuum_report")
 
   private def vacuumSinkStaged(s: SparkSession, d: String,
-      prefix: String): String = {
-    val path = graft.Staging.dir(prefix, d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      prefix: String): String =
+    ordersLayout(s, prefix, d) { path =>
       def writeSlice(sub: String, p: org.apache.spark.sql.Column,
           nFiles: Int): Seq[String] = {
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .repartition(nFiles)
           .write.mode("overwrite").parquet(s"$path/data/$sub")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, s"$path/data/$sub")
       }
       val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0, 6)
       commitManifest(s, path, 0, v0)
@@ -913,30 +834,18 @@ object Physical {
       s.read.parquet((v0 ++ v1): _*)
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$path/data/v2")
-      commitManifest(s, path, 2,
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/v2"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 2, partFiles(s, s"$path/data/v2"))
     }
-    path
-  }
 
   /** The downstream replica at v0 for `sink_changefeed_apply` — a
     * physical copy of the merge target's pre-merge snapshot, staged once
     * (in production the replica was bootstrapped by an initial full
     * copy; every later sync is feed-apply only, which is the point).
     */
-  private[graft] def cdcReplicaStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_cdc_replica_v0", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def cdcReplicaStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_cdc_replica_v0", d)(
       manifestRead(s, mergeSinkStaged(s, d), Some(0))
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** Deletion-vector sink (merge-on-read deletes, the Delta DV / Iceberg
     * position-delete shape): v0 writes the table as 4 data files; v1
@@ -949,20 +858,13 @@ object Physical {
     * touched gigabyte file; the read-side cost is one broadcast anti-join
     * against the DV.
     */
-  private[graft] def dvSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_dv_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def dvSinkStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_dv_sink", d) { path =>
       t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .repartition(4)
         .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0Files = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/data/v0"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
+      val v0Files = partFiles(s, s"$path/data/v0")
       commitManifest(s, path, 0, v0Files)
       // v1: merge-on-read delete — capture positions, never rows
       val dvDir = s"$path/dv/v00001"
@@ -979,15 +881,8 @@ object Physical {
       dvRead(s, path, Some(1))
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$path/data/v2")
-      val v2Files = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/data/v2"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
-      commitManifest(s, path, 2, v2Files)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 2, partFiles(s, s"$path/data/v2"))
     }
-    path
-  }
 
   /** Write-audit-publish sink (the Iceberg-WAP / Delta-branch release
     * workflow): writers COMMIT to the versioned log but production reads
@@ -1000,17 +895,11 @@ object Physical {
     * ingestion: the quarantined commit stays in the log for forensics
     * and vacuum-by-retention, invisible behind the ref.
     */
-  private[graft] def wapSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_wap_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def wapSinkStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_wap_sink", d) { path =>
       def writeFiles(name: String, df: DataFrame): Seq[String] = {
         df.coalesce(2).write.mode("overwrite").parquet(s"$path/data/$name")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$name"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, s"$path/data/$name")
       }
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1029,10 +918,7 @@ object Physical {
       val v2 = v1 ++ writeFiles("v2", bad)
       commitManifest(s, path, 2, v2)
       if (auditPasses(s, path, 2)) publishRef(s, path, "main", 2)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** The audit gate a candidate version must pass before publishing:
     * key completeness (no null o_orderkey) and non-regression (at least
@@ -1159,12 +1045,8 @@ object Physical {
     * ivmViewStaged rule): the consistency check is exact equality, not
     * tolerance.
     */
-  private[graft] def pairTxnStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_pair_txn", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def pairTxnStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_pair_txn", d) { path =>
       val mp = mergeSinkStaged(s, d)
       Seq(0, 1).foreach { v =>
         manifestRead(s, mp, Some(v))
@@ -1173,17 +1055,11 @@ object Physical {
             sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$path/view/data/v$v")
-        val files = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$path/view/data/v$v"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-        commitManifest(s, s"$path/view", v, files)
+        commitManifest(s, s"$path/view", v,
+          partFiles(s, s"$path/view/data/v$v"))
         pairCommit(s, path, v, v)
       }
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Shallow-clone fixture (the Delta SHALLOW CLONE / Iceberg snapshot
     * branch shape): the clone's v0 manifest lists the SOURCE's current
@@ -1195,12 +1071,8 @@ object Physical {
     * point and fork after it — dev/test-against-prod-data without a
     * copy, the feature's entire value proposition.
     */
-  private[graft] def cloneSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_clone_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def cloneSinkStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_clone_sink", d) { path =>
       val src = mergeSinkStaged(s, d)
       val srcFiles = readManifestLines(s, src, "v00001.manifest")
         .filterNot(_.startsWith("#"))
@@ -1210,15 +1082,9 @@ object Physical {
           col("o_totalprice"))
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$path/data/append")
-      val own = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/data/append"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
-      commitManifest(s, path, 1, srcFiles ++ own)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 1,
+        srcFiles ++ partFiles(s, s"$path/data/append"))
     }
-    path
-  }
 
   /** Partition-evolution sink (the Iceberg partition-spec-change shape):
     * v0 wrote the table UNPARTITIONED; the spec then evolved, and v1's
@@ -1233,20 +1099,15 @@ object Physical {
     * (metadata-only) while full pruning arrives only as old files age
     * out through compaction.
     */
-  private[graft] def partEvoStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_partevo_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def partEvoStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_partevo_sink", d) { path =>
       val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       base.filter(col("o_orderkey") % 2 === 0)
         .repartition(2) // coalesce(2) on a 1-file source stays 1 file
         .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/v0"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
+      val v0 = partFiles(s, s"$path/data/v0")
       commitManifest(s, path, 0, v0)
       // the evolved append: hive-partitioned, one file per status
       base.filter(col("o_orderkey") % 2 === 1)
@@ -1262,10 +1123,7 @@ object Physical {
             .map(p => s"$p|o_orderstatus=$v")
         }.sorted.toSeq
       commitManifest(s, path, 1, v0 ++ v1)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Read the partition-evolved table, optionally pruning evolved files
     * to one status by MANIFEST METADATA alone. Pre-evolution files are
@@ -1339,19 +1197,13 @@ object Physical {
     * order, and only exact arithmetic guarantees the maintained view
     * equals a from-scratch recompute bit-for-bit at any scale.
     */
-  private[graft] def ivmViewStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_ivm_view_v0", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def ivmViewStaged(s: SparkSession, d: String): String =
+    ordersLayout(s, "graft_ivm_view_v0", d)(
       manifestRead(s, mergeSinkStaged(s, d), Some(0))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n0"),
           sum(col("o_totalprice").cast("decimal(18,2)")).as("rev0"))
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+        .write.mode("overwrite").parquet(_))
 
   // ---- DELTA-manifest log with periodic checkpoints ------------------
   //
@@ -1479,21 +1331,15 @@ object Physical {
     * files), so the aggregate has a plain oracle.
     */
   private[graft] def checkpointSinkStaged(s: SparkSession,
-      d: String): String = {
-    val path = graft.Staging.dir("graft_ckpt_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      d: String): String =
+    ordersLayout(s, "graft_ckpt_sink", d) { path =>
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       def writeSlice(name: String, p: org.apache.spark.sql.Column,
           n: Int): Seq[String] = {
         base.filter(p).repartition(n)
           .write.mode("overwrite").parquet(s"$path/data/$name")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$name"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+        partFiles(s, s"$path/data/$name")
       }
       var live = Vector.empty[String]
       val bySlice = scala.collection.mutable.Map.empty[Int, Seq[String]]
@@ -1514,24 +1360,16 @@ object Physical {
           bySlice(3).size + bySlice(4).size))
       // v6: compaction — slices 0..2 rewritten as ONE file
       val doomed = (0 to 2).flatMap(bySlice(_))
-      val compacted = {
-        s.read.parquet(doomed: _*).coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/data/compact012")
-        fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$path/data/compact012"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
+      s.read.parquet(doomed: _*).coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/data/compact012")
+      val compacted = partFiles(s, s"$path/data/compact012")
       deltaLogCommit(s, path, 6, compacted, doomed)
       live = live.filterNot(doomed.toSet) ++ compacted
       commitAdd(7, Seq(6), 1)
       commitAdd(8, Seq(7), 1)
       writeCheckpoint(s, path, 8, live)
       commitAdd(9, Seq(8, 9), 1)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** The JOIN-view IVM fixture — the case where incremental maintenance
     * either works or silently double-counts: a per-SEGMENT aggregate
@@ -1552,17 +1390,11 @@ object Physical {
     *  - `view/`: the per-segment aggregate at v0, DECIMAL sums
     *    (ivmViewStaged's exactness rule).
     */
-  private[graft] def joinIvmStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_join_ivm2", d)
-    val stamp = graft.Staging.fingerprint(s,
-      s"$d/orders.parquet", s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def joinIvmStaged(s: SparkSession, d: String): String =
+    graft.Staging.layout(s, "graft_join_ivm2", d,
+        s"$d/orders.parquet", s"$d/customer.parquet") { path =>
       val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def parts(sub: String): Seq[String] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+      def parts(sub: String) = partFiles(s, s"$path/data/$sub")
       // ---- fact log ----
       val fact0 = t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 2)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1632,10 +1464,7 @@ object Physical {
       }
       feedEvent(0, "dim", 1)
       feedEvent(1, "fact", 1)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** The join-view delta fold, factored so the spec can run BOTH the
     * correct algebra and the classic double-counting mistake against
@@ -1810,10 +1639,9 @@ object Physical {
     // are deliberately excluded: escaping is JSON-safe but the key
     // measures the sink, not a 100 MB re-encode.
     "sink_jsonl_roundtrip" -> ((s, d) => {
-      val out = graft.Staging.dir("graft_phys_jsonl", d)
-      if (!graft.Staging.isStaged(out))
-        t(s, d, "documents").select("doc_id", "lang", "n_chars")
-          .write.mode("overwrite").json(out)
+      val out = graft.Staging.layout(s, "graft_phys_jsonl", d,
+        s"$d/documents.parquet")(t(s, d, "documents")
+          .select("doc_id", "lang", "n_chars").write.mode("overwrite").json(_))
       s.read.json(out)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -1849,15 +1677,13 @@ object Physical {
     // lands zstd/bzip2 where splitting matters). Round-trip equality
     // against the parquet source is the oracle.
     "scan_csv_gzip" -> ((s, d) => {
-      val path = graft.Staging.dir("graft_phys_events_csvgz", d)
-      if (!graft.Staging.isStaged(path)) {
-        Tables.events(s, d)
+      val path = graft.Staging.layout(s, "graft_phys_events_csvgz", d,
+        s"$d/events.parquet")(Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
           .repartition(4)
           .write.mode("overwrite").option("header", "true")
-          .option("compression", "gzip").csv(path)
-      }
+          .option("compression", "gzip").csv(_))
       s.read.option("header", "true")
         .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
         .csv(path)
@@ -1873,14 +1699,12 @@ object Physical {
     // per-codec row conservation a sink migration must prove before
     // flipping the default.
     "sink_compression_codecs" -> ((s, d) => {
-      val base = graft.Staging.dir("graft_phys_codecs", d)
-      val src = t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
-      Seq("snappy", "zstd").foreach { codec =>
-        val p = s"$base/$codec"
-        if (!graft.Staging.isStaged(p))
-          src.write.mode("overwrite")
-            .option("compression", codec).parquet(p)
+      val base = graft.Staging.layout(s, "graft_phys_codecs", d,
+          s"$d/lineitem.parquet") { base =>
+        val src = t(s, d, "lineitem")
+          .select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
+        Seq("snappy", "zstd").foreach(codec => src.write.mode("overwrite")
+          .option("compression", codec).parquet(s"$base/$codec"))
       }
       Seq("snappy", "zstd").map { codec =>
         s.read.parquet(s"$base/$codec")
@@ -2821,23 +2645,15 @@ object Physical {
     // numbers from the membership rule, proving the merged read loses
     // and invents nothing.
     "scan_schema_evolution" -> ((s, d) => {
-      val p1 = graft.Staging.dir("graft_phys_evolve_day1", d)
-      val p2 = graft.Staging.dir("graft_phys_evolve_day2", d)
-      // stamped with the SOURCE fingerprint (Staging's refresh contract):
-      // a regenerated orders table must re-stage, not serve stale drops
-      val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-      if (!graft.Staging.isCurrent(p1, stamp) ||
-        !graft.Staging.isCurrent(p2, stamp)) {
-        val ord = t(s, d, "orders")
+      val ord = t(s, d, "orders")
+      val p1 = ordersLayout(s, "graft_phys_evolve_day1", d)(
         ord.filter(col("o_orderkey") % 2 === 0)
-          .select("o_orderkey", "o_totalprice")
-          .write.mode("overwrite").parquet(p1)
+          .select("o_orderkey", "o_totalprice").write.mode("overwrite")
+          .parquet(_))
+      val p2 = ordersLayout(s, "graft_phys_evolve_day2", d)(
         ord.filter(col("o_orderkey") % 2 === 1)
-          .select("o_orderkey", "o_orderstatus")
-          .write.mode("overwrite").parquet(p2)
-        graft.Staging.commitStamp(p1, stamp)
-        graft.Staging.commitStamp(p2, stamp)
-      }
+          .select("o_orderkey", "o_orderstatus").write.mode("overwrite")
+          .parquet(_))
       s.read.option("mergeSchema", "true").parquet(p1, p2)
         .agg(count(lit(1)).as("n_rows"),
           count(col("o_totalprice")).as("n_with_price"),
@@ -2853,14 +2669,10 @@ object Physical {
     // partition survived byte-identical row counts. At 100 TB this is
     // the difference between rewriting one day and rewriting the lake.
     "sink_partition_overwrite" -> ((s, d) => {
-      val p = graft.Staging.dir("graft_phys_dynoverwrite", d)
-      // gate on the SOURCE fingerprint, committed AFTER the revised
-      // overwrite: a crash between the two writes re-stages instead of
-      // serving the unrevised table (the base write alone already leaves
-      // a root _SUCCESS), and a regenerated orders table re-stages
-      // instead of serving stale data (Staging's refresh contract)
-      val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-      if (!graft.Staging.isCurrent(p, stamp)) {
+      // the stamp commits AFTER the revised overwrite: a crash between
+      // the two writes re-stages instead of serving the unrevised table
+      // (the base write alone already leaves a root _SUCCESS)
+      val p = ordersLayout(s, "graft_phys_dynoverwrite", d) { p =>
         val ord = t(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice"))
@@ -2877,7 +2689,6 @@ object Physical {
           case None =>
             s.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
-        graft.Staging.commitStamp(p, stamp)
       }
       s.read.parquet(p)
         .groupBy("o_orderpriority")
@@ -2954,14 +2765,10 @@ object Physical {
     // membership rule. _metadata is populated by the scan itself —
     // constant-folded per split, no join against a listing.
     "scan_file_metadata" -> ((s, d) => {
-      val p = graft.Staging.dir("graft_phys_filemeta", d)
-      val stamp = graft.Staging.fingerprint(s, s"$d/events.parquet")
-      if (!graft.Staging.isCurrent(p, stamp)) {
-        Tables.events(s, d)
+      val p = graft.Staging.layout(s, "graft_phys_filemeta", d,
+        s"$d/events.parquet")(Tables.events(s, d)
           .repartition(col("event_type"))
-          .write.mode("overwrite").partitionBy("event_type").parquet(p)
-        graft.Staging.commitStamp(p, stamp)
-      }
+          .write.mode("overwrite").partitionBy("event_type").parquet(_))
       s.read.parquet(p)
         .select(col("event_type"), col("_metadata.file_name").as("fn"))
         .groupBy("event_type")

@@ -34,9 +34,8 @@ object Pipeline {
     * work, not the shared derivation.
     */
   private[graft] def coEdges(s: SparkSession, d: String): DataFrame = {
-    val path = graft.Staging.dir("graft_copurchase_edges", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/lineitem.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+    s.read.parquet(graft.Staging.layout(s, "graft_copurchase_edges", d,
+        s"$d/lineitem.parquet") { path =>
       val li = t(s, d, "lineitem").select("l_orderkey", "l_partkey")
       li.as("a")
         .join(li.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
@@ -51,9 +50,7 @@ object Pipeline {
         .groupBy("u", "v").agg(count(lit(1)).as("w"))
         .filter(col("w") >= 2).select("u", "v")
         .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    s.read.parquet(path)
+    })
   }
 
   /** One-off staging for the Pipeline family — idempotent; called by
@@ -134,15 +131,11 @@ object Pipeline {
     * doc_id, token count, shingle set), `prefix` (the base survivors'
     * rarest-first prefix rows — the probe side for old-small/new-large
     * pairs), and `comp` (near-dup component labels over base survivor
-    * nodes). Base slice = doc_id % 10 != 0 (the previous crawl). Stamp
-    * commits last, under `surv`, AFTER all three writes — a crash
-    * mid-stage is detectably stale (StagingSpec's kill-the-commit
-    * contract).
+    * nodes). Base slice = doc_id % 10 != 0 (the previous crawl).
     */
-  private[graft] def censusBaseStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_census_base", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(s"$path/surv", stamp)) {
+  private[graft] def censusBaseStaged(s: SparkSession, d: String): String =
+    graft.Staging.layout(s, "graft_census_base", d,
+        s"$d/documents.parquet") { path =>
       val base = censusShingled(
         t(s, d, "documents").filter(col("doc_id") % 10 =!= 0))
       val surv = base.groupBy("h")
@@ -159,10 +152,7 @@ object Pipeline {
             .select(col("ha").as("src"), col("hb").as("dst")))
         .select(col("v").as("h"), col("comp").as("label"))
         .write.mode("overwrite").parquet(s"$path/comp")
-      graft.Staging.commitStamp(s"$path/surv", stamp)
     }
-    path
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Consistent hash sampling (~25%): membership is a pure function of
@@ -2408,12 +2398,10 @@ object Pipeline {
     // different algorithm.
     "sketch_hll_mergeable" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val p = graft.Staging.dir("graft_hll_day1", d)
-      if (!graft.Staging.isStaged(p))
-        docs.filter(col("doc_id") % 2 === 0)
+      val day1 = s.read.parquet(graft.Staging.layout(s, "graft_hll_day1", d,
+        s"$d/documents.parquet")(docs.filter(col("doc_id") % 2 === 0)
           .groupBy("lang").agg(hll_sketch_agg(col("doc_id")).as("sketch"))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-      val day1 = s.read.parquet(p)
+          .coalesce(1).write.mode("overwrite").parquet(_)))
       val day2 = docs.filter(col("doc_id") % 2 === 1)
         .groupBy("lang").agg(hll_sketch_agg(col("doc_id")).as("sketch"))
       day1.unionByName(day2)
@@ -2831,17 +2819,12 @@ object Pipeline {
     // with the day-2 delta. State size is O(groups), never O(rows).
     "agg_incremental_merge" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val p = graft.Staging.dir("graft_inc_state", d)
-      val stamp = graft.Staging.fingerprint(s, s"$d/events.parquet")
-      if (!graft.Staging.isCurrent(p, stamp)) {
-        ev.filter(col("event_id") % 2 === 0)
+      val day1 = s.read.parquet(graft.Staging.layout(s, "graft_inc_state", d,
+        s"$d/events.parquet")(ev.filter(col("event_id") % 2 === 0)
           .groupBy("event_type")
           .agg(count(lit(1)).as("cnt"), sum("value").as("sumv"),
             min("value").as("minv"), max("value").as("maxv"))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        graft.Staging.commitStamp(p, stamp)
-      }
-      val day1 = s.read.parquet(p)
+          .coalesce(1).write.mode("overwrite").parquet(_)))
       val day2 = ev.filter(col("event_id") % 2 === 1)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"), sum("value").as("sumv"),

@@ -70,9 +70,8 @@ object Relational {
     // splittable text read + per-row parse, no exchange before the
     // fold.
     "scan_json_malformed" -> ((s, d) => {
-      val path = graft.Staging.dir("graft_json_badrows", d)
-      if (!graft.Staging.isStaged(path))
-        t(s, d, "documents")
+      val path = graft.Staging.layout(s, "graft_json_badrows", d,
+        s"$d/documents.parquet")(t(s, d, "documents")
           .select(when(col("doc_id") % 7 === 0,
             concat(lit("{\"doc_id\":"), col("doc_id"),
               lit(",\"lang\":")))
@@ -80,7 +79,7 @@ object Relational {
               lit(",\"lang\":\""), col("lang"),
               lit("\",\"n_chars\":"), col("n_chars"), lit("}")))
             .as("value"))
-          .write.mode("overwrite").text(path)
+          .write.mode("overwrite").text(_))
       s.read
         .schema("doc_id LONG, lang STRING, n_chars LONG, _corrupt STRING")
         .option("mode", "PERMISSIVE")
@@ -92,15 +91,14 @@ object Relational {
     }),
 
     "scan_csv_malformed" -> ((s, d) => {
-      val path = graft.Staging.dir("graft_csv_badrows", d)
-      if (!graft.Staging.isStaged(path))
-        t(s, d, "documents")
+      val path = graft.Staging.layout(s, "graft_csv_badrows", d,
+        s"$d/documents.parquet")(t(s, d, "documents")
           .select(when(col("doc_id") % 7 === 0,
             concat(col("doc_id"), lit(","), col("lang"),
               lit(",bad#"), col("doc_id")))
             .otherwise(concat_ws(",",
               col("doc_id"), col("lang"), col("n_chars"))).as("value"))
-          .write.mode("overwrite").text(path)
+          .write.mode("overwrite").text(_))
       s.read
         .schema("doc_id LONG, lang STRING, n_chars LONG, _corrupt STRING")
         .option("mode", "PERMISSIVE")
@@ -125,9 +123,8 @@ object Relational {
     // file count, not intra-file splits; convert to parquet at first
     // touch.
     "scan_csv_multiline" -> ((s, d) => {
-      val path = graft.Staging.dir("graft_csv_multiline", d)
-      val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-      if (!graft.Staging.isCurrent(path, stamp)) {
+      val path = graft.Staging.layout(s, "graft_csv_multiline", d,
+          s"$d/documents.parquet") { path =>
         t(s, d, "documents")
           .select(col("doc_id"), col("lang"),
             concat(col("lang"), lit("\n"), substring(col("text"), 1, 40))
@@ -141,7 +138,6 @@ object Relational {
           .option("ignoreLeadingWhiteSpace", "false")
           .option("ignoreTrailingWhiteSpace", "false")
           .csv(path)
-        graft.Staging.commitStamp(path, stamp)
       }
       s.read
         .schema("doc_id LONG, lang STRING, payload STRING")

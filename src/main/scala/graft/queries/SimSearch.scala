@@ -233,13 +233,20 @@ object SimSearch {
   private def embStamp(s: SparkSession, d: String): String =
     graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
 
+  /** A layout derived from the embeddings alone — every ANN artifact. */
+  private def embLayout(s: SparkSession, prefix: String, d: String)(
+      build: String => Unit): String =
+    graft.Staging.layout(s, prefix, d, s"$d/embeddings.parquet")(build)
+
+  /** The persisted `prefix` layout's path iff it is current. */
+  private def embCurrent(s: SparkSession, prefix: String,
+      d: String): Option[String] =
+    graft.Staging.current(s, prefix, d, s"$d/embeddings.parquet")
+
   private def trainedCodebook(s: SparkSession, d: String): Seq[Seq[Float]] =
-    codebookCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ => {
-      val p = graft.Staging.dir("graft_ivf_km", d)
-      if (graft.Staging.isCurrent(s"$p/index", embStamp(s, d)))
-        stagedCentroids(s, p)
-      else trainKmeans(s, t(s, d, "embeddings"))
-    })
+    codebookCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ =>
+      embCurrent(s, "graft_ivf_km", d).map(stagedCentroids(s, _))
+        .getOrElse(trainKmeans(s, t(s, d, "embeddings"))))
 
   /** IVF tuning. The corpus is uniform random unit vectors — the
     * WORST case for coarse quantization (top-5 "neighbors" sit at cosine
@@ -262,18 +269,14 @@ object SimSearch {
     * ships at 100 TB (build once, probe many, no re-fit per query).
     * Idempotent per (run, sfDir).
     */
-  def ivfStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_ivf_km", d)
-    val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp))
-      writeIvf(s, path, stamp, t(s, d, "embeddings"), trainedCodebook(s, d))
-    path
-  }
+  def ivfStaged(s: SparkSession, d: String): String =
+    embLayout(s, "graft_ivf_km", d)(
+      writeIvf(s, _, t(s, d, "embeddings"), trainedCodebook(s, d)))
 
   /** Persist `cents` as `<path>/centroids` and `emb` soft-assigned under
-    * it as the cell-partitioned `<path>/index`, then commit `stamp`.
+    * it as the cell-partitioned `<path>/index`.
     */
-  private def writeIvf(s: SparkSession, path: String, stamp: String,
+  private def writeIvf(s: SparkSession, path: String,
       emb: DataFrame, cents: Seq[Seq[Float]]): Unit = {
     import s.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c) }
@@ -289,7 +292,6 @@ object SimSearch {
       // knob becomes files-per-cell sizing, not files-per-task.
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/index")
-    graft.Staging.commitStamp(s"$path/index", stamp)
   }
 
   /** Base-only IVF for the INCREMENTAL ingest demo: codebook trained on
@@ -298,16 +300,12 @@ object SimSearch {
     * time with this SAME codebook and appended — never a retrain, never
     * a base rewrite (`simsearch_ivf_incremental`).
     */
-  def incrIvfStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_ivf_incr", d)
-    val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
+  def incrIvfStaged(s: SparkSession, d: String): String =
+    embLayout(s, "graft_ivf_incr", d) { path =>
       val base = t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0)
-      writeIvf(s, path, stamp, base, codebookCache.computeIfAbsent(
-        s"$d@$stamp#incrbase", _ => trainKmeans(s, base)))
+      writeIvf(s, path, base, codebookCache.computeIfAbsent(
+        s"$d@${embStamp(s, d)}#incrbase", _ => trainKmeans(s, base)))
     }
-    path
-  }
 
   def ensureStaged(s: SparkSession, d: String): Unit = {
     ivfStaged(s, d); pqStaged(s, d); ivfpqStaged(s, d)
@@ -535,10 +533,9 @@ object SimSearch {
   // exploding the packed text inside whole-stage codegen beats
   // shuffle-reading 20× more pre-exploded parquet rows. Only the
   // DERIVED corpus stats (df, n_docs, avgdl) stay staged.
-  private[graft] def bm25Staged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_bm25_stats", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def bm25Staged(s: SparkSession, d: String): String =
+    graft.Staging.layout(s, "graft_bm25_stats", d,
+        s"$d/documents.parquet") { path =>
       val toks = t(s, d, "documents").select(col("doc_id"),
         explode(split(lower(col("text")), " ")).as("tok"))
       toks.groupBy("tok")
@@ -547,10 +544,7 @@ object SimSearch {
       toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
         .agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
         .write.mode("overwrite").parquet(s"$path/stats")
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Product-quantization geometry: 64 dims → M=16 subspaces × 4 dims,
     * K=16 centroids per subspace. A vector compresses to 16 code bytes
@@ -638,12 +632,9 @@ object SimSearch {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Float]]]]()
 
   private def pqCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Float]]] =
-    pqCodebookCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ => {
-      val p = graft.Staging.dir("graft_pq", d)
-      if (graft.Staging.isCurrent(s"$p/index", embStamp(s, d)))
-        stagedPqCodebooks(s, p)
-      else trainPqCodebooks(s, t(s, d, "embeddings"))
-    })
+    pqCodebookCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ =>
+      embCurrent(s, "graft_pq", d).map(stagedPqCodebooks(s, _))
+        .getOrElse(trainPqCodebooks(s, t(s, d, "embeddings"))))
 
   /** Per-subspace codebooks staged as `<p>/codebooks` (m, k, centroid). */
   private def writePqCodebooks(s: SparkSession, p: String,
@@ -671,10 +662,8 @@ object SimSearch {
     * slice) — a build step, not a per-query cost. Idempotent per
     * (run, sfDir).
     */
-  def pqStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_pq", d)
-    val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
+  def pqStaged(s: SparkSession, d: String): String =
+    embLayout(s, "graft_pq", d) { path =>
       val cb = pqCodebook(s, d)
       val cbLit = typedlit(cb)
       writePqCodebooks(s, path, cb)
@@ -687,10 +676,7 @@ object SimSearch {
                 m * PqDim + 1, lit(PqDim)),
               element_at(cbLit, m + 1), lit(1)), 1)).as("codes"))
         .write.mode("overwrite").parquet(s"$path/index")
-      graft.Staging.commitStamp(s"$path/index", stamp)
     }
-    path
-  }
 
   /** The IVFPQ composite index (the FAISS IVFPQ production default):
     * the coarse IVF assignment and the PQ code word joined per vector
@@ -700,10 +686,8 @@ object SimSearch {
     * 100 TB this is the memory story squared: nprobe/#cells of the
     * corpus is read, and of THAT only 16 code bytes per vector.
     */
-  private[graft] def ivfpqStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_ivfpq", d)
-    val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
+  private[graft] def ivfpqStaged(s: SparkSession, d: String): String =
+    embLayout(s, "graft_ivfpq", d) { path =>
       val cells = s.read.parquet(s"${ivfStaged(s, d)}/index")
         .select(col("vec_id"), col("cell"))
       val codes = s.read.parquet(s"${pqStaged(s, d)}/index")
@@ -711,10 +695,7 @@ object SimSearch {
         .repartition(col("cell")) // one file per cell dir (see ivfStaged)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/index")
-      graft.Staging.commitStamp(s"$path/index", stamp)
     }
-    path
-  }
 
   /** The ADC candidate stream of the IVFPQ probe — factored out so the
     * spec can COUNT what gets scored (the composition's whole point is
@@ -855,12 +836,9 @@ object SimSearch {
 
   private def residualPqCodebook(s: SparkSession, d: String)
       : Seq[Seq[Seq[Float]]] =
-    residualPqCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ => {
-      val p = graft.Staging.dir("graft_ivfpq_res", d)
-      if (graft.Staging.isCurrent(s"$p/index", embStamp(s, d)))
-        stagedPqCodebooks(s, p)
-      else trainResidualPq(s, d)
-    })
+    residualPqCache.computeIfAbsent(s"$d@${embStamp(s, d)}", _ =>
+      embCurrent(s, "graft_ivfpq_res", d).map(stagedPqCodebooks(s, _))
+        .getOrElse(trainResidualPq(s, d)))
 
   /** The residual-encoded IVFPQ index: per (vec_id, cell) copy of the
     * IVF index (soft-assign keeps a vector in 2 cells — each copy
@@ -871,10 +849,8 @@ object SimSearch {
     * IVF index — a build step, not a per-query cost.
     */
   private[graft] def ivfpqResidualStaged(s: SparkSession, d: String)
-      : String = {
-    val path = graft.Staging.dir("graft_ivfpq_res", d)
-    val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
+      : String =
+    embLayout(s, "graft_ivfpq_res", d) { path =>
       val cb = residualPqCodebook(s, d)
       writePqCodebooks(s, path, cb)
       s.read.parquet(s"${ivfStaged(s, d)}/index")
@@ -883,10 +859,7 @@ object SimSearch {
         .repartition(col("cell")) // one file per cell dir (see ivfStaged)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/index")
-      graft.Staging.commitStamp(s"$path/index", stamp)
     }
-    path
-  }
 
   /** The residual-ADC candidate stream: (q_id, vec_id, adc, qe), one
     * row per (query, candidate) with the per-copy scores already folded
@@ -993,10 +966,8 @@ object SimSearch {
     * IvfPqIncrementalSpec pins code-level equality with a from-scratch
     * encode under the same codebooks.
     */
-  private[graft] def ivfpqIncrStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_ivfpq_incr", d)
-    val stamp = embStamp(s, d)
-    if (!graft.Staging.isCurrent(s"$path/index", stamp)) {
+  private[graft] def ivfpqIncrStaged(s: SparkSession, d: String): String =
+    embLayout(s, "graft_ivfpq_incr", d) { path =>
       val ivfP = incrIvfStaged(s, d)
       val coarse = stagedCentroids(s, ivfP)
       val base = t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0)
@@ -1008,10 +979,7 @@ object SimSearch {
         .repartition(col("cell")) // one file per cell dir (see ivfStaged)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/index")
-      graft.Staging.commitStamp(s"$path/index", stamp)
     }
-    path
-  }
 
   /** Read back the incremental base's frozen artifacts: (coarse,
     * residual codebooks). A probe or refresh MUST use the codebooks the
@@ -1120,14 +1088,9 @@ object SimSearch {
 
   private def semanticClustersStaged(s: SparkSession, d: String)
       : DataFrame = {
-    val path = graft.Staging.dir("graft_semantic_cc", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+    s.read.parquet(embLayout(s, "graft_semantic_cc", d)(
       ccCluster(s, t(s, d, "embeddings"))._2
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    s.read.parquet(path)
+        .write.mode("overwrite").parquet(_)))
   }
 
   /** The banded-LSH semantic clustering of `src`: its (vec_id, pk)
@@ -1173,18 +1136,13 @@ object SimSearch {
     * the persisted assignment and never revisited. Stamped with the
     * embeddings fingerprint: a regenerated corpus rebuilds the base.
     */
-  private def incrBaseStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_incr_base", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/embeddings.parquet")
-    if (!graft.Staging.isCurrent(s"$path/buckets", stamp)) {
+  private def incrBaseStaged(s: SparkSession, d: String): String =
+    embLayout(s, "graft_incr_base", d) { path =>
       val (withBuckets, assigned) =
         ccCluster(s, t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0))
       assigned.write.mode("overwrite").parquet(s"$path/assign")
       withBuckets.write.mode("overwrite").parquet(s"$path/buckets")
-      graft.Staging.commitStamp(s"$path/buckets", stamp)
     }
-    path
-  }
 
   /** The embeddings with their `nrm` and random-hyperplane LSH
     * `bucket`: the sign of each plane's projection via the codegen'd

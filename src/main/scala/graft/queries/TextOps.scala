@@ -263,31 +263,43 @@ object TextOps {
       .distinct()
   }
 
-  private[graft] def bloomBaseStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_bloom_incr", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(s"$path/hashes", stamp)) {
+  /** A layout derived from the documents alone — every dedup artifact. */
+  private def docsLayout(s: SparkSession, prefix: String, d: String)(
+      build: String => Unit): String =
+    graft.Staging.layout(s, prefix, d, s"$d/documents.parquet")(build)
+
+  /** Serialize `bf` to `path` through the session's FileSystem — the
+    * filter lives in the same layout as its `hashes`, so it must land on
+    * the same filesystem, not on driver-local disk.
+    */
+  private def writeBloom(s: SparkSession, path: String,
+      bf: org.apache.spark.util.sketch.BloomFilter): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try bf.writeTo(out) finally out.close()
+  }
+
+  /** The serialized filter bytes [[writeBloom]] wrote at `path`. */
+  private[graft] def readBloom(s: SparkSession, path: String): Array[Byte] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(s.sparkContext.hadoopConfiguration).open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  private[graft] def bloomBaseStaged(s: SparkSession, d: String): String =
+    docsLayout(s, "graft_bloom_incr", d) { path =>
       val baseH = t(s, d, "documents")
         .filter(col("doc_id") % 10 =!= 0)
         .select(xxhash64(col("text")).as("h")).distinct()
         .localCheckpoint(true) // consumed by the write AND the count+build
-      val bf = baseH.stat.bloomFilter("h",
-        math.max(baseH.count(), 1000L), 0.01)
-      val bytes = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bytes)
-      new java.io.File(path).mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$path/filter.bin"), bytes.toByteArray)
+      writeBloom(s, s"$path/filter.bin", baseH.stat.bloomFilter("h",
+        math.max(baseH.count(), 1000L), 0.01))
       baseH.write.mode("overwrite").parquet(s"$path/hashes")
-      graft.Staging.commitStamp(s"$path/hashes", stamp)
     }
-    path
-  }
 
-  private[graft] def minhashBaseStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_mh_incr", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(s"$path/bands", stamp)) {
+  private[graft] def minhashBaseStaged(s: SparkSession, d: String): String =
+    docsLayout(s, "graft_mh_incr", d) { path =>
       val oldG = mhShingled(s, d).filter(col("doc_id") % 10 =!= 0)
         .localCheckpoint(true) // one tokenize+sign pass, three consumers
       val bands = mhBandKeys(oldG).localCheckpoint(true)
@@ -305,10 +317,7 @@ object TextOps {
         .select("doc_id", "cluster_rep")
         .write.mode("overwrite").parquet(s"$path/assign")
       bands.write.mode("overwrite").parquet(s"$path/bands")
-      graft.Staging.commitStamp(s"$path/bands", stamp)
     }
-    path
-  }
 
   /** The banded near-dup edge set as a persisted artifact, staged once per
     * (run, sfDir) — at corpus scale the edge list is built by one pipeline
@@ -316,16 +325,9 @@ object TextOps {
     * re-derived inside every consumer query. Same build-once/read-many
     * contract as the IVF/PQ indexes (`SimSearch.ivfStaged`/`pqStaged`).
     */
-  def edgesStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_nd_edges", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      nativeMinhashPairs(s, d).select("da", "db")
-        .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+  def edgesStaged(s: SparkSession, d: String): String =
+    docsLayout(s, "graft_nd_edges", d)(nativeMinhashPairs(s, d)
+      .select("da", "db").write.mode("overwrite").parquet(_))
 
   /** The EXACT j ≥ 0.5 pair set as a persisted referee artifact — the
     * ground truth every recall evaluation in the dedup family is scored
@@ -351,10 +353,8 @@ object TextOps {
     * against documents.parquet like every staged index, so a corpus
     * change rebuilds it rather than serving stale shingles.
     */
-  private[graft] def mhShingledStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_mh_shingled", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(s"$path/docs", stamp)) {
+  private[graft] def mhShingledStaged(s: SparkSession, d: String): String =
+    docsLayout(s, "graft_mh_shingled", d) { path =>
       val base = mhShingled(s, d)
       // posting-list stats ride in the snapshot artifact too: `gr` is
       // the shingle multiset re-ordered RAREST-FIRST (global occurrence
@@ -377,10 +377,7 @@ object TextOps {
           coalesce(col("gr"),
             array().cast("array<bigint>")).as("gr"))
         .write.mode("overwrite").parquet(s"$path/docs")
-      graft.Staging.commitStamp(s"$path/docs", stamp)
     }
-    path
-  }
 
   /** Read-side of [[mhShingledStaged]]: consumers scan the staged
     * projection (column-pruned, page-cache-warm) instead of re-deriving
@@ -482,10 +479,8 @@ object TextOps {
     candidateJoin(prefix, full, maxSizeRatio, feasible)
   }
 
-  def exactPairsStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_exact_pairs", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  def exactPairsStaged(s: SparkSession, d: String): String =
+    docsLayout(s, "graft_exact_pairs", d) { path =>
       val docsG = mhShingledRead(s, d)
       mhExactVerified(
         prefixCandidatesStaged(s, d,
@@ -495,10 +490,7 @@ object TextOps {
         docsG)
         .select("da", "db").distinct()
         .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
     }
-    path
-  }
 
   def ensureStaged(s: SparkSession, d: String): Unit = {
     mhShingledStaged(s, d) // first: the artifacts below consume it
@@ -518,16 +510,9 @@ object TextOps {
     * merges trained on a previous corpus is the silent-wrong-answer
     * class, not a perf bug.
     */
-  private[graft] def bpeMergesStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_bpe_merges", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/documents.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      queries("bpe_train_merges")(s, d)
-        .coalesce(1).write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
-    }
-    path
-  }
+  private[graft] def bpeMergesStaged(s: SparkSession, d: String): String =
+    docsLayout(s, "graft_bpe_merges", d)(queries("bpe_train_merges")(s, d)
+      .coalesce(1).write.mode("overwrite").parquet(_))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // B43: exact dedup, deterministic survivor (min doc_id per text) —
@@ -985,8 +970,7 @@ object TextOps {
     // bound on fresh docs.
     "dedup_bloom_incremental" -> ((s, d) => {
       val base = bloomBaseStaged(s, d)
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/filter.bin"))
+      val bytes = readBloom(s, s"$base/filter.bin")
       val flagged = bloomBatch(s, d)
         .select(col("doc_id"), xxhash64(col("text")).as("h"))
         .withColumn("bloom_hit",
@@ -1025,12 +1009,9 @@ object TextOps {
         .localCheckpoint(false) // consumed by count, filter build, write
       val nBase = s.read.parquet(s"$base/hashes").count()
       val nTotal = merged.count()
-      val bf = merged.stat.bloomFilter("h", math.max(nTotal, 1000L), 0.01)
-      val out = new java.io.ByteArrayOutputStream()
-      bf.writeTo(out)
       merged.write.mode("overwrite").parquet(s"$base/hashes_next")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/filter_next.bin"), out.toByteArray)
+      writeBloom(s, s"$base/filter_next.bin",
+        merged.stat.bloomFilter("h", math.max(nTotal, 1000L), 0.01))
       s.range(1).select(
         lit(nBase).as("n_base"),
         lit(nTotal - nBase).as("n_added"),

@@ -56,14 +56,11 @@ object StreamingOps {
   // already (the v2→v3 bump left StreamingMoreSpec reading a dir that no
   // longer existed).
   private[graft] def stage(s: SparkSession, d: String, variant: String)
-      : String = {
-    // v3: wm8 layout hardened (atomic multi-slice staging + explicit
-    // mtimes) — bump re-stages every variant once rather than trusting
-    // v2 dirs whose slice mtimes may tie on coarse-granularity systems
-    val tmp = graft.Staging.dir(s"graft_stream_events_v3_$variant", d)
+      : String =
     // idempotent per (sfDir, variant): the staged copy is deterministic,
     // so re-staging on every query run would only burn IO
-    if (!graft.Staging.isStaged(tmp)) {
+    graft.Staging.layout(s, s"graft_stream_events_v3_$variant", d,
+        s"$d/events.parquet") { tmp =>
       val ev = Tables.events(s, d)
       val out = variant match {
         case "dup" => ev.unionAll(ev)
@@ -111,46 +108,37 @@ object StreamingOps {
             (unix_millis(col("ts")) >= lo &&
               (unix_millis(col("ts")) < hi || lit(i == 7))))
         }
-        // Atomic multi-slice staging (r10 ADVICE): the old
-        // overwrite-then-append layout committed _SUCCESS with slice 0,
-        // so a crash before the last append left a PARTIAL staging that
-        // isStaged accepted — and the sentinel rides slice 7, so the
-        // replay would then silently drop data or emit nothing. Now each
-        // slice commits into a scratch dir and its part file is RENAMED
-        // into place; _SUCCESS is written manually, last. mtimes are set
-        // EXPLICITLY 1 s apart (not Thread.sleep-spaced): on coarse
-        // (1 s) mtime filesystems two sleep-spaced slices can tie and
-        // feed out of event-time order, dropping pre-watermark rows of
-        // the later file — the exact silent-loss mode the ordering rule
-        // exists to prevent.
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-        val scratch = new org.apache.hadoop.fs.Path(tmp + "_build")
-        fs.delete(tmpPath, true); fs.mkdirs(tmpPath)
-        slices.zipWithIndex.foreach { case (slice, i) =>
-          fs.delete(scratch, true)
-          slice.coalesce(1).write.mode("overwrite")
-            .parquet(scratch.toString)
-          val part = fs.globStatus(
-            new org.apache.hadoop.fs.Path(scratch, "part-*"))(0).getPath
-          fs.rename(part,
-            new org.apache.hadoop.fs.Path(tmpPath, f"slice_$i%02d.parquet"))
-        }
-        fs.delete(scratch, true)
-        val base = System.currentTimeMillis() - 60000L
-        (0 until 8).foreach { i =>
-          fs.setTimes(
-            new org.apache.hadoop.fs.Path(tmpPath, f"slice_$i%02d.parquet"),
-            base + i * 1000L, -1L)
-        }
-        // completion marker LAST: a crash anywhere above leaves no
-        // _SUCCESS and the next run re-stages from scratch
-        fs.create(new org.apache.hadoop.fs.Path(tmpPath, "_SUCCESS"), true)
-          .close()
+        // the sentinel rides slice 7, so a staging that lost a slice
+        // would silently drop data or emit nothing — layout's marker
+        // after the build keeps a partial one stale
+        writeSlices(s, tmp, slices)
       } else out.coalesce(8).write.mode("overwrite").parquet(tmp)
     }
-    tmp
+
+  /** Write `slices` under `root` as `slice_NN.parquet`, one file each,
+    * with mtimes set EXPLICITLY 1 s apart in slice order: the file
+    * stream source feeds files in mtime order, and on coarse (1 s)
+    * mtime filesystems two sleep-spaced writes can tie and feed out of
+    * order, dropping pre-watermark rows of the later file. Each slice
+    * commits into a scratch dir and its part file is renamed into place.
+    */
+  private def writeSlices(s: SparkSession, root: String,
+      slices: Seq[DataFrame]): Unit = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val scratch = new org.apache.hadoop.fs.Path(root + "_build")
+    val base = System.currentTimeMillis() - 60000L
+    fs.mkdirs(rootPath)
+    slices.zipWithIndex.foreach { case (slice, i) =>
+      fs.delete(scratch, true)
+      slice.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+      val part = fs.globStatus(
+        new org.apache.hadoop.fs.Path(scratch, "part-*"))(0).getPath
+      val dst = new org.apache.hadoop.fs.Path(rootPath, f"slice_$i%02d.parquet")
+      fs.rename(part, dst)
+      fs.setTimes(dst, base + i * 1000L, -1L)
+    }
+    fs.delete(scratch, true)
   }
 
   /** Late-arrival replay source: three files in strict mtime order —
@@ -160,42 +148,18 @@ object StreamingOps {
     * batch advances the watermark past every real window BEFORE the
     * late file arrives, so the stateful aggregation must DROP all of
     * file 2 (its windows are emitted and evicted) — the semantic
-    * `stream_late_data_drop` pins. Same atomic staging discipline as
-    * wm8 (scratch + rename + explicit mtimes + manual _SUCCESS last).
+    * `stream_late_data_drop` pins. Written by [[writeSlices]], like wm8.
     */
-  private def stageLate(s: SparkSession, d: String): String = {
-    val tmp = graft.Staging.dir("graft_stream_late_src", d)
-    if (!graft.Staging.isStaged(tmp)) {
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      val scratch = new org.apache.hadoop.fs.Path(tmp + "_build")
-      fs.delete(tmpPath, true); fs.mkdirs(tmpPath)
+  private def stageLate(s: SparkSession, d: String): String =
+    graft.Staging.layout(s, "graft_stream_late_src", d,
+        s"$d/events.parquet") { tmp =>
       val ev = Tables.events(s, d)
       val tMin = ev.agg(min(col("ts"))).head()
         .getTimestamp(0).getTime
       val late = ev.filter(unix_millis(col("ts")) < tMin + 3600000L)
         .withColumn("event_id", col("event_id") + 10000000L)
-      val slices = Seq(ev, wmSentinel(ev, WmSentinelId), late)
-      slices.zipWithIndex.foreach { case (slice, i) =>
-        fs.delete(scratch, true)
-        slice.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-        val part = fs.globStatus(
-          new org.apache.hadoop.fs.Path(scratch, "part-*"))(0).getPath
-        fs.rename(part,
-          new org.apache.hadoop.fs.Path(tmpPath, f"slice_$i%02d.parquet"))
-      }
-      fs.delete(scratch, true)
-      val base = System.currentTimeMillis() - 60000L
-      (0 until 3).foreach { i =>
-        fs.setTimes(new org.apache.hadoop.fs.Path(tmpPath,
-          f"slice_$i%02d.parquet"), base + i * 1000L, -1L)
-      }
-      fs.create(new org.apache.hadoop.fs.Path(tmpPath, "_SUCCESS"), true)
-        .close()
+      writeSlices(s, tmp, Seq(ev, wmSentinel(ev, WmSentinelId), late))
     }
-    tmp
-  }
 
   /** One-off source staging for the streaming queries — idempotent. Bench
     * calls this before its timed loop so per-query numbers measure the
@@ -228,51 +192,25 @@ object StreamingOps {
     * composition as the batch twin `dedup_bloom_incremental`) materialized
     * as a streaming file source.
     */
-  private def stageBloomBatch(s: SparkSession, d: String): String = {
-    val tmp = graft.Staging.dir("graft_stream_bloom_batch", d)
-    if (!graft.Staging.isStaged(tmp))
-      graft.queries.TextOps.bloomBatch(s, d).coalesce(4)
-        .write.mode("overwrite").parquet(tmp)
-    tmp
-  }
+  private def stageBloomBatch(s: SparkSession, d: String): String =
+    graft.Staging.layout(s, "graft_stream_bloom_batch", d,
+      s"$d/documents.parquet")(graft.queries.TextOps.bloomBatch(s, d)
+        .coalesce(4).write.mode("overwrite").parquet(_))
 
   /** The near-dup refresh slice (doc_id % 10 == 0, same composition as
     * the batch twin `dedup_minhash_incremental`) written as 4 id-bucketed
     * files with ascending mtimes: `maxFilesPerTrigger(1)` then replays it
-    * as 4 deterministic micro-batches. Same atomic staging discipline as
-    * wm8 (scratch + rename + manual _SUCCESS last).
+    * as 4 deterministic micro-batches (written by [[writeSlices]]).
     */
-  private def stageIncrSlice(s: SparkSession, d: String): String = {
-    val tmp = graft.Staging.dir("graft_stream_mh_incr_src", d)
-    if (!graft.Staging.isStaged(tmp)) {
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      val scratch = new org.apache.hadoop.fs.Path(tmp + "_build")
-      fs.delete(tmpPath, true); fs.mkdirs(tmpPath)
+  private def stageIncrSlice(s: SparkSession, d: String): String =
+    graft.Staging.layout(s, "graft_stream_mh_incr_src", d,
+        s"$d/documents.parquet") { tmp =>
       val slice = Tables(s, d, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
-      (0 until 4).foreach { i =>
-        fs.delete(scratch, true)
-        slice.filter(pmod(floor(col("doc_id") / 10), lit(4)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-        val part = fs.globStatus(
-          new org.apache.hadoop.fs.Path(scratch, "part-*"))(0).getPath
-        fs.rename(part,
-          new org.apache.hadoop.fs.Path(tmpPath, f"slice_$i%02d.parquet"))
-      }
-      fs.delete(scratch, true)
-      val basems = System.currentTimeMillis() - 60000L
-      (0 until 4).foreach { i =>
-        fs.setTimes(new org.apache.hadoop.fs.Path(tmpPath,
-          f"slice_$i%02d.parquet"), basems + i * 1000L, -1L)
-      }
-      fs.create(new org.apache.hadoop.fs.Path(tmpPath, "_SUCCESS"), true)
-        .close()
+      writeSlices(s, tmp, (0 until 4).map(i =>
+        slice.filter(pmod(floor(col("doc_id") / 10), lit(4)) === i)))
     }
-    tmp
-  }
 
   /** Streaming events source whose watermark ends past every real window:
     * reads the `wm` variant and sets the watermark. The sentinel is NOT
@@ -709,8 +647,7 @@ object StreamingOps {
     //     across the whole run for bounded state.
     "stream_dedup_bloom" -> ((s, d) => {
       val base = graft.queries.TextOps.bloomBaseStaged(s, d)
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/filter.bin"))
+      val bytes = graft.queries.TextOps.readBloom(s, s"$base/filter.bin")
       val src = stageBloomBatch(s, d)
       val stream = s.readStream
         .schema(s.read.parquet(src).schema).parquet(src)
@@ -907,13 +844,14 @@ object StreamingOps {
     // rides along to prove no batch double-committed.
     "stream_sink_files" -> ((s, d) => {
       val src = stage(s, d, "one")
-      // sink + checkpoint derive from the STAGED SOURCE PATH, not just
-      // the dataset dir: a file-stream checkpoint records offsets as
-      // source file paths, so a staged-layout version bump (v2→v3) must
-      // invalidate the downstream checkpoint with it — a checkpoint that
-      // outlives its source layout replays "Wrong basePath" (observed on
-      // the v3 bump). Same lifetime rule a production pipeline needs
-      // when a source directory is re-materialized.
+      // sink + checkpoint are stamped with the STAGED SOURCE's files,
+      // not just the dataset: a file-stream checkpoint records offsets
+      // as source file paths, so a re-staged source must invalidate the
+      // downstream checkpoint with it — a checkpoint that outlives its
+      // source layout replays every re-staged file into the sink again
+      // (or "Wrong basePath" after a path change). Same lifetime rule a
+      // production pipeline needs when a source directory is
+      // re-materialized.
       val (sink, chk) = fileSinkDirs(s, d)
       runStream(s, s.readStream
         .schema(Tables.events(s, d).schema).parquet(src)
@@ -1057,15 +995,8 @@ object StreamingOps {
     */
   private[graft] def ivmStreamDirs(s: SparkSession, d: String)
       : (String, String) = {
-    val base = graft.Staging.dir("graft_stream_ivm", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(base, stamp)) {
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(base))
-      graft.Staging.commitStamped(base, stamp)
-    }
+    val base = graft.Staging.layout(s, "graft_stream_ivm", d,
+      s"$d/orders.parquet")(_ => ())
     (s"$base/state", s"$base/chk")
   }
 
@@ -1075,16 +1006,8 @@ object StreamingOps {
     */
   private[graft] def joinIvmStreamDirs(s: SparkSession, d: String)
       : (String, String) = {
-    val base = graft.Staging.dir("graft_stream_ivm_join", d)
-    val stamp = graft.Staging.fingerprint(s,
-      s"$d/orders.parquet", s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(base, stamp)) {
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(base))
-      graft.Staging.commitStamped(base, stamp)
-    }
+    val base = graft.Staging.layout(s, "graft_stream_ivm_join", d,
+      s"$d/orders.parquet", s"$d/customer.parquet")(_ => ())
     (s"$base/state", s"$base/chk")
   }
 
@@ -1321,18 +1244,21 @@ object StreamingOps {
     * stray-file probe agrees on the sink location.
     */
   private[graft] def fileSinkDirs(s: SparkSession, d: String)
-      : (String, String) = {
-    val src = stage(s, d, "one")
-    (src + "_filesink", src + "_filesink_chk")
-  }
+      : (String, String) = sourceBoundDirs(s, d, "graft_stream_filesink")
 
   /** (sink, checkpoint) for `stream_manifest_txn` — same staged-source
     * lifetime rule as [[fileSinkDirs]].
     */
   private[graft] def manifestTxnDirs(s: SparkSession, d: String)
-      : (String, String) = {
-    val src = stage(s, d, "one")
-    (src + "_txnsink", src + "_txnsink_chk")
+      : (String, String) = sourceBoundDirs(s, d, "graft_stream_txnsink")
+
+  /** (sink, checkpoint) under a layout derived from the staged `one`
+    * source DIR, so a re-staged source (new part-file names) resets both.
+    */
+  private def sourceBoundDirs(s: SparkSession, d: String,
+      prefix: String): (String, String) = {
+    val base = graft.Staging.layout(s, prefix, d, stage(s, d, "one"))(_ => ())
+    (s"$base/sink", s"$base/chk")
   }
 
   /** The foreachBatch committer for `stream_manifest_txn`, factored out

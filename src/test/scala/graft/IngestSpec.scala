@@ -317,17 +317,19 @@ class IngestSpec extends SparkSpec {
   test("staging crash-safety: a killed bulk-corpus commit (missing stamp " +
     "or missing _SUCCESS) is stale and rebuilds, never serves partials") {
     val dir = queries.Ingest.ensureBulkStaged(spark, sf)
-    val stamp = Staging.fingerprint(spark, s"$sf/documents.parquet")
-    assert(Staging.isCurrent(dir, stamp))
+    def isCurrent: Boolean = Staging.current(spark, "graft_xmlbulk", sf,
+      s"$sf/documents.parquet").contains(dir)
+    assert(isCurrent)
     // crash AFTER data + marker but BEFORE the stamp: detectably stale
     val stampFile = new java.io.File(dir, "_GRAFT_SRC_STAMP")
+    val stamp = java.nio.file.Files.readAllBytes(stampFile.toPath)
     assert(stampFile.delete())
-    assert(!Staging.isCurrent(dir, stamp))
+    assert(!isCurrent)
     // crash BEFORE the completion marker: also stale, even with a stamp
-    Staging.commitStamp(dir, stamp)
+    java.nio.file.Files.write(stampFile.toPath, stamp)
     val success = new java.io.File(dir, "_SUCCESS")
     assert(success.delete())
-    assert(!Staging.isCurrent(dir, stamp))
+    assert(!isCurrent)
     // and the family actually rebuilds to a current, correct layout
     // (delete one data shard to prove the rebuild rewrites, not re-marks)
     val shard = new java.io.File(dir, "filing_0000.xml")
@@ -335,7 +337,7 @@ class IngestSpec extends SparkSpec {
     if (had) assert(shard.delete())
     val dir2 = queries.Ingest.ensureBulkStaged(spark, sf)
     assert(dir2 === dir)
-    assert(Staging.isCurrent(dir, stamp))
+    assert(isCurrent)
     assert(!had || shard.exists(), "rebuild must rewrite deleted shards")
   }
 }

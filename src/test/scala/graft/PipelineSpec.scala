@@ -292,8 +292,8 @@ class PipelineSpec extends SparkSpec {
       s"incremental ${incr.toSeq} vs from-scratch ${full.toSeq}")
     // the staged base state the refresh consumed is present and current
     val p = queries.Pipeline.censusBaseStaged(spark, sf)
-    assert(Staging.isCurrent(s"$p/surv",
-      Staging.fingerprint(spark, s"$sf/documents.parquet")))
+    assert(Staging.current(spark, "graft_census_base", sf,
+      s"$sf/documents.parquet").contains(p))
     // vacuity guards: the delta really adds documents, and at least one
     // j >= 0.5 pair straddles base/delta — otherwise neither the merged
     // survivors nor the cross-slice edge contraction is exercised

@@ -178,7 +178,7 @@ class StagingSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, ".shard_0.bin.attempt-99999"),
       Array[Byte](1, 2, 3))
-    assert(new java.io.File(s"$dir/index", "_GRAFT_SRC_STAMP").delete())
+    assert(new java.io.File(dir, "_GRAFT_SRC_STAMP").delete())
     queries.Multimodal.ensurePackedStaged(spark, sf)
     // deterministic layout: identical index either run
     assert(read() === before)
@@ -233,14 +233,13 @@ class StagingSpec extends SparkSpec {
     val families: Seq[(String, () => String)] = Seq(
       "multimodal_binfiles" ->
         (() => queries.Multimodal.ensureStaged(spark, sf)),
-      "multimodal_packed" -> (() =>
-        s"${queries.Multimodal.ensurePackedStaged(spark, sf)}/index"),
-      "simsearch_ivf" ->
-        (() => s"${queries.SimSearch.ivfStaged(spark, sf)}/index"),
+      "multimodal_packed" ->
+        (() => queries.Multimodal.ensurePackedStaged(spark, sf)),
+      "simsearch_ivf" -> (() => queries.SimSearch.ivfStaged(spark, sf)),
       "textops_nd_edges" ->
         (() => queries.TextOps.edgesStaged(spark, sf)),
       "textops_bloom" ->
-        (() => s"${queries.TextOps.bloomBaseStaged(spark, sf)}/hashes"),
+        (() => queries.TextOps.bloomBaseStaged(spark, sf)),
       "ingest_xmlbulk" ->
         (() => queries.Ingest.ensureBulkStaged(spark, sf)),
       "textops_bpe_merges" ->
@@ -265,5 +264,70 @@ class StagingSpec extends SparkSpec {
       assert(stamp.exists(), s"$name: stamp not restored by rebuild")
       assert(dataFiles(stamped).nonEmpty, s"$name: rebuild wrote no data")
     }
+  }
+
+  private def writeDocsTo(dir: String, n: Int): Unit =
+    Tables(spark, sf, "documents").filter(col("doc_id") < n)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+
+  test("a layout once gated on _SUCCESS alone rebuilds when its source " +
+    "is rewritten (scan_json_malformed no longer serves the old rows)") {
+    val dir = freshDir()
+    def nRows(): Long = SparkEntry.queries("scan_json_malformed")(spark, dir)
+      .agg(sum("n_rows")).head().getLong(0)
+    def nDocs(): Long = Tables(spark, dir, "documents").count()
+    writeDocsTo(dir, 60)
+    assert(nRows() === nDocs())
+    writeDocsTo(dir, 140)
+    assert(nDocs() > 60L)
+    assert(nRows() === nDocs(), "stale staged text served after a rewrite")
+  }
+
+  test("a build that throws leaves the layout stale, the exception " +
+    "propagates, and the next call rebuilds") {
+    val dir = freshDir()
+    writeDocsTo(dir, 20)
+    val src = s"$dir/documents.parquet"
+    var builds = 0
+    val boom = intercept[IllegalStateException] {
+      Staging.layout(spark, "graft_spec_throw", dir, src) { p =>
+        builds += 1
+        spark.range(3).write.mode("overwrite").parquet(p)
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(boom.getMessage === "build failed")
+    assert(Staging.current(spark, "graft_spec_throw", dir, src) === None)
+    val p = Staging.layout(spark, "graft_spec_throw", dir, src) { p =>
+      builds += 1
+      spark.range(5).write.mode("overwrite").parquet(p)
+    }
+    assert(builds === 2)
+    assert(Staging.current(spark, "graft_spec_throw", dir, src) === Some(p))
+    assert(spark.read.parquet(p).count() === 5L)
+    // current now: a third call does not build
+    Staging.layout(spark, "graft_spec_throw", dir, src)(_ => builds += 1)
+    assert(builds === 2)
+  }
+
+  test("a layout stamped by another build of the code (the bare source " +
+    "fingerprint) is stale and rebuilds") {
+    val dir = freshDir()
+    writeDocsTo(dir, 60)
+    val p = queries.TextOps.edgesStaged(spark, dir)
+    val stampFile = java.nio.file.Paths.get(p, "_GRAFT_SRC_STAMP")
+    val ours = new String(java.nio.file.Files.readAllBytes(stampFile), "UTF-8")
+    val bare = Staging.fingerprint(spark, s"$dir/documents.parquet")
+    assert(ours !== bare)
+    val files1 = new java.io.File(p).list().sorted.toSeq
+    java.nio.file.Files.write(stampFile, bare.getBytes("UTF-8"))
+    // the local FileSystem checks a .crc sidecar; drop it with the bytes
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(p, "._GRAFT_SRC_STAMP.crc"))
+    queries.TextOps.edgesStaged(spark, dir)
+    assert(new String(java.nio.file.Files.readAllBytes(stampFile),
+      "UTF-8") === ours)
+    assert(new java.io.File(p).list().sorted.toSeq !== files1,
+      "a layout from another build must be rewritten, not re-stamped")
   }
 }
