@@ -10,8 +10,14 @@ import org.apache.spark.sql.functions._
   * parquet reader with Catalyst predicate pushdown / column pruning intact.
   */
 object Tables {
+  /** `events` goes through [[events]]'s encoding dispatch like every other
+    * read of it; every other table is a plain parquet scan.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") events(spark, dir) else parquet(spark, dir, name)
+
+  private def parquet(s: SparkSession, d: String, name: String): DataFrame =
+    s.read.parquet(s"$d/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -45,14 +51,14 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val df =
-      try apply(s, d, "events")
+      try parquet(s, d, "events")
       catch {
         case e: Throwable if {
           val m = Option(e.getMessage).getOrElse("")
           m.contains("PARQUET_TYPE_ILLEGAL") || m.contains("NANOS")
         } =>
           s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          apply(s, d, "events")
+          parquet(s, d, "events")
       }
     import org.apache.spark.sql.types._
     df.schema("ts").dataType match {
@@ -73,12 +79,8 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Register every table as a temp view so the full corpus is queryable
-    * through plain `spark.sql(...)` (events goes through the
-    * schema-dispatching loader above).
+    * through plain `spark.sql(...)`.
     */
   def registerAll(s: SparkSession, d: String): Unit =
-    names.foreach {
-      case "events" => events(s, d).createOrReplaceTempView("events")
-      case n => apply(s, d, n).createOrReplaceTempView(n)
-    }
+    names.foreach(n => apply(s, d, n).createOrReplaceTempView(n))
 }

@@ -45,75 +45,72 @@ object Ingest {
     * per-tag (count, chars) census from `documents` WITHOUT parsing any
     * XML, which keeps the fetch→StAX layer independently checked at
     * corpus size (~6 MB at sf0.01, ~62 MB at sf0.1). Files are written
-    * executor-side one-per-shard (temp + rename, task-retry safe, same
-    * discipline as the packed image shards); the manifest lists only the
+    * executor-side one-per-shard through `graft.fs.AttemptFile` (task-retry
+    * safe, like the packed image shards); the manifest lists only the
     * shards that exist (a modulus class can be empty).
     */
   private[graft] val BulkFiles = 64
   private[graft] val BulkBlks = 24
   private[graft] val BulkBlkLen = 512
 
-  def ensureBulkStaged(s: SparkSession, d: String): String = {
-    import s.implicits._
+  def ensureBulkStaged(s: SparkSession, d: String): String =
     graft.Staging.layout(s, "graft_xmlbulk", d,
-        s"$d/documents.parquet") { dirB =>
-      val (files, blks, blkLen) = (BulkFiles, BulkBlks, BulkBlkLen)
-      // the SESSION's hadoop conf, broadcast — a fresh empty Configuration
-      // in the task would drop user filesystem settings (s3a credentials/
-      // providers) and silently break on any non-local staging dir
-      val hconf = graft.HadoopConf.broadcast(s)
-      val written = graft.Tables(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .as[(Long, String, Long)]
-        .groupByKey(r => (r._1 % files).toInt)
-        .flatMapGroups { (shard, rows) =>
-          val fs = new org.apache.hadoop.fs.Path(dirB)
-            .getFileSystem(hconf.value.value)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(dirB))
-          val name = f"filing_$shard%04d.xml"
-          val fin = new org.apache.hadoop.fs.Path(dirB, name)
-          val att = org.apache.spark.TaskContext.get() match {
-            case null => s"local-${java.util.UUID.randomUUID()}"
-            case tc   => s"attempt-${tc.taskAttemptId()}"
-          }
-          val tmp = new org.apache.hadoop.fs.Path(dirB, s".$name.$att")
-          val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-            fs.create(tmp, true), "UTF-8"))
-          try {
-            out.print("<Return xmlns=\"http://www.irs.gov/efile\">\n" +
-              "<ReturnData>\n")
-            rows.toArray.sortBy(_._1).foreach { case (id, lang, nc) =>
-              out.print(s"<Doc>\n<DocId>$id</DocId>\n<LangCd>$lang" +
-                s"</LangCd>\n<CharCount>$nc</CharCount>\n")
-              var i = 0
-              while (i < blks) {
-                val pat = s"b${id}x$i."
-                val sb = new java.lang.StringBuilder(blkLen + pat.length)
-                while (sb.length < blkLen) sb.append(pat)
-                sb.setLength(blkLen)
-                out.print("<Blk>"); out.print(sb); out.print("</Blk>\n")
-                i += 1
-              }
-              out.print("</Doc>\n")
+      s"$d/documents.parquet")(writeBulk(s, d, _))
+
+  /** Write the bulk corpus and its manifest into `dirB` (over whatever a
+    * lost attempt left there).
+    */
+  private[graft] def writeBulk(s: SparkSession, d: String,
+      dirB: String): Unit = {
+    import s.implicits._
+    val (files, blks, blkLen) = (BulkFiles, BulkBlks, BulkBlkLen)
+    // the SESSION's hadoop conf, broadcast — a fresh empty Configuration
+    // in the task would drop user filesystem settings (s3a credentials/
+    // providers) and silently break on any non-local staging dir
+    val hconf = graft.HadoopConf.broadcast(s)
+    val written = graft.Tables(s, d, "documents")
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+      .as[(Long, String, Long)]
+      .groupByKey(r => (r._1 % files).toInt)
+      .flatMapGroups { (shard, rows) =>
+        val dir = new org.apache.hadoop.fs.Path(dirB)
+        val name = f"filing_$shard%04d.xml"
+        graft.fs.AttemptFile.write(
+            dir.getFileSystem(hconf.value.value), dir, name) { os =>
+          val out = new java.io.PrintWriter(
+            new java.io.OutputStreamWriter(os, "UTF-8"))
+          out.print("<Return xmlns=\"http://www.irs.gov/efile\">\n" +
+            "<ReturnData>\n")
+          rows.toArray.sortBy(_._1).foreach { case (id, lang, nc) =>
+            out.print(s"<Doc>\n<DocId>$id</DocId>\n<LangCd>$lang" +
+              s"</LangCd>\n<CharCount>$nc</CharCount>\n")
+            var i = 0
+            while (i < blks) {
+              val pat = s"b${id}x$i."
+              val sb = new java.lang.StringBuilder(blkLen + pat.length)
+              while (sb.length < blkLen) sb.append(pat)
+              sb.setLength(blkLen)
+              out.print("<Blk>"); out.print(sb); out.print("</Blk>\n")
+              i += 1
             }
-            out.print("</ReturnData>\n</Return>\n")
-          } finally out.close()
-          fs.delete(fin, false)
-          if (!fs.rename(tmp, fin)) fs.delete(tmp, false)
-          Iterator.single(name)
+            out.print("</Doc>\n")
+          }
+          out.print("</ReturnData>\n</Return>\n")
+          out.flush()
         }
-        .collect() // bounded: ≤ BulkFiles shard names
-        .sorted
-      // manifest goes through the SAME Hadoop FS and conf as the shards —
-      // a java.nio local write would strand the manifest on the driver's
-      // disk whenever the staging dir is a remote filesystem
-      val mfs = new org.apache.hadoop.fs.Path(dirB)
-        .getFileSystem(hconf.value.value)
-      val mout = mfs.create(
-        new org.apache.hadoop.fs.Path(dirB, "manifest.txt"), true)
-      try mout.write(written.mkString("\n").getBytes("UTF-8"))
-      finally mout.close()
-    }
+        Iterator.single(name)
+      }
+      .collect() // bounded: ≤ BulkFiles shard names
+      .sorted
+    // manifest goes through the SAME Hadoop FS and conf as the shards —
+    // a java.nio local write would strand the manifest on the driver's
+    // disk whenever the staging dir is a remote filesystem
+    val mfs = new org.apache.hadoop.fs.Path(dirB)
+      .getFileSystem(hconf.value.value)
+    val mout = mfs.create(
+      new org.apache.hadoop.fs.Path(dirB, "manifest.txt"), true)
+    try mout.write(written.mkString("\n").getBytes("UTF-8"))
+    finally mout.close()
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

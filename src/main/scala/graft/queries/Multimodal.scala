@@ -130,60 +130,47 @@ object Multimodal {
     */
   private[graft] val PackShards = 8
 
-  def ensurePackedStaged(s: SparkSession, d: String): String = {
-    import s.implicits._
+  def ensurePackedStaged(s: SparkSession, d: String): String =
     graft.Staging.layout(s, "graft_binpacked", d,
-        s"$d/documents.parquet") { dir =>
-      val shards = PackShards
-      val hconf = graft.HadoopConf.broadcast(s)
-      val idx = t(s, d, "documents").select(col("doc_id")).as[Long]
-        .groupByKey(id => (id % shards).toInt)
-        .flatMapGroups { (shard, rows) =>
-          javax.imageio.ImageIO.setUseCache(false)
-          val fs = new org.apache.hadoop.fs.Path(dir)
-            .getFileSystem(hconf.value.value)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-          // task-retry safety: write to an attempt-unique temp path and
-          // rename into place once complete — a direct create(overwrite)
-          // under speculative execution lets a second attempt truncate
-          // the blob mid-write, leaving bytes that don't match the
-          // winning attempt's index offsets. Content is deterministic
-          // (same sorted ids, same encoder), so whichever complete
-          // attempt's rename wins, the offsets agree.
-          val fin = new org.apache.hadoop.fs.Path(dir, s"shard_$shard.bin")
-          val att = org.apache.spark.TaskContext.get() match {
-            case null => s"local-${java.util.UUID.randomUUID()}"
-            case tc   => s"attempt-${tc.taskAttemptId()}"
-          }
-          val tmp = new org.apache.hadoop.fs.Path(dir,
-            s".shard_$shard.bin.$att")
-          val out = fs.create(tmp, true)
+      s"$d/documents.parquet")(writePacked(s, d, _))
+
+  /** Write the packed shards and their offset index into `dir` (over
+    * whatever a lost attempt left there). Each blob goes through
+    * `graft.fs.AttemptFile`: a second attempt never truncates a blob
+    * whose offsets the index already holds, and content is deterministic
+    * (same sorted ids, same encoder), so whichever attempt wins, the
+    * offsets agree.
+    */
+  private[graft] def writePacked(s: SparkSession, d: String,
+      dir: String): Unit = {
+    import s.implicits._
+    val shards = PackShards
+    val hconf = graft.HadoopConf.broadcast(s)
+    val idx = t(s, d, "documents").select(col("doc_id")).as[Long]
+      .groupByKey(id => (id % shards).toInt)
+      .flatMapGroups { (shard, rows) =>
+        javax.imageio.ImageIO.setUseCache(false)
+        val root = new org.apache.hadoop.fs.Path(dir)
+        graft.fs.AttemptFile.write(root.getFileSystem(hconf.value.value),
+            root, s"shard_$shard.bin") { out =>
           var offset = 0L
-          val entries =
-            try rows.toArray.sorted.map { id =>
-              val w = (id % 16 + 1).toInt; val h = (id % 12 + 1).toInt
-              val img = new java.awt.image.BufferedImage(w, h,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              img.setRGB(0, 0, (id % 0xffffff).toInt)
-              val baos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(img, "png", baos)
-              val bytes = baos.toByteArray
-              out.write(bytes)
-              val e = (s"img_$id.png", shard, offset, bytes.length)
-              offset += bytes.length
-              e
-            }
-            finally out.close()
-          // another attempt's blob may exist; every interleaving of
-          // delete/rename across attempts ends with one COMPLETE blob
-          // (identical bytes), never a truncated mix
-          fs.delete(fin, false)
-          if (!fs.rename(tmp, fin)) fs.delete(tmp, false)
-          entries.iterator
-        }
-        .toDF("fname", "shard", "offset", "len")
-      idx.write.mode("overwrite").parquet(s"$dir/index")
-    }
+          rows.toArray.sorted.map { id =>
+            val w = (id % 16 + 1).toInt; val h = (id % 12 + 1).toInt
+            val img = new java.awt.image.BufferedImage(w, h,
+              java.awt.image.BufferedImage.TYPE_INT_RGB)
+            img.setRGB(0, 0, (id % 0xffffff).toInt)
+            val baos = new java.io.ByteArrayOutputStream()
+            javax.imageio.ImageIO.write(img, "png", baos)
+            val bytes = baos.toByteArray
+            out.write(bytes)
+            val e = (s"img_$id.png", shard, offset, bytes.length)
+            offset += bytes.length
+            e
+          }
+        }.iterator
+      }
+      .toDF("fname", "shard", "offset", "len")
+    idx.write.mode("overwrite").parquet(s"$dir/index")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

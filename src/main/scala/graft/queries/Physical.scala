@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{TableLog, Tables}
 
 /** Physical-layout operators (SURVEY §4.2 rows: partition pruning — static
   * and dynamic — and bucketing): the storage-side levers that matter at
@@ -202,219 +202,21 @@ object Physical {
     ()
   }
 
-  /** Manifest-committed table layout (the Delta/Iceberg transaction-log
-    * shape, reduced to its committing primitive): data files land first,
-    * then ONE atomic rename publishes a numbered manifest listing every
-    * live file — readers resolve the highest committed manifest and scan
-    * only its files. What this buys at 100 TB: a writer that dies after
-    * writing data but before its manifest rename leaves ORPHANS that no
-    * reader ever sees (no partial commits), concurrent readers get
-    * snapshot isolation for free (their manifest never mutates), and old
-    * manifests are retained time-travel points. The staged fixture
-    * commits v0 (o_orderkey % 3 = 0) then v1 (appends % 3 = 1), and then
-    * simulates the crashed writer: the % 3 = 2 slice is written to the
-    * data dir with NO manifest commit — the oracle proves those bytes
-    * are invisible through the manifest read path.
-    */
   private def hfs(s: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** The `part-` files directly under `dir`, as sorted path strings. */
-  private def partFiles(s: SparkSession, dir: String): Seq[String] =
-    hfs(s, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath).filter(_.getName.startsWith("part-"))
-      .map(_.toString).sorted.toSeq
 
   /** A staged layout derived from orders alone — most fixtures here. */
   private def ordersLayout(s: SparkSession, prefix: String, d: String)(
       build: String => Unit): String =
     graft.Staging.layout(s, prefix, d, s"$d/orders.parquet")(build)
 
-  /** `meta` lines (each starting with `#`, e.g. `# batch=3`) ride at the
-    * top of the manifest so a commit can carry transaction markers —
-    * the idempotence token the streaming foreachBatch committer replays
-    * against. Readers skip them.
+  /** Manifest-committed sink (the log itself is [[graft.TableLog]]): the
+    * staged fixture commits v0 (o_orderkey % 3 = 0) then v1 (appends
+    * % 3 = 1), and then simulates the crashed writer: the % 3 = 2 slice
+    * is written to the data dir with NO manifest commit — the oracle
+    * proves those bytes are invisible through the manifest read path.
     */
-  private[graft] def commitManifest(s: SparkSession, path: String,
-      version: Int, files: Seq[String], meta: Seq[String] = Nil): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".v$version%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((meta ++ files).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // the rename IS the commit: a crash before it leaves no manifest, a
-    // crash after it leaves a complete one — never a torn file list
-    require(fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(dir, f"v$version%05d.manifest")),
-      s"manifest v$version commit rename failed")
-  }
-
-  // one lock per log path: the in-process arbiter for version claims —
-  // see commitManifestCas
-  private val casLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Optimistic-concurrency commit (compare-and-swap): base the new file
-    * list on the CURRENT latest version and try to claim the next
-    * version number with a rename — the Delta/Iceberg concurrent-append
-    * protocol reduced to its primitive. The loser re-reads the log,
-    * REBASES its appended files onto the winner's list, and retries.
-    * Append-only (no conflicting rewrites), so a rebase is always safe;
-    * a rewrite-class transaction would instead have to re-validate its
-    * read set before retrying. Returns the version number won.
-    *
-    * Who arbitrates the claim is filesystem-specific, exactly as it is
-    * for every real transaction log:
-    *  - `file:` — POSIX rename silently OVERWRITES, so rename cannot
-    *    arbitrate (two same-version claims would both "succeed" and the
-    *    first commit would vanish — the r14 lost-update bug). The claim
-    *    is instead `link(2)` via [[claimVersion]]: a hard link to an
-    *    existing destination fails ATOMICALLY in the kernel, across
-    *    processes, no check-then-act window. This makes multi-DRIVER
-    *    writers on a shared local/NFS-like mount safe, not just
-    *    documented-unsafe.
-    *  - HDFS/ABFS — rename REFUSES an existing destination atomically;
-    *    the rename itself arbitrates.
-    *  - S3-like connectors whose rename is copy+delete (neither atomic
-    *    nor refuse-existing) — no client-side primitive exists; the
-    *    read-back `# txn=` verification below turns a silently lost
-    *    update into a loud failure, and a conditional-write LogStore or
-    *    external arbiter remains the deployment contract (Delta-on-S3's
-    *    position).
-    * The per-log JVM lock stays as a cheap in-process serializer so
-    * same-driver writers don't burn claim attempts against each other.
-    */
-  private[graft] def commitManifestCas(s: SparkSession, path: String,
-      newFiles: Seq[String], meta: Seq[String] = Nil): Int = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    fs.mkdirs(dir)
-    val lock = casLocks.computeIfAbsent(path, _ => new Object)
-    var attempt = 0
-    while (attempt < 50) {
-      val won = lock.synchronized {
-        val commits = listCommits(s, path)
-        val base =
-          if (commits.isEmpty) Nil
-          else readManifestLines(s, path, commits.last)
-            .filterNot(_.startsWith("#"))
-        // parse-last+1, NOT commits.size: after a log vacuum the count
-        // under-counts and a size-based claim would reuse a version
-        val v = commits.lastOption
-          .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt + 1)
-          .getOrElse(0)
-        // writer-unique txn marker: consumed only by the post-claim
-        // verification (every manifest reader skips `#` lines)
-        val txn = s"# txn=${java.util.UUID.randomUUID()}"
-        // attempt-unique temp: racing writers must never share one
-        val tmp = new org.apache.hadoop.fs.Path(dir,
-          f".v$v%05d.${java.util.UUID.randomUUID()}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write((meta ++ Seq(txn) ++ base ++ newFiles).mkString("\n")
-          .getBytes("UTF-8"))
-        finally out.close()
-        val dst = new org.apache.hadoop.fs.Path(dir, f"v$v%05d.manifest")
-        val claimed = claimVersion(fs, tmp, dst)
-        if (claimed) {
-          // fail-fast against a same-version clobber on stores whose
-          // rename neither refuses nor atomically replaces: a "won"
-          // claim whose destination does not carry OUR txn marker means
-          // another writer overwrote it — losing silently is the one
-          // outcome a transaction log must never have
-          val back = readManifestLines(s, path, dst.getName)
-          if (!back.contains(txn))
-            throw new IllegalStateException(
-              s"CAS commit v$v under $path was overwritten by a " +
-                "concurrent writer after claim — this filesystem's " +
-                "rename cannot arbitrate multi-process commits; use an " +
-                "atomic-rename store or an external arbiter")
-        }
-        fs.delete(tmp, false) // winner: second link / no-op; loser: cleanup
-        if (claimed) Some(v) else None
-      }
-      won match {
-        case Some(v) => return v
-        case None => attempt += 1 // lost the race: rebase and retry
-      }
-    }
-    throw new IllegalStateException(
-      s"CAS commit starved after $attempt attempts under $path")
-  }
-
-  /** Atomically claim `dst` with the content at `tmp`; true iff this
-    * writer won. On `file:` the claim is a hard link — `link(2)` fails
-    * with EEXIST atomically in the kernel, so it arbitrates ACROSS
-    * PROCESSES where POSIX rename (which overwrites) cannot. Elsewhere
-    * it is rename-if-absent, atomic on HDFS-contract stores. Factored
-    * out so the race spec can drive the primitive WITHOUT the per-log
-    * JVM lock — two bare claims of one version must still resolve to
-    * exactly one winner.
-    */
-  private[graft] def claimVersion(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean =
-    if ("file" == fs.getUri.getScheme) {
-      def local(p: org.apache.hadoop.fs.Path) =
-        java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
-      try { java.nio.file.Files.createLink(local(dst), local(tmp)); true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else !fs.exists(dst) && fs.rename(tmp, dst)
-
-  /** The next version number = highest committed version + 1, parsed
-    * from the latest manifest NAME — never `commits.size`: once
-    * [[vacuumLog]] ages out old manifests the count under-counts and a
-    * size-based committer would re-claim (and on POSIX overwrite) a
-    * version number that already exists in histories readers hold.
-    */
-  private[graft] def nextVersion(s: SparkSession, path: String): Int =
-    listCommits(s, path).lastOption
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt + 1)
-      .getOrElse(0)
-
-  /** LOG retention — the manifest-file twin of the data vacuum: keep the
-    * newest `keepLast` manifests, delete the older ones. Time travel
-    * beyond the horizon fails LOUDLY ([[manifestRead]]'s "never
-    * committed" require), never silently serves wrong data, and the data
-    * vacuum stays safe because it derives its keep-set from the
-    * manifests that still exist. Each delete is independent and
-    * idempotent, so no tombstone is needed: a crash mid-truncation just
-    * leaves some extra history. Tombstone/done audit files are kept.
-    */
-  private[graft] def vacuumLog(s: SparkSession, path: String,
-      keepLast: Int): Int = {
-    require(keepLast >= 1, "log retention must keep the live version")
-    val fs = hfs(s, path)
-    val old = listCommits(s, path).dropRight(keepLast)
-    old.foreach(n => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$path/_commits", n), false))
-    old.size
-  }
-
-  /** Committed manifest names under `path/_commits`, version-sorted. */
-  private[graft] def listCommits(s: SparkSession, path: String)
-      : Seq[String] = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")).sorted.toSeq
-  }
-
-  /** Raw lines of one committed manifest (metadata `#` lines included). */
-  private[graft] def readManifestLines(s: SparkSession, path: String,
-      name: String): Seq[String] = {
-    val fs = hfs(s, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_commits", name))
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
   private[graft] def manifestSinkStaged(s: SparkSession, d: String): String =
     ordersLayout(s, "graft_manifest_sink", d) { path =>
       def writeSlice(name: String,
@@ -423,12 +225,12 @@ object Physical {
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").parquet(dir)
-        partFiles(s, dir)
+        TableLog.partFiles(s, dir)
       }
       val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0)
-      commitManifest(s, path, 0, v0)
+      TableLog.commit(s, path, 0, v0)
       val v1 = writeSlice("v1", col("o_orderkey") % 3 === 1)
-      commitManifest(s, path, 1, v0 ++ v1)
+      TableLog.commit(s, path, 1, v0 ++ v1)
       // the crashed writer: bytes on disk, no manifest — must stay
       // invisible to every manifest reader
       writeSlice("orphan", col("o_orderkey") % 3 === 2)
@@ -459,17 +261,17 @@ object Physical {
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").parquet(dir)
-        partFiles(s, dir)
+        TableLog.partFiles(s, dir)
       }
       // the partition axis is the BOUNDED status domain (3 values)
       val statuses = t(s, d, "orders").select("o_orderstatus")
         .distinct().collect().map(_.getString(0)).sorted
       val v0 = statuses.toSeq.flatMap(st =>
         writeSlice(s"v0/status=$st", col("o_orderstatus") === st))
-      commitManifest(s, path, 0, v0)
+      TableLog.commit(s, path, 0, v0)
       val newF = writeSlice("v1/status=F",
         col("o_orderstatus") === "F" && col("o_totalprice") > 150000)
-      commitManifest(s, path, 1,
+      TableLog.commit(s, path, 1,
         v0.filterNot(_.contains("/status=F/")) ++ newF)
       // crashed overwrite of partition O: data on disk, no manifest —
       // must stay invisible to every snapshot
@@ -496,7 +298,7 @@ object Physical {
     */
   private[graft] def mergeSinkStaged(s: SparkSession, d: String): String =
     ordersLayout(s, "graft_merge_sink", d) { path =>
-      def parts(sub: String) = partFiles(s, s"$path/data/$sub")
+      def parts(sub: String) = TableLog.partFiles(s, s"$path/data/$sub")
       // v0: the merge target, range-laid-out on the key so files carry
       // disjoint key ranges — the layout matched-file pruning needs
       t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 2)
@@ -505,7 +307,7 @@ object Physical {
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite").parquet(s"$path/data/v0")
       val v0 = parts("v0")
-      commitManifest(s, path, 0, v0)
+      TableLog.commit(s, path, 0, v0)
       // matched-key band, derived from the key domain (never hardcoded)
       val mx = t(s, d, "orders").agg(max("o_orderkey")).head().getLong(0)
       val lo = math.floor(mx * 0.40).toLong
@@ -533,7 +335,7 @@ object Physical {
       t(s, d, "orders").filter(col("o_orderkey") % 3 === 2)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").parquet(s"$path/data/v1_insert")
-      commitManifest(s, path, 1,
+      TableLog.commit(s, path, 1,
         untouched ++ parts("v1_rewrite") ++ parts("v1_insert"))
       // the crashed second merge: rewrite written, rename never ran —
       // must stay invisible to every manifest reader
@@ -563,22 +365,23 @@ object Physical {
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .repartition(nFiles)
           .write.mode("overwrite").parquet(s"$path/data/$sub")
-        partFiles(s, s"$path/data/$sub")
+        TableLog.partFiles(s, s"$path/data/$sub")
       }
       val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0, 12)
-      commitManifest(s, path, 0, v0)
+      TableLog.commit(s, path, 0, v0)
       val v1 = writeSlice("v1", col("o_orderkey") % 3 === 1, 12)
-      commitManifest(s, path, 1, v0 ++ v1)
+      TableLog.commit(s, path, 1, v0 ++ v1)
       // the compaction: read the LIVE snapshot through the log, rewrite
       // small (one read + one write, no shuffle), publish by reference
-      manifestRead(s, path, Some(1))
+      TableLog.scan(s, path, Some(1))
         .coalesce(3)
         .write.mode("overwrite").parquet(s"$path/data/compacted")
-      commitManifest(s, path, 2, partFiles(s, s"$path/data/compacted"))
+      TableLog.commit(s, path, 2,
+        TableLog.partFiles(s, s"$path/data/compacted"))
     }
 
   /** Concurrent-append fixture for the CAS committer: v0 seeds the table,
-    * then the %3=1 and %3=2 slices land through [[commitManifestCas]] —
+    * then the %3=1 and %3=2 slices land through [[TableLog.commitCas]] —
     * the path two INDEPENDENT ingest jobs (different sources, same
     * table) take in production, where neither may clobber the other's
     * commit. The fixture commits are sequential (deterministic staging);
@@ -594,17 +397,17 @@ object Physical {
         t(s, d, "orders").filter(p)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").parquet(s"$path/data/$sub")
-        partFiles(s, s"$path/data/$sub")
+        TableLog.partFiles(s, s"$path/data/$sub")
       }
-      commitManifestCas(s, path,
+      TableLog.commitCas(s, path,
         writeSlice("w0", col("o_orderkey") % 3 === 0),
-        Seq("# writer=seed"))
-      commitManifestCas(s, path,
+        Seq("writer" -> "seed"))
+      TableLog.commitCas(s, path,
         writeSlice("w1", col("o_orderkey") % 3 === 1),
-        Seq("# writer=ingest-a"))
-      commitManifestCas(s, path,
+        Seq("writer" -> "ingest-a"))
+      TableLog.commitCas(s, path,
         writeSlice("w2", col("o_orderkey") % 3 === 2),
-        Seq("# writer=ingest-b"))
+        Seq("writer" -> "ingest-b"))
     }
 
   /** Schema evolution through the manifest log — the ALTER TABLE ADD
@@ -620,15 +423,15 @@ object Physical {
     */
   private[graft] def schemaEvoStaged(s: SparkSession, d: String): String =
     ordersLayout(s, "graft_schema_evo", d) { path =>
-      def parts(sub: String) = partFiles(s, s"$path/data/$sub")
+      def parts(sub: String) = TableLog.partFiles(s, s"$path/data/$sub")
       t(s, d, "orders").filter(col("o_orderkey") % 3 === 0)
         .select("o_orderkey", "o_orderstatus")
         .write.mode("overwrite").parquet(s"$path/data/v0")
-      commitManifest(s, path, 0, parts("v0"))
+      TableLog.commit(s, path, 0, parts("v0"))
       t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").parquet(s"$path/data/v1")
-      commitManifest(s, path, 1, parts("v0") ++ parts("v1"))
+      TableLog.commit(s, path, 1, parts("v0") ++ parts("v1"))
     }
 
   /** Range-laid-out orders plus a FILE-STATS manifest (file, min/max of
@@ -656,141 +459,6 @@ object Physical {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/stats")
     }
-
-  /** Read the manifest-committed table at `asOf` (a committed version) or
-    * at the latest commit. Only the listed files are scanned — the data
-    * directory itself is never globbed, which is exactly why orphans and
-    * in-flight writes are invisible.
-    */
-  private[graft] def manifestRead(s: SparkSession, path: String,
-      asOf: Option[Int]): DataFrame = {
-    val commits = listCommits(s, path)
-    require(commits.nonEmpty, s"no committed manifest under $path")
-    val chosen = asOf.fold(commits.last) { v =>
-      val name = f"v$v%05d.manifest"
-      require(commits.contains(name), s"version $v was never committed")
-      name
-    }
-    val files = readManifestLines(s, path, chosen)
-      .filterNot(_.startsWith("#")) // transaction-marker metadata lines
-    s.read.parquet(files: _*)
-  }
-
-  // ---- retention VACUUM over the manifest log ----------------------
-  //
-  // The missing fourth leg of the txn story (write / read / evolve /
-  // GC): versioned manifests keep every superseded and failed write's
-  // files on disk forever, and at 100 TB the orphan pile IS the storage
-  // bill. The protocol is tombstone-then-delete, the only order that is
-  // crash-safe: the tombstone (a committed file list) is written
-  // atomically BEFORE any physical delete, so a vacuum that dies
-  // mid-delete leaves a readable table plus a resumable work list —
-  // deletes are idempotent, so replaying the tombstone finishes the job.
-  // Manifests themselves are never deleted (log retention is a separate
-  // axis, exactly Delta's split): version numbering stays dense for the
-  // CAS committer and expired versions fail on their missing FILES, not
-  // on a missing log entry.
-
-  /** Data files deletable under retention-N: every `part-` file in the
-    * data dir that is (a) not referenced by any of the last `retain`
-    * manifests and (b) not newer than the newest manifest — (b) is the
-    * in-flight-writer guard: a concurrent writer's staged-but-uncommitted
-    * files are younger than the latest commit, while a crashed writer's
-    * orphans age past it. O(#files) metadata, no data read.
-    */
-  private[graft] def vacuumPlan(s: SparkSession, path: String,
-      retain: Int): Seq[String] = {
-    val fs = hfs(s, path)
-    val commits = listCommits(s, path)
-    require(retain >= 1, "retention must keep at least the live version")
-    require(commits.nonEmpty, s"no committed manifest under $path")
-    val keep = commits.takeRight(retain).flatMap(c =>
-      readManifestLines(s, path, c).filterNot(_.startsWith("#")))
-      .map(f => new org.apache.hadoop.fs.Path(f).toString).toSet
-    val latestMtime = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$path/_commits/${commits.last}")).getModificationTime
-    val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(dataDir)) {
-      val it = fs.listFiles(dataDir, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.startsWith("part-") &&
-          !keep.contains(f.getPath.toString) &&
-          f.getModificationTime <= latestMtime) out += f.getPath.toString
-      }
-    }
-    out.sorted.toSeq
-  }
-
-  /** Commit the vacuum's work list as a numbered tombstone under
-    * `_commits` (same tmp+rename atomicity as a manifest; the
-    * `.tombstone` suffix keeps it out of [[listCommits]]). Returns None
-    * when nothing is deletable. A tombstoned file is CONDEMNED — readers
-    * at retained versions never referenced it, so publishing the list
-    * before deleting loses nothing and gains restartability.
-    */
-  private[graft] def vacuumTombstone(s: SparkSession, path: String,
-      retain: Int): Option[String] = {
-    val doomed = vacuumPlan(s, path, retain)
-    if (doomed.isEmpty) None
-    else {
-      val fs = hfs(s, path)
-      val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-      val n = fs.listStatus(dir).map(_.getPath.getName)
-        .count(_.endsWith(".tombstone"))
-      val name = f"vacuum_$n%05d.tombstone"
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        f".$name.${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(((s"# retain=$retain" +: doomed)
-        .mkString("\n")).getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, name)),
-        s"vacuum tombstone $name commit rename failed")
-      Some(name)
-    }
-  }
-
-  /** Execute (or finish, after a crash) every tombstone that has no
-    * `.done` marker: physically delete its files — idempotent, a missing
-    * file is already-done work — then mark it complete. Returns the
-    * number of delete calls issued. Run at vacuum start AND at recovery:
-    * a vacuum that died between tombstone and deletes resumes here.
-    */
-  private[graft] def vacuumResume(s: SparkSession, path: String): Int = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    if (!fs.exists(dir)) return 0
-    val names = fs.listStatus(dir).map(_.getPath.getName).toSet
-    var deleted = 0
-    names.filter(_.endsWith(".tombstone")).toSeq.sorted.foreach { t =>
-      val done = t.stripSuffix(".tombstone") + ".done"
-      if (!names.contains(done)) {
-        readManifestLines(s, path, t).filterNot(_.startsWith("#"))
-          .foreach { f =>
-            if (fs.delete(new org.apache.hadoop.fs.Path(f), false))
-              deleted += 1
-          }
-        fs.create(new org.apache.hadoop.fs.Path(dir, done), true).close()
-      }
-    }
-    deleted
-  }
-
-  /** Retention-N vacuum: finish any interrupted run, tombstone the
-    * currently deletable set, delete it. Returns (files condemned this
-    * run, delete calls issued including resumed work).
-    */
-  private[graft] def vacuumRetention(s: SparkSession, path: String,
-      retain: Int): (Int, Int) = {
-    val resumed = vacuumResume(s, path)
-    val condemned = vacuumTombstone(s, path, retain)
-      .map(t => readManifestLines(s, path, t)
-        .count(!_.startsWith("#"))).getOrElse(0)
-    val deleted = vacuumResume(s, path)
-    (condemned, resumed + deleted)
-  }
 
   /** Fixture log for the vacuum keys — built so retention-1 has real
     * work: v0 (6 files) and v1 (append, 6 more) are fully superseded by
@@ -820,12 +488,12 @@ object Physical {
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
           .repartition(nFiles)
           .write.mode("overwrite").parquet(s"$path/data/$sub")
-        partFiles(s, s"$path/data/$sub")
+        TableLog.partFiles(s, s"$path/data/$sub")
       }
       val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0, 6)
-      commitManifest(s, path, 0, v0)
+      TableLog.commit(s, path, 0, v0)
       val v1 = writeSlice("v1", col("o_orderkey") % 3 === 1, 6)
-      commitManifest(s, path, 1, v0 ++ v1)
+      TableLog.commit(s, path, 1, v0 ++ v1)
       // crashed writer's orphan — written BEFORE the final commit so the
       // in-flight guard sees it as aged, exactly a real abandoned write
       writeSlice("orphan", col("o_orderkey") % 3 === 2, 2)
@@ -834,7 +502,7 @@ object Physical {
       s.read.parquet((v0 ++ v1): _*)
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$path/data/v2")
-      commitManifest(s, path, 2, partFiles(s, s"$path/data/v2"))
+      TableLog.commit(s, path, 2, TableLog.partFiles(s, s"$path/data/v2"))
     }
 
   /** The downstream replica at v0 for `sink_changefeed_apply` — a
@@ -844,7 +512,7 @@ object Physical {
     */
   private[graft] def cdcReplicaStaged(s: SparkSession, d: String): String =
     ordersLayout(s, "graft_cdc_replica_v0", d)(
-      manifestRead(s, mergeSinkStaged(s, d), Some(0))
+      TableLog.scan(s, mergeSinkStaged(s, d), Some(0))
         .write.mode("overwrite").parquet(_))
 
   /** Deletion-vector sink (merge-on-read deletes, the Delta DV / Iceberg
@@ -864,8 +532,8 @@ object Physical {
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .repartition(4)
         .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0Files = partFiles(s, s"$path/data/v0")
-      commitManifest(s, path, 0, v0Files)
+      val v0Files = TableLog.partFiles(s, s"$path/data/v0")
+      TableLog.commit(s, path, 0, v0Files)
       // v1: merge-on-read delete — capture positions, never rows
       val dvDir = s"$path/dv/v00001"
       s.read.parquet(v0Files: _*)
@@ -876,12 +544,12 @@ object Physical {
         .select("file_path", "row_index")
         .coalesce(1)
         .write.mode("overwrite").parquet(dvDir)
-      commitManifest(s, path, 1, v0Files, meta = Seq(s"# dv=$dvDir"))
+      TableLog.commit(s, path, 1, v0Files, Seq("dv" -> dvDir))
       // v2: compaction materializes the DV view and drops the sidecar
       dvRead(s, path, Some(1))
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$path/data/v2")
-      commitManifest(s, path, 2, partFiles(s, s"$path/data/v2"))
+      TableLog.commit(s, path, 2, TableLog.partFiles(s, s"$path/data/v2"))
     }
 
   /** Write-audit-publish sink (the Iceberg-WAP / Delta-branch release
@@ -899,25 +567,25 @@ object Physical {
     ordersLayout(s, "graft_wap_sink", d) { path =>
       def writeFiles(name: String, df: DataFrame): Seq[String] = {
         df.coalesce(2).write.mode("overwrite").parquet(s"$path/data/$name")
-        partFiles(s, s"$path/data/$name")
+        TableLog.partFiles(s, s"$path/data/$name")
       }
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       // v0: the published starting point
       val v0 = writeFiles("v0", base.filter(col("o_orderkey") % 3 < 2))
-      commitManifest(s, path, 0, v0)
-      publishRef(s, path, "main", 0)
+      TableLog.commit(s, path, 0, v0)
+      TableLog.publishRef(s, path, "main", 0)
       // v1: a good append batch — committed, audited, published
       val v1 = v0 ++ writeFiles("v1", base.filter(col("o_orderkey") % 3 === 2))
-      commitManifest(s, path, 1, v1)
-      if (auditPasses(s, path, 1)) publishRef(s, path, "main", 1)
+      TableLog.commit(s, path, 1, v1)
+      if (auditPasses(s, path, 1)) TableLog.publishRef(s, path, "main", 1)
       // v2: a BAD batch (null order keys) — committed, audit rejects,
       // main stays at v1; the commit remains in the log, quarantined
       val bad = base.filter(col("o_orderkey") % 3 === 2)
         .withColumn("o_orderkey", lit(null).cast("long"))
       val v2 = v1 ++ writeFiles("v2", bad)
-      commitManifest(s, path, 2, v2)
-      if (auditPasses(s, path, 2)) publishRef(s, path, "main", 2)
+      TableLog.commit(s, path, 2, v2)
+      if (auditPasses(s, path, 2)) TableLog.publishRef(s, path, "main", 2)
     }
 
   /** The audit gate a candidate version must pass before publishing:
@@ -928,113 +596,15 @@ object Physical {
     */
   private[graft] def auditPasses(s: SparkSession, path: String,
       version: Int): Boolean = {
-    val cand = manifestRead(s, path, Some(version))
-    val pub = readRef(s, path, "main")
-      .map(v => manifestRead(s, path, Some(v)).count()).getOrElse(0L)
+    val cand = TableLog.scan(s, path, Some(version))
+    val pub = TableLog.readRef(s, path, "main")
+      .map(v => TableLog.scan(s, path, Some(v)).count()).getOrElse(0L)
     cand.agg(
         sum(col("o_orderkey").isNull.cast("long")).as("nulls"),
         count(lit(1)).as("n"))
       .collect().headOption.exists(r =>
         r.getLong(0) == 0L && r.getLong(1) >= pub)
   }
-
-  /** Point `ref` at `version` by appending to the ref's own tiny log
-    * (`_refs/<ref>/NNNNN.ref`, last entry wins) — the same write-temp +
-    * rename-one-file primitive as the manifest log, for the same reason:
-    * a mutate-in-place pointer (delete + rename) has a crash window with
-    * NO pointer on filesystems without atomic replace, while an
-    * append-only log always leaves the previous publish serving reads.
-    */
-  private[graft] def publishRef(s: SparkSession, path: String,
-      ref: String, version: Int): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_refs", ref)
-    fs.mkdirs(dir)
-    val seq = refEntries(s, path, ref).lastOption
-      .map(_.stripSuffix(".ref").toInt + 1).getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".$seq%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir,
-      f"$seq%05d.ref")), s"ref $ref publish rename failed")
-  }
-
-  private def refEntries(s: SparkSession, path: String,
-      ref: String): Seq[String] = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_refs", ref)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".ref")).sorted.toSeq
-  }
-
-  /** Resolve a named ref to its published version (None if never
-    * published): the LAST entry of the ref log.
-    */
-  private[graft] def readRef(s: SparkSession, path: String,
-      ref: String): Option[Int] = {
-    refEntries(s, path, ref).lastOption.map { name =>
-      val fs = hfs(s, path)
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_refs/$ref", name))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    }
-  }
-
-  // ---- multi-table atomic commit (pair log) ------------------------
-  //
-  // A fact table and its materialized view each have their own manifest
-  // log; committing them one-at-a-time opens the classic cross-table
-  // window where a reader resolves NEW fact + OLD view (a dashboard
-  // that disagrees with its drill-down). The pair log closes it with
-  // the same one-file-rename primitive as everything else in this
-  // family: one appended record carries BOTH version numbers, so the
-  // (fact, view) pair advances atomically or not at all — a writer
-  // that dies between the two single-table commits has published
-  // nothing (the new versions exist in their logs but no pair record
-  // points at them), exactly Delta's multi-table-transaction gap and
-  // the reason engines that close it (e.g. a catalog-level commit)
-  // arbitrate through ONE atomic pointer swap.
-
-  /** Append a (factVersion, viewVersion) record to `path/_pairs` —
-    * write-temp + rename-one-file, append-only, last record wins.
-    */
-  private[graft] def pairCommit(s: SparkSession, path: String,
-      factV: Int, viewV: Int): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_pairs")
-    fs.mkdirs(dir)
-    val seq = pairEntries(s, path).lastOption
-      .map(_.stripSuffix(".pair").toInt + 1).getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".$seq%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$factV,$viewV".getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir,
-      f"$seq%05d.pair")), "pair commit rename failed")
-  }
-
-  private def pairEntries(s: SparkSession, path: String): Seq[String] = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_pairs")
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".pair")).sorted.toSeq
-  }
-
-  /** Resolve the latest atomically-published (fact, view) version pair. */
-  private[graft] def readPair(s: SparkSession,
-      path: String): Option[(Int, Int)] =
-    pairEntries(s, path).lastOption.map { name =>
-      val fs = hfs(s, path)
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_pairs", name))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim
-      finally in.close()
-      val Array(f, v) = txt.split(",")
-      (f.toInt, v.toInt)
-    }
 
   /** Pair-transaction fixture: the VIEW gets its own manifest log under
     * `$path/view` (v0 = per-status aggregate of the merge target's v0
@@ -1049,15 +619,15 @@ object Physical {
     ordersLayout(s, "graft_pair_txn", d) { path =>
       val mp = mergeSinkStaged(s, d)
       Seq(0, 1).foreach { v =>
-        manifestRead(s, mp, Some(v))
+        TableLog.scan(s, mp, Some(v))
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$path/view/data/v$v")
-        commitManifest(s, s"$path/view", v,
-          partFiles(s, s"$path/view/data/v$v"))
-        pairCommit(s, path, v, v)
+        TableLog.commit(s, s"$path/view", v,
+          TableLog.partFiles(s, s"$path/view/data/v$v"))
+        TableLog.pairCommit(s, path, v, v)
       }
     }
 
@@ -1074,16 +644,15 @@ object Physical {
   private[graft] def cloneSinkStaged(s: SparkSession, d: String): String =
     ordersLayout(s, "graft_clone_sink", d) { path =>
       val src = mergeSinkStaged(s, d)
-      val srcFiles = readManifestLines(s, src, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
-      commitManifest(s, path, 0, srcFiles)
+      val srcFiles = TableLog.snapshot(s, src, Some(1)).files
+      TableLog.commit(s, path, 0, srcFiles)
       t(s, d, "orders").filter(col("o_orderkey") % 3 === 2)
         .select(col("o_orderkey"), lit("C").as("o_orderstatus"),
           col("o_totalprice"))
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$path/data/append")
-      commitManifest(s, path, 1,
-        srcFiles ++ partFiles(s, s"$path/data/append"))
+      TableLog.commit(s, path, 1,
+        srcFiles ++ TableLog.partFiles(s, s"$path/data/append"))
     }
 
   /** Partition-evolution sink (the Iceberg partition-spec-change shape):
@@ -1107,8 +676,8 @@ object Physical {
       base.filter(col("o_orderkey") % 2 === 0)
         .repartition(2) // coalesce(2) on a 1-file source stays 1 file
         .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0 = partFiles(s, s"$path/data/v0")
-      commitManifest(s, path, 0, v0)
+      val v0 = TableLog.partFiles(s, s"$path/data/v0")
+      TableLog.commit(s, path, 0, v0)
       // the evolved append: hive-partitioned, one file per status
       base.filter(col("o_orderkey") % 2 === 1)
         .repartition(1)
@@ -1118,11 +687,10 @@ object Physical {
         .filter(_.getPath.getName.startsWith("o_orderstatus="))
         .flatMap { dir =>
           val v = dir.getPath.getName.stripPrefix("o_orderstatus=")
-          fs.listStatus(dir.getPath)
-            .map(_.getPath).filter(_.getName.startsWith("part-"))
+          TableLog.partFiles(s, dir.getPath.toString)
             .map(p => s"$p|o_orderstatus=$v")
         }.sorted.toSeq
-      commitManifest(s, path, 1, v0 ++ v1)
+      TableLog.commit(s, path, 1, v0 ++ v1)
     }
 
   /** Read the partition-evolved table, optionally pruning evolved files
@@ -1135,9 +703,8 @@ object Physical {
     */
   private[graft] def partEvoRead(s: SparkSession, path: String,
       status: Option[String]): (DataFrame, Int, Int) = {
-    val lines = readManifestLines(s, path,
-      listCommits(s, path).last).filterNot(_.startsWith("#"))
-    val (evolved, plain) = lines.partition(_.contains("|o_orderstatus="))
+    val (evolved, plain) = TableLog.snapshot(s, path, None).files
+      .partition(_.contains("|o_orderstatus="))
     val byStatus = evolved.map { l =>
       val Array(p, pv) = l.split('|')
       (p, pv.stripPrefix("o_orderstatus="))
@@ -1166,17 +733,9 @@ object Physical {
     */
   private[graft] def dvRead(s: SparkSession, path: String,
       asOf: Option[Int]): DataFrame = {
-    val commits = listCommits(s, path)
-    require(commits.nonEmpty, s"no committed manifest under $path")
-    val chosen = asOf.fold(commits.last) { v =>
-      val name = f"v$v%05d.manifest"
-      require(commits.contains(name), s"version $v was never committed")
-      name
-    }
-    val lines = readManifestLines(s, path, chosen)
-    val files = lines.filterNot(_.startsWith("#"))
-    val dvs = lines.filter(_.startsWith("# dv="))
-      .map(_.stripPrefix("# dv="))
+    val snap = TableLog.snapshot(s, path, asOf)
+    val files = snap.files
+    val dvs = snap.values("dv")
     if (dvs.isEmpty) s.read.parquet(files: _*)
     else {
       val dv = dvs.map(s.read.parquet(_)).reduce(_ unionByName _)
@@ -1199,134 +758,17 @@ object Physical {
     */
   private[graft] def ivmViewStaged(s: SparkSession, d: String): String =
     ordersLayout(s, "graft_ivm_view_v0", d)(
-      manifestRead(s, mergeSinkStaged(s, d), Some(0))
+      TableLog.scan(s, mergeSinkStaged(s, d), Some(0))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n0"),
           sum(col("o_totalprice").cast("decimal(18,2)")).as("rev0"))
         .write.mode("overwrite").parquet(_))
 
-  // ---- DELTA-manifest log with periodic checkpoints ------------------
-  //
-  // The full-list manifest log above re-states every live file per
-  // version — one read resolves any version, but each commit is
-  // O(table files). A DELTA log (each commit records only +added /
-  // -removed paths, the Delta-Lake json / Iceberg manifest-list shape)
-  // makes commits O(changed files) — and then a reader is O(versions)
-  // unless checkpoints exist: a periodic full snapshot
-  // (`v%05d.checkpoint`) plus a `_last_checkpoint` pointer, so a read
-  // opens the pointer, one checkpoint, and exactly (v − ck) delta
-  // manifests however long the history grows. That pointer-hop is the
-  // entire reason a 100 TB table with 100k commits still plans in
-  // milliseconds.
-
-  private[graft] def deltaLogCommit(s: SparkSession, path: String,
-      version: Int, added: Seq[String], removed: Seq[String]): Unit =
-    commitManifest(s, path, version,
-      removed.map("-" + _) ++ added.map("+" + _))
-
-  /** Full snapshot at `version` + the `_last_checkpoint` pointer —
-    * pointer written LAST, so a crash between the two leaves readers on
-    * the previous checkpoint (slower, never wrong).
-    */
-  private[graft] def writeCheckpoint(s: SparkSession, path: String,
-      version: Int, files: Seq[String]): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".v$version%05d.cktmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(dir, f"v$version%05d.checkpoint")),
-      s"checkpoint v$version rename failed")
-    // the pointer gets the same tmp+rename treatment as the checkpoint:
-    // an in-place create() leaves a torn/empty pointer on a mid-write
-    // crash, turning every latest-read into a parse failure
-    val ptmp = new org.apache.hadoop.fs.Path(dir, "._last_checkpoint.tmp")
-    val p = fs.create(ptmp, true)
-    try p.write(version.toString.getBytes("UTF-8"))
-    finally p.close()
-    val ptr = new org.apache.hadoop.fs.Path(dir, "_last_checkpoint")
-    // delete-then-rename is NOT atomic (rename-over is not atomic-replace
-    // on HDFS): a crash or failed rename in this window leaves no pointer
-    // until the next checkpoint, and the latest-read then degrades to the
-    // listing scan in [[checkpointResolve]] — slower, never wrong. So a
-    // failed delete (stale pointer survives: still correct, extra deltas
-    // replay) or failed rename is tolerated, not fatal: the pointer is a
-    // read optimization, the checkpoint file above is the commit.
-    if (fs.delete(ptr, false) || !fs.exists(ptr)) {
-      if (!fs.rename(ptmp, ptr))
-        System.err.println("[checkpoint] _last_checkpoint rename failed — " +
-          "latest-read falls back to the listing scan until the next publish")
-    } else {
-      // delete failed with the pointer still present: the STALE pointer
-      // survives (correct — extra deltas replay on top of the older
-      // checkpoint), but a persistently failing delete must be visible,
-      // not silent (r19 ADVICE); drop the orphaned tmp so repeated
-      // publishes don't accumulate
-      System.err.println(s"[checkpoint] _last_checkpoint delete failed — " +
-        s"stale pointer (pre-v$version) kept; extra deltas replay until " +
-        "the next successful publish")
-      try fs.delete(ptmp, false) catch { case _: Throwable => () }
-    }
-  }
-
-  /** Resolve the live file set at `asOf` (None = latest): latest read
-    * follows `_last_checkpoint` (one pointer read — no log listing scan
-    * for the checkpoint), time-travel scans the listing for the newest
-    * checkpoint ≤ asOf; then exactly (asOf − ck) delta manifests replay
-    * on top. Returns (files, checkpointVersion, deltasOpened) so the
-    * spec can count the opens.
-    */
-  private[graft] def checkpointResolve(s: SparkSession, path: String,
-      asOf: Option[Int]): (Seq[String], Int, Int) = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    val names = fs.listStatus(dir).map(_.getPath.getName)
-    def ver(n: String, suf: String) =
-      n.stripPrefix("v").stripSuffix(suf).toInt
-    val target = asOf.getOrElse(
-      names.filter(_.endsWith(".manifest")).map(ver(_, ".manifest")).max)
-    val ck = asOf match {
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(dir, "_last_checkpoint")
-        val pointed =
-          if (!fs.exists(p)) None
-          else {
-            val in = fs.open(p)
-            val raw =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            // a torn/empty pointer (crash mid-write on a non-atomic FS)
-            // degrades to the listing scan — slower, never wrong
-            raw.trim.toIntOption
-          }
-        pointed.getOrElse(
-          names.filter(_.endsWith(".checkpoint"))
-            .map(ver(_, ".checkpoint")).sorted.lastOption.getOrElse(-1))
-      case Some(v) =>
-        names.filter(_.endsWith(".checkpoint")).map(ver(_, ".checkpoint"))
-          .filter(_ <= v).sorted.lastOption.getOrElse(-1)
-    }
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    if (ck >= 0)
-      live ++= readManifestLines(s, path, f"v$ck%05d.checkpoint")
-    var opened = 0
-    ((ck + 1) to target).foreach { v =>
-      readManifestLines(s, path, f"v$v%05d.manifest").foreach { l =>
-        if (l.startsWith("+")) live += l.drop(1)
-        else if (l.startsWith("-")) live -= l.drop(1)
-      }
-      opened += 1
-    }
-    (live.toSeq, ck, opened)
-  }
-
   /** The checkpointed-log fixture: 10 delta commits over orders slices
     * (o_orderkey mod 10), a mid-history COMPACTION (v6 removes the
     * first three slices' files and adds one compacted file — removals
     * are what make delta semantics non-trivial), checkpoints at v4 and
-    * v8, `_last_checkpoint` → 8. The live set at v9 is exactly the
+    * v8, the checkpoint pointer → 8. The live set at v9 is exactly the
     * full orders table through a mixed lineage (compacted + original
     * files), so the aggregate has a plain oracle.
     */
@@ -1339,7 +781,7 @@ object Physical {
           n: Int): Seq[String] = {
         base.filter(p).repartition(n)
           .write.mode("overwrite").parquet(s"$path/data/$name")
-        partFiles(s, s"$path/data/$name")
+        TableLog.partFiles(s, s"$path/data/$name")
       }
       var live = Vector.empty[String]
       val bySlice = scala.collection.mutable.Map.empty[Int, Seq[String]]
@@ -1350,24 +792,24 @@ object Physical {
           bySlice(sl) = fls
           fls
         }
-        deltaLogCommit(s, path, v, added, Nil)
+        TableLog.deltaCommit(s, path, v, added, Nil)
         live ++= added
       }
       commitAdd(0, Seq(0), 2)
       (1 to 5).foreach(v => commitAdd(v, Seq(v), 1))
-      writeCheckpoint(s, path, 4, live.take(
+      TableLog.writeCheckpoint(s, path, 4, live.take(
         bySlice(0).size + bySlice(1).size + bySlice(2).size +
           bySlice(3).size + bySlice(4).size))
       // v6: compaction — slices 0..2 rewritten as ONE file
       val doomed = (0 to 2).flatMap(bySlice(_))
       s.read.parquet(doomed: _*).coalesce(1)
         .write.mode("overwrite").parquet(s"$path/data/compact012")
-      val compacted = partFiles(s, s"$path/data/compact012")
-      deltaLogCommit(s, path, 6, compacted, doomed)
+      val compacted = TableLog.partFiles(s, s"$path/data/compact012")
+      TableLog.deltaCommit(s, path, 6, compacted, doomed)
       live = live.filterNot(doomed.toSet) ++ compacted
       commitAdd(7, Seq(6), 1)
       commitAdd(8, Seq(7), 1)
-      writeCheckpoint(s, path, 8, live)
+      TableLog.writeCheckpoint(s, path, 8, live)
       commitAdd(9, Seq(8, 9), 1)
     }
 
@@ -1394,7 +836,7 @@ object Physical {
     graft.Staging.layout(s, "graft_join_ivm2", d,
         s"$d/orders.parquet", s"$d/customer.parquet") { path =>
       val fs = hfs(s, path)
-      def parts(sub: String) = partFiles(s, s"$path/data/$sub")
+      def parts(sub: String) = TableLog.partFiles(s, s"$path/data/$sub")
       // ---- fact log ----
       val fact0 = t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 2)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1402,7 +844,7 @@ object Physical {
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite").parquet(s"$path/data/f0")
       val f0 = parts("f0")
-      commitManifest(s, s"$path/fact", 0, f0)
+      TableLog.commit(s, s"$path/fact", 0, f0)
       val mx = t(s, d, "orders").agg(max("o_orderkey")).head().getLong(0)
       val lo = math.floor(mx * 0.40).toLong
       val hi = math.floor(mx * 0.50).toLong
@@ -1423,7 +865,7 @@ object Physical {
       t(s, d, "orders").filter(col("o_orderkey") % 3 === 2)
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .write.mode("overwrite").parquet(s"$path/data/f1_insert")
-      commitManifest(s, s"$path/fact", 1,
+      TableLog.commit(s, s"$path/fact", 1,
         untouched ++ parts("f1_rewrite") ++ parts("f1_insert"))
       // ---- dim log ----
       val dim0 = t(s, d, "customer")
@@ -1431,14 +873,14 @@ object Physical {
       dim0.repartitionByRange(4, col("c_custkey"))
         .sortWithinPartitions("c_custkey")
         .write.mode("overwrite").parquet(s"$path/data/d0")
-      commitManifest(s, s"$path/dim", 0, parts("d0"))
+      TableLog.commit(s, s"$path/dim", 0, parts("d0"))
       dim0.withColumn("seg",
           when(col("c_custkey") % 50 === 0, lit("REASSIGNED"))
             .otherwise(col("seg")))
         .repartitionByRange(4, col("c_custkey"))
         .sortWithinPartitions("c_custkey")
         .write.mode("overwrite").parquet(s"$path/data/d1")
-      commitManifest(s, s"$path/dim", 1, parts("d1"))
+      TableLog.commit(s, s"$path/dim", 1, parts("d1"))
       // ---- materialized subview (per-custkey fact aggregate at v0) --
       fact0.groupBy("o_custkey")
         .agg(count(lit(1)).as("a_n"),
@@ -1484,8 +926,7 @@ object Physical {
       naive: Boolean): DataFrame = {
     val p = joinIvmStaged(s, d)
     def files(log: String, v: Int): Seq[String] =
-      readManifestLines(s, s"$p/$log", f"v$v%05d.manifest")
-        .filterNot(_.startsWith("#"))
+      TableLog.snapshot(s, s"$p/$log", Some(v)).files
     def factPart(fls: Seq[String], sign: Int): Option[DataFrame] =
       if (fls.isEmpty) None
       else Some(s.read.parquet(fls: _*)
@@ -1829,30 +1270,14 @@ object Physical {
     "sink_manifest_vacuum" -> ((s, d) => {
       import s.implicits._
       val path = manifestSinkStaged(s, d)
-      val fs = hfs(s, path)
-      val commits = fs.listStatus(
-          new org.apache.hadoop.fs.Path(path, "_commits"))
-        .map(_.getPath.getName).filter(_.endsWith(".manifest")).sorted
-      val referenced = commits.flatMap { c =>
-        val in = fs.open(
-          new org.apache.hadoop.fs.Path(s"$path/_commits", c))
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toArray
-        finally in.close()
-      }.toSet
-      val it = fs.listFiles(
-        new org.apache.hadoop.fs.Path(s"$path/data"), true)
-      val orphans = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.startsWith("part-") &&
-          !referenced.contains(f.toString)) orphans += f.toString
-      }
-      val rowsLive = manifestRead(s, path, None).count()
+      val versions = TableLog.versions(s, path)
+      val orphans = TableLog.unreferenced(s, path, versions.size,
+        inflightGuard = false)
+      val rowsLive = TableLog.scan(s, path, None).count()
       val rowsOrphaned =
         if (orphans.isEmpty) 0L
-        else s.read.parquet(orphans.toSeq: _*).count()
-      Seq((commits.length.toLong, rowsLive, rowsOrphaned))
+        else s.read.parquet(orphans: _*).count()
+      Seq((versions.size.toLong, rowsLive, rowsOrphaned))
         .toDF("versions_retained", "rows_live", "rows_orphaned")
     }),
 
@@ -1869,19 +1294,10 @@ object Physical {
     // which is the storage bill at 100 TB).
     "sink_vacuum_retention" -> ((s, d) => {
       val path = vacuumSinkStaged(s, d)
-      vacuumRetention(s, path, retain = 1)
-      val fs = hfs(s, path)
-      val keep = readManifestLines(s, path, listCommits(s, path).last)
-        .filterNot(_.startsWith("#"))
-        .map(f => new org.apache.hadoop.fs.Path(f).toString).toSet
-      var leftover = 0L
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$path/data"), true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.startsWith("part-") && !keep.contains(f.toString))
-          leftover += 1
-      }
-      manifestRead(s, path, None)
+      TableLog.vacuumRetention(s, path, retain = 1)
+      val leftover = TableLog.unreferenced(s, path, retain = 1,
+        inflightGuard = false).size.toLong
+      TableLog.scan(s, path, None)
         .agg(count(lit(1)).as("rows_live"),
           countDistinct("o_orderstatus").as("n_status"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -1902,10 +1318,10 @@ object Physical {
     // still hold — VacuumSpec pins post-truncation appends.
     "sink_vacuum_log" -> ((s, d) => {
       val path = vacuumSinkStaged(s, d)
-      vacuumRetention(s, path, retain = 1)
-      vacuumLog(s, path, keepLast = 1)
-      val versions = listCommits(s, path).size.toLong
-      manifestRead(s, path, None)
+      TableLog.vacuumRetention(s, path, retain = 1)
+      TableLog.vacuumLog(s, path, keepLast = 1)
+      val versions = TableLog.versions(s, path).size.toLong
+      TableLog.scan(s, path, None)
         .agg(count(lit(1)).as("rows_live"),
           countDistinct("o_orderstatus").as("n_status"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -1917,7 +1333,7 @@ object Physical {
     // of it: per retention level, how many files (and how many rows /
     // how much revenue they carry) become reclaimable, WITHOUT deleting
     // anything. Derivation is the same keep-set algebra the real vacuum
-    // commits as its tombstone ([[vacuumPlan]]), run against a
+    // commits as its tombstone ([[TableLog.vacuumPlan]]), run against a
     // dedicated never-vacuumed copy of the fixture so the numbers are
     // deterministic regardless of when the destructive keys ran. Work
     // is O(#files) metadata per level plus one scan of ONLY the doomed
@@ -1927,7 +1343,7 @@ object Physical {
       val path = vacuumReportSinkStaged(s, d)
       import s.implicits._
       Seq(1, 2, 3).map { n =>
-        val doomed = vacuumPlan(s, path, n)
+        val doomed = TableLog.vacuumPlan(s, path, n)
         val (rows, rev) =
           if (doomed.isEmpty) (0L, 0.0)
           else {
@@ -1955,12 +1371,12 @@ object Physical {
     "sink_txn_pair" -> ((s, d) => {
       val mp = mergeSinkStaged(s, d)
       val pp = pairTxnStaged(s, d)
-      val (fv, vv) = readPair(s, pp).getOrElse(
+      val (fv, vv) = TableLog.readPair(s, pp).getOrElse(
         throw new IllegalStateException("no published pair"))
-      val view = manifestRead(s, s"$pp/view", Some(vv))
+      val view = TableLog.scan(s, s"$pp/view", Some(vv))
         .select(col("o_orderstatus"), col("n_orders"),
           round(col("rev").cast("double"), 2).as("revenue"))
-      val recomputed = manifestRead(s, mp, Some(fv))
+      val recomputed = TableLog.scan(s, mp, Some(fv))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_recomputed"),
           round(sum(col("o_totalprice").cast("decimal(18,2)"))
@@ -1981,11 +1397,11 @@ object Physical {
     "sink_clone_zero_copy" -> ((s, d) => {
       val src = mergeSinkStaged(s, d)
       val cl = cloneSinkStaged(s, d)
-      val clone = manifestRead(s, cl, None)
+      val clone = TableLog.scan(s, cl, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_clone"),
           round(sum("o_totalprice"), 2).as("rev_clone"))
-      val source = manifestRead(s, src, None)
+      val source = TableLog.scan(s, src, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_src"),
           round(sum("o_totalprice"), 2).as("rev_src"))
@@ -2011,10 +1427,8 @@ object Physical {
     // in VacuumSpec.
     "sink_changefeed_apply" -> ((s, d) => {
       val path = mergeSinkStaged(s, d)
-      val m0 = readManifestLines(s, path, "v00000.manifest")
-        .filterNot(_.startsWith("#"))
-      val m1 = readManifestLines(s, path, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
+      val m0 = TableLog.snapshot(s, path, Some(0)).files
+      val m1 = TableLog.snapshot(s, path, Some(1)).files
       val removed = m0.diff(m1)
       val added = m1.diff(m0)
       val before = s.read.parquet(removed: _*)
@@ -2066,10 +1480,8 @@ object Physical {
     "sink_changefeed_ivm" -> ((s, d) => {
       val path = mergeSinkStaged(s, d)
       val view0 = s.read.parquet(ivmViewStaged(s, d))
-      val m0 = readManifestLines(s, path, "v00000.manifest")
-        .filterNot(_.startsWith("#"))
-      val m1 = readManifestLines(s, path, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
+      val m0 = TableLog.snapshot(s, path, Some(0)).files
+      val m1 = TableLog.snapshot(s, path, Some(1)).files
       def part(files: Seq[String], sign: Int) =
         s.read.parquet(files: _*)
           .groupBy("o_orderstatus")
@@ -2094,7 +1506,7 @@ object Physical {
     }),
 
     // LOG CHECKPOINT — reading a DELTA-manifest log through the
-    // Delta-Lake `_last_checkpoint` pattern: one pointer read, one
+    // Delta-Lake last-checkpoint pointer pattern: one pointer read, one
     // checkpoint read, exactly (v − ck) delta manifests replayed — the
     // log read stays O(commits since checkpoint) however long history
     // grows, without sink_vacuum_log's truncation (time travel to any
@@ -2105,7 +1517,7 @@ object Physical {
     // the oracle pins the read PATH, not just the data.
     "sink_log_checkpoint" -> ((s, d) => {
       val p = checkpointSinkStaged(s, d)
-      val (files, ck, opened) = checkpointResolve(s, p, None)
+      val (files, ck, opened) = TableLog.checkpointResolve(s, p, None)
       s.read.parquet(files: _*)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
@@ -2151,18 +1563,18 @@ object Physical {
           round(sum("o_totalprice"), 2).as("revenue"))
           .select(lit(feature).as("feature"), col("rows_live"),
             col("revenue"))
-      snap("compact_txn", manifestRead(s, compactTxnStaged(s, d), None))
+      snap("compact_txn", TableLog.scan(s, compactTxnStaged(s, d), None))
         .unionByName(snap("delete_vectors",
           dvRead(s, dvSinkStaged(s, d), None)))
         .unionByName(snap("merge_upsert",
-          manifestRead(s, mergeSinkStaged(s, d), None)))
+          TableLog.scan(s, mergeSinkStaged(s, d), None)))
         .unionByName(snap("overwrite_txn",
-          manifestRead(s, txnOverwriteStaged(s, d), None)))
+          TableLog.scan(s, txnOverwriteStaged(s, d), None)))
         .unionByName(snap("partition_evolution",
           partEvoRead(s, partEvoStaged(s, d), None)._1))
         .unionByName(snap("wap_publish", {
           val p = wapSinkStaged(s, d)
-          manifestRead(s, p, Some(readRef(s, p, "main")
+          TableLog.scan(s, p, Some(TableLog.readRef(s, p, "main")
             .getOrElse(sys.error("main ref never published"))))
         }))
         .orderBy("feature")
@@ -2201,15 +1613,15 @@ object Physical {
     // batch and fails the hash.
     "sink_wap_publish" -> ((s, d) => {
       val path = wapSinkStaged(s, d)
-      val v = readRef(s, path, "main")
+      val v = TableLog.readRef(s, path, "main")
         .getOrElse(sys.error("main ref never published"))
-      manifestRead(s, path, Some(v))
+      TableLog.scan(s, path, Some(v))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
         .select(col("o_orderstatus"), col("n_orders"), col("revenue"),
           lit(v.toLong).as("version_published"),
-          lit((listCommits(s, path).size - 1 - v).toLong)
+          lit((TableLog.versions(s, path).size - 1 - v).toLong)
             .as("commits_quarantined"))
         .orderBy("o_orderstatus")
     }),
@@ -2278,7 +1690,7 @@ object Physical {
     // double-count F and see the crashed v2 slice.
     "sink_overwrite_txn" -> ((s, d) => {
       val path = txnOverwriteStaged(s, d)
-      manifestRead(s, path, None)
+      TableLog.scan(s, path, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2293,7 +1705,7 @@ object Physical {
     // exactly the retention window a vacuum honors.
     "sink_overwrite_timetravel" -> ((s, d) => {
       val path = txnOverwriteStaged(s, d)
-      def snap(v: Int) = manifestRead(s, path, Some(v))
+      def snap(v: Int) = TableLog.scan(s, path, Some(v))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2312,7 +1724,7 @@ object Physical {
     // crashed second merge all fail the row/hash compare.
     "sink_merge_upsert" -> ((s, d) => {
       val path = mergeSinkStaged(s, d)
-      manifestRead(s, path, None)
+      TableLog.scan(s, path, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2326,7 +1738,7 @@ object Physical {
     // time-travel point are pinned in TxnOverwriteSpec.
     "sink_compact_txn" -> ((s, d) => {
       val path = compactTxnStaged(s, d)
-      manifestRead(s, path, None)
+      TableLog.scan(s, path, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2345,10 +1757,8 @@ object Physical {
     // from orders.
     "sink_changefeed" -> ((s, d) => {
       val path = mergeSinkStaged(s, d)
-      val m0 = readManifestLines(s, path, "v00000.manifest")
-        .filterNot(_.startsWith("#"))
-      val m1 = readManifestLines(s, path, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
+      val m0 = TableLog.snapshot(s, path, Some(0)).files
+      val m1 = TableLog.snapshot(s, path, Some(1)).files
       val removed = m0.diff(m1) // pre-images: files the merge replaced
       val added = m1.diff(m0)   // post-images: rewrites + inserts
       val before = s.read.parquet(removed: _*)
@@ -2379,8 +1789,7 @@ object Physical {
     // values into them.
     "sink_schema_evolution_txn" -> ((s, d) => {
       val path = schemaEvoStaged(s, d)
-      val files = readManifestLines(s, path, listCommits(s, path).last)
-        .filterNot(_.startsWith("#"))
+      val files = TableLog.snapshot(s, path, None).files
       // mergeSchema: the reader's side of add-column evolution — the
       // footer union is per-file metadata work, no data rewrite
       s.read.option("mergeSchema", "true").parquet(files: _*)
@@ -2399,7 +1808,7 @@ object Physical {
     // spec-driven.
     "sink_concurrent_appends" -> ((s, d) => {
       val path = concurrentAppendStaged(s, d)
-      manifestRead(s, path, None)
+      TableLog.scan(s, path, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2414,7 +1823,7 @@ object Physical {
     // instead of resolving the manifest fails the row/hash compare.
     "sink_manifest_commit" -> ((s, d) => {
       val path = manifestSinkStaged(s, d)
-      manifestRead(s, path, None)
+      TableLog.scan(s, path, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, TimeMode, Trigger}
 
-import graft.Tables
+import graft.{TableLog, Tables}
 
 /** Structured Streaming operators — SURVEY.md §2.B rows B35–B39.
   *
@@ -895,7 +895,7 @@ object StreamingOps {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           commitBatchTxn(s, sink, batch, batchId)
         })
-      graft.queries.Physical.manifestRead(s, sink, None)
+      TableLog.scan(s, sink, None)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
           countDistinct(col("event_id")).as("n_ids"))
@@ -904,7 +904,7 @@ object StreamingOps {
 
     // STREAMING INCREMENTAL VIEW MAINTENANCE — the lakehouse and
     // streaming families tied together: the transaction log ITSELF is
-    // the stream (a file source over the fact sink's `_commits` dir,
+    // the stream (a file source over the fact sink's commit directory,
     // maxFilesPerTrigger=1 → one micro-batch per committed version),
     // and each micro-batch advances a materialized per-status aggregate
     // by exactly that version's FILE-LEVEL diff — the same
@@ -954,7 +954,7 @@ object StreamingOps {
               applyJoinIvmEvent(s, fix, state, log, v)
             }
         })
-      graft.queries.Physical.manifestRead(s, state, None)
+      TableLog.scan(s, state, None)
         .filter(col("n") > 0)
         .select(col("seg"), col("n").as("n_orders"),
           round(col("rev").cast("double"), 2).as("revenue"))
@@ -967,21 +967,19 @@ object StreamingOps {
       runStream(s, s.readStream
         .format("text")
         .option("maxFilesPerTrigger", "1")
-        .load(s"$fact/_commits")
+        .load(TableLog.commitsDir(fact))
         .select(col("_metadata.file_path").as("fp"))
         .writeStream
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", chk)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.select("fp").distinct().collect()
-            .map(r => new org.apache.hadoop.fs.Path(r.getString(0))
-              .getName)
-            .filter(_.endsWith(".manifest"))
-            .map(_.stripPrefix("v").stripSuffix(".manifest").toInt)
+            .flatMap(r => TableLog.manifestVersion(
+              new org.apache.hadoop.fs.Path(r.getString(0)).getName))
             .sorted
             .foreach(v => applyIvmVersion(s, fact, state, v))
         })
-      graft.queries.Physical.manifestRead(s, state, None)
+      TableLog.scan(s, state, None)
         .filter(col("n") > 0)
         .select(col("o_orderstatus"), col("n").as("n_orders"),
           round(col("rev").cast("double"), 2).as("revenue"))
@@ -1031,32 +1029,24 @@ object StreamingOps {
     */
   private[graft] def applyJoinIvmEvent(s: SparkSession, fix: String,
       statePath: String, log: String, version: Int): Unit = {
-    val Physical = graft.queries.Physical
-    val commits = Physical.listCommits(s, statePath)
-    val prevLines =
-      if (commits.isEmpty) Nil
-      else Physical.readManifestLines(s, statePath, commits.last)
-    val prevMeta = prevLines.filter(_.startsWith("#"))
-    val applied = prevMeta.filter(_.startsWith("# applied="))
-      .map(_.stripPrefix("# applied=").trim).toSet
+    val prev = TableLog.latest(s, statePath)
+    val applied = prev.toSeq.flatMap(_.values("applied"))
     if (applied.contains(s"${log}_$version")) return
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def listParts(dir: String): Seq[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
     // current state (bootstrap = the staged v0 snapshots)
-    val auxDir = prevMeta.find(_.startsWith("# aux="))
-      .map(_.stripPrefix("# aux=").trim).getOrElse(s"$fix/aux")
-    val view =
-      if (commits.isEmpty)
+    val auxDir = prev.flatMap(_.marker("aux")).getOrElse(s"$fix/aux")
+    val view = prev match {
+      case None =>
         s.read.parquet(s"$fix/view")
           .select(col("seg"), col("n0").as("n"), col("rev0").as("rev"))
-      else s.read.parquet(prevLines.filterNot(_.startsWith("#")): _*)
+      case Some(p) => s.read.parquet(p.files: _*)
+    }
     def logFiles(l: String, v: Int): Seq[String] =
-      Physical.readManifestLines(s, s"$fix/$l", f"v$v%05d.manifest")
-        .filterNot(_.startsWith("#"))
+      TableLog.snapshot(s, s"$fix/$l", Some(v)).files
+    // the applied set rides forward; the subview pointer is replaced
+    def commit(files: Seq[String], newAuxDir: String): Unit =
+      TableLog.commitNext(s, statePath, prev, files,
+        applied.map("applied" -> _) ++
+          Seq("aux" -> newAuxDir, "applied" -> s"${log}_$version"))
     val (deltaVOpt, newAuxDir) = log match {
       case "dim" =>
         val cur = logFiles("dim", version)
@@ -1134,17 +1124,12 @@ object StreamingOps {
       // over the CURRENT data lines — on bootstrap that means
       // materializing the staged v0 view first, so the manifest's data
       // lines are never empty
-      val dataLines =
-        if (commits.nonEmpty) prevLines.filterNot(_.startsWith("#"))
-        else {
-          val outDir = s"$statePath/data/${log}_$version"
-          view.coalesce(1).write.mode("overwrite").parquet(outDir)
-          listParts(outDir)
-        }
-      Physical.commitManifest(s, statePath,
-        Physical.nextVersion(s, statePath), dataLines,
-        meta = prevMeta.filterNot(_.startsWith("# aux=")) ++
-          Seq(s"# aux=$newAuxDir", s"# applied=${log}_$version"))
+      val dataLines = prev.map(_.files).getOrElse {
+        val outDir = s"$statePath/data/${log}_$version"
+        view.coalesce(1).write.mode("overwrite").parquet(outDir)
+        TableLog.partFiles(s, outDir)
+      }
+      commit(dataLines, newAuxDir)
       return
     }
     val next = view.join(deltaVOpt.get, Seq("seg"), "full_outer")
@@ -1157,10 +1142,7 @@ object StreamingOps {
           .cast("decimal(28,2)").as("rev"))
     val outDir = s"$statePath/data/${log}_$version"
     next.coalesce(1).write.mode("overwrite").parquet(outDir)
-    Physical.commitManifest(s, statePath,
-      Physical.nextVersion(s, statePath), listParts(outDir),
-      meta = prevMeta.filterNot(_.startsWith("# aux=")) ++
-        Seq(s"# aux=$newAuxDir", s"# applied=${log}_$version"))
+    commit(TableLog.partFiles(s, outDir), newAuxDir)
   }
 
   /** Apply ONE fact-log version's file diff to the maintained view —
@@ -1175,18 +1157,14 @@ object StreamingOps {
     */
   private[graft] def applyIvmVersion(s: SparkSession, factPath: String,
       statePath: String, version: Int): Unit = {
-    val Physical = graft.queries.Physical
-    val commits = Physical.listCommits(s, statePath)
-    val prevLines =
-      if (commits.isEmpty) Nil
-      else Physical.readManifestLines(s, statePath, commits.last)
-    val prevMarkers = prevLines.filter(_.startsWith("# applied="))
-    val applied = prevMarkers
-      .map(_.stripPrefix("# applied=").trim.toInt).toSet
-    if (applied.contains(version)) return
+    val last = TableLog.latest(s, statePath)
+    val applied = last.toSeq.flatMap(_.values("applied"))
+    if (applied.contains(version.toString)) return
+    def commit(files: Seq[String]): Unit =
+      TableLog.commitNext(s, statePath, last, files,
+        (applied :+ version.toString).map("applied" -> _))
     def factFiles(v: Int): Seq[String] =
-      Physical.readManifestLines(s, factPath, f"v$v%05d.manifest")
-        .filterNot(_.startsWith("#"))
+      TableLog.snapshot(s, factPath, Some(v)).files
     val cur = factFiles(version)
     val prev = if (version == 0) Nil else factFiles(version - 1)
     def part(files: Seq[String], sign: Int): Option[DataFrame] =
@@ -1203,22 +1181,19 @@ object StreamingOps {
     val deltaOpt = (part(cur.diff(prev), 1) ++ part(prev.diff(cur), -1))
       .reduceOption(_ unionByName _)
     if (deltaOpt.isEmpty) {
-      Physical.commitManifest(s, statePath,
-        Physical.nextVersion(s, statePath),
-        prevLines.filterNot(_.startsWith("#")),
-        meta = prevMarkers :+ s"# applied=$version")
+      commit(last.fold(Seq.empty[String])(_.files))
       return
     }
     val delta = deltaOpt.get
       .groupBy("o_orderstatus")
       .agg(sum("dn").as("dn"),
         sum("drev").cast("decimal(28,2)").as("drev"))
-    val next =
-      if (commits.isEmpty)
+    val next = last match {
+      case None =>
         delta.select(col("o_orderstatus"), col("dn").as("n"),
           col("drev").as("rev"))
-      else
-        s.read.parquet(prevLines.filterNot(_.startsWith("#")): _*)
+      case Some(p) =>
+        s.read.parquet(p.files: _*)
           .join(delta, Seq("o_orderstatus"), "full_outer")
           .select(col("o_orderstatus"),
             (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
@@ -1227,16 +1202,10 @@ object StreamingOps {
               lit(0).cast("decimal(28,2)")) +
               coalesce(col("drev"), lit(0).cast("decimal(28,2)")))
               .cast("decimal(28,2)").as("rev"))
+    }
     val outDir = s"$statePath/data/v$version"
     next.coalesce(1).write.mode("overwrite").parquet(outDir)
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-      .map(_.getPath).filter(_.getName.startsWith("part-"))
-      .map(_.toString).sorted.toSeq
-    Physical.commitManifest(s, statePath,
-      Physical.nextVersion(s, statePath), files,
-      meta = prevMarkers :+ s"# applied=$version")
+    commit(TableLog.partFiles(s, outDir))
   }
 
   /** (sink, checkpoint) for `stream_sink_files` — bound to the staged
@@ -1276,30 +1245,18 @@ object StreamingOps {
     */
   private[graft] def commitBatchTxn(s: SparkSession, sink: String,
       batch: DataFrame, batchId: Long): Unit = {
-    val Physical = graft.queries.Physical
-    val commits = Physical.listCommits(s, sink)
     // every commit carries the FULL committed-batch-id set forward in its
     // markers (see below), so the replay check reads ONE manifest — the
     // previous full-history scan re-read every version's line list per
     // micro-batch, O(commits²) manifest I/O over a long-running stream
-    val prevLines =
-      if (commits.isEmpty) Nil
-      else Physical.readManifestLines(s, sink, commits.last)
-    val prevMarkers = prevLines.filter(_.startsWith("# batch="))
-    val committedIds = prevMarkers
-      .map(_.stripPrefix("# batch=").trim.toLong).toSet
-    if (committedIds.contains(batchId)) return
+    val prev = TableLog.latest(s, sink)
+    val committed = prev.toSeq.flatMap(_.values("batch"))
+    if (committed.contains(batchId.toString)) return
     val dataDir = s"$sink/data/batch_$batchId"
     batch.write.mode("overwrite").parquet(dataDir)
-    val fs = new org.apache.hadoop.fs.Path(sink)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
-      .map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-      .map(_.toString).sorted.toSeq
-    val prev = prevLines.filterNot(_.startsWith("#"))
-    Physical.commitManifest(s, sink, Physical.nextVersion(s, sink),
-      prev ++ files, meta = prevMarkers :+ s"# batch=$batchId")
+    TableLog.commitNext(s, sink, prev,
+      prev.fold(Seq.empty[String])(_.files) ++ TableLog.partFiles(s, dataDir),
+      (committed :+ batchId.toString).map("batch" -> _))
   }
 
   // gap >= 30 min, not >: session_window is end-exclusive (an event at

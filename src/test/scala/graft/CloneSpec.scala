@@ -17,12 +17,8 @@ class CloneSpec extends SparkSpec {
     "stores only its own append") {
     val src = queries.Physical.mergeSinkStaged(spark, sf)
     val cl = queries.Physical.cloneSinkStaged(spark, sf)
-    val srcFiles = queries.Physical
-      .readManifestLines(spark, src, "v00001.manifest")
-      .filterNot(_.startsWith("#")).toSet
-    val cloneV0 = queries.Physical
-      .readManifestLines(spark, cl, "v00000.manifest")
-      .filterNot(_.startsWith("#")).toSet
+    val srcFiles = TableLog.snapshot(spark, src, Some(1)).files.toSet
+    val cloneV0 = TableLog.snapshot(spark, cl, Some(0)).files.toSet
     assert(cloneV0 === srcFiles,
       "clone v0 must be the source snapshot BY REFERENCE — same paths")
     // the clone's own data dir carries nothing but the append
@@ -39,9 +35,7 @@ class CloneSpec extends SparkSpec {
     }
     assert(own.nonEmpty && own.intersect(srcFiles).isEmpty,
       "clone-local storage is exactly the divergent append")
-    val cloneV1 = queries.Physical
-      .readManifestLines(spark, cl, "v00001.manifest")
-      .filterNot(_.startsWith("#")).toSet
+    val cloneV1 = TableLog.snapshot(spark, cl, Some(1)).files.toSet
     assert(cloneV1 === srcFiles ++ own,
       "clone v1 = shared snapshot + its own files")
   }
@@ -50,9 +44,9 @@ class CloneSpec extends SparkSpec {
     "to the source") {
     val src = queries.Physical.mergeSinkStaged(spark, sf)
     queries.Physical.cloneSinkStaged(spark, sf)
-    assert(queries.Physical.listCommits(spark, src).size === 2,
+    assert(TableLog.versions(spark, src).size === 2,
       "cloning must not grow the source log")
-    val srcRead = queries.Physical.manifestRead(spark, src, None)
+    val srcRead = TableLog.scan(spark, src, None)
     assert(srcRead.filter(col("o_orderstatus") === "C").count() === 0L,
       "the clone's 'C' rows must never reach a source read")
   }

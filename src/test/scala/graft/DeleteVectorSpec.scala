@@ -11,17 +11,17 @@ class DeleteVectorSpec extends SparkSpec {
 
   private lazy val path = queries.Physical.dvSinkStaged(spark, sf)
 
-  private def manifest(v: Int): Seq[String] =
-    queries.Physical.readManifestLines(spark, path, f"v$v%05d.manifest")
+  private def manifest(v: Int): TableLog.Snapshot =
+    TableLog.snapshot(spark, path, Some(v))
 
   test("the DV delete carries every v0 data file by reference and adds " +
     "only a sidecar — merge-on-read wrote no data") {
-    val v0 = manifest(0).filterNot(_.startsWith("#"))
-    val v1 = manifest(1).filterNot(_.startsWith("#"))
+    val v0 = manifest(0).files
+    val v1 = manifest(1).files
     assert(v0 === v1, "a DV delete must not rewrite or drop data files")
-    assert(manifest(1).exists(_.startsWith("# dv=")),
+    assert(manifest(1).marker("dv").nonEmpty,
       "v1 must reference its deletion vector")
-    assert(!manifest(2).exists(_.startsWith("# dv=")),
+    assert(manifest(2).marker("dv").isEmpty,
       "compaction must drop the sidecar")
   }
 
@@ -36,8 +36,7 @@ class DeleteVectorSpec extends SparkSpec {
     assert(v0.count() === v1.count() + nDeleted,
       "the mask must drop nothing beyond the predicate rows")
     // the sidecar is positions-only and exactly one row per deleted row
-    val dvPath = manifest(1).find(_.startsWith("# dv="))
-      .get.stripPrefix("# dv=")
+    val dvPath = manifest(1).marker("dv").get
     val dv = spark.read.parquet(dvPath)
     assert(dv.columns.sorted === Array("file_path", "row_index"))
     assert(dv.count() === nDeleted)

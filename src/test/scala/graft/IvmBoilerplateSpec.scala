@@ -14,7 +14,7 @@ class IvmBoilerplateSpec extends SparkSpec {
     "recompute of the latest snapshot, exactly") {
     val ivm = q("sink_changefeed_ivm").collect()
     val path = queries.Physical.mergeSinkStaged(spark, sf)
-    val full = queries.Physical.manifestRead(spark, path, None)
+    val full = TableLog.scan(spark, path, None)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice").cast("decimal(18,2)"))
@@ -33,10 +33,8 @@ class IvmBoilerplateSpec extends SparkSpec {
   test("sink_changefeed_ivm: the log diff leaves carried files " +
     "unread (the O(changed files) claim has a fixture to bite on)") {
     val path = queries.Physical.mergeSinkStaged(spark, sf)
-    val m0 = queries.Physical.readManifestLines(spark, path, "v00000.manifest")
-      .filterNot(_.startsWith("#"))
-    val m1 = queries.Physical.readManifestLines(spark, path, "v00001.manifest")
-      .filterNot(_.startsWith("#"))
+    val m0 = TableLog.snapshot(spark, path, Some(0)).files
+    val m1 = TableLog.snapshot(spark, path, Some(1)).files
     val carried = m0.intersect(m1)
     assert(carried.nonEmpty,
       "fixture must carry at least one file by reference across the merge")

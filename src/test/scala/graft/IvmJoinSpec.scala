@@ -20,8 +20,8 @@ class IvmJoinSpec extends SparkSpec {
     */
   private def recomputeV1() = {
     val p = queries.Physical.joinIvmStaged(spark, sf)
-    val fact = queries.Physical.manifestRead(spark, s"$p/fact", Some(1))
-    val dim = queries.Physical.manifestRead(spark, s"$p/dim", Some(1))
+    val fact = TableLog.scan(spark, s"$p/fact", Some(1))
+    val dim = TableLog.scan(spark, s"$p/dim", Some(1))
     fact.join(dim, col("o_custkey") === col("c_custkey"))
       .groupBy("seg")
       .agg(count(lit(1)).as("n_orders"),
@@ -55,8 +55,7 @@ class IvmJoinSpec extends SparkSpec {
     "belong to customers whose dim row also changed") {
     val p = queries.Physical.joinIvmStaged(spark, sf)
     def files(log: String, v: Int): Seq[String] =
-      queries.Physical.readManifestLines(spark, s"$p/$log",
-        f"v$v%05d.manifest").filterNot(_.startsWith("#"))
+      TableLog.snapshot(spark, s"$p/$log", Some(v)).files
     val added = files("fact", 1).diff(files("fact", 0))
     val crossed = spark.read.parquet(added: _*)
       .filter(col("o_custkey") % 50 === 0).count()
@@ -84,10 +83,10 @@ class IvmJoinSpec extends SparkSpec {
     // must not grow the view log or move its content
     val fix = queries.Physical.joinIvmStaged(spark, sf)
     val (state, _) = streaming.StreamingOps.joinIvmStreamDirs(spark, sf)
-    val before = queries.Physical.listCommits(spark, state)
+    val before = TableLog.versions(spark, state)
     streaming.StreamingOps.applyJoinIvmEvent(spark, fix, state, "dim", 1)
     streaming.StreamingOps.applyJoinIvmEvent(spark, fix, state, "fact", 1)
-    assert(queries.Physical.listCommits(spark, state) === before,
+    assert(TableLog.versions(spark, state) === before,
       "replayed events must not commit")
     assert(rowsOf(q("stream_changefeed_ivm_join")) === batch,
       "state must not move under replay")
@@ -103,7 +102,6 @@ class IvmJoinSpec extends SparkSpec {
     import spark.implicits._
     val fix = java.nio.file.Files
       .createTempDirectory("graft_ivmj_mini").toString
-    val P = queries.Physical
     val fs = new org.apache.hadoop.fs.Path(fix)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def parts(dir: String): Seq[String] =
@@ -119,22 +117,22 @@ class IvmJoinSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_totalprice")
       .coalesce(1).write.parquet(s"$fix/data/f1")
     val f0 = parts(s"$fix/data/f0")
-    P.commitManifest(spark, s"$fix/fact", 0, f0)
-    P.commitManifest(spark, s"$fix/fact", 1,
+    TableLog.commit(spark, s"$fix/fact", 0, f0)
+    TableLog.commit(spark, s"$fix/fact", 1,
       f0 ++ parts(s"$fix/data/f1"))
-    P.commitManifest(spark, s"$fix/fact", 2,
+    TableLog.commit(spark, s"$fix/fact", 2,
       f0 ++ parts(s"$fix/data/f1"))
     // dim: customer 2 moves A→B at v1 and B→C at v2; v3 is a no-op
     def dimVer(v: Int, seg2: String): Seq[String] = {
       Seq((1L, "A"), (2L, seg2)).toDF("c_custkey", "seg")
         .coalesce(1).write.parquet(s"$fix/data/d$v")
       val fls = parts(s"$fix/data/d$v")
-      P.commitManifest(spark, s"$fix/dim", v, fls)
+      TableLog.commit(spark, s"$fix/dim", v, fls)
       fls
     }
     dimVer(0, "A"); dimVer(1, "B")
     val d2 = dimVer(2, "C")
-    P.commitManifest(spark, s"$fix/dim", 3, d2)
+    TableLog.commit(spark, s"$fix/dim", 3, d2)
     // staged v0 subview + view, same shapes as joinIvmStaged's
     spark.read.parquet(f0: _*).groupBy("o_custkey")
       .agg(count(lit(1)).as("a_n"),
@@ -151,10 +149,7 @@ class IvmJoinSpec extends SparkSpec {
   }
 
   private def stateView(state: String) = {
-    val P = queries.Physical
-    val lines =
-      P.readManifestLines(spark, state, P.listCommits(spark, state).last)
-    spark.read.parquet(lines.filterNot(_.startsWith("#")): _*)
+    spark.read.parquet(TableLog.snapshot(spark, state, None).files: _*)
       .filter(col("n") =!= 0)
       .select(col("seg"), col("n"), col("rev").cast("double"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -164,7 +159,6 @@ class IvmJoinSpec extends SparkSpec {
   test("a metadata-only feed event is a structural no-op on both " +
     "branches, and the fact fold joins the DELIVERED dim version") {
     val fix = miniFeedFixture()
-    val P = queries.Physical
     val apply = (log: String, v: Int) => streaming.StreamingOps
       .applyJoinIvmEvent(spark, fix, s"$fix/state", log, v)
     // the feed delivers dim v1 AND v2 before the fact delta: the fold
@@ -174,9 +168,9 @@ class IvmJoinSpec extends SparkSpec {
     assert(afterFact === Seq(("A", 1L, 10.0), ("C", 2L, 25.0)),
       "fact delta must fold against the highest delivered dim version")
     // no-op fact commit: marker-only manifest, view content unchanged
-    val commitsBefore = P.listCommits(spark, s"$fix/state").size
+    val commitsBefore = TableLog.versions(spark, s"$fix/state").size
     apply("fact", 2)
-    assert(P.listCommits(spark, s"$fix/state").size === commitsBefore + 1,
+    assert(TableLog.versions(spark, s"$fix/state").size === commitsBefore + 1,
       "the no-op event must still commit its applied marker")
     assert(stateView(s"$fix/state") === afterFact,
       "a metadata-only fact commit must not move the view")
@@ -185,9 +179,9 @@ class IvmJoinSpec extends SparkSpec {
     assert(stateView(s"$fix/state") === afterFact,
       "a metadata-only dim commit must not move the view")
     // replaying the no-ops must not commit again (idempotence markers)
-    val replayBefore = P.listCommits(spark, s"$fix/state")
+    val replayBefore = TableLog.versions(spark, s"$fix/state")
     apply("fact", 2); apply("dim", 3)
-    assert(P.listCommits(spark, s"$fix/state") === replayBefore,
+    assert(TableLog.versions(spark, s"$fix/state") === replayBefore,
       "replayed no-op events must not commit")
   }
 

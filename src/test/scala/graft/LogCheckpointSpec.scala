@@ -19,14 +19,14 @@ class LogCheckpointSpec extends SparkSpec {
       6 -> (4, 2), 7 -> (4, 3), 8 -> (8, 0), 9 -> (8, 1))
     expect.foreach { case (v, (ck, opened)) =>
       val (_, gotCk, gotOpened) =
-        queries.Physical.checkpointResolve(spark, path, Some(v))
+        TableLog.checkpointResolve(spark, path, Some(v))
       assert((gotCk, gotOpened) === ((ck, opened)),
         s"asOf=$v: expected ck=$ck opened=$opened, " +
           s"got ck=$gotCk opened=$gotOpened")
     }
     // the latest read goes through the pointer, not a listing scan
     val (_, ck, opened) =
-      queries.Physical.checkpointResolve(spark, path, None)
+      TableLog.checkpointResolve(spark, path, None)
     assert(ck === 8 && opened === 1)
   }
 
@@ -34,7 +34,7 @@ class LogCheckpointSpec extends SparkSpec {
     "rows as v5 through different files, and v9 is the full table") {
     def rowsAt(v: Int) = {
       val (files, _, _) =
-        queries.Physical.checkpointResolve(spark, path, Some(v))
+        TableLog.checkpointResolve(spark, path, Some(v))
       spark.read.parquet(files: _*)
     }
     val v5 = rowsAt(5); val v6 = rowsAt(6)
@@ -42,8 +42,8 @@ class LogCheckpointSpec extends SparkSpec {
     assert(v5.agg(sum("o_orderkey")).head().getLong(0) ===
       v6.agg(sum("o_orderkey")).head().getLong(0),
       "compaction must not change content")
-    val (f5, _, _) = queries.Physical.checkpointResolve(spark, path, Some(5))
-    val (f6, _, _) = queries.Physical.checkpointResolve(spark, path, Some(6))
+    val (f5, _, _) = TableLog.checkpointResolve(spark, path, Some(5))
+    val (f6, _, _) = TableLog.checkpointResolve(spark, path, Some(6))
     assert(f5.toSet !== f6.toSet, "compaction must change the file set")
     val full = Tables(spark, sf, "orders").count()
     assert(rowsAt(9).count() === full,
@@ -56,7 +56,7 @@ class LogCheckpointSpec extends SparkSpec {
     // simulate by resolving asOf=9 (listing scan finds ck=8) vs the
     // would-be stale-pointer path: base at ck=4 + replay 5..9
     val (files9, _, _) =
-      queries.Physical.checkpointResolve(spark, path, Some(9))
+      TableLog.checkpointResolve(spark, path, Some(9))
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ckFile = new org.apache.hadoop.fs.Path(
@@ -67,8 +67,7 @@ class LogCheckpointSpec extends SparkSpec {
     finally in.close()
     val live = scala.collection.mutable.LinkedHashSet(base: _*)
     (5 to 9).foreach { v =>
-      queries.Physical.readManifestLines(spark, path,
-        f"v$v%05d.manifest").foreach { l =>
+      TableLog.snapshot(spark, path, Some(v)).files.foreach { l =>
         if (l.startsWith("+")) live += l.drop(1)
         else if (l.startsWith("-")) live -= l.drop(1)
       }
@@ -80,7 +79,7 @@ class LogCheckpointSpec extends SparkSpec {
   test("a torn/empty _last_checkpoint pointer degrades to the listing " +
     "scan instead of failing every latest-read") {
     val (filesOk, ckOk, _) =
-      queries.Physical.checkpointResolve(spark, path, None)
+      TableLog.checkpointResolve(spark, path, None)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ptr = new org.apache.hadoop.fs.Path(s"$path/_commits",
@@ -92,7 +91,7 @@ class LogCheckpointSpec extends SparkSpec {
     try {
       writePtr(Array.emptyByteArray) // the torn-write worst case
       val (filesTorn, ckTorn, _) =
-        queries.Physical.checkpointResolve(spark, path, None)
+        TableLog.checkpointResolve(spark, path, None)
       assert(ckTorn === ckOk,
         "fallback must land on the newest checkpoint from the listing")
       assert(filesTorn.toSet === filesOk.toSet,

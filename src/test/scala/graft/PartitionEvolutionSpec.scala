@@ -13,10 +13,8 @@ class PartitionEvolutionSpec extends SparkSpec {
 
   test("the spec change rewrites nothing: v1 carries every v0 file by " +
     "reference plus partition-annotated appends") {
-    val v0 = queries.Physical.readManifestLines(spark, path,
-      "v00000.manifest").filterNot(_.startsWith("#"))
-    val v1 = queries.Physical.readManifestLines(spark, path,
-      "v00001.manifest").filterNot(_.startsWith("#"))
+    val v0 = TableLog.snapshot(spark, path, Some(0)).files
+    val v1 = TableLog.snapshot(spark, path, Some(1)).files
     assert(v1.filterNot(_.contains("|")).toSet === v0.toSet,
       "pre-evolution files must survive the spec change untouched")
     val evolved = v1.filter(_.contains("|o_orderstatus="))

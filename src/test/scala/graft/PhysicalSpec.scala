@@ -855,7 +855,7 @@ class PhysicalSpec extends SparkSpec {
       orphanDir.listFiles().exists(_.getName.startsWith("part-")),
       "fixture must contain uncommitted orphan files")
     // manifest read (latest = v1) excludes them; a naive dir glob does not
-    val latest = queries.Physical.manifestRead(spark, path, None).count()
+    val latest = TableLog.scan(spark, path, None).count()
     val globbed = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$path/data").count()
     val orders = Tables(spark, sf, "orders")
@@ -867,11 +867,11 @@ class PhysicalSpec extends SparkSpec {
       "sanity: the glob DOES see the orphans the manifest hides")
     assert(globbed > latest)
     // time travel: v0 is exactly the first committed slice
-    val v0 = queries.Physical.manifestRead(spark, path, Some(0)).count()
+    val v0 = TableLog.scan(spark, path, Some(0)).count()
     assert(v0 === orders.filter(col("o_orderkey") % 3 === 0).count())
     // a version that was never committed refuses by name
     val e = intercept[IllegalArgumentException] {
-      queries.Physical.manifestRead(spark, path, Some(7))
+      TableLog.scan(spark, path, Some(7))
     }
     assert(e.getMessage.contains("never committed"))
   }

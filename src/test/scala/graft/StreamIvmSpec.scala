@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class StreamIvmSpec extends SparkSpec {
 
   private def finalView(state: String) =
-    queries.Physical.manifestRead(spark, state, None)
+    TableLog.scan(spark, state, None)
       .filter(col("n") > 0)
       .select(col("o_orderstatus"), col("n").as("n_orders"),
         round(col("rev").cast("double"), 2).as("revenue"))
@@ -28,14 +28,14 @@ class StreamIvmSpec extends SparkSpec {
       val state = s"$tmp/state"
       streaming.StreamingOps.applyIvmVersion(spark, fact, state, 0)
       streaming.StreamingOps.applyIvmVersion(spark, fact, state, 1)
-      val commits = queries.Physical.listCommits(spark, state)
+      val commits = TableLog.versions(spark, state)
       assert(commits.size === 2, "one view version per applied version")
       val before = rowsOf(finalView(state))
       // the replays a crash between view commit and checkpoint advance
       // would produce — both versions, in both orders
       streaming.StreamingOps.applyIvmVersion(spark, fact, state, 1)
       streaming.StreamingOps.applyIvmVersion(spark, fact, state, 0)
-      assert(queries.Physical.listCommits(spark, state) === commits,
+      assert(TableLog.versions(spark, state) === commits,
         "a replay must not append a view version")
       assert(rowsOf(finalView(state)) === before,
         "a replay must not move the view")

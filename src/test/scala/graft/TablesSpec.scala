@@ -98,6 +98,17 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("Tables(spark, dir, \"events\") goes through the same encoding " +
+    "dispatch as Tables.events") {
+    val dir = freshDir()
+    writeNanos(dir)
+    val df = Tables(spark, dir, "events")
+    assert(df.schema("ts").dataType === TimestampType,
+      "a generic events read must normalize ts to TimestampType")
+    assert(df.select(unix_micros(col("ts"))).head().getLong(0) === micros,
+      "a generic events read decoded the wrong instant")
+  }
+
   test("events loader fails loudly (not silently) on an unhandled ts type") {
     val dir = freshDir()
     spark.range(1)

@@ -96,9 +96,9 @@ class TxnOverwriteSpec extends SparkSpec {
   test("merge time travel: v0 serves the pre-merge table (no 'U' rows), " +
     "the latest snapshot has them, the crashed merge stays invisible") {
     import org.apache.spark.sql.functions._
-    val v0 = queries.Physical.manifestRead(spark, mergePath, Some(0))
+    val v0 = TableLog.scan(spark, mergePath, Some(0))
     assert(v0.filter(col("o_orderstatus") === "U").count() === 0L)
-    val latest = queries.Physical.manifestRead(spark, mergePath, None)
+    val latest = TableLog.scan(spark, mergePath, None)
     assert(latest.filter(col("o_orderstatus") === "U").count() > 0L)
     // crashed second merge: bytes on disk, no snapshot reference
     val orphanDir = new java.io.File(s"$mergePath/data/v2_crash")
@@ -128,8 +128,8 @@ class TxnOverwriteSpec extends SparkSpec {
         s"${after.size})")
     assert(after.forall(_.contains("/compacted/")),
       "the compacted snapshot must reference only compacted files")
-    val v1 = queries.Physical.manifestRead(spark, path, Some(1))
-    val v2 = queries.Physical.manifestRead(spark, path, Some(2))
+    val v1 = TableLog.scan(spark, path, Some(1))
+    val v2 = TableLog.scan(spark, path, Some(2))
     assert(v1.count() === v2.count(), "compaction changed the row count")
     // the small files stay referenced by v1 — compaction never deletes
     assert(before.forall(f => new java.io.File(
@@ -145,23 +145,21 @@ class TxnOverwriteSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    queries.Physical.commitManifestCas(spark, path, Seq("seed/file0"))
+    TableLog.commitCas(spark, path, Seq("seed/file0"))
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (1 to 2).map { w =>
       new Thread(() =>
         try (1 to 4).foreach { i =>
-          queries.Physical.commitManifestCas(spark, path,
-            Seq(s"w$w/file$i"), Seq(s"# writer=w$w"))
+          TableLog.commitCas(spark, path,
+            Seq(s"w$w/file$i"), Seq("writer" -> s"w$w"))
         } catch { case t: Throwable => failures.add(t) })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(failures.isEmpty, s"writer thread failed: ${failures.peek()}")
-    val commits = queries.Physical.listCommits(spark, path)
+    val commits = TableLog.versions(spark, path)
     assert(commits.size === 9, s"9 dense versions expected: $commits")
-    val latest = queries.Physical
-      .readManifestLines(spark, path, commits.last)
-      .filterNot(_.startsWith("#"))
+    val latest = TableLog.snapshot(spark, path, None).files
     val expected = Set("seed/file0") ++
       (for (w <- 1 to 2; i <- 1 to 4) yield s"w$w/file$i")
     assert(latest.toSet === expected, "a lost race dropped or duplicated " +
@@ -191,7 +189,7 @@ class TxnOverwriteSpec extends SparkSpec {
         out.write(s"writer$w/file".getBytes("UTF-8")); out.close()
         new Thread(() => {
           gate.await()
-          if (queries.Physical.claimVersion(fs, tmp, dst))
+          if (TableLog.claimVersion(fs, tmp, dst))
             wins.incrementAndGet()
         })
       }
@@ -201,8 +199,7 @@ class TxnOverwriteSpec extends SparkSpec {
         s"round $round: ${wins.get} claimants won version 0 — the claim " +
           "primitive failed to arbitrate")
       // and the winner's content is intact (no torn/clobbered manifest)
-      val lines = queries.Physical.readManifestLines(
-        spark, s"$path/r$round", "v00000.manifest")
+      val lines = TableLog.snapshot(spark, s"$path/r$round", Some(0)).files
       assert(lines.size === 1 && lines.head.matches("writer[12]/file"))
     }
   }
@@ -218,8 +215,8 @@ class TxnOverwriteSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(sink), true)
     def liveRows: Long =
-      queries.Physical.manifestRead(spark, sink, None).count()
-    def commits: Int = queries.Physical.listCommits(spark, sink).size
+      TableLog.scan(spark, sink, None).count()
+    def commits: Int = TableLog.versions(spark, sink).size
     val b0 = Tables.events(spark, sf).limit(5)
     StreamingOps.commitBatchTxn(spark, sink, b0, 0L)
     assert(commits === 1 && liveRows === 5L)
@@ -267,11 +264,11 @@ class TxnOverwriteSpec extends SparkSpec {
   test("time travel: the v0 snapshot still equals the full pre-overwrite " +
     "table after the overwrite landed") {
     import org.apache.spark.sql.functions._
-    val v0 = queries.Physical.manifestRead(spark, path, Some(0))
+    val v0 = TableLog.scan(spark, path, Some(0))
     val expected = Tables(spark, sf, "orders").count()
     assert(v0.count() === expected)
     // and the latest snapshot is strictly smaller on partition F only
-    val latest = queries.Physical.manifestRead(spark, path, None)
+    val latest = TableLog.scan(spark, path, None)
     val byStatus = latest.groupBy("o_orderstatus").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val v0ByStatus = v0.groupBy("o_orderstatus").count().collect()

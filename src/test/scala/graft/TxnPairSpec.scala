@@ -20,7 +20,7 @@ class TxnPairSpec extends SparkSpec {
       .listStatus(new org.apache.hadoop.fs.Path(s"$path/data/v$v"))
       .map(_.getPath).filter(_.getName.startsWith("part-"))
       .map(_.toString).sorted.toSeq
-    queries.Physical.commitManifest(spark, path, v, files)
+    TableLog.commit(spark, path, v, files)
   }
 
   private def viewOf(df: org.apache.spark.sql.DataFrame) =
@@ -43,20 +43,20 @@ class TxnPairSpec extends SparkSpec {
       // txn 0: fact v0 + view v0 + pair record — the bootstrap publish
       commitSlice(s"$tmp/fact", 0, fact0)
       commitSlice(s"$tmp/view", 0, viewOf(fact0))
-      queries.Physical.pairCommit(spark, tmp, 0, 0)
-      assert(queries.Physical.readPair(spark, tmp) === Some((0, 0)))
+      TableLog.pairCommit(spark, tmp, 0, 0)
+      assert(TableLog.readPair(spark, tmp) === Some((0, 0)))
       // txn 1 CRASHES after the fact commit: the new fact version exists
       // in its own log...
       commitSlice(s"$tmp/fact", 1, fact1)
       // ...but the published pair is UNCHANGED, and reading through it
       // is consistent — the view equals a recompute from the SAME fact
       // version the pair names, not from the log head
-      assert(queries.Physical.readPair(spark, tmp) === Some((0, 0)))
-      val (fv, vv) = queries.Physical.readPair(spark, tmp).get
-      val view = queries.Physical
-        .manifestRead(spark, s"$tmp/view", Some(vv))
-      val recompute = viewOf(queries.Physical
-        .manifestRead(spark, s"$tmp/fact", Some(fv)))
+      assert(TableLog.readPair(spark, tmp) === Some((0, 0)))
+      val (fv, vv) = TableLog.readPair(spark, tmp).get
+      val view = TableLog
+        .scan(spark, s"$tmp/view", Some(vv))
+      val recompute = viewOf(TableLog
+        .scan(spark, s"$tmp/fact", Some(fv)))
       assert(rowsOf(view) === rowsOf(recompute),
         "the pair-resolved (fact, view) must agree exactly")
       // a torn pair-log temp (crash mid-publish) is equally invisible
@@ -64,16 +64,16 @@ class TxnPairSpec extends SparkSpec {
       val torn = new org.apache.hadoop.fs.Path(dir, ".00001.tmp")
       val out = hfs(tmp).create(torn, true)
       try out.write("1,1".getBytes("UTF-8")) finally out.close()
-      assert(queries.Physical.readPair(spark, tmp) === Some((0, 0)))
+      assert(TableLog.readPair(spark, tmp) === Some((0, 0)))
       hfs(tmp).delete(torn, false)
       // recovery completes the transaction: view v1, then ONE pair
       // record flips readers to the new consistent pair
       commitSlice(s"$tmp/view", 1, viewOf(fact1))
-      queries.Physical.pairCommit(spark, tmp, 1, 1)
-      assert(queries.Physical.readPair(spark, tmp) === Some((1, 1)))
-      val v1 = queries.Physical.manifestRead(spark, s"$tmp/view", Some(1))
-      val r1 = viewOf(queries.Physical
-        .manifestRead(spark, s"$tmp/fact", Some(1)))
+      TableLog.pairCommit(spark, tmp, 1, 1)
+      assert(TableLog.readPair(spark, tmp) === Some((1, 1)))
+      val v1 = TableLog.scan(spark, s"$tmp/view", Some(1))
+      val r1 = viewOf(TableLog
+        .scan(spark, s"$tmp/fact", Some(1)))
       assert(rowsOf(v1) === rowsOf(r1))
     } finally {
       org.apache.commons.io.FileUtils
@@ -83,7 +83,7 @@ class TxnPairSpec extends SparkSpec {
 
   test("the staged pair fixture resolves (1, 1) — the post-merge pair") {
     val pp = queries.Physical.pairTxnStaged(spark, sf)
-    assert(queries.Physical.readPair(spark, pp) === Some((1, 1)))
+    assert(TableLog.readPair(spark, pp) === Some((1, 1)))
   }
 
   test("sink_vacuum_report accounts bytes without deleting: every " +
@@ -93,7 +93,7 @@ class TxnPairSpec extends SparkSpec {
     def bytesOf(doomed: Seq[String]): Long =
       doomed.map(p => f.getFileStatus(
         new org.apache.hadoop.fs.Path(p)).getLen).sum
-    val doomed1 = queries.Physical.vacuumPlan(spark, path, 1)
+    val doomed1 = TableLog.vacuumPlan(spark, path, 1)
     assert(doomed1.size === 14, "retain-1: v0 (6) + v1 (6) + orphan (2)")
     assert(bytesOf(doomed1) > 0)
     q("sink_vacuum_report").collect() // the dry run
@@ -102,7 +102,7 @@ class TxnPairSpec extends SparkSpec {
       f.exists(new org.apache.hadoop.fs.Path(p))),
       "a REPORT must never delete")
     assert(bytesOf(doomed1) > 0)
-    assert(queries.Physical.listCommits(spark, path).size === 3)
+    assert(TableLog.versions(spark, path).size === 3)
     val names = f.listStatus(
       new org.apache.hadoop.fs.Path(path, "_commits"))
       .map(_.getPath.getName)

@@ -38,41 +38,38 @@ class VacuumSpec extends SparkSpec {
   test("vacuum retention-1: retained files survive, superseded files and " +
     "the aged orphan are deleted, the live snapshot is unchanged") {
     val path = fixture()
-    val liveBefore = queries.Physical.manifestRead(spark, path, None)
+    val liveBefore = TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect()
-    val retained = queries.Physical
-      .readManifestLines(spark, path,
-        queries.Physical.listCommits(spark, path).last)
-      .filterNot(_.startsWith("#"))
+    val retained = TableLog.snapshot(spark, path, None).files
       .map(f => new org.apache.hadoop.fs.Path(f).toString).toSet
     val before = dataFiles(path)
     assert((before -- retained).nonEmpty, "fixture must have vacuum work")
     val (condemned, deleted) =
-      queries.Physical.vacuumRetention(spark, path, retain = 1)
+      TableLog.vacuumRetention(spark, path, retain = 1)
     assert(condemned > 0 && deleted === condemned)
     assert(dataFiles(path) === retained,
       "exactly the retained file set must remain")
-    val liveAfter = queries.Physical.manifestRead(spark, path, None)
+    val liveAfter = TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect()
     assert(liveAfter === liveBefore, "vacuum changed the live snapshot")
     // second vacuum: nothing left to condemn
-    val (c2, d2) = queries.Physical.vacuumRetention(spark, path, 1)
+    val (c2, d2) = TableLog.vacuumRetention(spark, path, 1)
     assert(c2 === 0 && d2 === 0, "vacuum must be idempotent")
   }
 
   test("vacuum never condemns a file referenced by ANY retained version " +
     "(retention-2 keeps the append history readable)") {
     val path = fixture()
-    val v1Before = queries.Physical.manifestRead(spark, path, Some(1))
+    val v1Before = TableLog.scan(spark, path, Some(1))
       .count()
     val (condemned, _) =
-      queries.Physical.vacuumRetention(spark, path, retain = 2)
+      TableLog.vacuumRetention(spark, path, retain = 2)
     // retained v1 references v0's files too (append carries by
     // reference), so only the orphan is deletable
     assert(condemned > 0, "the aged orphan must still be condemned")
-    assert(queries.Physical.manifestRead(spark, path, Some(1)).count()
+    assert(TableLog.scan(spark, path, Some(1)).count()
       === v1Before, "a retained time-travel read lost files")
-    assert(queries.Physical.manifestRead(spark, path, Some(2)).count()
+    assert(TableLog.scan(spark, path, Some(2)).count()
       === v1Before, "the compacted live set must be intact")
   }
 
@@ -80,29 +77,27 @@ class VacuumSpec extends SparkSpec {
     "resume finishes exactly the tombstoned work, and a post-recovery " +
     "vacuum finds nothing new") {
     val path = fixture()
-    val liveBefore = queries.Physical.manifestRead(spark, path, None)
+    val liveBefore = TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect()
     // the crash: tombstone committed, process dies before any delete
-    val tomb = queries.Physical.vacuumTombstone(spark, path, retain = 1)
+    val tomb = TableLog.vacuumTombstone(spark, path, retain = 1)
     assert(tomb.nonEmpty, "fixture must have vacuum work")
-    val doomed = queries.Physical
-      .readManifestLines(spark, path, tomb.get)
-      .filterNot(_.startsWith("#"))
+    val doomed = tomb.get
     assert(doomed.forall(f => fs(path)
       .exists(new org.apache.hadoop.fs.Path(f))),
       "no file may be deleted before the tombstone is committed")
-    assert(queries.Physical.manifestRead(spark, path, None)
+    assert(TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect() === liveBefore,
       "a committed-but-unexecuted tombstone must not affect readers")
     // recovery: resume executes the pending tombstone idempotently
-    assert(queries.Physical.vacuumResume(spark, path) === doomed.size)
+    assert(TableLog.vacuumResume(spark, path) === doomed.size)
     assert(doomed.forall(f => !fs(path)
       .exists(new org.apache.hadoop.fs.Path(f))))
-    assert(queries.Physical.vacuumResume(spark, path) === 0,
+    assert(TableLog.vacuumResume(spark, path) === 0,
       "a completed tombstone must not replay")
-    val (c2, d2) = queries.Physical.vacuumRetention(spark, path, 1)
+    val (c2, d2) = TableLog.vacuumRetention(spark, path, 1)
     assert(c2 === 0 && d2 === 0)
-    assert(queries.Physical.manifestRead(spark, path, None)
+    assert(TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect() === liveBefore)
   }
 
@@ -116,7 +111,7 @@ class VacuumSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$path/data/inflight")
     val inflight = dataFiles(path).filter(_.contains("/inflight/"))
     assert(inflight.nonEmpty)
-    queries.Physical.vacuumRetention(spark, path, retain = 1)
+    TableLog.vacuumRetention(spark, path, retain = 1)
     assert(inflight.forall(f => fs(path)
       .exists(new org.apache.hadoop.fs.Path(f))),
       "vacuum condemned a possibly-in-flight write")
@@ -126,29 +121,29 @@ class VacuumSpec extends SparkSpec {
     "unchanged, time travel beyond the horizon fails LOUDLY, and a " +
     "post-truncation append cannot reuse an aged-out version number") {
     val path = fixture()
-    queries.Physical.vacuumRetention(spark, path, retain = 1)
-    val liveBefore = queries.Physical.manifestRead(spark, path, None)
+    TableLog.vacuumRetention(spark, path, retain = 1)
+    val liveBefore = TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect()
-    assert(queries.Physical.listCommits(spark, path).size === 3)
-    assert(queries.Physical.vacuumLog(spark, path, keepLast = 1) === 2)
-    val left = queries.Physical.listCommits(spark, path)
-    assert(left === Seq("v00002.manifest"))
-    assert(queries.Physical.manifestRead(spark, path, None)
+    assert(TableLog.versions(spark, path).size === 3)
+    assert(TableLog.vacuumLog(spark, path, keepLast = 1) === 2)
+    val left = TableLog.versions(spark, path)
+    assert(left === Seq(2))
+    assert(TableLog.scan(spark, path, None)
       .orderBy("o_orderkey").collect() === liveBefore)
     // beyond the horizon: loud failure, never silent wrong data
     intercept[IllegalArgumentException] {
-      queries.Physical.manifestRead(spark, path, Some(0))
+      TableLog.scan(spark, path, Some(0))
     }
     // the next commit numbers PAST the truncated history — a
     // commits.size-based committer would claim v00001 here, a version
     // number readers' histories already used
-    val v = queries.Physical.commitManifestCas(spark, path,
+    val v = TableLog.commitCas(spark, path,
       Seq("late/append-file"))
     assert(v === 3, s"expected v3 after truncation, got v$v")
-    assert(queries.Physical.listCommits(spark, path)
-      === Seq("v00002.manifest", "v00003.manifest"))
+    assert(TableLog.versions(spark, path)
+      === Seq(2, 3))
     // and idempotence: nothing left to age out below the horizon
-    assert(queries.Physical.vacuumLog(spark, path, keepLast = 2) === 0)
+    assert(TableLog.vacuumLog(spark, path, keepLast = 2) === 0)
   }
 
   test("CDC apply is idempotent: re-applying the feed to the ALREADY-" +
@@ -157,7 +152,7 @@ class VacuumSpec extends SparkSpec {
       .collect()
     // the replica must equal the post-merge source snapshot exactly
     val merge = queries.Physical.mergeSinkStaged(spark, sf)
-    val src = queries.Physical.manifestRead(spark, merge, None)
+    val src = TableLog.scan(spark, merge, None)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         round(sum("o_totalprice"), 2).as("revenue"))
@@ -166,12 +161,8 @@ class VacuumSpec extends SparkSpec {
       "replica diverged from the source snapshot")
     // the crash-replay window: the feed is delivered AGAIN to a replica
     // that already has it. minus-keys-then-union must be a fixpoint.
-    val m0 = queries.Physical
-      .readManifestLines(spark, merge, "v00000.manifest")
-      .filterNot(_.startsWith("#"))
-    val m1 = queries.Physical
-      .readManifestLines(spark, merge, "v00001.manifest")
-      .filterNot(_.startsWith("#"))
+    val m0 = TableLog.snapshot(spark, merge, Some(0)).files
+    val m1 = TableLog.snapshot(spark, merge, Some(1)).files
     val before = spark.read.parquet(m0.diff(m1): _*)
       .select(col("o_orderkey"), col("o_orderstatus").as("st0"),
         col("o_totalprice").as("tp0"))

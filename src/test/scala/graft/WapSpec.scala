@@ -13,18 +13,18 @@ class WapSpec extends SparkSpec {
 
   test("the bad batch is committed but quarantined: main serves v1, " +
     "the log head is v2, and the audit verdicts are reproducible") {
-    assert(queries.Physical.listCommits(spark, path).size === 3)
-    assert(queries.Physical.readRef(spark, path, "main") === Some(1))
+    assert(TableLog.versions(spark, path).size === 3)
+    assert(TableLog.readRef(spark, path, "main") === Some(1))
     assert(queries.Physical.auditPasses(spark, path, 1),
       "the good batch must pass the audit it passed at staging")
     assert(!queries.Physical.auditPasses(spark, path, 2),
       "the null-keyed batch must fail the audit")
     // reading through the ref never sees the bad rows
-    val v = queries.Physical.readRef(spark, path, "main").get
-    val live = queries.Physical.manifestRead(spark, path, Some(v))
+    val v = TableLog.readRef(spark, path, "main").get
+    val live = TableLog.scan(spark, path, Some(v))
     assert(live.filter(col("o_orderkey").isNull).count() === 0)
     // ...but the quarantined commit is still fully readable for forensics
-    val head = queries.Physical.manifestRead(spark, path, Some(2))
+    val head = TableLog.scan(spark, path, Some(2))
     assert(head.filter(col("o_orderkey").isNull).count() > 0)
   }
 
@@ -33,13 +33,13 @@ class WapSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new org.apache.hadoop.fs.Path(s"$path/_refs/main")
-    val before = queries.Physical.readRef(spark, path, "main")
+    val before = TableLog.readRef(spark, path, "main")
     // simulate the crash window: a torn temp file exists, no rename ran
     val tmp = new org.apache.hadoop.fs.Path(dir, ".99999.tmp")
     val out = fs.create(tmp, true)
     try out.write("2".getBytes("UTF-8")) finally out.close()
     try {
-      assert(queries.Physical.readRef(spark, path, "main") === before,
+      assert(TableLog.readRef(spark, path, "main") === before,
         "an unrenamed temp must be invisible to readers")
     } finally fs.delete(tmp, false)
   }
@@ -53,12 +53,12 @@ class WapSpec extends SparkSpec {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_wap_reflog").toString
     try {
-      assert(queries.Physical.readRef(spark, tmp, "main") === None)
-      queries.Physical.publishRef(spark, tmp, "main", 0)
-      queries.Physical.publishRef(spark, tmp, "main", 1)
+      assert(TableLog.readRef(spark, tmp, "main") === None)
+      TableLog.publishRef(spark, tmp, "main", 0)
+      TableLog.publishRef(spark, tmp, "main", 1)
       // idempotent re-point: appends a THIRD entry, resolves the same
-      queries.Physical.publishRef(spark, tmp, "main", 1)
-      assert(queries.Physical.readRef(spark, tmp, "main") === Some(1))
+      TableLog.publishRef(spark, tmp, "main", 1)
+      assert(TableLog.readRef(spark, tmp, "main") === Some(1))
       val fs = new org.apache.hadoop.fs.Path(tmp)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val entries = fs.listStatus(
