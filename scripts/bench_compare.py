@@ -10,6 +10,10 @@ When it has no "queries", the captured tail is read instead; a tail cut
 short keeps only the queries it still holds whole, and such a side is
 reported as partial, with totals over the keys both sides have.
 
+Where either side carries per-key "cold" (rep-1 seconds) and "compiles"
+(classes compiled per rep), the keys shown also get both sides' cold
+seconds and compile counts; an output without them prints "-".
+
 A key that crashed is listed under "failed" with its cause, not under
 "queries". Such keys are printed as failed-old / failed-new (never as
 only-old / only-new), and the exit status is 1 when NEW has a failure
@@ -35,17 +39,24 @@ def tail_queries(tail):
     return ({k: float(v) for k, v in pairs} or None), False
 
 
+def whole_line(d):
+    """(queries, failed, whole, cold, compiles) of a full Bench line."""
+    return (d["queries"], d.get("failed", {}), True, d.get("cold", {}),
+            d.get("compiles", {}))
+
+
 def load(path):
-    """(queries, failed, whole) of one Bench output; failed maps key ->
-    cause; whole is False when queries came from a truncated tail."""
+    """(queries, failed, whole, cold, compiles) of one Bench output; failed
+    maps key -> cause; whole is False when queries came from a truncated
+    tail, which keeps no cold or compiles (they precede queries)."""
     with open(path) as f:
         d = json.load(f)
     if "queries" in d:
-        return d["queries"], d.get("failed", {}), True
+        return whole_line(d)
     # BENCH_r{N}.json wrapper: "parsed" holds the full line intact
     parsed = d.get("parsed") or {}
     if "queries" in parsed:
-        return parsed["queries"], parsed.get("failed", {}), True
+        return whole_line(parsed)
     tail = d.get("tail", "")
     queries, whole = tail_queries(tail)
     if queries is None:
@@ -58,7 +69,7 @@ def load(path):
                 failed = json.loads(line).get("failed", {})
             except ValueError:  # a truncated full line keeps only queries
                 pass
-    return queries, failed, whole
+    return queries, failed, whole, {}, {}
 
 
 def main():
@@ -83,7 +94,8 @@ def main():
         i += 1
     if len(args) != 2:
         sys.exit(__doc__.strip().splitlines()[2])
-    (old, old_failed, old_whole), (new, new_failed, new_whole) = \
+    (old, old_failed, old_whole, old_cold, old_comp), \
+        (new, new_failed, new_whole, new_cold, new_comp) = \
         load(args[0]), load(args[1])
     for path, q, whole in ((args[0], old, old_whole),
                            (args[1], new, new_whole)):
@@ -95,6 +107,17 @@ def main():
     print(f"{'query':40s} {'old':>8s} {'new':>8s} {'delta':>8s}")
     for k in both[:top]:
         print(f"{k:40s} {old[k]:8.2f} {new[k]:8.2f} {new[k]-old[k]:+8.2f}")
+    if old_cold or new_cold or old_comp or new_comp:
+        def cold(c, k):
+            return f"{c[k]:.2f}" if k in c else "-"
+
+        def comp(c, k):
+            return ",".join(str(n) for n in c[k]) if k in c else "-"
+        print(f"{'query':40s} {'cold-old':>8s} {'cold-new':>8s} "
+              f"{'compiles-old':>14s} {'compiles-new':>14s}")
+        for k in both[:top]:
+            print(f"{k:40s} {cold(old_cold, k):>8s} {cold(new_cold, k):>8s} "
+                  f"{comp(old_comp, k):>14s} {comp(new_comp, k):>14s}")
     failed = set(old_failed) | set(new_failed)
     # a partial side lacks keys because its tail was cut, not its run
     for name, s in (("only-old", set(old) - set(new) - failed),

@@ -3,16 +3,20 @@ package graft
 import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{CodegenCompiles, SparkSession}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
 /** Per-round benchmark main (driver contract): runs every SparkEntry query
   * against $SPARK_GRAFT_SF_DIR and prints one JSON line
-  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec},...,
-  * "n_failed":k,"failed":{name:cause}}. A key that throws is listed under
-  * "failed" with its cause (and counted in "n_failed") and left out of
-  * "queries" and the total: time-to-crash is not a measurement.
+  * {"metric":"total","value":sec,"unit":"sec","cold":{name:sec},
+  * "compiles":{name:[n,...]},"queries":{name:sec},...,"n_failed":k,
+  * "failed":{name:cause}}. "queries" holds each key's median over its reps,
+  * "cold" its first rep (which pays first-touch codegen and JIT: nothing is
+  * warmed up before the timed loop) and "compiles" the classes codegen
+  * compiled during each rep. A key that throws is listed under "failed"
+  * with its cause (and counted in "n_failed") and left out of "cold",
+  * "compiles", "queries" and the total: time-to-crash is not a measurement.
   *
   * Each query is forced through the noop sink rather than count() — count()
   * lets Catalyst prune every computed column (a scan-only measurement),
@@ -79,10 +83,8 @@ object Bench {
       // next key's timed window (the r18/r20 in-sweep inflation of the
       // task-heavy MLlib keys, 5x their solo time while code was
       // unchanged). A short quiesce drains that backlog outside the
-      // window; 0 disables.
-      val quiesceMs = scala.util.Try(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_QUIESCE_MS", "250").trim.toLong).getOrElse(250L)
-      if (quiesceMs > 0) Thread.sleep(quiesceMs)
+      // window.
+      Thread.sleep(250)
     }
 
     // SPARK_GRAFT_BENCH_REPS=N runs every query N times and reports the
@@ -108,13 +110,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         if (!failed.contains(name)) failed(name) = Verify.cause(e)
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // TRACE=1: stamp each rep as it finishes so an external sampler
-      // (jstack/top) can be correlated with the slow rep it caught
-      if (sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1"))
-        System.err.println(f"[bench] trace ${System.currentTimeMillis()}%d " +
-          f"$name $dt%.2f")
-      dt
+      (System.nanoTime() - t0) / 1e9
     }
     // true median: average of the two middle elements for even sizes (the
     // upper-middle pick would report the WORSE of two runs at reps=2)
@@ -130,18 +126,20 @@ object Bench {
     def logReps(tag: String, name: String, ts: Seq[Double]): Unit =
       System.err.println(s"[bench] $tag $name reps=" +
         ts.map(t => f"$t%.2f").mkString(","))
+    // (name, seconds per rep, classes compiled per rep); the counter is
+    // read outside timedRun, and reading it costs nothing measurable
     val raw = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
+      val (times, compiles) = (1 to reps).map { _ =>
+        val c0 = CodegenCompiles()
         val dt = timedRun(name, fn)
+        val compiled = CodegenCompiles() - c0
         cleanup() // after timedRun returned: provably outside the window
-        dt
-      }
+        (dt, compiled)
+      }.unzip
       logReps("sweep", name, times)
-      name -> times
-    }
-    val results = raw.collect {
-      case (name, ts) if !failed.contains(name) => name -> median(ts)
-    }
+      (name, times, compiles)
+    }.filterNot { case (name, _, _) => failed.contains(name) }
+    val results = raw.map { case (name, ts, _) => name -> median(ts) }
 
     // Second pass over every key whose own reps spread >= 3x this run
     // (plus any named in SPARK_GRAFT_BENCH_SOLO): re-measure AFTER the
@@ -154,7 +152,7 @@ object Bench {
     val envSolo = sys.env.get("SPARK_GRAFT_BENCH_SOLO").toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     val spreadFlagged = raw.collect {
-      case (name, ts) if ts.size >= 2 && ts.max > 1.0 &&
+      case (name, ts, _) if ts.size >= 2 && ts.max > 1.0 &&
         ts.max >= 3 * math.max(ts.min, 1e-3) => name
     }
     val soloPairs = (envSolo ++ spreadFlagged).distinct
@@ -185,6 +183,8 @@ object Bench {
     val total = results.map(_._2).sum
     val full = Serialization.write(ListMap(
       "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "cold" -> ListMap(raw.map { case (name, ts, _) => name -> ts.head }: _*),
+      "compiles" -> ListMap(raw.map { case (name, _, cs) => name -> cs }: _*),
       "queries" -> ListMap(results: _*), "solo" -> ListMap(soloPairs: _*),
       "reps" -> reps, "sf" -> sfDir, "n_failed" -> failed.size,
       "failed" -> ListMap(failed.toSeq: _*)))

@@ -32,17 +32,14 @@ object SparkEntry {
     prepare(spark, sfDir, stagers)
 
   /** Stager-injectable body, so PrepareSpec can prove one family's failure
-    * leaves the remaining families staged and the warm-up running.
+    * leaves the remaining families staged.
     */
   private[graft] def prepare(spark: SparkSession, sfDir: String,
       stages: Seq[(String, (SparkSession, String) => Unit)]): Unit = {
-    // Each family stages under its OWN try/catch: r9 ran all four under one
-    // (Bench-side) catch, so StreamingOps throwing on a bad events load
-    // silently unstaged SimSearch + TextOps and skipped the warm-up —
-    // every staged-index consumer then rebuilt inside the timed window
-    // (~+120 s on BENCH_r09). A staging failure must cost only its own
-    // family, and must say so on stderr by name. StreamingOps reads the
-    // most drift-prone input (events), so it runs last among the stagers.
+    // Each family stages under its own try/catch: a staging failure costs
+    // only its own family (whose keys then rebuild inside their timed
+    // window) and says so on stderr by name. StreamingOps reads the most
+    // drift-prone input (events), so it runs last among the stagers.
     stages.foreach { case (family, run) =>
       try run(spark, sfDir)
       catch { case NonFatal(e) =>
@@ -52,77 +49,6 @@ object SparkEntry {
             "its queries will rebuild in-run")
       }
     }
-    // JIT/codegen warm-up for the single-run (REPS=1) gate sweep:
-    // these keys show the largest REPS=1 − REPS=3 first-touch gaps in
-    // the committed artifacts (BENCH_r11 vs bench_r15_reps3:
-    // text_repetition_score +2.6 s, text_tfidf_topk +1.4 s,
-    // text_cooccur_pmi +1.2 s, unpivot_melt +1.0 s,
-    // win_funnel_skewproof +0.9 s, win_custom_udaf +0.9 s) — Janino
-    // compile + C2 JIT of their explode → two-phase-agg / window
-    // stages, not plan cost (REPS=3 medians implicitly warm on rep 1).
-    // Executing each plan once here moves that first touch outside the
-    // timed window, exactly as a REPS warm-up rep would. Streaming keys
-    // are deliberately NOT warmed — a warm-up stream would leave
-    // memory-sink views and loaded state stores behind for the first
-    // timed query to pay for.
-    // r15 extension: the r14 gate (reps=1, bench_full.json) vs artifact
-    // (bench_r22_reps3.json) gaps put the dedup/graph/resample families
-    // on top (dedup_minhash_lsh +6.8 s, dedup_ngram_jaccard_prefix
-    // +4.8 s, dedup_simhash +2.8 s, dedup_containment_prefix +2.5 s,
-    // dedup_minhash_native +2.4 s, resample_interpolate +2.2 s,
-    // graph_label_propagation +2.0 s, pipeline_census_incremental
-    // +1.9 s, ...) — same class: first-touch Janino+C2 on their
-    // generated join/agg stages, paid once here instead of in the gate.
-    // r16 additions: the round's new keys with the largest
-    // first-touch (REPS=1 − REPS=3) gaps — er_blocking_multipass
-    // 3.40→0.85, er_golden_record 3.56→2.50, search_mmr_rerank's
-    // five-step unrolled plan pays a wide Janino compile on rep 1
-    Seq("text_repetition_score", "text_tfidf_topk", "text_cooccur_pmi",
-      "unpivot_melt", "win_funnel_skewproof", "win_custom_udaf",
-      "dedup_minhash_lsh", "dedup_ngram_jaccard_prefix", "dedup_simhash",
-      "dedup_containment_prefix", "dedup_minhash_native",
-      "resample_interpolate", "graph_label_propagation",
-      "pipeline_census_incremental", "embedding_pca_project",
-      "dedup_containment", "profile_table", "resample_gapfill",
-      "er_blocking_multipass", "er_golden_record", "search_mmr_rerank",
-      // r17 additions: the round's new heavy compositions — two-pass
-      // union-distinct pair joins (multipass), a per-pair levenshtein
-      // stage (graded), batch×all + contraction CC (incremental), the
-      // delta-join fold (ivm_join), and the IVFPQ probe — all wide
-      // Janino/C2 first-touch plans the reps=1 gate would otherwise
-      // pay inside the timed window
-      "er_fs_classify_multipass", "er_fs_classify_graded",
-      "er_incremental", "sink_changefeed_ivm_join", "simsearch_ivfpq_topk",
-      // r19 additions: the largest rep1 − median(rep2,3) first-touch gaps
-      // in this round's REPS=3 probe series (bench_probe3, recorded in
-      // OPTIMIZATION_r19.md) — pipeline_curation_census +1.2 s,
-      // dedup_minhash_tradeoff +1.5 s, multimodal_phash_neardup +1.3 s,
-      // er_fs_classify_phonetic +1.3 s, multimodal_audio_features +1.0 s,
-      // bpe_train_merges +1.0 s, er_fs_em_classify +0.9 s,
-      // er_tf_classify +0.7 s — all wide Janino/C2 first-touch plans
-      // (codec loops, three-pass ER unions, iterative trainers) the
-      // reps=1 gate otherwise pays in-window
-      "pipeline_curation_census", "dedup_minhash_tradeoff",
-      "multimodal_phash_neardup", "er_fs_classify_phonetic",
-      "multimodal_audio_features", "bpe_train_merges",
-      "er_fs_em_classify", "er_tf_classify",
-      // r20 additions: largest rep1 − median(rep2..5) gaps in this
-      // round's REPS=5 probes — mine_basket_lift +0.9 s,
-      // mine_basket_triples +1.0 s (both now shared-exchange shapes
-      // whose first run pays the two-phase-agg Janino compile),
-      // search_hybrid_rrf +1.7 s (BM25 index join + cosine scan +
-      // full-outer fusion is one of the widest codegen plans in the
-      // suite)
-      "mine_basket_lift", "mine_basket_triples", "search_hybrid_rrf")
-      .foreach { k =>
-        try queries(k)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case NonFatal(e) =>
-          System.err.println(
-            s"[prepare] warm-up FAILED for $k " +
-              s"(${e.getClass.getSimpleName}: ${e.getMessage})")
-        }
-      }
   }
 
   /** Staging stages by family, isolation unit for [[prepare]]. Exposed so
@@ -145,7 +71,7 @@ object SparkEntry {
   )
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     queries_.Relational.queries ++
       queries_.Windows.queries ++
       queries_.Functions.queries ++
@@ -163,7 +89,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     queries_.Relational.oracleSql ++
       queries_.Windows.oracleSql ++
       queries_.Functions.oracleSql ++

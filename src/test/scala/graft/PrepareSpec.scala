@@ -1,17 +1,19 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** `SparkEntry.prepare` isolation contract (r9 postmortem: one family's
-  * staging failure under a single try/catch unstaged everything after it
-  * and skipped the warm-up, adding ~120 s of in-run index rebuilds to the
-  * bench). One stage blowing up must (a) not stop later stages, (b) not
-  * stop the warm-up, (c) name itself on stderr.
+/** `SparkEntry.prepare` contract: it runs the family stagers and nothing
+  * else. Each stage is isolated: one stage blowing up must not stop later
+  * stages, and must name itself on stderr. With no stages, prepare starts
+  * no Spark job: no key is run untimed before Bench's loop.
   */
 class PrepareSpec extends SparkSpec {
 
-  test("a failing stage does not prevent later stages or the warm-up, " +
-    "and is named on stderr") {
+  test("a failing stage does not prevent later stages and is named on stderr") {
     val ran = scala.collection.mutable.ArrayBuffer[String]()
     val stages = Seq[(String, (SparkSession, String) => Unit)](
       "boomFamily" -> ((_, _) => throw new RuntimeException("staging exploded")),
@@ -27,8 +29,22 @@ class PrepareSpec extends SparkSpec {
       "stages after a failure must still run")
     assert(err.contains("boomFamily staging FAILED"),
       s"failure must be named on stderr; got: $err")
-    assert(!err.contains("warm-up FAILED"),
-      s"warm-up must still run (and succeed) after a staging failure: $err")
+  }
+
+  test("prepare with no stages starts no Spark job") {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SparkEntry.prepare(spark, sf, Seq.empty)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0)
   }
 
   test("the production stager list covers all eight staging families, " +
